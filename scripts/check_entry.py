@@ -42,15 +42,24 @@ def value_hash(rows: list[tuple], cols: list[str]) -> str:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     from webindex.session import get_spark
 
     spark = get_spark(app="check-entry", master="local[8]", shuffle_partitions=8)
+    failures = check(spark, sf_dir, sys.argv[2:])
+    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    spark.stop()
+    return 1 if failures else 0
+
+
+def check(spark, sf_dir: str, only=()) -> list[str]:
+    """Run every entry (or only the named ones) on `spark` and its oracle
+    SQL on DuckDB over the same sf_dir; print one ok/FAIL line per entry and
+    return the names that failed."""
+    only = set(only)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -98,10 +107,8 @@ def main() -> int:
             failures.append(name)
         else:
             print(f"ok   {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
-
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    spark.stop()
-    return 1 if failures else 0
+    con.close()
+    return failures
 
 
 if __name__ == "__main__":

@@ -411,9 +411,9 @@ def test_function_score_pruned_identical_and_prunes(spark):
     import pandas as pd
 
     from webindex.query import (
-        _maps_of,
+        _bucket_fn,
+        _match_spec,
         _query_terms,
-        _score_bucket_fn,
         topk_wand,
     )
 
@@ -453,7 +453,7 @@ def test_function_score_pruned_identical_and_prunes(spark):
 
     # decode-count check at the bucket level with the θ the pruned path uses
     stats = _query_terms(idx, "aa")
-    idf_map, term_rank = _maps_of(stats)
+    hashes = [h for (_, _, h) in stats.values()]
     seed = sorted(
         (
             (r["score"] * np.log1p(float(boost[r["doc_id"]])), r["doc_id"])
@@ -465,13 +465,10 @@ def test_function_score_pruned_identical_and_prunes(spark):
     big_m = np.log1p(float(max(boost.values())))
     theta_bm25 = float(np.nextafter(theta_fs / big_m, 0.0))
     assert theta_bm25 > 0.0
-    rows = idx.postings.filter(
-        F.col("term_hash").isin(list(idf_map))
-    ).toPandas()
+    rows = idx.postings.filter(F.col("term_hash").isin(hashes)).toPandas()
     probe = {}
-    fn = _score_bucket_fn(
-        idf_map, term_rank, idx.conf, idx.avgdl, None, theta_bm25,
-        _probe=probe,
+    fn = _bucket_fn(
+        _match_spec(stats, theta_bm25), idx.conf, idx.avgdl, None, _probe=probe
     )
     for _, grp in rows.groupby("bucket"):
         fn(grp.reset_index(drop=True))
@@ -527,9 +524,9 @@ def test_function_score_per_bucket_extrema_prunes_skewed(spark):
     import pandas as pd
 
     from webindex.query import (
-        _maps_of,
+        _bucket_fn,
+        _match_spec,
         _query_terms,
-        _score_bucket_fn,
         field_extrema,
         topk_function_score,
         topk_wand,
@@ -569,7 +566,7 @@ def test_function_score_per_bucket_extrema_prunes_skewed(spark):
     # decode-count comparison, global θ vs per-bucket θ_b, through the same
     # bucket scorer the production path uses (probe runs driver-side)
     stats = _query_terms(idx, "aa")
-    idf_map, term_rank = _maps_of(stats)
+    hashes = [h for (_, _, h) in stats.values()]
     seed = sorted(
         (
             (r["score"] * math.log1p(float(boost[r["doc_id"]])), r["doc_id"])
@@ -582,12 +579,12 @@ def test_function_score_per_bucket_extrema_prunes_skewed(spark):
         int(r["bucket"]): float(r["mx"])
         for r in field_extrema(idx, stored, "pop").collect()
     }
-    rows = idx.postings.filter(F.col("term_hash").isin(list(idf_map))).toPandas()
+    rows = idx.postings.filter(F.col("term_hash").isin(hashes)).toPandas()
 
     def decoded(theta_global: float, per_bucket: bool) -> int:
         probe = {}
-        fn = _score_bucket_fn(
-            idf_map, term_rank, idx.conf, idx.avgdl, None, theta_global,
+        fn = _bucket_fn(
+            _match_spec(stats, theta_global), idx.conf, idx.avgdl, None,
             _probe=probe,
         )
         for b, grp in rows.groupby("bucket"):

@@ -274,9 +274,10 @@ def test_live_index_no_pending_deletes_is_plain_index(spark, tmp_path):
 
 
 def test_live_index_bool_pinned_exclude_deleted(spark, tmp_path):
-    """Pending tombstones apply to EVERY query family on live_index(), not
-    just the WAND kernel: bool (scored, and the must_not-only match_all
-    path) and pinned must drop the dead doc before any compact."""
+    """Pending tombstones outside the shared kernel's top-k path: bool's
+    must_not-only match_all path (doc_stats enumeration) and pinned ids
+    must drop the dead doc before any compact, as scored bool does.
+    Every scorer of the shared kernel: test_live_index_every_scorer_hides_dead."""
     from webindex.query import topk_bool, topk_pinned
 
     pdf = make_pages_pdf(0, 60)
@@ -325,3 +326,126 @@ def test_delete_on_fresh_workdir_is_recorded_noop(spark, tmp_path):
     idx = ing.upsert(spark.createDataFrame(pdf))
     assert idx.n_docs == 10
     assert lookup_url(idx, url0).count() == 1
+
+
+@pytest.fixture(scope="module")
+def pending_delete(spark, tmp_path_factory):
+    """(pre-delete index, live_index() with one pending delete, dead doc,
+    stored frame): the dead doc is the top hit for "the data"."""
+    pdf = make_pages_pdf(0, 60)
+    ing = IncrementalIndexer(
+        spark, str(tmp_path_factory.mktemp("pending") / "wd"), text_col="text"
+    )
+    idx0 = ing.upsert(spark.createDataFrame(pdf))
+    dead = _topk_list(idx0, "the data", 1)[0][0]
+    url = idx0.doc_stats.filter(F.col("doc_id") == dead).collect()[0]["url"]
+    ing.delete([url], compact_now=False)
+    live = ing.live_index()
+    assert list(live.dead_ids) == [dead]
+    stored = idx0.doc_stats.select(
+        "doc_id", (F.lit(1.0) + F.abs(F.col("doc_id") % 5)).alias("pop")
+    )
+    return idx0, live, dead, stored
+
+
+def _batch(prune):
+    from webindex.query import topk_batch
+
+    def run(index, q, k):
+        rows = topk_batch(index, {"q": q}, k, prune=prune).collect()
+        return sorted(rows, key=lambda r: r["rank"])
+
+    return run
+
+
+def _scorers(stored):
+    from webindex import query as Q
+    from webindex.aggs import match_scores
+
+    return {
+        "wand": lambda i, k: Q.topk_wand(i, "the data", k).collect(),
+        "exact": lambda i, k: Q.topk_exact(i, "the data", k).collect(),
+        "match_and": lambda i, k: Q.topk_match(
+            i, "the data", k, operator="and").collect(),
+        "after": lambda i, k: Q.topk_after(
+            i, "the data", k, after=(1e9, 0)).collect(),
+        "bool": lambda i, k: Q.topk_bool(i, must="the", should="data", k=k).collect(),
+        "batch_prune": lambda i, k: _batch(True)(i, "the data", k),
+        "batch_no_prune": lambda i, k: _batch(False)(i, "the data", k),
+        "synonyms": lambda i, k: Q.topk_synonyms(
+            i, "the data", {"data": ["merge"]}, k).collect(),
+        "fuzzy": lambda i, k: Q.topk_fuzzy(i, "data", k).collect(),
+        "prefix": lambda i, k: Q.topk_prefix(i, "dat", k).collect(),
+        "wildcard": lambda i, k: Q.topk_wildcard(i, "d?t*", k).collect(),
+        "regexp": lambda i, k: Q.topk_regexp(i, "da.a", k).collect(),
+        "function_score": lambda i, k: Q.topk_function_score(
+            i, stored, "the data", "pop", modifier="none", k=k).collect(),
+        "match_scores": lambda i, k: sorted(
+            match_scores(i, "the data").collect(),
+            key=lambda r: (-r["score"], r["doc_id"]))[:k],
+    }
+
+
+SCORERS = list(_scorers(None))
+
+
+@pytest.mark.parametrize("scorer", SCORERS)
+def test_live_index_every_scorer_hides_dead(pending_delete, scorer):
+    """A pending delete is hidden from every scorer of the shared bucket
+    kernel and every filter-context kernel on live_index(), with the
+    pre-delete corpus stats (Lucene live-docs semantics): the result is the
+    pre-delete result minus the dead doc — at a large k, and at a small k
+    where the next-ranked doc must be promoted into the freed slot."""
+    idx0, live, dead, stored = pending_delete
+    run = _scorers(stored)[scorer]
+
+    def hits(index, k):
+        return [(int(r["doc_id"]), round(float(r["score"]), 9)) for r in run(index, k)]
+
+    before = hits(idx0, 1000)
+    assert dead in [d for d, _ in before], "fixture: the dead doc must match"
+    want = [h for h in before if h[0] != dead]
+    assert hits(live, 1000) == want
+    assert hits(live, 3) == want[:3]
+
+
+def test_batch_theta_seed_skips_dead_docs(spark, tmp_path):
+    """topk_batch's shared θ seed must not take the k-th best contribution
+    from a dead doc: here the deleted doc holds the best contribution of a
+    term with df > k, so a seed counting it would be the (k-1)-th best LIVE
+    contribution and, with one-posting blocks (interval bound == the exact
+    contribution), would prune the k-th best live doc. The pruned result
+    must equal prune=False and the oracle over the live docs (pre-delete
+    stats, dead doc dropped before the cut)."""
+    from webindex.bm25 import BM25Config
+    from webindex.oracle import OracleIndex
+    from webindex.query import topk_batch
+
+    n, dl, k = 24, 30, 5
+    pdf = make_pages_pdf(0, n)
+    # same length everywhere, tf(aa) = 1..n: contributions strictly rise
+    pdf["text"] = [" ".join(["aa"] * (i + 1) + ["zz"] * (dl - i - 1)) for i in range(n)]
+    ing = IncrementalIndexer(
+        spark, str(tmp_path / "wd"), BM25Config(block_size=1), text_col="text"
+    )
+    idx0 = ing.upsert(spark.createDataFrame(pdf))
+    ids = {r["url"]: int(r["doc_id"]) for r in idx0.doc_stats.collect()}
+    dead_url = pdf["url"].iloc[n - 1]  # tf = n: the term's best contribution
+    ing.delete([dead_url], compact_now=False)
+    live = ing.live_index()
+    dead = ids[dead_url]
+
+    oracle = OracleIndex(
+        {ids[u]: t for u, t in zip(pdf["url"], pdf["text"])}, BM25Config(block_size=1)
+    )
+    want = [(d, s) for d, s in oracle.topk("aa", k + 1) if d != dead][:k]
+
+    def run(prune):
+        rows = topk_batch(live, {"q": "aa"}, k, prune=prune, seed_min_blocks=0).collect()
+        return [(int(r["doc_id"]), float(r["score"]))
+                for r in sorted(rows, key=lambda r: r["rank"])]
+
+    pruned, exhaustive = run(True), run(False)
+    assert pruned == exhaustive
+    assert [d for d, _ in pruned] == [d for d, _ in want]
+    assert all(abs(s - w) <= 1e-9 for (_, s), (_, w) in zip(pruned, want))

@@ -1,0 +1,41 @@
+"""Oracle guard for the shared per-bucket BM25 kernel: every registry entry
+whose query runs through it (match family, bool, search_after,
+function_score, dis_max, synonyms, fuzzy, batch, multi-field, prefix) must
+agree with its DuckDB oracle SQL, compared the way scripts/check_entry.py
+compares them (row count, column names, order-insensitive value hash)."""
+
+import importlib.util
+from pathlib import Path
+
+import pytest
+
+_spec = importlib.util.spec_from_file_location(
+    "check_entry", Path(__file__).resolve().parent.parent / "scripts" / "check_entry.py"
+)
+check_entry = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(check_entry)
+
+ENTRIES = [
+    "bm25_topk",
+    "bm25_topk_hot",
+    "bm25_topk_rare",
+    "bm25_match_and",
+    "bm25_match_msm",
+    "bm25_bool",
+    "bm25_search_after",
+    "bm25_function_score",
+    "bm25_dismax",
+    "bm25_synonyms",
+    "bm25_fuzzy",
+    "bm25_fuzzy_gram",
+    "bm25_topk_batch",
+    "bm25_most_fields",
+    "bm25_cross_fields",
+    "bm25_prefix",
+]
+
+
+@pytest.mark.parametrize("name", ENTRIES)
+def test_entry_matches_oracle(spark, sf_dir, name):
+    assert name in check_entry.entrymod.oracle_sql()  # compared, not rows-only
+    assert check_entry.check(spark, sf_dir, [name]) == []

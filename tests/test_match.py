@@ -16,10 +16,10 @@ from webindex.build import build_index
 from webindex.oracle import OracleIndex
 from webindex.pagesgen import make_pages_pdf
 from webindex.query import (
+    _bucket_fn,
     _interval_prune,
-    _maps_of,
+    _match_spec,
     _query_terms,
-    _score_bucket_fn,
     topk_match,
     topk_wand,
 )
@@ -99,8 +99,8 @@ def test_msm_interval_prune_disjoint_ranges():
     tmaxs = np.array([49, 149], dtype=np.int64)
     timps = np.array([1.0, 1.0])
     tranks = np.array([0, 1], dtype=np.int64)
-    assert _interval_prune(tmins, tmaxs, timps, tranks, 2, 0.0, msm=2) is None
-    kept = _interval_prune(tmins, tmaxs, timps, tranks, 2, 0.0, msm=1)
+    assert _interval_prune(tmins, tmaxs, timps, tranks, 2, 0.0, (((0, 1), 2),)) is None
+    kept = _interval_prune(tmins, tmaxs, timps, tranks, 2, 0.0, (((0, 1), 1),))
     assert kept is not None and kept[2].all()
 
 
@@ -112,7 +112,7 @@ def test_msm_interval_prune_partial_overlap():
     timps = np.array([1.0, 1.0])
     tranks = np.array([0, 1], dtype=np.int64)
     bounds, interval_keep, block_keep = _interval_prune(
-        tmins, tmaxs, timps, tranks, 2, 0.0, msm=2
+        tmins, tmaxs, timps, tranks, 2, 0.0, (((0, 1), 2),)
     )
     kept_spans = [
         (bounds[i], bounds[i + 1] - 1)
@@ -131,14 +131,10 @@ def test_and_bucket_kernel_prunes_decode(idx):
     stats = _query_terms(idx, query)
     if len(stats) < 2:
         pytest.skip("fixture lacks both tail terms")
-    idf_map, term_rank = _maps_of(stats)
-    rows = idx.postings.filter(F.col("term_hash").isin(list(idf_map))).toPandas()
-    and_fn = _score_bucket_fn(
-        idf_map, term_rank, idx.conf, idx.avgdl, k=100, theta=0.0, msm=2
-    )
-    or_fn = _score_bucket_fn(
-        idf_map, term_rank, idx.conf, idx.avgdl, k=100, theta=0.0, msm=1
-    )
+    hashes = [h for (_, _, h) in stats.values()]
+    rows = idx.postings.filter(F.col("term_hash").isin(hashes)).toPandas()
+    and_fn = _bucket_fn(_match_spec(stats, msm=2), idx.conf, idx.avgdl, k=100)
+    or_fn = _bucket_fn(_match_spec(stats, msm=1), idx.conf, idx.avgdl, k=100)
     and_hits = pd.concat(
         [and_fn(g.reset_index(drop=True)) for _, g in rows.groupby("bucket")]
     )

@@ -1,7 +1,8 @@
 """Interval-level block-max pruning engages and stays exact.
 
-Drives webindex.query._score_bucket_fn directly on real block rows so the
-pruning branch (theta>0) is observably exercised (not just equal-output)."""
+Drives the shared bucket kernel (webindex.query._bucket_fn) directly on
+real block rows so the pruning branch (theta>0) is observably exercised
+(not just equal-output)."""
 
 import numpy as np
 import pandas as pd
@@ -10,7 +11,13 @@ from pyspark.sql import functions as F
 
 from webindex.build import build_index
 from webindex.pagesgen import make_pages_pdf
-from webindex.query import _query_terms, _score_bucket_fn, topk_exact, topk_wand
+from webindex.query import (
+    _bucket_fn,
+    _match_spec,
+    _query_terms,
+    topk_exact,
+    topk_wand,
+)
 
 
 @pytest.fixture(scope="module")
@@ -28,30 +35,28 @@ def _bucket_frames(idx, hashes):
     return {b: g.reset_index(drop=True) for b, g in rows.groupby("bucket")}
 
 
-def test_prune_all_when_theta_unreachable(idx):
-    from webindex.query import _maps_of
+def _hashes(stats):
+    return [h for (_, _, h) in stats.values()]
 
+
+def test_prune_all_when_theta_unreachable(idx):
     stats = _query_terms(idx, "the data")
-    idf_map, term_rank = _maps_of(stats)
-    fn = _score_bucket_fn(idf_map, term_rank, idx.conf, idx.avgdl, k=10, theta=1e9)
-    for pdf in _bucket_frames(idx, list(idf_map)).values():
+    fn = _bucket_fn(_match_spec(stats, theta=1e9), idx.conf, idx.avgdl, k=10)
+    for pdf in _bucket_frames(idx, _hashes(stats)).values():
         assert len(fn(pdf)) == 0  # every interval UB < theta -> all pruned
 
 
 def test_partial_prune_keeps_survivors_exact(idx):
-    from webindex.query import _maps_of
-
     # rare + hot mix: intervals without the rare term have UB = hot-only,
     # far below a theta anchored at the rare docs' scores -> real pruning
     query = "w199 the"
     stats = _query_terms(idx, query)
     assert "w199" in stats, "fixture corpus must contain the rare tail term"
-    idf_map, term_rank = _maps_of(stats)
-    frames = _bucket_frames(idx, list(idf_map))
-    exact_fn = _score_bucket_fn(idf_map, term_rank, idx.conf, idx.avgdl, k=1000, theta=0.0)
+    frames = _bucket_frames(idx, _hashes(stats))
+    exact_fn = _bucket_fn(_match_spec(stats), idx.conf, idx.avgdl, k=1000)
     all_scores = pd.concat([exact_fn(p) for p in frames.values()])
     theta = float(all_scores["score"].max()) * 0.5
-    pruned_fn = _score_bucket_fn(idf_map, term_rank, idx.conf, idx.avgdl, k=1000, theta=theta)
+    pruned_fn = _bucket_fn(_match_spec(stats, theta), idx.conf, idx.avgdl, k=1000)
     pruned = pd.concat([pruned_fn(p) for p in frames.values()])
     # every >=theta doc survives with a bit-identical score...
     keep = all_scores[all_scores["score"] >= theta].sort_values("doc_id")

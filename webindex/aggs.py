@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from webindex import codec
 from webindex.build import Index
-from webindex.query import _query_terms
+from webindex.query import _live, _query_terms
 
 _IDS = "doc_id long"
 
@@ -41,6 +41,16 @@ def matching_doc_ids(index: Index, query: str, msm: int = 1) -> DataFrame:
     return ids_for_hashes(index, [h for (_, _, h) in stats.values()], msm)
 
 
+def _live_ids(pdf: pd.DataFrame, dead: np.ndarray | None) -> np.ndarray:
+    """One bucket's decoded doc_ids, one per (term, doc) posting, minus
+    live_index()'s pending deletes (query._live)."""
+    ids, _ = codec.decode_ids_concat(
+        pdf["doc_ids"], pdf["n_docs"].to_numpy(dtype=np.int64)
+    )
+    alive = _live(ids, dead)
+    return ids if alive is None else ids[alive]
+
+
 def ids_for_hashes(index: Index, hashes: list[int], msm: int = 1) -> DataFrame:
     """(doc_id) for docs containing >= msm distinct terms from a term-hash
     set (the shared kernel for match filters and dictionary-expanded
@@ -48,17 +58,13 @@ def ids_for_hashes(index: Index, hashes: list[int], msm: int = 1) -> DataFrame:
     spark = index.postings.sparkSession
     if not hashes or msm > len(hashes):
         return spark.createDataFrame([], _IDS)
-    qn = index.conf.quantize_norms
+    dead = index.dead_ids
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame({"doc_id": np.array([], dtype=np.int64)})
         # batched ids-only decode (codec.decode_ids_concat): one vectorized
         # pass over the bucket's concatenated doc_id streams, and the unused
         # tfs/doc_lens streams are never decoded at all
-        ids, _ = codec.decode_ids_concat(
-            pdf["doc_ids"], pdf["n_docs"].to_numpy(dtype=np.int64)
-        )
+        ids = _live_ids(pdf, dead)
         if msm > 1:
             # one row per (term, doc): multiplicity == distinct matching terms
             u, c = np.unique(ids, return_counts=True)
@@ -83,18 +89,10 @@ def ids_with_counts(index: Index, hashes: list[int]) -> DataFrame:
     schema = "doc_id long, n_matched int"
     if not hashes:
         return spark.createDataFrame([], schema)
-    qn = index.conf.quantize_norms
+    dead = index.dead_ids
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "n_matched": np.array([], dtype=np.int32)}
-            )
-        ids, _ = codec.decode_ids_concat(
-            pdf["doc_ids"], pdf["n_docs"].to_numpy(dtype=np.int64)
-        )
-        u, c = np.unique(ids, return_counts=True)
+        u, c = np.unique(_live_ids(pdf, dead), return_counts=True)
         return pd.DataFrame({"doc_id": u, "n_matched": c.astype(np.int32)})
 
     blocks = index.postings.filter(F.col("term_hash").isin(hashes))
@@ -447,7 +445,7 @@ def match_scores(
     IN(term_hash) block scan, one bucket groupBy, per-bucket decode+score.
     The only difference is k=None — the local cut is skipped, so the output
     is match-set-sized (bounded by the query terms' df sum), not k."""
-    from webindex.query import _maps_of, _query_terms, _score_bucket_fn, _HIT
+    from webindex.query import _HIT, _match_spec, _scored
 
     spark = index.postings.sparkSession
     stats = _query_terms(index, query)
@@ -458,12 +456,7 @@ def match_scores(
             t: (df, idf_override.get(t, idf), h)
             for t, (df, idf, h) in stats.items()
         }
-    idf_map, term_rank = _maps_of(stats)
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    return blocks.groupBy("bucket").applyInPandas(
-        _score_bucket_fn(idf_map, term_rank, index.conf, index.avgdl, None, 0.0, msm),
-        schema=_HIT,
-    )
+    return _scored(index, _match_spec(stats, msm=msm), None)
 
 
 def stats_agg(

@@ -18,6 +18,10 @@ BM25-ranked hits, top-1 read) to arbitrary k over our native index:
            local top-k
       -> global orderBy(score desc, doc_id asc).limit(k)  [k rows per bucket]
 
+Every BM25 top-k family runs that one kernel (_bucket_fn, planned by
+_scored); a family only builds its _Spec — slot weights, combine, θ,
+per-doc count bounds, cursor.
+
 Buckets partition doc space (build.bucket_expr), so each doc's postings for
 ALL query terms land in the same bucket group — the per-bucket sum is the
 full score, local top-k is safe, and pruning a bucket can never corrupt a
@@ -34,6 +38,8 @@ are identical at any parallelism and equal to the pytest oracle's.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
@@ -44,6 +50,14 @@ from webindex.textproc import tokenize
 
 _HIT = T.StructType(
     [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("score", T.DoubleType(), False),
+    ]
+)
+
+_QHIT = T.StructType(
+    [
+        T.StructField("query_id", T.StringType(), False),
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("score", T.DoubleType(), False),
     ]
@@ -73,32 +87,66 @@ def _query_terms(index: Index, query: str) -> dict[str, tuple[int, float, int]]:
     }
 
 
-def _decode_contribs_iter(idf_map: dict[int, float], conf, avgdl: float):
+def _live(ids: np.ndarray, dead: np.ndarray | None) -> np.ndarray | None:
+    """Mask of the `ids` NOT in the sorted `dead` array (Index.dead_ids —
+    live_index()'s pending deletes), or None when nothing is dead. The one
+    live-docs filter of every kernel: it runs on decoded rows, before any
+    per-doc combine or local top-k cut — a dead doc kept in a bucket's local
+    k would displace a live doc that belongs in the global top-k, and a
+    dead doc's contribution must not set a θ seed (it never reaches the
+    result set, so θ could exceed the true k-th best LIVE score)."""
+    if dead is None or not len(dead):
+        return None
+    pos = np.searchsorted(dead, ids)
+    pos[pos >= len(dead)] = len(dead) - 1
+    return dead[pos] != ids
+
+
+def _local_topk(doc_ids: np.ndarray, scores: np.ndarray, k: int | None):
+    """The local top-k cut of every bucket kernel: score desc, doc_id asc
+    (k=None keeps all, in that order)."""
+    sel = np.lexsort((doc_ids, -scores))[:k]
+    return doc_ids[sel], scores[sel]
+
+
+def _decode_rows(blocks: pd.DataFrame, conf, avgdl: float, dead: np.ndarray | None):
+    """The shared decode step: posting-block rows -> per-posting rows
+    (blk, doc_id, tf, dl, impact), dead docs dropped (_live). blk is the
+    row's block position in `blocks` (ascending); impact is the
+    term-independent BM25 factor, so a caller's contribution is ONE float64
+    multiply weight × impact — the arithmetic the oracle's sum uses.
+
+    Batched (codec.decode_blocks_concat): three vectorized passes over the
+    blocks' concatenated streams instead of a Python call per block row,
+    bit-identical to decoding block by block."""
+    counts = blocks["n_docs"].to_numpy(dtype=np.int64)
+    ids, tfs, dls, _ = codec.decode_blocks_concat(
+        blocks["doc_ids"], blocks["tfs"], blocks["doc_lens"], counts,
+        conf.quantize_norms,
+    )
+    blk = np.repeat(np.arange(len(blocks)), counts)
+    impact = codec.bm25_impact(tfs, dls, avgdl, conf.k1, conf.b)
+    alive = _live(ids, dead)
+    if alive is not None:
+        blk, ids, tfs, dls, impact = (
+            blk[alive], ids[alive], tfs[alive], dls[alive], impact[alive]
+        )
+    return blk, ids, tfs, dls, impact
+
+
+def _decode_contribs_iter(
+    idf_map: dict[int, float], conf, avgdl: float, dead: np.ndarray | None = None
+):
     """mapInPandas fn over posting-block rows -> (term_hash, doc_id,
-    contrib). idf_map is keyed by term_hash. Used by the θ-seed jobs."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
+    contrib), live docs only. idf_map is keyed by term_hash. Used by the
+    θ-seed jobs."""
 
     def fn(batches):
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"term_hash": [], "doc_id": [], "contrib": []})
-                continue
-            counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-            ids, tfs, dls, _ = codec.decode_blocks_concat(
-                pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, qn
-            )
-            contribs = np.repeat(
-                pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-            ) * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-            yield pd.DataFrame(
-                {
-                    "term_hash": np.repeat(
-                        pdf["term_hash"].to_numpy(dtype=np.int64), counts
-                    ),
-                    "doc_id": ids,
-                    "contrib": contribs,
-                }
-            )
+            blk, ids, _, _, impact = _decode_rows(pdf, conf, avgdl, dead)
+            th = pdf["term_hash"].to_numpy(dtype=np.int64)[blk]
+            w = pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64)[blk]
+            yield pd.DataFrame({"term_hash": th, "doc_id": ids, "contrib": w * impact})
 
     return fn
 
@@ -107,24 +155,26 @@ def _interval_prune(
     tmins: np.ndarray,
     tmaxs: np.ndarray,
     timps: np.ndarray,
-    tranks: np.ndarray,
-    n_terms: int,
+    tslots: np.ndarray,
+    n_slots: int,
     theta: float,
-    msm: int = 1,
+    cover: tuple = (),
 ):
     """Block-max WAND at elementary-interval granularity (pure metadata math).
 
     Elementary doc-range intervals from the blocks' [min,max] spans;
-    UB(interval) = Σ_t max(idf_t·max_impact of t's blocks covering it). A doc
-    in an interval with UB < θ cannot reach the top-k; every doc in a kept
-    interval has ALL its blocks decoded (any block containing it overlaps its
-    interval), so survivors get exact scores.
+    UB(interval) = Σ_slot max(weight·max_impact of the slot's blocks
+    covering it). A doc in an interval with UB < θ cannot reach the top-k;
+    every doc in a kept interval has ALL its blocks decoded (any block
+    containing it overlaps its interval), so survivors get exact scores.
 
-    msm > 1 adds the conjunctive coverage prune: a doc matching at least
-    `msm` distinct query terms must live in an interval covered by blocks of
-    at least `msm` distinct terms, so under-covered intervals are dropped
-    (for operator=and, msm = n_terms — the intersection prune, the
-    non-positional analogue of the phrase range prune).
+    cover = ((slot ids, need), ...) adds the coverage prune: a doc
+    matching at least `need` of those slots must live in an interval
+    covered by blocks of at least `need` of them, so under-covered
+    intervals are dropped (match msm / operator=and over all slots — the
+    intersection prune, the non-positional analogue of the phrase range
+    prune; bool's required and should clauses). Coverage is block
+    presence, not impact, so bool's unscored (weight 0) terms count.
 
     Returns (bounds, interval_keep, block_keep) or None when everything is
     pruned."""
@@ -134,14 +184,16 @@ def _interval_prune(
         return None
     lo = np.searchsorted(bounds, tmins, side="right") - 1
     hi = np.searchsorted(bounds, tmaxs, side="right") - 1
-    ub = np.zeros((n_terms, n_int), dtype=np.float64)
+    ub = np.zeros((n_slots, n_int), dtype=np.float64)
+    cov = np.zeros((n_slots, n_int), dtype=bool)
     for bi in range(len(tmins)):  # blocks per bucket are few
-        t, s, e = tranks[bi], lo[bi], hi[bi]
-        seg = ub[t, s : e + 1]
+        s, a, e = tslots[bi], lo[bi], hi[bi] + 1
+        seg = ub[s, a:e]
         np.maximum(seg, timps[bi], out=seg)
+        cov[s, a:e] = True
     interval_keep = ub.sum(axis=0) >= theta
-    if msm > 1:
-        interval_keep &= (ub > 0.0).sum(axis=0) >= msm
+    for slots, need in cover:
+        interval_keep &= cov[list(slots)].sum(axis=0) >= need
     if not interval_keep.any():
         return None
     block_keep = np.zeros(len(tmins), dtype=bool)
@@ -151,184 +203,230 @@ def _interval_prune(
     return bounds, interval_keep, block_keep
 
 
-def _score_bucket_fn(
-    idf_map: dict[int, float],
-    term_rank: dict[int, int],
-    conf,
-    avgdl: float,
-    k: int,
-    theta: float,
+class _Spec(NamedTuple):
+    """What the bucket kernel scores for one query. Each public query
+    derives it from its family alone — never a user-settable option.
+
+    slots: ((weight, term hashes), ...) in summation order. A slot is one
+      term (weight idf; 0.0 for bool's filter/must_not terms, whose rows
+      then add an exact +0.0 — an IEEE no-op — but still count), or one
+      synonym group (several member hashes, one weight).
+    combine: per-doc combine over slots — "sum" (match family), "max"
+      (fuzzy's dis_max) or "pool" (synonyms: member tfs summed per
+      (doc, slot) before the impact formula).
+    theta: block-max WAND threshold; 0 prunes nothing by score.
+    counts: ((slot ids, lo, hi), ...) — per doc, the number of those slots
+      it matches must lie in [lo, hi] (hi None: unbounded). match msm and
+      bool's required / should clauses set lo, must_not sets hi=0; every
+      lo > 0 also prunes at block metadata (_interval_prune cover).
+    after: search_after cursor (score, doc_id)."""
+
+    slots: tuple
+    combine: str = "sum"
+    theta: float = 0.0
+    counts: tuple = ()
+    after: tuple[float, int] | None = None
+
+
+def _match_spec(
+    stats: dict[str, tuple[int, float, int]],
+    theta: float = 0.0,
     msm: int = 1,
     after: tuple[float, int] | None = None,
-    _probe: dict | None = None,
+) -> _Spec:
+    """match-family spec: one slot per present term, TERM-STRING ascending —
+    the oracle's deterministic summation order, kept even though blocks
+    only carry hashes. msm > 1 (ES minimum_should_match / operator=and):
+    only docs matching at least msm of the terms survive."""
+    slots = tuple((stats[t][1], (stats[t][2],)) for t in sorted(stats))
+    counts = ((tuple(range(len(slots))), msm, None),) if msm > 1 else ()
+    return _Spec(slots, theta=theta, counts=counts, after=after)
+
+
+def _bucket_fn(
+    specs,
+    conf,
+    avgdl: float,
+    k: int | None,
     dead: np.ndarray | None = None,
+    _probe: dict | None = None,
 ):
-    """applyInPandas fn: one bucket's blocks (all query terms) -> local top-k.
+    """applyInPandas fn — THE per-bucket BM25 kernel: one bucket's posting
+    blocks -> local top-k. `specs` is one _Spec (output doc_id, score) or
+    {query_id: _Spec} (topk_batch: output query_id, doc_id, score; a block
+    decodes once however many queries need it). Buckets partition doc
+    space, so a doc's postings for every query term land in this group:
+    the per-doc combine is its full score and the local cut is safe.
 
-    idf_map/term_rank are keyed by term_hash; term_rank orders by the TERM
-    STRING ascending (computed driver-side from term_stats), preserving the
-    oracle's deterministic summation order even though blocks only carry
-    hashes. Rows sorted by (doc_id, rank), summed with np.add.reduceat.
-
-    msm > 1 (ES minimum_should_match / operator=and): only docs matching at
-    least msm distinct query terms survive — intervals under-covered at the
-    block-metadata level are pruned before any decode, and the per-doc
-    distinct-term count (row count per doc: a doc appears at most once per
-    term, blocks partition doc ranges) filters the rest post-sum.
-
-    Per-bucket θ (round 5, function_score skew pruning): if the incoming
-    blocks frame carries a `_theta_b` column (one value per bucket, joined
-    on upstream), the EFFECTIVE θ for this bucket is max(theta, _theta_b);
-    a non-finite/NULL _theta_b prunes the whole bucket before any metadata
-    work (the caller has proven no doc in it can reach the global top-k)."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
+      1. A `_theta_b` column (one value per bucket, function_score's
+         per-bucket bound joined on upstream) raises θ to max(θ, _theta_b);
+         NULL or non-finite prunes the whole bucket (the caller proved no
+         doc in it can reach the global top-k).
+      2. One metadata pass per spec (_interval_prune) when θ > 0 or a count
+         bound has lo > 0: interval UBs and slot coverage pick the blocks
+         to decode and the intervals whose docs survive.
+      3. One decode of every kept block (_decode_rows, dead docs dropped);
+         contribution = slot weight × impact.
+      4. Rows in pruned intervals drop (partial scores, provably below θ).
+      5. Per-doc combine in (doc_id, slot) order — np.add.reduceat then
+         sums in slot order, the oracle's float64 order — or max / pooled
+         tf per the spec.
+      6. Count bounds (rows per doc == distinct matched slots: a doc
+         appears once per term) and the search_after cursor — strictly
+         after (s_a, d_a) in (score desc, doc_id asc) order; scores are
+         deterministic float64, so == against this engine's cursor is exact.
+      7. Local top-k, score desc / doc_id asc; k=None keeps every doc
+         (match_scores, function_score's re-ranked pass)."""
+    batch = isinstance(specs, dict)
+    items = list(specs.items()) if batch else [(None, specs)]
+    weights = [np.asarray([w for w, _ in s.slots], dtype=np.float64) for _, s in items]
+    k1, b = conf.k1, conf.b
+    cols = ["query_id", "doc_id", "score"] if batch else ["doc_id", "score"]
+    empty = pd.DataFrame({c: [] for c in cols}).astype(
         {"doc_id": np.int64, "score": np.float64}
     )
-    n_terms = len(term_rank)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        theta_eff = theta
-        if "_theta_b" in pdf.columns:
-            tb = pdf["_theta_b"].iloc[0]
-            # NULL (bucket absent from the extrema frame: no rankable docs)
-            # and +inf (bound proves the bucket can't reach top-k) both
-            # prune the entire bucket
-            if tb is None or not np.isfinite(tb):
-                return empty
-            theta_eff = max(theta_eff, float(tb))
-        keep_mask = None  # block-level decode filter
-        bounds = None  # elementary interval bounds (kept intervals only)
-        interval_keep = None
-        if theta_eff > 0.0 or msm > 1:
-            tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
-            tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
-            # blocks encoded at an older avgdl keep a sound upper bound when
-            # scaled by max(1, avgdl/avgdl0) (see schema.POSTINGS.avgdl0)
-            drift = np.maximum(
-                1.0, avgdl / pdf["avgdl0"].to_numpy(dtype=np.float64)
-            )
-            timps = (
-                pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64)
-                * pdf["max_impact"].to_numpy(dtype=np.float64)
-                * drift
-            )
-            tranks = pdf["term_hash"].map(term_rank).to_numpy(dtype=np.int64)
-            pruned = _interval_prune(
-                tmins, tmaxs, timps, tranks, n_terms, theta_eff, msm
-            )
-            if pruned is None:
-                return empty
-            bounds, interval_keep, keep_mask = pruned
-
         if _probe is not None:
             _probe["blocks_total"] = _probe.get("blocks_total", 0) + len(pdf)
-        sub = pdf if keep_mask is None else pdf.iloc[np.nonzero(keep_mask)[0]]
-        if not len(sub):
+        theta_b = 0.0
+        if "_theta_b" in pdf.columns:
+            tb = pdf["_theta_b"].iloc[0]
+            if tb is None or not np.isfinite(tb):
+                return empty
+            theta_b = float(tb)
+        blocks_of: dict[int, list[int]] = {}
+        for bi, h in enumerate(pdf["term_hash"].tolist()):
+            blocks_of.setdefault(h, []).append(bi)
+        # blocks encoded at an older avgdl keep a sound upper bound when
+        # scaled by max(1, avgdl/avgdl0) (see schema.POSTINGS.avgdl0)
+        drift = np.maximum(1.0, avgdl / pdf["avgdl0"].to_numpy(dtype=np.float64))
+        bound = pdf["max_impact"].to_numpy(dtype=np.float64)
+
+        # -- 2. per spec: its (block, slot) pairs the metadata keeps
+        need = np.zeros(len(pdf), dtype=bool)
+        plans = []
+        for (qid, s), weight in zip(items, weights):
+            per_slot = [[bi for h in hs for bi in blocks_of.get(h, ())] for _, hs in s.slots]
+            pb = np.asarray([bi for bs in per_slot for bi in bs], dtype=np.int64)
+            ps = np.repeat(np.arange(len(s.slots)), [len(bs) for bs in per_slot])
+            theta = max(s.theta, theta_b)
+            cover = tuple((ids, lo) for ids, lo, _ in s.counts if lo > 0)
+            iv = None
+            if len(pb) and (theta > 0.0 or cover):
+                pruned = _interval_prune(
+                    pdf["min_doc"].to_numpy(dtype=np.int64)[pb],
+                    pdf["max_doc"].to_numpy(dtype=np.int64)[pb],
+                    weight[ps] * bound[pb] * drift[pb], ps, len(s.slots), theta,
+                    cover,
+                )
+                if pruned is None:
+                    continue
+                iv, block_keep = pruned[:2], pruned[2]
+                pb, ps = pb[block_keep], ps[block_keep]
+            if len(pb):
+                need[pb] = True
+                plans.append((qid, s, weight, pb, ps, iv))
+        if not plans:
             return empty
+
+        # -- 3. one decode of every block some spec kept
+        nidx = np.nonzero(need)[0]
         if _probe is not None:
-            _probe["blocks_decoded"] = _probe.get("blocks_decoded", 0) + len(sub)
-        # batched decode (codec.decode_blocks_concat): three vectorized
-        # passes over the kept blocks' concatenated streams instead of a
-        # Python call per block row — bit-identical values, and the per-doc
-        # float64 ops below are unchanged (same contrib = idf * impact
-        # multiply, same (doc_id, term-rank-asc) summation order)
-        counts = sub["n_docs"].to_numpy(dtype=np.int64)
-        ids, tfs, dls, _ = codec.decode_blocks_concat(
-            sub["doc_ids"], sub["tfs"], sub["doc_lens"], counts, qn
-        )
-        terms = np.repeat(
-            sub["term_hash"].map(term_rank).to_numpy(dtype=np.int32), counts
-        )
-        contribs = np.repeat(
-            sub["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-        ) * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-        if dead is not None and len(dead):
-            # live-docs filter (Index.dead_ids): must run BEFORE the local
-            # top-k cut — a dead doc in a bucket's local k would displace a
-            # live doc that belongs in the global top-k. `dead` is sorted.
-            pos = np.searchsorted(dead, ids)
-            pos[pos >= len(dead)] = len(dead) - 1
-            alive = dead[pos] != ids
-            if not alive.any():
-                return empty
-            ids, terms, contribs = ids[alive], terms[alive], contribs[alive]
-        if interval_keep is not None:
-            # drop docs living in pruned intervals (their partial scores are
-            # incomplete AND provably below θ)
-            iv = np.searchsorted(bounds, ids, side="right") - 1
-            doc_keep = (iv >= 0) & (iv < len(interval_keep))
-            doc_keep[doc_keep] &= interval_keep[iv[doc_keep]]
-            if not doc_keep.any():
-                return empty
-            ids, terms, contribs = ids[doc_keep], terms[doc_keep], contribs[doc_keep]
-        # sort by (doc_id, term): reduceat then sums per doc in term-asc order
-        order = np.lexsort((terms, ids))
-        ids, contribs = ids[order], contribs[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.add.reduceat(contribs, starts)
-        if msm > 1:
-            # rows per doc == distinct matching terms (one row per term/doc)
-            counts = np.diff(np.append(starts, len(ids)))
-            ok = counts >= msm
-            if not ok.any():
-                return empty
-            doc_ids, scores = doc_ids[ok], scores[ok]
-        if after is not None:
-            # search_after cursor: keep docs strictly after (s_a, d_a) in
-            # (score desc, doc_id asc) rank order. Scores are deterministic
-            # float64 (fixed summation order), so == against a cursor taken
-            # from a previous page of THIS engine is exact
-            s_a, d_a = after
-            m = (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
-            if not m.any():
-                return empty
-            doc_ids, scores = doc_ids[m], scores[m]
-        # local top-k: score desc, doc_id asc
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
+            _probe["blocks_decoded"] = _probe.get("blocks_decoded", 0) + len(nidx)
+        blk, ids, tfs, dls, impact = _decode_rows(pdf.iloc[nidx], conf, avgdl, dead)
+        at = np.cumsum(need) - 1  # pdf block -> its position in the decode
+        first = np.searchsorted(blk, np.arange(len(nidx)))
+        n_rows = np.searchsorted(blk, np.arange(len(nidx)), side="right") - first
+
+        out = []
+        for qid, s, weight, pb, ps, iv in plans:
+            n = n_rows[at[pb]]
+            rows = np.repeat(first[at[pb]] - (np.cumsum(n) - n), n) + np.arange(n.sum())
+            slot, d = np.repeat(ps, n), ids[rows]
+            # -- 4. docs in pruned intervals
+            if iv is not None:
+                bounds, interval_keep = iv
+                ix = np.searchsorted(bounds, d, side="right") - 1
+                keep = (ix >= 0) & (ix < len(interval_keep))
+                keep[keep] &= interval_keep[ix[keep]]
+                rows, slot, d = rows[keep], slot[keep], d[keep]
+            if not len(d):
+                continue
+            # -- 5. per-doc combine in (doc_id, slot) order
+            order = np.lexsort((slot, d))
+            rows, slot, d = rows[order], slot[order], d[order]
+            if s.combine == "pool":
+                # member tfs pooled per (doc, slot): exact integer sums in
+                # float64, and a doc's dl is the same on every row
+                g = np.concatenate(
+                    ([0], np.nonzero((d[1:] != d[:-1]) | (slot[1:] != slot[:-1]))[0] + 1)
+                )
+                tf = np.add.reduceat(tfs[rows].astype(np.float64), g)
+                pooled = codec.bm25_impact(tf, dls[rows][g], avgdl, k1, b)
+                slot, d = slot[g], d[g]
+                contrib = weight[slot] * pooled
+            else:
+                contrib = weight[slot] * impact[rows]
+            starts = np.concatenate(([0], np.nonzero(d[1:] != d[:-1])[0] + 1))
+            doc_ids = d[starts]
+            reduce = np.maximum if s.combine == "max" else np.add
+            scores = reduce.reduceat(contrib, starts)
+            # -- 6. doc predicates
+            ok = np.ones(len(doc_ids), dtype=bool)
+            for cids, lo, hi in s.counts:
+                m = np.add.reduceat(np.isin(slot, cids).astype(np.int64), starts)
+                ok &= (m >= lo) & (hi is None or m <= hi)
+            if s.after is not None:
+                s_a, d_a = s.after
+                ok &= (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
+            # -- 7. local top-k
+            out.append((qid, *_local_topk(doc_ids[ok], scores[ok], k)))
+        if not out:
+            return empty
+        frame = {
+            "doc_id": np.concatenate([o[1] for o in out]),
+            "score": np.concatenate([o[2] for o in out]),
+        }
+        if batch:
+            frame = {"query_id": [q for q, ds, _ in out for _d in ds], **frame}
+        return pd.DataFrame(frame)
 
     return fn
 
 
-def _maps_of(stats: dict[str, tuple[int, float, int]]):
-    """(idf_map, term_rank) keyed by term_hash; rank = term-string ascending
-    (the deterministic summation order)."""
-    idf_map = {h: idf for (_, idf, h) in stats.values()}
-    term_rank = {stats[t][2]: i for i, t in enumerate(sorted(stats))}
-    return idf_map, term_rank
-
-
-def _run_scored(
-    index: Index,
-    idf_map: dict[int, float],
-    term_rank: dict[int, int],
-    k: int,
-    theta: float,
-    msm: int = 1,
-    after: tuple[float, int] | None = None,
+def _scored(
+    index: Index, specs, k: int | None, theta_df: DataFrame | None = None
 ) -> DataFrame:
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _score_bucket_fn(
-            idf_map, term_rank, index.conf, index.avgdl, k, theta, msm, after,
-            dead=index.dead_ids,
-        ),
-        schema=_HIT,
+    """The scoring plan of every BM25 top-k family: candidate blocks
+    (filter term_hash IN (...) — row-group pruning on the hash-clustered
+    postings) -> groupBy(bucket).applyInPandas(_bucket_fn) -> global
+    orderBy(score desc, doc_id asc).limit(k). k=None skips both cuts;
+    a {query_id: spec} batch returns the per-bucket locals for topk_batch's
+    per-query window. theta_df (bucket, _theta_b) is function_score's
+    per-bucket θ frame — bucket-count-sized, so broadcast, no shuffle of
+    the blocks. No term present: the empty result, no job."""
+    batch = isinstance(specs, dict)
+    hashes = sorted(
+        {h for s in (specs.values() if batch else [specs]) for _, hs in s.slots for h in hs}
     )
+    if not hashes:
+        return index.postings.sparkSession.createDataFrame([], _QHIT if batch else _HIT)
+    blocks = index.postings.filter(F.col("term_hash").isin(hashes))
+    if theta_df is not None:
+        blocks = blocks.join(F.broadcast(theta_df), "bucket", "left")
+    hits = blocks.groupBy("bucket").applyInPandas(
+        _bucket_fn(specs, index.conf, index.avgdl, k, index.dead_ids),
+        schema=_QHIT if batch else _HIT,
+    )
+    if batch or k is None:
+        return hits
     return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def topk_exact(index: Index, query: str, k: int = 10) -> DataFrame:
     """Exhaustive scoring (θ=0: nothing pruned) — the WAND cross-check."""
-    spark = index.postings.sparkSession
-    stats = _query_terms(index, query)
-    if not stats:
-        return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
-    return _run_scored(index, idf_map, term_rank, k, theta=0.0)
+    return _scored(index, _match_spec(_query_terms(index, query)), k)
 
 
 def _theta_seed(
@@ -365,16 +463,11 @@ def _theta_seed(
             (F.col("term_hash") == term_hash) & F.col("block_id").isin(ids)
         )
         seed = blocks.mapInPandas(
-            _decode_contribs_iter({term_hash: idf}, index.conf, index.avgdl),
+            _decode_contribs_iter(
+                {term_hash: idf}, index.conf, index.avgdl, index.dead_ids
+            ),
             schema=_DECODED,
         )
-        if index.dead_ids is not None and len(index.dead_ids):
-            # a dead doc must not set θ: it never reaches the result set, so
-            # a θ taken from its contribution could exceed the true k-th
-            # best LIVE score and over-prune
-            seed = seed.filter(
-                ~F.col("doc_id").isin([int(d) for d in index.dead_ids])
-            )
         kth = seed.orderBy(F.desc("contrib")).limit(k).collect()
         best = np.asarray([float(r["contrib"]) for r in kth])
         exhausted = len(top) < m  # fetched every block the term has
@@ -407,7 +500,6 @@ def topk_wand(
     stats = _query_terms(index, query)
     if not stats:
         return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
     if seed_min_blocks is None:
         seed_min_blocks = THETA_SEED_MIN_BLOCKS
 
@@ -420,7 +512,7 @@ def topk_wand(
     rterm = min(stats, key=lambda t: (stats[t][0], t))
     if stats[rterm][0] > k and est_blocks >= seed_min_blocks:
         theta = _theta_seed(index, stats[rterm][2], stats[rterm][1], k)
-    return _run_scored(index, idf_map, term_rank, k, theta)
+    return _scored(index, _match_spec(stats, theta), k)
 
 
 def topk_match(
@@ -461,8 +553,7 @@ def topk_match(
     stats = _query_terms(index, query)
     if msm > len(stats):  # a required term is absent from the corpus
         return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
-    return _run_scored(index, idf_map, term_rank, k, theta=0.0, msm=msm)
+    return _scored(index, _match_spec(stats, msm=msm), k)
 
 
 def topk_after(
@@ -486,141 +577,7 @@ def topk_after(
     (deep pagination re-scores candidates — same trade ES makes)."""
     if after is None:
         return topk_wand(index, query, k)
-    spark = index.postings.sparkSession
-    stats = _query_terms(index, query)
-    if not stats:
-        return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
-    return _run_scored(index, idf_map, term_rank, k, theta=0.0, after=after)
-
-
-def _bool_bucket_fn(
-    idf_map: dict[int, float],
-    term_rank: dict[int, int],
-    roles: dict[int, tuple[bool, bool, bool, bool]],
-    conf,
-    avgdl: float,
-    k: int,
-    n_required: int,
-    msm: int,
-    dead: np.ndarray | None = None,
-):
-    """applyInPandas fn: one bucket's blocks (every clause term, all roles)
-    -> local top-k under Lucene BooleanQuery semantics.
-
-    roles: term_hash -> (required, scored, excluded, should). Buckets
-    partition doc space, so a doc's postings for EVERY clause term live in
-    this one group: required presence, must_not absence, and the
-    minimum_should_match count are all decidable locally, and score (sum of
-    the SCORED terms' BM25 contributions, term-ascending) is exact.
-
-    Metadata prune before any decode: an interval must be covered by blocks
-    of ALL n_required required terms (a required term with no block covering
-    a doc range cannot appear in those docs) and by >= msm distinct should
-    terms. Exclusion can't prune at metadata (absence isn't visible there);
-    excluded terms' blocks in kept intervals decode so their docs drop."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-    term_row = {t: i for i, t in enumerate(sorted(roles))}
-    req_rows = [term_row[t] for t, r in roles.items() if r[0]]
-    shd_rows = [term_row[t] for t, r in roles.items() if r[3]]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
-        tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
-        th_arr = pdf["term_hash"].to_numpy(dtype=np.int64)
-        bounds = np.unique(np.concatenate((tmins, tmaxs + 1)))
-        n_int = len(bounds) - 1
-        if n_int <= 0:
-            return empty
-        lo = np.searchsorted(bounds, tmins, side="right") - 1
-        hi = np.searchsorted(bounds, tmaxs, side="right") - 1
-        cov = np.zeros((len(term_row), n_int), dtype=bool)
-        for bi in range(len(th_arr)):
-            cov[term_row[int(th_arr[bi])], lo[bi] : hi[bi] + 1] = True
-        interval_keep = np.ones(n_int, dtype=bool)
-        if n_required:
-            interval_keep &= cov[req_rows].sum(axis=0) == n_required
-        if msm > 0:
-            interval_keep &= (
-                cov[shd_rows].sum(axis=0) >= msm
-                if shd_rows
-                else np.zeros(n_int, dtype=bool)
-            )
-        if not interval_keep.any():
-            return empty
-
-        keep_mask = np.fromiter(
-            (interval_keep[lo[bi] : hi[bi] + 1].any() for bi in range(len(th_arr))),
-            dtype=bool,
-            count=len(th_arr),
-        )
-        if not keep_mask.any():
-            return empty
-        sub = pdf.iloc[np.nonzero(keep_mask)[0]]
-        # batched decode (codec.decode_blocks_concat) — same values and the
-        # same float64 contrib arithmetic as the per-block loop: unscored
-        # blocks get an exact 0.0 idf factor, and 0.0 * impact is +0.0
-        # elementwise, identical to the old np.zeros fill
-        counts = sub["n_docs"].to_numpy(dtype=np.int64)
-        ids, tfs, dls, _ = codec.decode_blocks_concat(
-            sub["doc_ids"], sub["tfs"], sub["doc_lens"], counts, qn
-        )
-        sub_th = sub["term_hash"].to_numpy(dtype=np.int64)
-        role_rows = np.asarray([roles[int(t)] for t in sub_th], dtype=np.int32)
-        ranks = np.repeat(
-            sub["term_hash"].map(term_rank).to_numpy(dtype=np.int32), counts
-        )
-        idf_per_block = np.asarray(
-            [idf_map[int(t)] if role_rows[i, 1] else 0.0 for i, t in enumerate(sub_th)],
-            dtype=np.float64,
-        )
-        contribs = np.repeat(idf_per_block, counts) * codec.bm25_impact(
-            tfs, dls, avgdl, k1, b
-        )
-        reqf = np.repeat(role_rows[:, 0], counts)
-        shdf = np.repeat(role_rows[:, 3], counts)
-        excf = np.repeat(role_rows[:, 2], counts)
-        iv = np.searchsorted(bounds, ids, side="right") - 1
-        doc_keep = (iv >= 0) & (iv < n_int)
-        doc_keep[doc_keep] &= interval_keep[iv[doc_keep]]
-        if not doc_keep.any():
-            return empty
-        ids, ranks, contribs = ids[doc_keep], ranks[doc_keep], contribs[doc_keep]
-        reqf, shdf, excf = reqf[doc_keep], shdf[doc_keep], excf[doc_keep]
-        # scored terms rank lowest (term-ascending), so summing ALL rows in
-        # rank order keeps the oracle's float64 order: the unscored rows add
-        # exact 0.0s, which never perturb an IEEE running sum
-        order = np.lexsort((ranks, ids))
-        ids, contribs = ids[order], contribs[order]
-        reqf, shdf, excf = reqf[order], shdf[order], excf[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.add.reduceat(contribs, starts)
-        ok = np.ones(len(doc_ids), dtype=bool)
-        if n_required:
-            ok &= np.add.reduceat(reqf, starts) == n_required
-        ok &= np.add.reduceat(excf, starts) == 0
-        if msm > 0:
-            ok &= np.add.reduceat(shdf, starts) >= msm
-        if not ok.any():
-            return empty
-        doc_ids, scores = doc_ids[ok], scores[ok]
-        if dead is not None and len(dead):
-            # live-docs filter (Index.dead_ids), same contract as the WAND
-            # kernel: must run BEFORE the local top-k cut. `dead` is sorted.
-            pos = np.searchsorted(dead, doc_ids)
-            pos[pos >= len(dead)] = len(dead) - 1
-            alive = dead[pos] != doc_ids
-            if not alive.any():
-                return empty
-            doc_ids, scores = doc_ids[alive], scores[alive]
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
-
-    return fn
+    return _scored(index, _match_spec(_query_terms(index, query), after=after), k)
 
 
 def topk_bool(
@@ -653,7 +610,10 @@ def topk_bool(
     One fused stage, θ=0 (conjunctive constraints make the single-term seed
     bound unsound, as in topk_match); the required-coverage metadata prune
     does the heavy lifting — a bucket or interval missing any required
-    term's blocks is skipped before decode."""
+    term's blocks, or covered by fewer than msm should terms' blocks, is
+    skipped before decode. Exclusion can't prune at metadata (absence isn't
+    visible there): must_not blocks in kept intervals decode so their docs
+    drop in the per-doc count pass."""
     spark = index.postings.sparkSession
     must_t, should_t = set(tokenize(must)), set(tokenize(should))
     not_t, filt_t = set(tokenize(must_not)), set(tokenize(filter_))
@@ -707,23 +667,21 @@ def topk_bool(
         return spark.createDataFrame([], _HIT)
     # scored terms first in term-ascending order (the summation order the
     # oracle uses); the remaining (filter-only / excluded) terms after, in
-    # term order for stability
-    rest = sorted(t for t in stats if t not in present_scored)
-    term_rank = {stats[t][2]: i for i, t in enumerate(present_scored + rest)}
-    idf_map = {stats[t][2]: stats[t][1] for t in present_scored}
-    roles = {
-        stats[t][2]: (t in required, t in present_scored, t in not_t, t in present_should)
-        for t in stats
-    }
-    blocks = index.postings.filter(F.col("term_hash").isin(list(roles)))
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _bool_bucket_fn(
-            idf_map, term_rank, roles, index.conf, index.avgdl, k,
-            len(required), msm, dead=index.dead_ids,
-        ),
-        schema=_HIT,
+    # term order for stability, with weight 0.0 so they count but never score
+    order = present_scored + sorted(t for t in stats if t not in present_scored)
+    slots = tuple(
+        (stats[t][1] if t in present_scored else 0.0, (stats[t][2],)) for t in order
     )
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def slots_of(terms: set[str]) -> tuple[int, ...]:
+        return tuple(i for i, t in enumerate(order) if t in terms)
+
+    counts = [(slots_of(not_t), 0, 0)] if not_t else []
+    if required:
+        counts.append((slots_of(required), len(required), None))
+    if msm > 0:
+        counts.append((slots_of(present_should), msm, None))
+    return _scored(index, _Spec(slots, counts=tuple(counts)), k)
 
 
 def _batch_seed_round(
@@ -771,7 +729,8 @@ def _batch_seed_round(
     # unrelated terms' blocks; the broadcast semi-join keeps the pairing exact
     blocks = index.postings.join(F.broadcast(meta), ["term_hash", "block_id"], "semi")
     contribs = blocks.mapInPandas(
-        _decode_contribs_iter(seed_terms, index.conf, index.avgdl), schema=_DECODED
+        _decode_contribs_iter(seed_terms, index.conf, index.avgdl, index.dead_ids),
+        schema=_DECODED,
     )
     kth = (
         contribs.withColumn(
@@ -871,20 +830,12 @@ def topk_batch(
     idf_map = {hash_of[r["term"]]: float(r["idf"]) for r in rows}
     df_map = {r["term"]: int(r["df"]) for r in rows}
     # query -> its corpus-present term hashes (TERM-STRING-ascending order —
-    # the deterministic summation order); term_hash -> [query_id ...]
+    # the deterministic summation order)
     qpresent = {
         qid: [hash_of[t] for t in ts if t in hash_of] for qid, ts in qterms.items()
     }
-    term_queries: dict[int, list[str]] = {}
-    for qid, hs in qpresent.items():
-        for h in hs:
-            term_queries.setdefault(h, []).append(qid)
-    if not term_queries:
+    if not any(qpresent.values()):
         return spark.createDataFrame([], out_schema)
-    conf, avgdl = index.conf, index.avgdl
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    term_rank = {hash_of[t]: i for i, t in enumerate(sorted(hash_of))}
-
     # ---- per-query θ seeds (two shared jobs for the WHOLE batch; only for
     # queries whose candidate volume clears the cost-based gate) ------------
     if seed_min_blocks is None:
@@ -892,7 +843,7 @@ def topk_batch(
     q_theta: dict[str, float] = {}
     if prune:
         def _qualifies(ts: list[str]) -> bool:
-            est = sum(df_map[t] for t in ts) / conf.block_size
+            est = sum(df_map[t] for t in ts) / index.conf.block_size
             return bool(ts) and est >= seed_min_blocks
 
         rarest = {
@@ -914,115 +865,16 @@ def topk_batch(
             if hash_of[rt] in kth
         }
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_blocks = len(pdf)
-        block_terms = pdf["term_hash"].to_numpy(dtype=np.int64)
-        term_blocks: dict[int, np.ndarray] = {}
-        for bi, t in enumerate(block_terms):
-            term_blocks.setdefault(int(t), []).append(bi)
-        term_blocks = {t: np.asarray(ix, dtype=np.int64) for t, ix in term_blocks.items()}
-
-        tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
-        tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
-        drift = np.maximum(1.0, avgdl / pdf["avgdl0"].to_numpy(dtype=np.float64))
-        timps = (
-            pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64)
-            * pdf["max_impact"].to_numpy(dtype=np.float64)
-            * drift
+    # one match spec per query over the shared scan: each prunes its own
+    # intervals with its own θ, and a block decodes once if any query keeps it
+    specs = {
+        qid: _Spec(
+            tuple((idf_map[h], (h,)) for h in hs), theta=q_theta.get(qid, 0.0)
         )
-
-        # ---- per-query pruning decisions (metadata only) -------------------
-        need = np.zeros(n_blocks, dtype=bool)
-        q_blocks: dict[str, np.ndarray] = {}
-        q_iv: dict[str, tuple] = {}  # qid -> (bounds, interval_keep)
-        for qid in sorted(qpresent):
-            ts = [t for t in qpresent[qid] if t in term_blocks]
-            if not ts:
-                continue
-            bidx = np.concatenate([term_blocks[t] for t in ts])
-            theta = q_theta.get(qid, 0.0)
-            if theta <= 0.0:
-                need[bidx] = True
-                q_blocks[qid] = bidx
-                continue
-            lrank = {t: i for i, t in enumerate(ts)}
-            lranks = np.asarray([lrank[t] for t in block_terms[bidx]], dtype=np.int64)
-            pruned = _interval_prune(
-                tmins[bidx], tmaxs[bidx], timps[bidx], lranks, len(ts), theta
-            )
-            if pruned is None:
-                continue  # this bucket contributes nothing to qid
-            bounds, interval_keep, block_keep = pruned
-            sel = bidx[block_keep]
-            need[sel] = True
-            q_blocks[qid] = sel
-            q_iv[qid] = (bounds, interval_keep)
-
-        # ---- decode each needed block ONCE (batched: one vectorized pass
-        # over the concatenated streams, bit-identical to per-block decode;
-        # per-block views are slices of the shared arrays) -------------------
-        dec_ids: dict[int, np.ndarray] = {}
-        dec_contribs: dict[int, np.ndarray] = {}
-        need_idx = np.nonzero(need)[0]
-        if need_idx.size:
-            sub = pdf.iloc[need_idx]
-            counts = sub["n_docs"].to_numpy(dtype=np.int64)
-            all_ids, all_tfs, all_dls, starts_d = codec.decode_blocks_concat(
-                sub["doc_ids"], sub["tfs"], sub["doc_lens"], counts, qn
-            )
-            all_contribs = np.repeat(
-                sub["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-            ) * codec.bm25_impact(all_tfs, all_dls, avgdl, k1, b)
-            ends_d = np.concatenate((starts_d[1:], [all_ids.size]))
-            for j, bi in enumerate(need_idx):
-                dec_ids[int(bi)] = all_ids[starts_d[j] : ends_d[j]]
-                dec_contribs[int(bi)] = all_contribs[starts_d[j] : ends_d[j]]
-
-        # ---- per-query assembly (same order-determinism as topk_exact) -----
-        out_q, out_d, out_s, out_r = [], [], [], []
-        for qid in sorted(q_blocks):
-            sel = q_blocks[qid]
-            ids = np.concatenate([dec_ids[bi] for bi in sel])
-            contribs = np.concatenate([dec_contribs[bi] for bi in sel])
-            terms = np.concatenate(
-                [
-                    np.full(len(dec_ids[bi]), term_rank[block_terms[bi]], dtype=np.int32)
-                    for bi in sel
-                ]
-            )
-            if qid in q_iv:
-                bounds, interval_keep = q_iv[qid]
-                iv = np.searchsorted(bounds, ids, side="right") - 1
-                doc_keep = (iv >= 0) & (iv < len(interval_keep))
-                doc_keep[doc_keep] &= interval_keep[iv[doc_keep]]
-                if not doc_keep.any():
-                    continue
-                ids, terms, contribs = ids[doc_keep], terms[doc_keep], contribs[doc_keep]
-            order = np.lexsort((terms, ids))
-            ids, contribs = ids[order], contribs[order]
-            starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-            doc_ids = ids[starts]
-            scores = np.add.reduceat(contribs, starts)
-            sel_k = np.lexsort((doc_ids, -scores))[:k]
-            out_q.extend([qid] * len(sel_k))
-            out_d.append(doc_ids[sel_k])
-            out_s.append(scores[sel_k])
-            out_r.append(np.arange(1, len(sel_k) + 1, dtype=np.int32))
-        if not out_q:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": [], "rank": []}).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float64, "rank": np.int32}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_q,
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-                "rank": np.concatenate(out_r),
-            }
-        )
-
-    blocks = index.postings.filter(F.col("term_hash").isin(list(term_queries)))
-    local = blocks.groupBy("bucket").applyInPandas(fn, schema=out_schema)
+        for qid, hs in qpresent.items()
+        if hs
+    }
+    local = _scored(index, specs, k)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local.withColumn("rank", F.row_number().over(w))
@@ -1315,8 +1167,7 @@ def _phrase_match_bucket(
                 continue
             all_d = np.concatenate((best_d, res[0]))
             all_s = np.concatenate((best_s, res[1]))
-            sel = np.lexsort((all_d, -all_s))[:k]
-            best_d, best_s = all_d[sel], all_s[sel]
+            best_d, best_s = _local_topk(all_d, all_s, k)
             if len(best_d) == k:
                 theta = float(best_s[-1])
         if _probe is not None:
@@ -1551,6 +1402,21 @@ def _expansions(
     return rows.collect()
 
 
+def _constant_score(index: Index, exp: list, k: int) -> DataFrame:
+    """The constant-score rewrite of a term-level query: every doc holding
+    any expansion term scores 1.0, ordered doc_id asc (the filter-context
+    kernel aggs.ids_for_hashes, live docs only)."""
+    from webindex.aggs import ids_for_hashes
+
+    ids = ids_for_hashes(index, [int(r["term_hash"]) for r in exp])
+    return (
+        ids.withColumn("score", F.lit(1.0))
+        .orderBy(F.asc("doc_id"))
+        .limit(k)
+        .select("doc_id", "score")
+    )
+
+
 def topk_prefix(
     index: Index, prefix: str, k: int = 10,
     max_expansions: int | None = MAX_CLAUSE_COUNT,
@@ -1565,18 +1431,10 @@ def topk_prefix(
     expansion is distributed (term_stats filter with a pushed-down string
     predicate); an optional max_expansions caps it by df desc, term asc —
     the top_terms rewrite's deterministic pick."""
-    from webindex.aggs import ids_for_hashes
-
     exp = _expansions(
         index, F.col("term").startswith(prefix), max_expansions
     )
-    ids = ids_for_hashes(index, [int(r["term_hash"]) for r in exp])
-    return (
-        ids.withColumn("score", F.lit(1.0))
-        .orderBy(F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _constant_score(index, exp, k)
 
 
 def topk_wildcard(
@@ -1590,8 +1448,6 @@ def topk_wildcard(
     is a pushed-down LIKE over term_stats on BOTH the engine and the
     oracle — no regex-dialect drift. Expansion capped like top_terms
     (df desc, term asc) when max_expansions is set."""
-    from webindex.aggs import ids_for_hashes
-
     like = (
         pattern.replace("\\", "\\\\")
         .replace("%", "\\%")
@@ -1600,13 +1456,7 @@ def topk_wildcard(
         .replace("?", "_")
     )
     exp = _expansions(index, F.col("term").like(like), max_expansions)
-    ids = ids_for_hashes(index, [int(r["term_hash"]) for r in exp])
-    return (
-        ids.withColumn("score", F.lit(1.0))
-        .orderBy(F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _constant_score(index, exp, k)
 
 
 def topk_regexp(
@@ -1623,49 +1473,10 @@ def topk_regexp(
     RE2/DuckDB (the oracle) and Lucene's own regexp all agree on —
     literals, char classes, ., *, +, ?, {m,n}, alternation, grouping. No
     lookaround (Lucene doesn't support it either)."""
-    from webindex.aggs import ids_for_hashes
-
     exp = _expansions(
         index, F.col("term").rlike(f"^(?:{pattern})$"), max_expansions
     )
-    ids = ids_for_hashes(index, [int(r["term_hash"]) for r in exp])
-    return (
-        ids.withColumn("score", F.lit(1.0))
-        .orderBy(F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
-
-
-def _dismax_bucket_fn(idf_map: dict[int, float], conf, avgdl: float, k: int):
-    """applyInPandas fn: one bucket's expansion-term blocks -> local top-k
-    under dis_max scoring (score = MAX over matched expansions of that
-    term's BM25 contribution — order-independent, so no summation-order
-    bookkeeping is needed)."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return empty
-        counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-        ids, tfs, dls, _ = codec.decode_blocks_concat(
-            pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, qn
-        )
-        contribs = np.repeat(
-            pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-        ) * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-        order = np.argsort(ids, kind="stable")
-        ids, contribs = ids[order], contribs[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.maximum.reduceat(contribs, starts)
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
-
-    return fn
+    return _constant_score(index, exp, k)
 
 
 def ensure_term_grams(index: Index, q: int = GRAM_Q) -> DataFrame:
@@ -1747,7 +1558,6 @@ def topk_fuzzy(
     join-shaped analogue of Lucene's FST automaton intersection. Results
     are byte-identical to the linear path: candidates are a superset, the
     same Levenshtein predicate and top_terms cap decide membership."""
-    spark = index.postings.sparkSession
     pred = (F.length("term") >= len(word) - fuzziness) & (
         F.length("term") <= len(word) + fuzziness
     )
@@ -1763,14 +1573,8 @@ def topk_fuzzy(
     exp = _expansions(
         index, pred & (lev >= 0) & (lev <= fuzziness), max_expansions, base=base
     )
-    if not exp:
-        return spark.createDataFrame([], _HIT)
-    idf_map = {int(r["term_hash"]): float(r["idf"]) for r in exp}
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _dismax_bucket_fn(idf_map, index.conf, index.avgdl, k), schema=_HIT
-    )
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    slots = tuple((float(r["idf"]), (int(r["term_hash"]),)) for r in exp)
+    return _scored(index, _Spec(slots, combine="max"), k)
 
 
 def more_like_this(
@@ -2172,18 +1976,7 @@ def topk_function_score(
         if per_bucket and own_ext and theta_df is None:
             ext.unpersist()
 
-    idf_map, term_rank = _maps_of(stats)
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    if theta_df is not None:
-        # bucket-count-sized frame: broadcast, no shuffle of the blocks
-        blocks = blocks.join(F.broadcast(theta_df), "bucket", "left")
-    base = blocks.groupBy("bucket").applyInPandas(
-        _score_bucket_fn(
-            idf_map, term_rank, index.conf, index.avgdl, None, theta_bm25,
-            dead=index.dead_ids,
-        ),
-        schema=_HIT,
-    )
+    base = _scored(index, _match_spec(stats, theta_bm25), None, theta_df)
     out = _ranked(base).select(
         "doc_id", F.round("score", 4).alias("score")
     )
@@ -2212,7 +2005,9 @@ def search_sort(
     the constant-score block scan (no BM25 work), the field comes from the
     doc_id-keyed join, the cut is a TakeOrdered on (field, doc_id asc).
     Output (doc_id, <field>)."""
-    ids = matching_doc_ids_of(index, query, msm)
+    from webindex.aggs import matching_doc_ids
+
+    ids = matching_doc_ids(index, query, msm)
     key = F.asc(field) if ascending else F.desc(field)
     return (
         stored.select("doc_id", field)
@@ -2220,14 +2015,6 @@ def search_sort(
         .orderBy(key, F.asc("doc_id"))
         .limit(k)
     )
-
-
-def matching_doc_ids_of(index: Index, query: str, msm: int = 1) -> DataFrame:
-    """Re-export of aggs.matching_doc_ids (import-cycle-free helper for the
-    query-side entry points)."""
-    from webindex.aggs import matching_doc_ids
-
-    return matching_doc_ids(index, query, msm)
 
 
 def topk_filtered(
@@ -2488,34 +2275,24 @@ def explain_doc(index: Index, query: str, doc_id: int) -> DataFrame:
         return spark.createDataFrame([], out_schema)
     idf_map = {h: idf for (_, idf, h) in stats.values()}
     term_of = {h: t for t, (_, _, h) in stats.items()}
-    k1, b, qn = index.conf.k1, index.conf.b, index.conf.quantize_norms
-    avgdl = index.avgdl
+    conf, avgdl = index.conf, index.avgdl
     did = int(doc_id)
 
     def fn(batches):
-        rows = {"term": [], "tf": [], "doc_len": [], "idf": [], "contrib": []}
         for pdf in batches:
-            for th, dbuf, tbuf, lbuf in zip(
-                pdf["term_hash"], pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"]
-            ):
-                ids, tfs, dls = codec.decode_block(
-                    bytes(dbuf), bytes(tbuf), bytes(lbuf), qn
-                )
-                pos = np.searchsorted(ids, did)
-                if pos >= len(ids) or ids[pos] != did:
-                    continue
-                tf, dl = int(tfs[pos]), float(dls[pos])
-                idf = idf_map[int(th)]
-                # idf * (tf/denom), NOT (idf*tf)/denom: float64 is not
-                # associative and the scoring path computes idf * impact —
-                # this keeps sum(contrib) bitwise equal to the topk score
-                contrib = idf * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-                rows["term"].append(term_of[int(th)])
-                rows["tf"].append(tf)
-                rows["doc_len"].append(int(dl))
-                rows["idf"].append(idf)
-                rows["contrib"].append(contrib)
-        yield pd.DataFrame(rows)
+            # the scorers' decode: contrib is the same idf × impact product
+            # they sum, so sum(contrib) is bitwise the topk score
+            blk, ids, tfs, dls, impact = _decode_rows(pdf, conf, avgdl, None)
+            hit = ids == did
+            th = pdf["term_hash"].to_numpy(dtype=np.int64)[blk[hit]]
+            idf = np.asarray([idf_map[int(h)] for h in th], dtype=np.float64)
+            yield pd.DataFrame({
+                "term": [term_of[int(h)] for h in th],
+                "tf": tfs[hit].astype(np.int64),
+                "doc_len": dls[hit].astype(np.int64),
+                "idf": idf,
+                "contrib": idf * impact[hit],
+            })
 
     blocks = index.postings.filter(
         F.col("term_hash").isin(list(idf_map))
@@ -2571,6 +2348,20 @@ def topk_boosting(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
+
+
+def _outer_sum(frames: list[DataFrame]) -> DataFrame:
+    """doc_id-keyed FullOuter join of (doc_id, score) frames -> (doc_id,
+    s0..sN-1, score): score sums the frames' scores in list order, a doc
+    absent from a frame adding 0.0 — the deterministic float summation
+    order the SQL oracles mirror. Fixed-width rows on every join."""
+    joined = frames[0].withColumnRenamed("score", "s0")
+    for i, f in enumerate(frames[1:], start=1):
+        joined = joined.join(f.withColumnRenamed("score", f"s{i}"), "doc_id", "full")
+    score = F.col("s0")
+    for i in range(1, len(frames)):
+        score = F.coalesce(score, F.lit(0.0)) + F.coalesce(F.col(f"s{i}"), F.lit(0.0))
+    return joined.withColumn("score", score)
 
 
 def topk_dismax(
@@ -2825,20 +2616,10 @@ def simple_query_string(
     if not pos_frames:
         return spark.createDataFrame([], _HIT)
 
-    joined = pos_frames[0].withColumnRenamed("score", "s0")
-    for i, f in enumerate(pos_frames[1:], start=1):
-        joined = joined.join(
-            f.withColumnRenamed("score", f"s{i}"), "doc_id", "full"
-        )
-    cols = [F.col(f"s{i}") for i in range(len(pos_frames))]
-    score = cols[0]
-    matched = F.when(cols[0].isNotNull(), 1).otherwise(0)
-    for c in cols[1:]:
-        score = F.coalesce(score, F.lit(0.0)) + F.coalesce(c, F.lit(0.0))
-        matched = matched + F.when(c.isNotNull(), 1).otherwise(0)
-    out = joined.select("doc_id", score.alias("score"), matched.alias("m"))
+    out = _outer_sum(pos_frames)
     if default_operator == "and":
-        out = out.filter(F.col("m") == len(pos_frames))
+        for i in range(len(pos_frames)):
+            out = out.filter(F.col(f"s{i}").isNotNull())
     out = out.select("doc_id", "score")
     for nf in neg_frames:
         out = out.join(nf, "doc_id", "left_anti")
@@ -2883,79 +2664,17 @@ def topk_synonyms(
         member_of[t] = grp
     all_terms = sorted(set().union(*member_of.values()))
     stats = _query_terms(index, " ".join(all_terms))
-    conf, avgdl, n_docs = index.conf, index.avgdl, index.n_docs
+    conf, n_docs = index.conf, index.n_docs
 
-    groups: list[tuple[float, frozenset[int]]] = []  # query-token order
-    all_hashes: set[int] = set()
+    groups: list[tuple[float, tuple[int, ...]]] = []  # query-token order
     for t in q_tokens:
         present = [m for m in sorted(member_of[t]) if m in stats]
         if not present:
             continue
         df_group = max(stats[m][0] for m in present)
-        hashes = frozenset(stats[m][2] for m in present)
+        hashes = tuple(sorted({stats[m][2] for m in present}))
         groups.append((conf.idf(df_group, n_docs), hashes))
-        all_hashes.update(hashes)
-    if not groups:
-        return spark.createDataFrame([], _HIT)
-
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return empty
-        # batched decode once for the whole bucket; per-group views are
-        # row-slices of the shared arrays. Concatenation order within a
-        # group changed from hash-sorted to row order, which cannot change
-        # results: tf pooling is an exact integer sum in float64, a doc's
-        # dl is identical on every row, and the per-doc contrib is computed
-        # AFTER pooling.
-        counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-        aids, atfs, adls, bstarts = codec.decode_blocks_concat(
-            pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, qn
-        )
-        bends = np.concatenate((bstarts[1:], [aids.size]))
-        th_rows = pdf["term_hash"].to_numpy(dtype=np.int64)
-        ids_all, gr_all, contribs_all = [], [], []
-        for g, (gidf, hashes) in enumerate(groups):
-            rows = np.nonzero(np.isin(th_rows, np.asarray(sorted(hashes), dtype=np.int64)))[0]
-            if not rows.size:
-                continue
-            sel = np.concatenate(
-                [np.arange(bstarts[i], bends[i]) for i in rows]
-            )
-            ids = aids[sel]
-            tfs = atfs[sel].astype(np.float64)
-            dls = adls[sel]
-            order = np.argsort(ids, kind="stable")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            starts = np.concatenate(
-                ([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1)
-            )
-            uids = ids[starts]
-            utf = np.add.reduceat(tfs, starts)
-            udl = dls[starts]
-            ids_all.append(uids)
-            gr_all.append(np.full(len(uids), g, dtype=np.int32))
-            contribs_all.append(gidf * codec.bm25_impact(utf, udl, avgdl, k1, b))
-        if not ids_all:
-            return empty
-        ids = np.concatenate(ids_all)
-        grs = np.concatenate(gr_all)
-        contribs = np.concatenate(contribs_all)
-        order = np.lexsort((grs, ids))
-        ids, contribs = ids[order], contribs[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.add.reduceat(contribs, starts)
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
-
-    blocks = index.postings.filter(F.col("term_hash").isin(sorted(all_hashes)))
-    hits = blocks.groupBy("bucket").applyInPandas(fn, schema=_HIT)
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _scored(index, _Spec(tuple(groups), combine="pool"), k)
 
 
 def topk_most_fields(
@@ -2976,20 +2695,10 @@ def topk_most_fields(
     if not indexes:
         raise ValueError("most_fields needs at least one field index")
     fields = sorted(indexes)
-    frames = [
-        match_scores(indexes[f], query).withColumnRenamed("score", f"s{i}")
-        for i, f in enumerate(fields)
-    ]
-    joined = frames[0]
-    for f in frames[1:]:
-        joined = joined.join(f, "doc_id", "full")
-    score = F.col("s0")
-    for i in range(1, len(frames)):
-        score = F.coalesce(score, F.lit(0.0)) + F.coalesce(
-            F.col(f"s{i}"), F.lit(0.0)
-        )
+    frames = [match_scores(indexes[f], query) for f in fields]
     return (
-        joined.select("doc_id", score.alias("score"))
+        _outer_sum(frames)
+        .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -3060,16 +2769,9 @@ def topk_cross_fields(
         best = cols[0] if len(cols) == 1 else F.greatest(*cols)
         term_frames.append(tf.select("doc_id", best.alias("score")))
 
-    joined = term_frames[0].withColumnRenamed("score", "t0")
-    for i, f in enumerate(term_frames[1:], start=1):
-        joined = joined.join(f.withColumnRenamed("score", f"t{i}"), "doc_id", "full")
-    score = F.col("t0")
-    for i in range(1, len(term_frames)):
-        score = F.coalesce(score, F.lit(0.0)) + F.coalesce(
-            F.col(f"t{i}"), F.lit(0.0)
-        )
     return (
-        joined.select("doc_id", score.alias("score"))
+        _outer_sum(term_frames)
+        .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -3102,23 +2804,13 @@ def topk_match_bool_prefix(
         return spark.createDataFrame([], _HIT)
     init, last = toks[:-1], toks[-1]
     exp = _expansions(index, F.col("term").startswith(last), max_expansions)
-    pref = (
-        ids_for_hashes(index, [int(r["term_hash"]) for r in exp])
-        .withColumn("p", F.lit(1.0))
+    pref = ids_for_hashes(index, [int(r["term_hash"]) for r in exp]).withColumn(
+        "score", F.lit(1.0)
     )
-    if not init:
-        return (
-            pref.select("doc_id", F.col("p").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-    base = match_scores(index, " ".join(init)).withColumnRenamed("score", "s")
-    joined = base.join(pref, "doc_id", "full")
-    score = F.coalesce(F.col("s"), F.lit(0.0)) + F.coalesce(
-        F.col("p"), F.lit(0.0)
-    )
+    if init:
+        pref = _outer_sum([match_scores(index, " ".join(init)), pref])
     return (
-        joined.select("doc_id", score.alias("score"))
+        pref.select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -3827,12 +3519,10 @@ def suggest_phrase(
                 pdf["term_hash"].to_numpy(dtype=np.int64),
                 pdf["n_docs"].to_numpy(dtype=np.int64),
             )
-            if dead is not None and len(dead):
+            alive = _live(ids, dead)
+            if alive is not None:
                 # live-docs contract of the old per-phrase operator=and
                 # probe: a tombstoned doc must not satisfy collate
-                pos = np.searchsorted(dead, ids)
-                pos[pos >= len(dead)] = len(dead) - 1
-                alive = dead[pos] != ids
                 ids, ths = ids[alive], ths[alive]
                 if not len(ids):
                     return pd.DataFrame({"pidx": pd.Series([], dtype="int32")})

@@ -654,15 +654,19 @@ class IncrementalIndexer:
 
         Tombstone events newer than the compaction frontier become
         Index.dead_ids, the analogue of Lucene's in-heap deleted-docs
-        bitmap: the fused BM25 scorer (topk/topk_wand/topk_exact/bool/
-        match/function_score) drops dead docs BEFORE its local top-k cut
+        bitmap: the shared per-bucket BM25 kernel (every top-k scorer —
+        match family, bool, search_after, batch, synonyms, fuzzy,
+        function_score, match_scores and what builds on it) and the
+        filter-context kernels (matching_doc_ids / count, prefix,
+        wildcard, regexp) drop dead docs right after decode, before any
+        local top-k cut,
         and θ seeding ignores them, while n_docs/avgdl/df stay as-built —
         exactly Lucene's behavior until the merge reclaims the docs. The
         set is driver-scale by construction (deletes since the last
         compact only). Pending CRAWL batches stay invisible until
-        compact(), the engine's refresh point for additions; query
-        families that bypass the fused scorer (phrase, aggs, term-level)
-        likewise see deletes at compact().
+        compact(), the engine's refresh point for additions; the
+        positional families (phrase, span, intervals) and highlight still
+        see deletes only at compact().
 
         Requires a committed index (compact() at least once); raises
         otherwise."""
