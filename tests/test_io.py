@@ -1,6 +1,8 @@
 """Table-format seam: parquet layout round-trips; iceberg fails loudly
 without the runtime (no silent wrong-format writes)."""
 
+import os
+
 import pytest
 
 from webindex.io import read_table, write_table
@@ -52,3 +54,32 @@ def test_append_driver_rows_roundtrip(spark, tmp_path):
     assert {(r["batch_id"], r["status"], r["secs"]) for r in back.collect()} == {
         (0, "done", 0.5), (1, "done", 1.5), (2, "failed", None)
     }
+
+
+def test_driver_writers_resolve_locality_through_hadoop(spark, tmp_path, monkeypatch):
+    """A scheme-less dest resolves against fs.defaultFS, as Spark's own
+    reads of it do: under a cluster default FS the driver-side writers must
+    take the Spark write, not put the rows on the driver's local disk. An
+    explicit file: dest stays driver-local."""
+    from webindex import io
+
+    calls = []
+    monkeypatch.setattr(
+        io, "_spark_write_rows",
+        lambda df, dest, fmt, append: calls.append((dest, fmt, append)),
+        raising=False,  # a renamed seam still fails the calls assertion
+    )
+    dest = str(tmp_path / "t")
+    local = str(tmp_path / "local")
+    conf = spark._jsc.hadoopConfiguration()
+    old = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "hdfs://localhost:9000")
+    try:
+        io.write_driver_table(spark, [(1,)], "a long", dest, fmt="parquet")
+        io.append_driver_rows(spark, [(2,)], "a long", dest, fmt="parquet")
+        io.write_driver_table(spark, [(3,)], "a long", f"file://{local}", fmt="parquet")
+    finally:
+        conf.set("fs.defaultFS", old)
+    assert calls == [(dest, "parquet", False), (dest, "parquet", True)]
+    assert not os.path.exists(dest)
+    assert [r["a"] for r in spark.read.parquet(local).collect()] == [3]

@@ -108,3 +108,47 @@ def test_resumable_build_under_pathological_hash(spark, tmp_path):
         a = [(r["doc_id"], round(r["score"], 9)) for r in topk_exact(idx, q, 10).collect()]
         b = [(r["doc_id"], round(r["score"], 9)) for r in topk_exact(normal, q, 10).collect()]
         assert a == b, q
+
+
+def _with_duplicate_url(spark):
+    import pandas as pd
+
+    pdf = make_pages_pdf(0, 40)
+    return spark.createDataFrame(pd.concat([pdf, pdf.iloc[[7]]], ignore_index=True))
+
+
+def test_resumable_build_rejects_duplicate_urls(spark, tmp_path):
+    """The resumable build commits through build_index's path, so a repeated
+    url fails it the same way instead of double-counting the doc."""
+    from webindex.build import build_index
+
+    pages = _with_duplicate_url(spark)
+    with pytest.raises(RuntimeError, match="duplicate url in input"):
+        build_index(spark, pages, out_dir=str(tmp_path / "batch"))
+    with pytest.raises(RuntimeError, match="duplicate url in input"):
+        build_index_resumable(
+            spark, pages, str(tmp_path / "resumable"), n_buckets=4, chunk_buckets=2
+        )
+
+
+def _table_rows(spark, path):
+    df = spark.read.parquet(path)
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.select(*sorted(df.columns)).collect()
+    )
+
+
+def test_resumable_and_batch_builds_write_identical_tables(spark, tmp_path):
+    """One page set, two build paths: every committed table holds the same
+    rows (postings compared as encoded bytes)."""
+    from webindex.build import build_index
+
+    pages = spark.createDataFrame(make_pages_pdf(0, 60))
+    batch = str(tmp_path / "batch")
+    build_index(spark, pages, out_dir=batch)
+    wd = str(tmp_path / "resumable")
+    build_index_resumable(spark, pages, wd, n_buckets=4, chunk_buckets=2)
+    for table in ("postings", "term_stats", "doc_stats", "term_grams", "url_index"):
+        a = _table_rows(spark, f"{batch}/{table}")
+        assert a and a == _table_rows(spark, f"{wd}/index/{table}"), table

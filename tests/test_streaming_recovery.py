@@ -1,7 +1,9 @@
-"""Crash/ordering hardening of the incremental index (round-4 review):
+"""Crash/ordering hardening of the index commit paths (round-4 review on):
 engine-epoch vs synthetic-batch decoupling, ghost doc_stats rows in emptied
 buckets, the interrupted-compact fence, n_buckets pinning on the resumable
-build, caller-supplied doc_id rejection, and conf restore on full compacts."""
+build, caller-supplied doc_id rejection, conf restore on full compacts,
+corpus_stats written after the tables it describes, and stale staging dirs
+left by a crashed incremental compact."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,3 +158,84 @@ def test_finish_tables_crash_window_recovers(spark, tmp_path):
     idx2 = reopened.compact()
     assert idx2.n_docs == 18
     assert len(topk(idx2, "data", 5).collect()) == 5
+
+
+def _failing_postings(real):
+    """build_postings whose blocks fail when the postings write runs them:
+    a crash in the middle of a commit's table writes."""
+
+    def fn(*args, **kwargs):
+        df = real(*args, **kwargs)
+
+        def boom(batches):
+            raise RuntimeError("injected postings write failure")
+            yield  # a generator, as mapInPandas expects
+
+        return df.mapInPandas(boom, schema=df.schema)
+
+    return fn
+
+
+def _sidecar_n_docs(spark, index_dir):
+    return spark.read.parquet(f"{index_dir}/corpus_stats").collect()[0]["n_docs"]
+
+
+def test_failed_full_compact_keeps_old_corpus_stats(spark, tmp_path, monkeypatch):
+    from webindex import streaming
+
+    wd = str(tmp_path / "wd")
+    ing = IncrementalIndexer(spark, wd, text_col="text")
+    ing.upsert(_pages(spark, 0, 8))
+    ing.upsert(_pages(spark, 8, 12), compact_now=False)
+    monkeypatch.setattr(
+        streaming, "build_postings", _failing_postings(streaming.build_postings)
+    )
+    with pytest.raises(Exception, match="injected postings write failure"):
+        ing.compact(full=True)
+    assert _sidecar_n_docs(spark, f"{wd}/index") == 8
+
+
+def test_failed_rebuild_keeps_old_corpus_stats(spark, tmp_path, monkeypatch):
+    from webindex import build
+
+    out = str(tmp_path / "idx")
+    build.build_index(spark, _pages(spark, 0, 8), text_col="text", out_dir=out)
+    monkeypatch.setattr(
+        build, "build_postings", _failing_postings(build.build_postings)
+    )
+    with pytest.raises(Exception, match="injected postings write failure"):
+        build.build_index(spark, _pages(spark, 0, 12), text_col="text", out_dir=out)
+    assert _sidecar_n_docs(spark, out) == 8
+
+
+def test_stale_staging_dirs_are_not_committed(spark, tmp_path):
+    """A crash between the staged writes and the fence leaves bucket dirs
+    in both staging dirs. A later incremental compact that empties that
+    bucket must not swap them back in."""
+    import shutil
+
+    from webindex.build import decode_postings_to_runs
+
+    wd = str(tmp_path / "wd")
+    ing = IncrementalIndexer(spark, wd, text_col="text", range_width=2)
+    ing.upsert(_pages(spark, 0, 16))
+    out = f"{wd}/index"
+    by_bucket = {}
+    for r in spark.read.parquet(f"{out}/doc_stats").collect():
+        by_bucket.setdefault(r["bucket"], []).append((r["doc_id"], r["url"]))
+    assert len(by_bucket) > 1
+    k, docs = max(by_bucket.items(), key=lambda kv: len(kv[1]))
+    for table in ("postings", "doc_stats"):
+        shutil.copytree(
+            f"{out}/{table}/bucket={k}", f"{out}/_{table}_staging/bucket={k}"
+        )
+    idx = ing.delete([u for _, u in docs])
+    dead = {d for d, _ in docs}
+    assert not dead & {r["doc_id"] for r in idx.doc_stats.collect()}
+    live_postings = decode_postings_to_runs(idx.postings, idx.conf.quantize_norms)
+    assert not dead & {r["doc_id"] for r in live_postings.select("doc_id").collect()}
+    full = IncrementalIndexer.open(
+        spark, wd, text_col="text", range_width=2
+    ).compact(full=True)
+    assert idx.n_docs == full.n_docs == 16 - len(dead)
+    assert idx.n_docs * idx.avgdl == pytest.approx(full.n_docs * full.avgdl, abs=1e-6)

@@ -53,9 +53,9 @@ N_URL_BUCKETS = 64
 def url_index_projection(doc_stats: DataFrame) -> DataFrame:
     """The (doc_id, url, doc_len, url_hash, url_bucket) reverse-lookup
     projection — the ONE definition of the pmod/xxhash bucket contract
-    `query.lookup_url` prunes against. Both index writers (build_index and
-    checkpoint.build_index_resumable) derive their url_index table from
-    this; write it url_hash-sorted within url_bucket partitions."""
+    `query.lookup_url` prunes against. commit_index_tables derives the
+    url_index table from this; write it url_hash-sorted within url_bucket
+    partitions."""
     return doc_stats.select(
         "doc_id",
         "url",
@@ -589,23 +589,6 @@ def assert_no_docid_collisions(doc_stats: DataFrame) -> DataFrame:
     return doc_stats
 
 
-def assert_no_hash_collisions(term_dict: DataFrame) -> DataFrame:
-    """Raise if two distinct terms share a term_hash (one vocab-sized agg)."""
-    clash = (
-        term_dict.groupBy("term_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if clash:
-        raise RuntimeError(
-            f"xxhash64 term collision at hash {clash[0]['term_hash']}; "
-            "widen the term key"
-        )
-    return term_dict
-
-
 def term_stats_from_postings(
     postings: DataFrame, n_docs: int, term_dict: DataFrame
 ) -> DataFrame:
@@ -685,7 +668,7 @@ def build_postings(
     cross the wire as 5 fixed-width numerics (~25% smaller than with an
     avg-8-char term, and the dominant build shuffle is exactly these rows);
     term_hash = xxhash64(term) with the (term, term_hash) dictionary kept in
-    term_stats (assert_no_hash_collisions guards the dictionary). Within each group we
+    term_stats (resolve_term_hashes keeps it collision-free). Within each group we
     sort by doc_id (Spark's shuffle is the external sort-merge of SPIMI runs;
     the in-group sort is numpy) and emit delta+varint blocks with per-block
     max_impact for block-max WAND.
@@ -884,91 +867,82 @@ def decode_postings_to_runs(
 # full build
 # --------------------------------------------------------------------------
 
-def build_index(
+def dict_file_target(n_docs: int) -> int:
+    """File-count target for the dictionary-shaped tables, derived from DATA
+    size only (n_docs), never cluster size: sorted point/IN lookups want
+    few, fat, fully key-sorted files (one at bench scales; ~2M docs' worth
+    of rows per file at web scale — the hash-partitioned alternative leaves
+    every file's key range overlapping, so nothing can be file-pruned)."""
+    return max(1, n_docs // 2_000_000)
+
+
+def overlap(*chains):
+    """Run independent table-write chains on a driver thread pool, one
+    thread each, and return their results in order; every future is read,
+    so a failed chain raises once the pool has drained. The small chains
+    fill the big one's straggler tail instead of extending the commit
+    (optimization guide §2.6). Determinism is untouched: each chain's
+    lineage is unchanged, FIFO scheduling just interleaves their tasks."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = [pool.submit(chain) for chain in chains]
+        return [f.result() for f in futures]
+
+
+def term_dictionary(
+    vocab_df: DataFrame, n_docs: int, hash_primary_fn=None
+) -> tuple[DataFrame, dict[str, int]]:
+    """(term_stats, remap) of a fresh build: pre-shuffle collision
+    resolution over the vocabulary aggregate, then each term's final key and
+    idf. term_stats doubles as the term dictionary; its keys are
+    collision-free BY CONSTRUCTION (resolve_term_hashes raises on any
+    unresolved clash before the postings shuffle), so no post-write
+    collision re-scan follows. Feed `remap` to build_postings."""
+    _, remap = resolve_term_hashes(vocab_df, primary_fn=hash_primary_fn)
+    term_stats = _with_idf(
+        vocab_df.withColumn(
+            "term_hash", term_hash_expr(F.col("term"), remap, hash_primary_fn)
+        ),
+        n_docs,
+    )
+    return term_stats, remap
+
+
+def commit_index_tables(
     spark: SparkSession,
-    pages: DataFrame,
-    conf: BM25Config = DEFAULT,
+    runs: DataFrame,
+    doc_urls: DataFrame,
+    conf: BM25Config,
     *,
-    text_col: str = "html",
-    doc_id_method: str = "hash",
-    range_width: int | None = None,
-    id_space: str | None = None,
-    out_dir: str | None = None,
-    runs_persist: bool = True,
-    dedup_urls: bool = False,
-    hash_primary_fn=None,
-    positions: bool = False,
+    range_width: int | None,
+    id_space: str,
+    out_dir: str | None,
+    hash_primary_fn,
 ) -> Index:
-    """End-to-end build. If out_dir is given, index tables are written as
-    partitioned Parquet (Iceberg-ready layout) and re-read lazily; otherwise
-    everything stays as in-memory DataFrames (tests).
+    """runs + a (doc_id, url) frame -> the committed Index. The one
+    runs->index path of build_index and checkpoint.build_index_resumable, so
+    every batch-built index gets the same checks (duplicate-url / doc-id
+    collision), layout and table-format seam.
 
-    PRECONDITION: urls are unique in `pages` (duplicate urls hash to the same
-    doc_id -> duplicated (term, doc_id) runs -> df and per-doc scores double-
-    count). The streaming path enforces latest-crawl-wins itself; for batch
-    inputs that may contain re-crawls, pass dedup_urls=True (latest warc_ts
-    wins, content-hash tiebreak) — it costs one extra shuffle of the raw
-    pages, so at 100 TB prefer deduplicating upstream in the crawl store.
-
-    Job shape: (1) runs + stats (one tokenize pass, persisted so nothing
-    re-tokenizes), then (2) the (term,bucket) shuffle into compressed blocks
-    overlapped with the small dictionary/doc-table writes on a driver thread
-    pool (guide §2.6 — independent chains back-fill each other's tails).
-    """
-    if id_space is None:
-        id_space = "hash" if doc_id_method == "hash" else "dense"
-    if dedup_urls:
-        from pyspark.sql import Window
-
-        # tiebreak on the CONTENT column actually present (not just html):
-        # without it the winner among equal-warc_ts re-crawls is partition-
-        # layout-dependent, breaking the byte-identical-at-any-parallelism
-        # invariant for (url, text)-shaped inputs
-        order = [F.asc("url")]
-        if "warc_ts" in pages.columns:
-            order.insert(0, F.desc_nulls_last("warc_ts"))
-        for content in ("html", text_col):
-            if content in pages.columns:
-                order.append(F.asc(F.xxhash64(content)))
-                break
-        w = Window.partitionBy("url").orderBy(*order)
-        pages = (
-            pages.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    pages = assign_doc_ids(pages, doc_id_method)
-    runs = build_runs(pages, text_col=text_col, with_positions=positions)
-    if out_dir:
-        # disk-backed runs: ONE tokenize pass, columnar-compressed scratch,
-        # zero MemoryStore/GC pressure. Measured at 1M docs/local[32]:
-        # 33.6s vs 107s with .persist() (the deserialized cache itself was
-        # the build bottleneck) vs 75.6s with 3x re-tokenize. Doubles as the
-        # natural checkpoint artifact (same layout checkpoint.py uses).
-        runs.write.mode("overwrite").parquet(f"{out_dir}/runs")
-        runs = spark.read.parquet(f"{out_dir}/runs")
-    elif runs_persist:
-        runs = runs.persist()
-
-    doc_stats = build_doc_stats(pages, runs)
+    With out_dir the tables go through io.write_table and are re-read
+    lazily; the one-row sidecars (corpus_stats, conf) are written after the
+    tables they describe, so a failed rebuild into an existing out_dir never
+    leaves new corpus stats over old tables. Without out_dir everything is
+    materialized in memory (tests)."""
+    doc_stats = build_doc_stats(doc_urls, runs)
 
     # ONE combined pass over runs yields the vocabulary AND the corpus stats
     # (see vocab_and_corpus_agg), persisted vocab-sized and reused for
     # (a) pre-shuffle collision resolution — a remapped key for the rare
     # xxhash64 clash instead of a post-hoc abort — and (b) the term_stats
     # table. Neither consumer re-scans runs' (term,doc) pairs.
-    vocab_df, _vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs)
+    vocab_df, vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs)
 
     if range_width is None:
         range_width = adaptive_range_width(n_docs)
 
-    _, hash_remap = resolve_term_hashes(vocab_df, primary_fn=hash_primary_fn)
-    term_stats = _with_idf(
-        vocab_df.withColumn(
-            "term_hash", term_hash_expr(F.col("term"), hash_remap, hash_primary_fn)
-        ),
-        n_docs,
-    )
+    term_stats, hash_remap = term_dictionary(vocab_df, n_docs, hash_primary_fn)
 
     postings = build_postings(
         runs, avgdl, conf, range_width, n_docs=n_docs, id_space=id_space,
@@ -986,27 +960,16 @@ def build_index(
         # metadata, not the plan. All table writes go through io.write_table
         # (parquet here; Iceberg = WEBINDEX_TABLE_FORMAT=iceberg + a catalog).
         #
-        # Round-6 job overlap (optimization guide §2.6): once runs are on
-        # disk and the vocab aggregate is resolved, the remaining writes are
-        # FOUR independent chains — (postings), (term_stats -> term_grams),
-        # (doc_stats -> docid check -> url_index), (one-row sidecars). They
-        # used to run serially, so the small metadata chains added their
-        # full job latency to every build and the cluster idled through each
-        # one's tail. A 3-thread pool overlaps them: the small chains fill
-        # the postings shuffle's straggler tail instead of extending the
-        # build. Determinism is untouched (each chain's lineage is
-        # unchanged; FIFO scheduling just interleaves their tasks).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # Round-6 job overlap: once runs are on disk and the vocab aggregate
+        # is resolved, the remaining writes are three independent chains —
+        # (postings), (term_stats -> term_grams), (doc_stats -> docid check
+        # -> url_index). They used to run serially, so the small metadata
+        # chains added their full job latency to every build and the
+        # cluster idled through each one's tail; overlap() runs them on a
+        # 3-thread pool.
         from webindex.io import read_table, write_driver_table, write_table
 
-        # file-count target for the dictionary-shaped tables, derived from
-        # DATA size only (n_docs), never cluster size: sorted point/IN
-        # lookups want few, fat, fully key-sorted files (one at bench
-        # scales; ~2M docs' worth of rows per file at web scale — the
-        # hash-partitioned alternative leaves every file's key range
-        # overlapping, so nothing can be file-pruned).
-        dict_files = max(1, n_docs // 2_000_000)
+        dict_files = dict_file_target(n_docs)
 
         def _write_postings() -> None:
             write_table(
@@ -1015,12 +978,6 @@ def build_index(
             )
 
         def _write_terms() -> None:
-            # term_stats doubles as the term dictionary: the vocab aggregate
-            # above yields (term, term_hash, df) together. Keys are
-            # collision-free BY CONSTRUCTION — resolve_term_hashes ran
-            # pre-shuffle and raises on any unresolved clash — so the old
-            # assert_no_hash_collisions re-scan here was a provably
-            # redundant extra job, dropped in round 6.
             write_table(
                 term_stats, f"{out_dir}/term_stats", sort_cols=["term"],
                 coalesce=dict_files,
@@ -1072,6 +1029,7 @@ def build_index(
             )
             return committed
 
+        _, _, doc_stats = overlap(_write_postings, _write_terms, _write_docs)
         # one-row sidecars are driver-side writes (no Spark job; see
         # write_driver_table). conf: layout facts baked into the blocks
         # (k1/b feed max_impact; quantize_norms changes the doc_lens byte
@@ -1090,29 +1048,17 @@ def build_index(
             schema.INDEX_CONF,
             f"{out_dir}/conf",
         )
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_post = pool.submit(_write_postings)
-            f_terms = pool.submit(_write_terms)
-            f_docs = pool.submit(_write_docs)
-            f_post.result()
-            f_terms.result()
-            doc_stats = f_docs.result()
         postings = read_table(spark, f"{out_dir}/postings")
         term_stats = read_table(spark, f"{out_dir}/term_stats")
-        _vocab_handle.unpersist()
     else:
-        # materialize the index once — queries must never re-run the build.
-        # (assert_no_hash_collisions dropped here too: resolve_term_hashes
-        # ran pre-shuffle and already guarantees a collision-free dict.)
+        # materialize the index once — queries must never re-run the build
         postings = postings.persist()
         postings.count()
         term_stats = term_stats.persist()
         doc_stats = doc_stats.persist()
         term_stats.count()
         assert_no_docid_collisions(doc_stats)
-        _vocab_handle.unpersist()
-        if runs_persist:
-            runs.unpersist()
+    vocab_handle.unpersist()
 
     return Index(
         postings=postings,
@@ -1133,10 +1079,89 @@ def build_index(
     )
 
 
+def build_index(
+    spark: SparkSession,
+    pages: DataFrame,
+    conf: BM25Config = DEFAULT,
+    *,
+    text_col: str = "html",
+    doc_id_method: str = "hash",
+    range_width: int | None = None,
+    id_space: str | None = None,
+    out_dir: str | None = None,
+    runs_persist: bool = True,
+    dedup_urls: bool = False,
+    hash_primary_fn=None,
+    positions: bool = False,
+) -> Index:
+    """End-to-end build. If out_dir is given, index tables are written as
+    partitioned Parquet (Iceberg-ready layout) and re-read lazily; otherwise
+    everything stays as in-memory DataFrames (tests).
+
+    PRECONDITION: urls are unique in `pages` (duplicate urls hash to the same
+    doc_id -> duplicated (term, doc_id) runs -> df and per-doc scores double-
+    count). The streaming path enforces latest-crawl-wins itself; for batch
+    inputs that may contain re-crawls, pass dedup_urls=True (latest warc_ts
+    wins, content-hash tiebreak) — it costs one extra shuffle of the raw
+    pages, so at 100 TB prefer deduplicating upstream in the crawl store.
+
+    Job shape: (1) runs + stats (one tokenize pass, persisted so nothing
+    re-tokenizes), then (2) the (term,bucket) shuffle into compressed blocks
+    overlapped with the small dictionary/doc-table writes on a driver thread
+    pool (guide §2.6 — independent chains back-fill each other's tails);
+    (2) is commit_index_tables.
+    """
+    if id_space is None:
+        id_space = "hash" if doc_id_method == "hash" else "dense"
+    if dedup_urls:
+        from pyspark.sql import Window
+
+        # tiebreak on the CONTENT column actually present (not just html):
+        # without it the winner among equal-warc_ts re-crawls is partition-
+        # layout-dependent, breaking the byte-identical-at-any-parallelism
+        # invariant for (url, text)-shaped inputs
+        order = [F.asc("url")]
+        if "warc_ts" in pages.columns:
+            order.insert(0, F.desc_nulls_last("warc_ts"))
+        for content in ("html", text_col):
+            if content in pages.columns:
+                order.append(F.asc(F.xxhash64(content)))
+                break
+        w = Window.partitionBy("url").orderBy(*order)
+        pages = (
+            pages.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+    pages = assign_doc_ids(pages, doc_id_method)
+    runs = build_runs(pages, text_col=text_col, with_positions=positions)
+    if out_dir:
+        # disk-backed runs: ONE tokenize pass, columnar-compressed scratch,
+        # zero MemoryStore/GC pressure. Measured at 1M docs/local[32]:
+        # 33.6s vs 107s with .persist() (the deserialized cache itself was
+        # the build bottleneck) vs 75.6s with 3x re-tokenize. Doubles as the
+        # natural checkpoint artifact (same layout checkpoint.py uses).
+        runs.write.mode("overwrite").parquet(f"{out_dir}/runs")
+        runs = spark.read.parquet(f"{out_dir}/runs")
+    elif runs_persist:
+        runs = runs.persist()
+
+    idx = commit_index_tables(
+        spark, runs, pages.select("doc_id", "url"), conf,
+        range_width=range_width, id_space=id_space, out_dir=out_dir,
+        hash_primary_fn=hash_primary_fn,
+    )
+    if runs_persist and not out_dir:
+        runs.unpersist()
+    return idx
+
+
 def _sidecar_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """An OPTIONAL index sidecar table (url_index: pre-round-4 indexes
-    lack it, lookup_url falls back to doc_stats; term_grams: pre-round-5,
-    fuzzy/suggest fall back to the length-banded vocab scan)."""
+    """An OPTIONAL index sidecar table, None only when it is absent (conf:
+    pre-round-2 indexes lack it, load_index falls back to the caller's
+    conf; url_index: pre-round-4, lookup_url falls back to doc_stats;
+    term_grams: pre-round-5, fuzzy/suggest fall back to the length-banded
+    vocab scan)."""
     from webindex.io import read_table, table_format
     from webindex.fsutil import path_exists
 
@@ -1168,7 +1193,7 @@ def load_index(
     it OVERRIDES the conf argument: k1/b/block_size/quantize_norms are baked
     into the encoded blocks, so querying with anything else would silently
     mis-score. Pre-sidecar indexes fall back to the conf argument."""
-    from webindex.io import read_table, table_format
+    from webindex.io import read_table
 
     range_width = DEFAULT_RANGE_WIDTH
     id_space: str | None = None
@@ -1177,34 +1202,9 @@ def load_index(
     # permissions) must propagate — silently dropping the sidecar would
     # varint-decode quantized norm bytes as garbage and mis-score quietly,
     # defeating the sidecar's whole guarantee.
-    sidecar_exists = True
-    sidecar_rows = None
-    if table_format() == "parquet":
-        from webindex.fsutil import path_exists
-
-        sidecar_exists = path_exists(spark, f"{out_dir}/conf")
-    elif table_format() == "iceberg":
-        # the absence check for a catalog table IS the read: catch only the
-        # table-not-found AnalysisException so a genuinely absent conf table
-        # falls back to the caller's conf here too, while any other failure
-        # (auth, network, corrupt metadata) still propagates
-        from pyspark.errors import AnalysisException
-
-        try:
-            sidecar_rows = read_table(spark, f"{out_dir}/conf").collect()
-        except AnalysisException as e:
-            klass = getattr(e, "getErrorClass", lambda: None)() or ""
-            not_found = (
-                "TABLE_OR_VIEW_NOT_FOUND" in klass or "cannot be found" in str(e)
-            )
-            if not not_found:
-                raise
-            sidecar_exists = False
-    if sidecar_exists:
-        c = (
-            sidecar_rows if sidecar_rows is not None
-            else read_table(spark, f"{out_dir}/conf").collect()
-        )[0]
+    conf_table = _sidecar_or_none(spark, f"{out_dir}/conf")
+    if conf_table is not None:
+        c = conf_table.collect()[0]
         conf = BM25Config(
             k1=float(c["k1"]),
             b=float(c["b"]),

@@ -1,16 +1,19 @@
-"""Resumable index build: per-chunk checkpointing with lineage + metrics.
+"""Resumable index build: the tokenize scan checkpointed per chunk, with
+lineage + metrics; everything after it is build_index's own path.
 
 The reference gets resumability from its URL file-cache (reference:
 src/nmr_FAIR_DOs/utils.py:61-71 — re-runs skip already-fetched URLs) and
 incremental windows from a watermark file (lib.py:436-437). Our analogue,
-sized for a 100 TB scan:
+sized for a 100 TB scan, is build_runs_checkpointed:
 
   * pages are bucketed deterministically by  build_bucket =
     pmod(xxhash64(doc_id), B)  — doc_id is data-derived (url hash), so the
-    bucketing is valid across cluster sizes and input repartitionings;
+    bucketing is valid across cluster sizes and input repartitionings; B is
+    pinned in <workdir>/_build_meta on the first run;
   * buckets are processed in CHUNKS; each chunk is one Spark job that
-    (1) dynamic-partition-overwrites its buckets under <workdir>/runs/
-        (a re-run of a half-written chunk self-cleans), then
+    (1) dynamic-partition-overwrites its buckets under <workdir>/runs/ and
+        <workdir>/doc_urls/ (a re-run of a half-written chunk self-cleans),
+        then
     (2) appends one lineage row per bucket with metrics
         (docs, postings=run rows, bytes, elapsed_s, status='done');
   * resume = skip buckets whose lineage says done. The lineage append
@@ -20,6 +23,9 @@ sized for a 100 TB scan:
 The expensive stage at 100 TB is the tokenize scan of raw html; the
 (term,bucket) shuffle into posting blocks reads the checkpointed runs, never
 raw pages, so a restart re-tokenizes only unfinished chunks.
+build_index_resumable hands the checkpointed runs and doc_urls to
+build.commit_index_tables — the same runs->index path as build_index, with
+the same duplicate-url / doc-id collision checks and table-format seam.
 """
 
 from __future__ import annotations
@@ -33,8 +39,8 @@ from webindex.bm25 import BM25Config, DEFAULT
 from webindex.build import (
     Index,
     assign_doc_ids,
-    build_postings,
     build_runs,
+    commit_index_tables,
 )
 
 
@@ -194,138 +200,15 @@ def build_index_resumable(
         text_col=text_col,
         doc_id_method=doc_id_method,
     )
-
-    from webindex.build import DOC_MARKER, vocab_and_corpus_agg
-
-    doc_urls = spark.read.parquet(f"{workdir}/doc_urls")
-    lens = runs.filter(F.col("term") == DOC_MARKER).select("doc_id", "doc_len")
-    doc_stats = (
-        doc_urls.select("doc_id", "url")
-        .join(lens, "doc_id", "left")
-        .select(
-            "doc_id",
-            "url",
-            F.coalesce(F.col("doc_len"), F.lit(0)).cast("int").alias("doc_len"),
-        )
-    )
-    # vocab + corpus stats in one pass over the checkpointed runs
-    vocab_df, _vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs)
-
-    out = f"{workdir}/index"
-    if range_width is None:
-        from webindex.build import adaptive_range_width
-
-        range_width = adaptive_range_width(n_docs)
-    id_space = "hash" if doc_id_method == "hash" else "dense"
-    # Pre-shuffle collision resolution, same as build_index: the vocabulary
-    # aggregate above (one map-side-combined pass, vocab-sized) feeds both
-    # collision resolution BEFORE the postings shuffle and the term_stats
-    # table — a clash costs a remap, never a post-hoc abort after paying for
-    # the whole build.
-    from webindex.build import _with_idf, resolve_term_hashes, term_hash_expr
-
-    _, hash_remap = resolve_term_hashes(vocab_df, primary_fn=hash_primary_fn)
-    # round-6 tail: the same overlapped write chains as build.build_index
-    # (guide §2.6) — (postings), (term_stats -> term_grams),
-    # (doc_stats -> url_index), driver-side one-row sidecars; dictionary
-    # tables coalesced to a data-derived file target; the redundant
-    # assert_no_hash_collisions re-scan dropped (resolve_term_hashes above
-    # already guarantees a collision-free dict or raises).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from webindex.build import N_URL_BUCKETS, build_term_grams, url_index_projection
-    from webindex.io import write_driver_table, write_table
-
-    dict_files = max(1, n_docs // 2_000_000)
-
-    def _write_postings() -> None:
-        # hash-sorted-within-partition write (see build.build_index for why
-        # not repartitionByRange): row-group pruning on term_hash IN (...)
-        write_table(
-            build_postings(
-                runs, avgdl, conf, range_width, n_docs=n_docs, id_space=id_space,
-                hash_remap=hash_remap, hash_primary_fn=hash_primary_fn,
-            ),
-            f"{out}/postings",
-            sort_cols=["term_hash", "block_id"],
-        )
-
-    def _write_terms() -> None:
-        write_table(
-            _with_idf(
-                vocab_df.withColumn(
-                    "term_hash",
-                    term_hash_expr(F.col("term"), hash_remap, hash_primary_fn),
-                ),
-                n_docs,
-            ),
-            f"{out}/term_stats",
-            sort_cols=["term"],
-            coalesce=dict_files,
-        )
-        # q-gram dictionary sidecar (same contract as build_index): derived
-        # from the committed dictionary, gram-clustered for IN(gram) pruning
-        write_table(
-            build_term_grams(spark.read.parquet(f"{out}/term_stats")),
-            f"{out}/term_grams",
-            sort_cols=["gram"],
-            coalesce=dict_files,
-        )
-
-    def _write_docs() -> None:
-        write_table(
-            doc_stats, f"{out}/doc_stats", sort_cols=["doc_id"],
-            coalesce=dict_files,
-        )
-        # url reverse-lookup projection — the shared helper IS the contract.
-        # repartition on the dir key: one url_hash-sorted file per bucket dir
-        # instead of a tasks-x-buckets small-file fan-out (build.build_index)
-        write_table(
-            url_index_projection(doc_stats).repartition(
-                N_URL_BUCKETS, F.col("url_bucket")
-            ),
-            f"{out}/url_index",
-            sort_cols=["url_hash"],
-            partition_by="url_bucket",
-        )
-
-    write_driver_table(
-        spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS, f"{out}/corpus_stats"
-    )
-    # conf sidecar (same contract as build_index): load_index restores the
-    # conf the blocks were encoded with
-    write_driver_table(
+    idx = commit_index_tables(
         spark,
-        [(conf.k1, conf.b, conf.block_size, conf.quantize_norms, range_width,
-          id_space)],
-        schema.INDEX_CONF,
-        f"{out}/conf",
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(_write_postings),
-            pool.submit(_write_terms),
-            pool.submit(_write_docs),
-        ]
-        for f in futs:
-            f.result()
-    _vocab_handle.unpersist()
-
-    from webindex.build import hash_bucket_bits
-
-    return Index(
-        postings=spark.read.parquet(f"{out}/postings"),
-        term_stats=spark.read.parquet(f"{out}/term_stats"),
-        doc_stats=spark.read.parquet(f"{out}/doc_stats"),
-        n_docs=n_docs,
-        avgdl=avgdl,
-        conf=conf,
+        runs,
+        spark.read.parquet(f"{workdir}/doc_urls"),
+        conf,
         range_width=range_width,
-        lineage=read_lineage(spark, workdir),
-        url_stats=spark.read.parquet(f"{out}/url_index"),
-        term_grams=spark.read.parquet(f"{out}/term_grams"),
-        id_space=id_space,
-        bucket_bits=(
-            hash_bucket_bits(n_docs, range_width) if id_space == "hash" else None
-        ),
+        id_space="hash" if doc_id_method == "hash" else "dense",
+        out_dir=f"{workdir}/index",
+        hash_primary_fn=hash_primary_fn,
     )
+    idx.lineage = read_lineage(spark, workdir)
+    return idx

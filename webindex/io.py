@@ -35,14 +35,18 @@ def table_format() -> str:
     return os.environ.get("WEBINDEX_TABLE_FORMAT", "parquet")
 
 
-def _iceberg_available(spark) -> bool:
+def _require_iceberg(spark) -> None:
     try:
         spark._jvm.java.lang.Class.forName(
             "org.apache.iceberg.spark.SparkCatalog"
         )
-        return True
     except Exception:
-        return False
+        raise RuntimeError(
+            "WEBINDEX_TABLE_FORMAT=iceberg but the Iceberg runtime is not "
+            "on the classpath. Add iceberg-spark-runtime to spark.jars and "
+            "configure spark.sql.catalog.<name>=org.apache.iceberg.spark."
+            "SparkCatalog; dest must then be a catalog table name."
+        ) from None
 
 
 def write_table(
@@ -87,13 +91,7 @@ def write_table(
         w.parquet(dest)
         return
     if fmt == "iceberg":
-        if not _iceberg_available(df.sparkSession):
-            raise RuntimeError(
-                "WEBINDEX_TABLE_FORMAT=iceberg but the Iceberg runtime is not "
-                "on the classpath. Add iceberg-spark-runtime to spark.jars and "
-                "configure spark.sql.catalog.<name>=org.apache.iceberg.spark."
-                "SparkCatalog; dest must then be a catalog table name."
-            )
+        _require_iceberg(df.sparkSession)
         w = df.writeTo(dest).using("iceberg")
         if partition_by:
             from pyspark.sql import functions as F
@@ -102,6 +100,70 @@ def write_table(
         w.createOrReplace()
         return
     raise ValueError(f"unknown table format: {fmt}")
+
+
+def _driver_local_path(spark, dest: str) -> str | None:
+    """dest as a driver-local POSIX path when Hadoop resolves it to the
+    local filesystem, else None. The scheme comes from dest itself, or from
+    fs.defaultFS when dest has none — the same resolution Spark's own reads
+    of dest use, so a scheme-less path on an HDFS/object-store deployment is
+    never written to the driver's disk while Spark reads the cluster FS.
+    Config-only: no FileSystem is instantiated."""
+    jvm = spark._jvm
+    uri = jvm.org.apache.hadoop.fs.Path(dest).toUri()
+    scheme = uri.getScheme() or jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+        spark._jsc.hadoopConfiguration()
+    ).getScheme()
+    return uri.getPath() if scheme == "file" else None
+
+
+def _spark_write_rows(df: DataFrame, dest: str, fmt: str, append: bool) -> None:
+    """The Spark-job fallback of the driver-side writers (iceberg, or a
+    filesystem the driver can't write with pyarrow)."""
+    if not append:
+        write_table(df, dest, fmt=fmt)
+    elif fmt == "parquet":
+        df.write.mode("append").parquet(dest)
+    elif fmt == "iceberg":
+        _require_iceberg(df.sparkSession)
+        if df.sparkSession.catalog.tableExists(dest):
+            df.writeTo(dest).append()
+        else:
+            df.writeTo(dest).using("iceberg").create()
+    else:
+        raise ValueError(f"unknown table format: {fmt}")
+
+
+def _write_driver_rows(
+    spark, rows: list[tuple], schema, dest: str, fmt: str | None, append: bool
+) -> None:
+    fmt = fmt or table_format()
+    if isinstance(schema, str):
+        from pyspark.sql.types import _parse_datatype_string
+
+        schema = _parse_datatype_string(schema)
+    local = _driver_local_path(spark, dest) if fmt == "parquet" else None
+    if local is None:
+        _spark_write_rows(spark.createDataFrame(rows, schema=schema), dest, fmt, append)
+        return
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = [
+        pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
+        for i in range(len(arrow_schema))
+    ]
+    table = pa.Table.from_arrays(cols, schema=arrow_schema)
+    if not append and os.path.isdir(local):
+        shutil.rmtree(local)
+    os.makedirs(local, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}" if append else "part-00000"
+    pq.write_table(table, os.path.join(local, f"{name}.parquet"))
 
 
 def write_driver_table(
@@ -116,36 +178,14 @@ def write_driver_table(
     The one-row sidecars (corpus_stats, conf) each cost a createDataFrame +
     single-task write job through the normal path — measured ~0.5-1s of pure
     fixed overhead apiece on local[32], charged to every build. For parquet
-    the driver writes the file directly with pyarrow (bit-identical types:
-    the arrow schema is derived from the Spark StructType, so
-    spark.read.parquet round-trips the exact same values and schema); the
-    iceberg seam keeps the normal catalog write, where the commit itself is
-    the metadata operation."""
-    fmt = fmt or table_format()
-    scheme_remote = "://" in dest and not dest.startswith("file://")
-    if fmt != "parquet" or scheme_remote:
-        # iceberg, or a non-local filesystem the driver can't write with
-        # pyarrow: keep the ordinary single-task write
-        write_table(spark.createDataFrame(rows, schema=schema), dest, fmt=fmt)
-        return
-    if dest.startswith("file://"):
-        dest = dest[len("file://"):]
-    import shutil
+    on the driver's local filesystem the driver writes the file directly
+    with pyarrow (bit-identical types: the arrow schema is derived from the
+    Spark StructType, so spark.read.parquet round-trips the exact same
+    values and schema); iceberg and non-local filesystems keep the normal
+    write, where for iceberg the commit itself is the metadata operation.
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    cols = [
-        pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
-        for i in range(len(arrow_schema))
-    ]
-    table = pa.Table.from_arrays(cols, schema=arrow_schema)
-    if os.path.isdir(dest):
-        shutil.rmtree(dest)
-    os.makedirs(dest, exist_ok=True)
-    pq.write_table(table, os.path.join(dest, "part-00000.parquet"))
+    `schema` may be a StructType or a DDL string ("a long, b string")."""
+    _write_driver_rows(spark, rows, schema, dest, fmt, append=False)
 
 
 def read_table(spark, dest: str, fmt: str | None = None) -> DataFrame:
@@ -168,35 +208,13 @@ def append_driver_rows(
 
     The streaming sidecars (lineage, _epoch_map, compactions) append one row
     per micro-batch through createDataFrame + a single-task write job —
-    pure fixed job latency on the ingest path. For local parquet the driver
-    appends a uniquely-named file with pyarrow (same arrow-schema derivation
-    as write_driver_table, so spark.read.parquet sees one coherent table);
-    iceberg / remote filesystems keep the ordinary Spark append. The
-    single-writer workdir contract makes the non-transactional file add safe.
+    pure fixed job latency on the ingest path. For parquet on the driver's
+    local filesystem the driver appends a uniquely-named file with pyarrow
+    (same arrow-schema derivation as write_driver_table, so
+    spark.read.parquet sees one coherent table); iceberg and non-local
+    filesystems keep an ordinary Spark append in that format. The
+    single-writer workdir contract makes the non-transactional file add
+    safe.
 
     `schema` may be a StructType or a DDL string ("a long, b string")."""
-    fmt = fmt or table_format()
-    scheme_remote = "://" in dest and not dest.startswith("file://")
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(schema)
-    if fmt != "parquet" or scheme_remote:
-        spark.createDataFrame(rows, schema=schema).write.mode("append").parquet(dest)
-        return
-    if dest.startswith("file://"):
-        dest = dest[len("file://"):]
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    cols = [
-        pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
-        for i in range(len(arrow_schema))
-    ]
-    table = pa.Table.from_arrays(cols, schema=arrow_schema)
-    os.makedirs(dest, exist_ok=True)
-    pq.write_table(table, os.path.join(dest, f"part-{uuid.uuid4().hex}.parquet"))
+    _write_driver_rows(spark, rows, schema, dest, fmt, append=True)

@@ -55,10 +55,14 @@ from webindex.build import (
     adaptive_range_width,
     assign_doc_ids,
     bucket_expr,
+    build_doc_stats,
     build_postings,
     build_runs,
     decode_postings_to_runs,
+    dict_file_target,
     hash_bucket_bits,
+    overlap,
+    term_dictionary,
     term_stats_from_postings,
 )
 
@@ -519,14 +523,22 @@ class IncrementalIndexer:
         return row
 
     def _write_state(
-        self, max_batch: int, bits: int, range_width: int, n_docs: int, sum_dl: float
+        self, max_batch: int, bits: int, range_width: int, n_docs: int,
+        sum_dl: float, avgdl: float,
     ) -> None:
-        # one-row sidecar: driver-side pyarrow write (no Spark job) with the
-        # arrow schema derived from the same StructType — bit-identical
+        """Commit a compaction's stats: corpus_stats, then the compaction
+        state. Called only after every table they describe is in place, so
+        a failed compact never leaves new corpus stats over old tables."""
+        # one-row sidecars: driver-side pyarrow writes (no Spark job) with
+        # the arrow schema derived from the same StructType — bit-identical
         # round-trip, ~0.5-1s of fixed job latency saved per compact
         # (round 6, same as build_index's corpus_stats/conf sidecars)
         from webindex.io import write_driver_table
 
+        write_driver_table(
+            self.spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS,
+            f"{self.workdir}/index/corpus_stats", fmt="parquet",
+        )
         c = self.conf
         write_driver_table(
             self.spark,
@@ -557,20 +569,28 @@ class IncrementalIndexer:
         latest = doc_urls.groupBy("doc_id").agg(F.max("batch_id").alias("batch_id"))
         return runs.join(latest, ["doc_id", "batch_id"]).drop("batch_id")
 
-    def _doc_stats_of(self, runs_latest: DataFrame, doc_urls_latest: DataFrame) -> DataFrame:
-        lens = runs_latest.filter(F.col("term") == DOC_MARKER).select("doc_id", "doc_len")
-        return doc_urls_latest.join(lens, "doc_id", "left").select(
-            "doc_id",
-            "url",
-            F.coalesce(F.col("doc_len"), F.lit(0)).cast("int").alias("doc_len"),
-        )
+    def _latest_urls(self, doc_urls: DataFrame) -> DataFrame:
+        """(doc_id, url) of each doc's newest batch in doc_urls."""
+        return doc_urls.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
+            ),
+        ).filter(F.col("rn") == 1).select("doc_id", "url")
 
-    def _write_postings(self, postings: DataFrame) -> None:
-        (
-            postings.sortWithinPartitions("bucket", "term_hash", "block_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{self.workdir}/index/postings")
+    def _dead_docs(self, tombs: DataFrame, doc_urls: DataFrame) -> DataFrame:
+        """doc_ids whose newest tombstone outranks their newest crawl in
+        doc_urls (latest event wins; a tombstone of a doc with no crawl
+        there is dead too)."""
+        crawl_latest = doc_urls.groupBy("doc_id").agg(
+            F.max("batch_id").alias("cb")
+        )
+        return (
+            tombs.groupBy("doc_id")
+            .agg(F.max("batch_id").alias("db"))
+            .join(crawl_latest, "doc_id", "left")
+            .filter(F.col("cb").isNull() | (F.col("db") > F.col("cb")))
+            .select("doc_id")
         )
 
     def _load_index(
@@ -600,18 +620,23 @@ class IncrementalIndexer:
         # recoverable table at every step (a crash mid-commit leaves either
         # the old table, both, or the new one — never neither): rename the
         # old table ASIDE, rename staging in, then drop the old copy.
+        from webindex.io import write_table
+
         spark, out = self.spark, f"{self.workdir}/index"
         staging = f"{out}/_term_stats_staging"
         # data-derived file target (round 6, same as the batch/full-compact
         # dictionaries): without it every incremental compact re-fragments
         # the dictionary into shuffle-partition-many overlapping-range files
         # and live queries pay per-file open cost on every stats probe
-        dict_files = max(1, n_docs // 2_000_000)
-        term_stats_from_postings(
-            spark.read.parquet(f"{out}/postings"), n_docs, term_dict
-        ).coalesce(dict_files).sortWithinPartitions("term").write.mode(
-            "overwrite"
-        ).parquet(staging)
+        write_table(
+            term_stats_from_postings(
+                spark.read.parquet(f"{out}/postings"), n_docs, term_dict
+            ),
+            staging,
+            sort_cols=["term"],
+            coalesce=dict_file_target(n_docs),
+            fmt="parquet",
+        )
         fs, jvm = _hadoop_fs(spark, out)
         Path = jvm.org.apache.hadoop.fs.Path
         final = Path(f"{out}/term_stats")
@@ -753,34 +778,23 @@ class IncrementalIndexer:
         runs = spark.read.parquet(f"{self.workdir}/runs")
         doc_urls = spark.read.parquet(f"{self.workdir}/doc_urls")
         runs_latest = self._latest_wins(runs, doc_urls)
-        doc_urls_latest = doc_urls.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
-            ),
-        ).filter(F.col("rn") == 1).select("doc_id", "url")
+        doc_urls_latest = self._latest_urls(doc_urls)
         # tombstones: per doc the LATEST event wins across the full history —
         # a doc whose newest delete outranks its newest crawl is dead and
         # contributes nothing to postings, doc_stats, n_docs, or avgdl
         tombs = self._new_tombstones()
         if tombs is not None:
-            crawl_latest = doc_urls.groupBy("doc_id").agg(
-                F.max("batch_id").alias("cb")
-            )
-            dead = (
-                tombs.groupBy("doc_id")
-                .agg(F.max("batch_id").alias("db"))
-                .join(crawl_latest, "doc_id", "left")
-                .filter(F.col("cb").isNull() | (F.col("db") > F.col("cb")))
-                .select("doc_id")
-            )
+            dead = self._dead_docs(tombs, doc_urls)
             runs_latest = runs_latest.join(dead, "doc_id", "left_anti")
             doc_urls_latest = doc_urls_latest.join(dead, "doc_id", "left_anti")
-        doc_stats = self._doc_stats_of(runs_latest, doc_urls_latest)
+        doc_stats = build_doc_stats(doc_urls_latest, runs_latest)
         from webindex.build import vocab_and_corpus_agg
 
-        # vocab + corpus stats in ONE pass over the merged runs (the
-        # DOC_MARKER group carries n_docs and the token total)
+        # full compact mirrors the batch build: df + dictionary + corpus
+        # stats in ONE map-side-combined pass over the merged runs (the
+        # DOC_MARKER group carries n_docs and the token total), then the
+        # same pre-shuffle hash-collision resolution (a fresh full compact
+        # may re-key; only the incremental path must preserve committed keys)
         vocab_df, vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs_latest)
 
         range_width = self.range_width or adaptive_range_width(n_docs)
@@ -790,29 +804,17 @@ class IncrementalIndexer:
         # stale partitions survive the dynamic overwrite
         _hadoop_delete(spark, f"{out}/postings")
         _hadoop_delete(spark, f"{out}/doc_stats")
-        # full compact mirrors the batch build: df + dictionary + corpus
-        # stats in ONE map-side-combined pass (vocab_and_corpus_agg above),
-        # with pre-shuffle hash-collision resolution (a fresh full compact
-        # may re-key; only the incremental path must preserve committed keys)
-        from webindex.build import _with_idf, resolve_term_hashes, term_hash_expr
-
-        _, remap = resolve_term_hashes(vocab_df, primary_fn=self.hash_primary_fn)
-        # round-6 tail, same as build.build_index / checkpoint (guide §2.6):
-        # the three table writes are independent chains — overlap them so a
-        # chain's task tail back-fills the others. The dictionary coalesces
-        # to a data-derived file target (guide §6 small-files: live_index's
-        # per-query dictionary probe pays per-file open cost); the post-write
-        # assert_no_hash_collisions re-scan is dropped because
-        # resolve_term_hashes above already raised on any unresolved clash
-        # BEFORE the shuffle (same proof as build_index, round 6).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from webindex.io import write_driver_table
-
-        dict_files = max(1, n_docs // 2_000_000)
+        term_stats, remap = term_dictionary(vocab_df, n_docs, self.hash_primary_fn)
+        # round-6 tail, same as build.commit_index_tables: the three table
+        # writes are independent chains, overlapped. The dictionary
+        # coalesces to a data-derived file target (guide §6 small-files:
+        # live_index's per-query dictionary probe pays per-file open cost).
+        # The layout stays bucket-partitioned: incremental compaction swaps
+        # per-bucket dirs of postings and doc_stats.
+        from webindex.io import write_table
 
         def _w_postings() -> None:
-            self._write_postings(
+            write_table(
                 build_postings(
                     runs_latest,
                     avgdl,
@@ -823,41 +825,36 @@ class IncrementalIndexer:
                     bucket_bits=bits,
                     hash_remap=remap,
                     hash_primary_fn=self.hash_primary_fn,
-                )
+                ),
+                f"{out}/postings",
+                sort_cols=["bucket", "term_hash", "block_id"],
+                partition_by="bucket",
+                fmt="parquet",
             )
 
         def _w_terms() -> None:
-            _with_idf(
-                vocab_df.withColumn(
-                    "term_hash",
-                    term_hash_expr(F.col("term"), remap, self.hash_primary_fn),
-                ),
-                n_docs,
-            ).coalesce(dict_files).sortWithinPartitions("term").write.mode(
-                "overwrite"
-            ).parquet(f"{out}/term_stats")
+            write_table(
+                term_stats, f"{out}/term_stats", sort_cols=["term"],
+                coalesce=dict_file_target(n_docs), fmt="parquet",
+            )
 
         def _w_docs() -> None:
-            doc_stats.withColumn(
-                "bucket",
-                bucket_expr(F.col("doc_id"), n_docs, range_width, "hash", bits),
-            ).sortWithinPartitions("doc_id").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(f"{out}/doc_stats")
+            write_table(
+                doc_stats.withColumn(
+                    "bucket",
+                    bucket_expr(F.col("doc_id"), n_docs, range_width, "hash", bits),
+                ),
+                f"{out}/doc_stats",
+                sort_cols=["doc_id"],
+                partition_by="bucket",
+                fmt="parquet",
+            )
 
-        write_driver_table(
-            spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS,
-            f"{out}/corpus_stats", fmt="parquet",
-        )
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [
-                pool.submit(_w_postings),
-                pool.submit(_w_terms),
-                pool.submit(_w_docs),
-            ]:
-                fut.result()
+        overlap(_w_postings, _w_terms, _w_docs)
         vocab_handle.unpersist()
-        self._write_state(max(done) if done else -1, bits, range_width, n_docs, n_docs * avgdl)
+        self._write_state(
+            max(done) if done else -1, bits, range_width, n_docs, n_docs * avgdl, avgdl
+        )
         # a full compact rebuilds every table and stat from the runs history,
         # so it clears any interrupted-incremental fence (the recovery route
         # compact() directs to)
@@ -886,17 +883,7 @@ class IncrementalIndexer:
         dead_ids = None
         tombs = self._new_tombstones(min_batch=int(state["max_batch"]))
         if tombs is not None:
-            crawl_latest = doc_urls.groupBy("doc_id").agg(
-                F.max("batch_id").alias("cb")
-            )
-            dead_ids = (
-                tombs.groupBy("doc_id")
-                .agg(F.max("batch_id").alias("db"))
-                .join(crawl_latest, "doc_id", "left")
-                .filter(F.col("cb").isNull() | (F.col("db") > F.col("cb")))
-                .select("doc_id")
-                .persist()
-            )
+            dead_ids = self._dead_docs(tombs, doc_urls).persist()
             if dead_ids.count() == 0:
                 dead_ids.unpersist()
                 dead_ids = None
@@ -1014,11 +1001,7 @@ class IncrementalIndexer:
         # independent jobs — overlap them (guide §2.6, round 6) and only
         # then raise the commit fence and swap. This also SHRINKS the fence
         # window: previously the doc_stats staging write ran inside it.
-        delta_urls = doc_urls.withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))),
-        ).filter(F.col("rn") == 1).select("doc_id", "url")
-        delta_stats = delta_docs.join(delta_urls, "doc_id").select(
+        delta_stats = delta_docs.join(self._latest_urls(doc_urls), "doc_id").select(
             "doc_id", "url", F.col("doc_len").cast("int").alias("doc_len")
         )
         kept_old = (
@@ -1027,34 +1010,43 @@ class IncrementalIndexer:
             .select("doc_id", "url", "doc_len")
         )
 
+        from webindex.io import write_table
+
         def _stage_postings() -> None:
-            build_postings(
-                merged,
-                avgdl,
-                self.conf,
-                range_width,
-                n_docs=n_docs,
-                id_space="hash",
-                bucket_bits=bits,
-            ).sortWithinPartitions("bucket", "term_hash", "block_id").write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(staging)
+            write_table(
+                build_postings(
+                    merged,
+                    avgdl,
+                    self.conf,
+                    range_width,
+                    n_docs=n_docs,
+                    id_space="hash",
+                    bucket_bits=bits,
+                ),
+                staging,
+                sort_cols=["bucket", "term_hash", "block_id"],
+                partition_by="bucket",
+                fmt="parquet",
+            )
 
         def _stage_doc_stats() -> None:
-            kept_old.unionByName(delta_stats).withColumn(
-                "bucket", bcol
-            ).sortWithinPartitions("doc_id").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(ds_staging)
+            write_table(
+                kept_old.unionByName(delta_stats).withColumn("bucket", bcol),
+                ds_staging,
+                sort_cols=["doc_id"],
+                partition_by="bucket",
+                fmt="parquet",
+            )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [
-                pool.submit(_stage_postings),
-                pool.submit(_stage_doc_stats),
-            ]:
-                fut.result()
+        # the session-wide dynamic partitionOverwriteMode keeps staged
+        # bucket dirs this write produces no output for: a crash between
+        # staging and swap would leave them for _swap_partition_dirs to
+        # commit (a touched bucket emptied by this delta would get its stale
+        # dir back — ghost doc_stats rows that double-decrement
+        # n_docs/sum_dl). Start both staging dirs empty.
+        _hadoop_delete(spark, staging)
+        _hadoop_delete(spark, ds_staging)
+        overlap(_stage_postings, _stage_doc_stats)
         old_rows.unpersist()
         # commit fence: from the first table swap to the state write the
         # committed tables and the state counts can disagree; a crash inside
@@ -1082,13 +1074,7 @@ class IncrementalIndexer:
         # term_dict was resolved pre-merge (existing keys preserved, delta
         # collisions remapped) — unique over the union by construction
         self._finish_tables(n_docs, term_dict)
-        from webindex.io import write_driver_table
-
-        write_driver_table(
-            spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS,
-            f"{out}/corpus_stats", fmt="parquet",
-        )
-        self._write_state(max(done), bits, range_width, n_docs, sum_dl)
+        self._write_state(max(done), bits, range_width, n_docs, sum_dl, avgdl)
         fence_fs.delete(fence, True)  # tables and state agree again
         self._log_compaction(
             delta_batches,
