@@ -169,3 +169,25 @@ def test_batched_decode_equals_per_block(raw_ids, qn, block_size):
     oi, ostarts = codec.decode_ids_concat([b["doc_ids"] for b in blocks], counts)
     assert np.array_equal(oi, exp_i)
     assert np.array_equal(ostarts, starts)
+
+    # positions: tf ascending values per doc, encoded per block with one
+    # group per doc (the build's layout). Each doc's first gap is absolute,
+    # so ONE decode_positions over the joined streams and the concatenated
+    # tfs equals the per-block decodes concatenated.
+    pos = np.cumsum(rng.integers(1, 50, size=int(tfs.sum())))
+    tf_cut = np.concatenate(([0], np.cumsum(tfs)))
+    bufs, per_p, per_s, off = [], [], [], 0
+    for b in blocks:
+        lo, hi = tf_cut[off], tf_cut[off + b["n_docs"]]
+        buf, _ = codec.positions_encode_grouped(
+            pos[lo:hi], tf_cut[off : off + b["n_docs"]] - lo
+        )
+        p, s = codec.decode_positions(buf, tfs[off : off + b["n_docs"]])
+        bufs.append(buf)
+        per_p.append(p)
+        per_s.append(s + lo)
+        off += b["n_docs"]
+    bp, bs = codec.decode_positions(b"".join(bufs), bt)
+    assert np.array_equal(bp, np.concatenate(per_p) if per_p else bp)
+    assert np.array_equal(bp, pos)
+    assert np.array_equal(bs, np.concatenate(per_s) if per_s else bs)

@@ -409,6 +409,80 @@ def test_live_index_every_scorer_hides_dead(pending_delete, scorer):
     assert hits(live, 3) == want[:3]
 
 
+@pytest.fixture(scope="module")
+def positional_pending_delete(spark, tmp_path_factory):
+    """(pre-delete index, live_index() with one pending delete, dead doc)
+    on a POSITIONAL workdir: the dead doc is the top "the data" phrase hit."""
+    from webindex.query import topk_phrase
+
+    pdf = make_pages_pdf(0, 60)
+    ing = IncrementalIndexer(
+        spark, str(tmp_path_factory.mktemp("ppending") / "wd"), text_col="text",
+        positions=True,
+    )
+    idx0 = ing.upsert(spark.createDataFrame(pdf))
+    dead = int(topk_phrase(idx0, "the data", 1).collect()[0]["doc_id"])
+    url = idx0.doc_stats.filter(F.col("doc_id") == dead).collect()[0]["url"]
+    ing.delete([url], compact_now=False)
+    live = ing.live_index()
+    assert list(live.dead_ids) == [dead]
+    return idx0, live, dead
+
+
+def _positional_scorers():
+    """name -> run(index, k) -> [(doc_id, ...)] in the family's own order;
+    the span / intervals families are unranked (doc_id asc), so k cuts
+    that order."""
+    from webindex import query as Q
+
+    def scored(rows, *extra):
+        return [(int(r["doc_id"]), round(float(r["score"]), 9),
+                 *(r[c] for c in extra)) for r in rows]
+
+    def counted(rows, col):
+        return [(int(r["doc_id"]), int(r[col])) for r in rows]
+
+    ordered = {"match": {"terms": ["the", "data"], "max_gaps": 0, "ordered": True}}
+    return {
+        "phrase": lambda i, k: scored(Q.topk_phrase(i, "the data", k).collect()),
+        "phrase_slop2": lambda i, k: scored(
+            Q.topk_phrase(i, "the data", k, slop=2).collect()),
+        "phrase_batch": lambda i, k: scored(sorted(
+            Q.topk_phrase_batch(i, {"q": "the data"}, k).collect(),
+            key=lambda r: r["rank"])),
+        "phrase_prefix": lambda i, k: scored(
+            Q.topk_phrase_prefix(i, "the dat", k).collect()),
+        "phrase_scores": lambda i, k: scored(sorted(
+            Q.phrase_scores(i, "the data").collect(),
+            key=lambda r: (-r["score"], r["doc_id"]))[:k]),
+        "span_near": lambda i, k: counted(
+            Q.span_near_docs(i, ["the", "data"], 0, True).collect(), "n_spans")[:k],
+        "intervals": lambda i, k: counted(
+            Q.intervals_docs(i, ordered).collect(), "n_intervals")[:k],
+        "rescore": lambda i, k: scored(Q.topk_rescore(
+            i, "the data", "the data", window=1000, k=k).collect()),
+        "highlight": lambda i, k: scored(
+            Q.highlight_topk(i, "the data", k).collect(), "hl_term", "hl_pos"),
+    }
+
+
+@pytest.mark.parametrize("scorer", list(_positional_scorers()))
+def test_live_index_positional_families_hide_dead(positional_pending_delete, scorer):
+    """A pending delete is hidden from every position-reading family on
+    live_index(): the phrase matcher, span_near and intervals drop dead docs
+    at the shared positional decode, so the result is the pre-delete result
+    minus the dead doc, with pre-delete stats — at a large k and at a small
+    k that promotes the next doc. rescore and highlight run the BM25 kernel
+    first, which already hid the doc; they guard the composition."""
+    idx0, live, dead = positional_pending_delete
+    run = _positional_scorers()[scorer]
+    before = run(idx0, 1000)
+    assert dead in [h[0] for h in before], "fixture: the dead doc must match"
+    want = [h for h in before if h[0] != dead]
+    assert run(live, 1000) == want
+    assert run(live, 3) == want[:3]
+
+
 def test_batch_theta_seed_skips_dead_docs(spark, tmp_path):
     """topk_batch's shared θ seed must not take the k-th best contribution
     from a dead doc: here the deleted doc holds the best contribution of a

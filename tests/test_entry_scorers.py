@@ -1,8 +1,11 @@
-"""Oracle guard for the shared per-bucket BM25 kernel: every registry entry
-whose query runs through it (match family, bool, search_after,
-function_score, dis_max, synonyms, fuzzy, batch, multi-field, prefix) must
-agree with its DuckDB oracle SQL, compared the way scripts/check_entry.py
-compares them (row count, column names, order-insensitive value hash)."""
+"""Oracle guard for the shared per-bucket kernels: every registry entry
+whose query runs through the BM25 kernel (match family, bool, search_after,
+function_score, dis_max, synonyms, fuzzy, batch, multi-field, prefix) or
+reads positions through the shared positional decode (phrase, sloppy
+phrase, phrase batch / prefix, rescore, simple_query_string, highlight,
+span_near, intervals, term vectors) must agree with its DuckDB oracle SQL,
+compared the way scripts/check_entry.py compares them (row count, column
+names, order-insensitive value hash)."""
 
 import importlib.util
 from pathlib import Path
@@ -32,6 +35,20 @@ ENTRIES = [
     "bm25_most_fields",
     "bm25_cross_fields",
     "bm25_prefix",
+    "bm25_phrase",
+    "bm25_phrase_slop",
+    "bm25_phrase_batch",
+    "bm25_phrase_prefix",
+    "bm25_rescore",
+    "bm25_sqs",
+    "bm25_highlight",
+    "span_near_ordered",
+    "span_near_unordered",
+    "intervals_all_of",
+    "intervals_all_of_unordered",
+    "intervals_filtered",
+    "intervals_any_of",
+    "term_vectors_read",
 ]
 
 

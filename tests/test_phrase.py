@@ -211,7 +211,7 @@ def test_phrase_block_prune_skips_disjoint_ranges(spark):
     contain the rare anchor term are never decoded; results identical."""
     import pandas as pd
 
-    from webindex.query import _phrase_bucket_fn, _query_terms
+    from webindex.query import _phrase_match_bucket, _query_terms
 
     texts = {}
     for i in range(64):
@@ -234,13 +234,14 @@ def test_phrase_block_prune_skips_disjoint_ranges(spark):
     assert rows["bucket"].nunique() == 1  # single bucket: prune is in-bucket
 
     probe = {}
-    fn = _phrase_bucket_fn(hashes, sum_idf, idx.conf, idx.avgdl, 10, _probe=probe)
-    local = fn(rows)
+    local = _phrase_match_bucket(
+        rows, [("q", hashes, sum_idf, 0)], idx.conf, idx.avgdl, 10, _probe=probe
+    )["q"]
     # 'the' alone has 16 blocks; only those overlapping docs 0-3 survive
     assert probe["blocks_total"] >= 17
     assert probe["blocks_decoded"] <= 3, probe
     # results equal the full engine path and the oracle
-    got = [(int(r["doc_id"]), round(float(r["score"]), 9)) for _, r in local.iterrows()]
+    got = [(int(d), round(float(s), 9)) for d, s in zip(*local)]
     eng = _hits(topk_phrase(idx, "qqanchor the", 10))
     oracle = OracleIndex(texts)
     want = [(d, round(s, 9)) for d, s in oracle.topk_phrase("qqanchor the", 10)]
@@ -367,7 +368,7 @@ def test_phrase_impact_prune_hot_hot(spark):
     results stay byte-identical to the oracle."""
     import pandas as pd
 
-    from webindex.query import _phrase_bucket_fn, _query_terms
+    from webindex.query import _phrase_match_bucket, _query_terms
 
     texts = {}
     for i in range(64):
@@ -393,15 +394,16 @@ def test_phrase_impact_prune_hot_hot(spark):
     assert rows["bucket"].nunique() == 1
 
     probe = {}
-    fn = _phrase_bucket_fn(hashes, sum_idf, idx.conf, idx.avgdl, 5, _probe=probe)
-    local = fn(rows)
+    local = _phrase_match_bucket(
+        rows, [("q", hashes, sum_idf, 0)], idx.conf, idx.avgdl, 5, _probe=probe
+    )["q"]
     # both terms cover every doc (16 blocks each at block_size=4): without
     # the impact prune all 32 would decode; the high-impact intervals
     # (docs 0-7) fill k=5 first and θ prunes the low-impact tail
     assert probe["blocks_total"] == 32, probe
     assert probe["blocks_decoded"] < probe["blocks_total"], probe
     got = sorted(
-        [(int(r["doc_id"]), round(float(r["score"]), 9)) for _, r in local.iterrows()],
+        [(int(d), round(float(s), 9)) for d, s in zip(*local)],
         key=lambda x: (-x[1], x[0]),
     )
     oracle = OracleIndex(texts)

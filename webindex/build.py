@@ -138,12 +138,15 @@ class Index:
     id_space: str | None = None
     bucket_bits: int | None = None
     # live-docs filter (round 5): doc_ids tombstoned since the last compact,
-    # applied by the fused BM25 scorer BEFORE its local top-k cut — the ES
-    # refresh-interval delete semantics (results exclude dead docs; n_docs/
-    # avgdl/df stay as-built until the merge, exactly Lucene's live-docs
-    # bitmap). Sorted int64 numpy array, driver-scale by construction: it
-    # holds only the deletes SINCE the last compact (streaming.live_index),
-    # the analogue of Lucene's per-segment deleted-docs bitmap in heap.
+    # dropped at decode by every query kernel (the BM25 scorer, the
+    # filter-context kernels and the positional decode) BEFORE any local
+    # top-k cut — the ES refresh-interval delete semantics (results exclude
+    # dead docs; n_docs/avgdl/df stay as-built until the merge, exactly
+    # Lucene's live-docs bitmap). Only the lookups (term_vectors, lookup_*)
+    # still return a dead doc. Sorted int64 numpy array, driver-scale by
+    # construction: it holds only the deletes SINCE the last compact
+    # (streaming.live_index), the analogue of Lucene's per-segment
+    # deleted-docs bitmap in heap.
     dead_ids: "np.ndarray | None" = None
 
     def bucket_of(self, doc_id_col: F.Column) -> F.Column:

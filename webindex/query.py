@@ -134,6 +134,43 @@ def _decode_rows(blocks: pd.DataFrame, conf, avgdl: float, dead: np.ndarray | No
     return blk, ids, tfs, dls, impact
 
 
+def _require_positions(index: Index, what: str) -> None:
+    """Raise unless `index` carries positions (build_index(positions=True)):
+    the phrase, intervals/span and highlight families read them."""
+    if "positions" not in index.postings.columns:
+        raise ValueError(
+            f"{what} need a positional index — build with "
+            "build_index(..., positions=True)"
+        )
+
+
+def _decode_positional(blocks: pd.DataFrame, conf, dead: np.ndarray | None):
+    """The shared positional decode: positional block rows -> (blk, ids,
+    tfs, dls, pdocs, pos), dead docs dropped (_live) from the per-doc
+    arrays (blk, ids, tfs, dls) and from the per-position ones (pdocs =
+    each position's doc, pos ascending within a doc). blk is the row's
+    block position in `blocks`; doc i's positions are the tfs[i] values
+    starting at cumsum(tfs)[i] - tfs[i].
+
+    ids/tfs/dls come from codec.decode_blocks_concat, positions from ONE
+    codec.decode_positions call over the joined streams and the
+    concatenated tfs — every doc's first position gap is absolute, so the
+    grouped delta-decode resets at each doc of each block and the single
+    call is already the batched form."""
+    counts = blocks["n_docs"].to_numpy(dtype=np.int64)
+    ids, tfs, dls, _ = codec.decode_blocks_concat(
+        blocks["doc_ids"], blocks["tfs"], blocks["doc_lens"], counts,
+        conf.quantize_norms,
+    )
+    pos, _ = codec.decode_positions(b"".join(blocks["positions"]), tfs)
+    blk = np.repeat(np.arange(len(blocks)), counts)
+    alive = _live(ids, dead)
+    if alive is not None:
+        pos = pos[np.repeat(alive, tfs)]
+        blk, ids, tfs, dls = blk[alive], ids[alive], tfs[alive], dls[alive]
+    return blk, ids, tfs, dls, np.repeat(ids, tfs), pos
+
+
 def _decode_contribs_iter(
     idf_map: dict[int, float], conf, avgdl: float, dead: np.ndarray | None = None
 ):
@@ -1005,15 +1042,19 @@ def _phrase_match_bucket(
     queries: list[tuple],
     conf,
     avgdl: float,
-    k: int,
+    k: int | None,
+    dead: np.ndarray | None = None,
     _probe: dict | None = None,
 ) -> dict:
     """One bucket's positional block rows -> {query_id: (doc_ids, scores)}
-    local top-k per phrase query (None where the bucket can't match).
+    local top-k per phrase query (None where the bucket can't match;
+    k=None keeps every match).
 
-    queries: [(query_id, slot_hashes, sum_idf, slop)]. The decode cache is
-    SHARED across queries — each needed block is decoded at most once per
-    bucket no matter how many queries touch its term.
+    queries: [(query_id, slot_hashes, sum_idf, slop)] (_phrase_entries).
+    The decode cache is SHARED across queries — each needed block is
+    decoded at most once per bucket no matter how many queries touch its
+    term. Dead docs (Index.dead_ids) are dropped at decode, so they never
+    match and never set the chunk θ.
 
     Two metadata prunes run before any decode, per query:
 
@@ -1037,7 +1078,7 @@ def _phrase_match_bucket(
        byte-identical to the unpruned evaluation: docs partition into
        elementary intervals, so chunk-local matching never splits or
        double-counts a doc."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
+    k1, b = conf.k1, conf.b
     pdf = pdf.sort_values(["term_hash", "block_id"]).reset_index(drop=True)
     tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
     tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
@@ -1050,48 +1091,22 @@ def _phrase_match_bucket(
     rows_of = {t: np.asarray(v, dtype=np.int64) for t, v in rows_of.items()}
 
     cache: dict[int, tuple] = {}
-    col_doc, col_tf = pdf["doc_ids"], pdf["tfs"]
-    col_dl, col_pos = pdf["doc_lens"], pdf["positions"]
-    ndocs_arr = pdf["n_docs"].to_numpy(dtype=np.int64)
 
     def dec_many(rr) -> list[tuple]:
-        """Decode the not-yet-cached blocks of `rr` in ONE batched pass
-        (ids/tfs/dls via codec.decode_blocks_concat; positions via the same
-        grouped delta-decode with per-DOC groups — each doc's first position
-        gap is absolute, value counts per doc are its tf). Per-block cache
-        entries are slices of the shared arrays; values are bit-identical
-        to the old per-block decode_block + decode_positions path, and the
+        """Decode the not-yet-cached blocks of `rr` in ONE _decode_positional
+        pass. Per-block cache entries are slices of its arrays, and the
         decode-on-demand contract of the chunked θ-prune is kept (only
         blocks a chunk actually needs are ever decoded)."""
         missing = [int(ri) for ri in rr if int(ri) not in cache]
         if missing:
-            counts = ndocs_arr[missing]
-            ids, tfs, dls, bstarts = codec.decode_blocks_concat(
-                [col_doc.iloc[ri] for ri in missing],
-                [col_tf.iloc[ri] for ri in missing],
-                [col_dl.iloc[ri] for ri in missing],
-                counts, qn,
+            blk, ids, tfs, dls, pdocs, pos = _decode_positional(
+                pdf.iloc[missing], conf, dead
             )
-            bends = np.concatenate((bstarts[1:], [ids.size]))
-            gaps = codec.varint_decode(
-                b"".join(bytes(col_pos.iloc[ri]) for ri in missing)
-            )
-            pdocs = np.repeat(ids, tfs)
-            if gaps.size:
-                dstarts = np.zeros(tfs.size, dtype=np.int64)
-                np.cumsum(tfs[:-1], out=dstarts[1:])
-                cs = np.cumsum(gaps)
-                prev = np.zeros(tfs.size, dtype=np.int64)
-                prev[1:] = cs[dstarts[1:] - 1]
-                pos = cs - np.repeat(prev, tfs)
-            else:
-                pos = gaps
-            tf_cum = np.zeros(tfs.size + 1, dtype=np.int64)
-            np.cumsum(tfs, out=tf_cum[1:])
+            ds = np.searchsorted(blk, np.arange(len(missing) + 1))
+            ps = np.concatenate(([0], np.cumsum(tfs)))[ds]
             for j, ri in enumerate(missing):
-                s, e = bstarts[j], bends[j]
-                ps, pe = tf_cum[s], tf_cum[e]
-                cache[ri] = (ids[s:e], dls[s:e], pdocs[ps:pe], pos[ps:pe])
+                d, e, p, q = ds[j], ds[j + 1], ps[j], ps[j + 1]
+                cache[ri] = (ids[d:e], dls[d:e], pdocs[p:q], pos[p:q])
         return [cache[int(ri)] for ri in rr]
 
     out: dict = {}
@@ -1176,32 +1191,63 @@ def _phrase_match_bucket(
     return out
 
 
-def _phrase_bucket_fn(
-    slot_hashes: list[int],
-    sum_idf: float,
-    conf,
-    avgdl: float,
-    k: int,
-    _probe: dict | None = None,
-    slop: int = 0,
-):
-    """applyInPandas fn: one bucket's positional blocks -> local top-k phrase
-    matches for a single query. Thin wrapper over _phrase_match_bucket (which
-    carries the prune + matching machinery and its scale notes)."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
+def _phrase_entries(index: Index, phrases: dict[str, str], slop: int) -> list[tuple]:
+    """The phrase plan's queries: [(query_id, slot_hashes, sum_idf, slop)],
+    query_id-sorted, from ONE dictionary probe over every phrase's terms.
+    sum_idf sums the slot terms' idfs in phrase order (duplicates counted).
+    A phrase with no token or an absent term gets no entry — it cannot
+    match anywhere."""
+    _require_positions(index, "phrase queries")
+    stats = _query_terms(index, " ".join(phrases.values()))
+    out = []
+    for qid in sorted(phrases):
+        toks = tokenize(phrases[qid])
+        if toks and all(t in stats for t in toks):
+            sum_idf = float(sum(stats[t][1] for t in toks))
+            out.append((qid, [stats[t][2] for t in toks], sum_idf, int(slop)))
+    return out
+
+
+def _phrase_plan(
+    index: Index,
+    entries: list[tuple],
+    k: int | None,
+    batch: bool = False,
+    extra: F.Column | None = None,
+) -> DataFrame:
+    """The plan of every phrase family: candidate positional blocks
+    (filter term_hash IN (...) [& extra predicate]) ->
+    groupBy(bucket).applyInPandas(_phrase_match_bucket) -> each bucket's
+    local top-k (k=None: every match). Rows (doc_id, score), or
+    (query_id, doc_id, score) when `batch`; the caller makes the global
+    cut (TakeOrdered, a per-query window, or none)."""
+    conf, avgdl, dead = index.conf, index.avgdl, index.dead_ids
+    cols = ["query_id", "doc_id", "score"] if batch else ["doc_id", "score"]
+    empty = pd.DataFrame({c: [] for c in cols}).astype(
         {"doc_id": np.int64, "score": np.float64}
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = _phrase_match_bucket(
-            pdf, [("q", slot_hashes, sum_idf, slop)], conf, avgdl, k, _probe=_probe
-        )
-        r = res.get("q")
-        if r is None:
+        res = _phrase_match_bucket(pdf, entries, conf, avgdl, k, dead)
+        hit = [(qid, res[qid]) for qid, *_ in entries if res.get(qid) is not None]
+        if not hit:
             return empty
-        return pd.DataFrame({"doc_id": r[0], "score": r[1]})
+        frame = {
+            "doc_id": np.concatenate([r[0] for _, r in hit]),
+            "score": np.concatenate([r[1] for _, r in hit]),
+        }
+        if batch:
+            frame = {"query_id": [q for q, r in hit for _d in r[0]], **frame}
+        return pd.DataFrame(frame)
 
-    return fn
+    cond = F.col("term_hash").isin(sorted({h for _, hs, _, _ in entries for h in hs}))
+    if extra is not None:
+        cond = cond & extra
+    return (
+        index.postings.filter(cond)
+        .groupBy("bucket")
+        .applyInPandas(fn, schema=_QHIT if batch else _HIT)
+    )
 
 
 def topk_phrase(index: Index, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
@@ -1222,31 +1268,14 @@ def topk_phrase(index: Index, phrase: str, k: int = 10, slop: int = 0) -> DataFr
 
     Scale shape: same one fused stage as topk_wand — IN(term_hash) pushdown
     to the block scan, per-bucket prune+decode+intersect+local-top-k, global
-    TakeOrdered of k rows per bucket. Pruning is metadata-first: the
-    ALL-terms interval prune plus the impact-UB descending-chunk prune
-    (_phrase_match_bucket) run before any block is decoded."""
-    spark = index.postings.sparkSession
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "phrase queries need a positional index — build with "
-            "build_index(..., positions=True)"
-        )
-    terms_seq = tokenize(phrase)
-    if not terms_seq:
-        return spark.createDataFrame([], _HIT)
-    stats = _query_terms(index, phrase)
-    if any(t not in stats for t in terms_seq):
-        return spark.createDataFrame([], _HIT)  # absent term => no phrase
-    sum_idf = float(sum(stats[t][1] for t in terms_seq))
-    slot_hashes = [stats[t][2] for t in terms_seq]
-
-    blocks = index.postings.filter(
-        F.col("term_hash").isin(sorted(set(slot_hashes)))
-    )
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _phrase_bucket_fn(slot_hashes, sum_idf, index.conf, index.avgdl, k, slop=slop),
-        schema=_HIT,
-    )
+    TakeOrdered of k rows per bucket (_phrase_plan). Pruning is
+    metadata-first: the ALL-terms interval prune plus the impact-UB
+    descending-chunk prune (_phrase_match_bucket) run before any block is
+    decoded."""
+    entries = _phrase_entries(index, {"q": phrase}, slop)
+    if not entries:
+        return index.postings.sparkSession.createDataFrame([], _HIT)
+    hits = _phrase_plan(index, entries, k)
     return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -1263,73 +1292,13 @@ def topk_phrase_batch(
     impact-UB prune. Per-query jobs pay Spark's fixed job latency per
     phrase; this pays it once. Results are byte-identical to per-query
     topk_phrase (same bucket partitioning, same per-chunk determinism)."""
-    spark = index.postings.sparkSession
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "phrase queries need a positional index — build with "
-            "build_index(..., positions=True)"
+    entries = _phrase_entries(index, queries, slop)
+    if not entries:
+        rank = T.StructField("rank", T.IntegerType(), False)
+        return index.postings.sparkSession.createDataFrame(
+            [], T.StructType(_QHIT.fields + [rank])
         )
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-            T.StructField("rank", T.IntegerType(), False),
-        ]
-    )
-    local_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ]
-    )
-    qtoks = {qid: tokenize(p) for qid, p in queries.items()}
-    all_terms = sorted({t for ts in qtoks.values() for t in ts})
-    if not all_terms:
-        return spark.createDataFrame([], out_schema)
-    rows = index.term_stats.filter(F.col("term").isin(all_terms)).collect()
-    stats = {
-        r["term"]: (int(r["df"]), float(r["idf"]), int(r["term_hash"])) for r in rows
-    }
-    plan: list[tuple] = []
-    all_hashes: set[int] = set()
-    for qid in sorted(qtoks):
-        toks = qtoks[qid]
-        if not toks or any(t not in stats for t in toks):
-            continue  # absent term => qid has no hits
-        sum_idf = float(sum(stats[t][1] for t in toks))
-        slot_hashes = [stats[t][2] for t in toks]
-        plan.append((qid, slot_hashes, sum_idf, int(slop)))
-        all_hashes.update(slot_hashes)
-    if not plan:
-        return spark.createDataFrame([], out_schema)
-    conf, avgdl = index.conf, index.avgdl
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = _phrase_match_bucket(pdf, plan, conf, avgdl, k)
-        qs, ds, ss = [], [], []
-        for qid, _, _, _ in plan:
-            r = res.get(qid)
-            if r is None:
-                continue
-            qs.extend([qid] * len(r[0]))
-            ds.append(r[0])
-            ss.append(r[1])
-        if not qs:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": qs,
-                "doc_id": np.concatenate(ds),
-                "score": np.concatenate(ss),
-            }
-        )
-
-    blocks = index.postings.filter(F.col("term_hash").isin(sorted(all_hashes)))
-    local = blocks.groupBy("bucket").applyInPandas(fn, schema=local_schema)
+    local = _phrase_plan(index, entries, k, batch=True)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local.withColumn("rank", F.row_number().over(w))
@@ -1695,10 +1664,7 @@ def highlight_topk(index: Index, query: str, k: int = 10) -> DataFrame:
     decoding at most k x n_terms first-positions. Everything driver-side
     is k-scale. The rarest-term pick compares integer document frequencies
     (never floats), so engine and SQL oracle agree exactly."""
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "highlight_topk requires a positional index (build with positions=True)"
-        )
+    _require_positions(index, "highlights")
     spark = index.postings.sparkSession
     hits = topk_wand(index, query, k).collect()  # k rows
     if not hits:
@@ -1707,36 +1673,19 @@ def highlight_topk(index: Index, query: str, k: int = 10) -> DataFrame:
     hashes = {h: t for t, (_, _, h) in stats.items()}
     df_of = {t: d for t, (d, _, _) in stats.items()}
     ids = np.array(sorted({int(r["doc_id"]) for r in hits}), dtype=np.int64)
-    qn = index.conf.quantize_norms
     cond = F.lit(False)
     for i in ids.tolist():
         cond = cond | ((F.col("min_doc") <= i) & (F.col("max_doc") >= i))
     blocks = index.postings.filter(F.col("term_hash").isin(list(hashes)) & cond)
+    conf, dead = index.conf, index.dead_ids
 
     def fn(batches):
         for pdf in batches:
-            th_o, id_o, pos_o = [], [], []
-            for th, dbuf, tbuf, lbuf, pbuf in zip(
-                pdf["term_hash"], pdf["doc_ids"], pdf["tfs"],
-                pdf["doc_lens"], pdf["positions"],
-            ):
-                bids, tfs, _ = codec.decode_block(
-                    bytes(dbuf), bytes(tbuf), bytes(lbuf), qn
-                )
-                mask = np.isin(bids, ids)
-                if not mask.any():
-                    continue
-                pos, starts = codec.decode_positions(bytes(pbuf), tfs)
-                th_o.append(np.full(int(mask.sum()), int(th), dtype=np.int64))
-                id_o.append(bids[mask])
-                pos_o.append(pos[starts][mask])
-            yield pd.DataFrame(
-                {
-                    "term_hash": np.concatenate(th_o) if th_o else np.array([], dtype=np.int64),
-                    "doc_id": np.concatenate(id_o) if id_o else np.array([], dtype=np.int64),
-                    "pos": np.concatenate(pos_o) if pos_o else np.array([], dtype=np.int64),
-                }
-            )
+            blk, bids, tfs, _, _, pos = _decode_positional(pdf, conf, dead)
+            first = pos[np.cumsum(tfs) - tfs]  # each doc's first position
+            m = np.isin(bids, ids)
+            th = pdf["term_hash"].to_numpy(dtype=np.int64)[blk[m]]
+            yield pd.DataFrame({"term_hash": th, "doc_id": bids[m], "pos": first[m]})
 
     rows = blocks.mapInPandas(fn, schema="term_hash long, doc_id long, pos long").collect()
     best: dict[int, tuple[tuple[int, str], int]] = {}
@@ -2445,29 +2394,10 @@ def phrase_scores(index: Index, phrase: str, slop: int = 0) -> DataFrame:
     Buckets partition doc ranges, so per-bucket exhaustive output is
     globally exhaustive. Shared kernel for compositions that sum or re-rank
     phrase relevance (simple_query_string, topk_rescore)."""
-    spark = index.postings.sparkSession
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "phrase queries need a positional index — build with "
-            "build_index(..., positions=True)"
-        )
-    terms_seq = tokenize(phrase)
-    if not terms_seq:
-        return spark.createDataFrame([], _HIT)
-    stats = _query_terms(index, phrase)
-    if any(t not in stats for t in terms_seq):
-        return spark.createDataFrame([], _HIT)
-    sum_idf = float(sum(stats[t][1] for t in terms_seq))
-    slot_hashes = [stats[t][2] for t in terms_seq]
-    blocks = index.postings.filter(
-        F.col("term_hash").isin(sorted(set(slot_hashes)))
-    )
-    return blocks.groupBy("bucket").applyInPandas(
-        _phrase_bucket_fn(
-            slot_hashes, sum_idf, index.conf, index.avgdl, None, slop=slop
-        ),
-        schema=_HIT,
-    )
+    entries = _phrase_entries(index, {"q": phrase}, slop)
+    if not entries:
+        return index.postings.sparkSession.createDataFrame([], _HIT)
+    return _phrase_plan(index, entries, None)
 
 
 def topk_rescore(
@@ -2501,11 +2431,7 @@ def topk_rescore(
         raise ValueError("need 0 < k <= window")
     if window > 10_000:
         raise ValueError("window capped at 10000 (ES window_size contract)")
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "phrase queries need a positional index — build with "
-            "build_index(..., positions=True)"
-        )
+    _require_positions(index, "phrase queries")
     spark = index.postings.sparkSession
     # the phrase-term dictionary probe is independent of the base query's
     # result — overlap the two driver-synchronous jobs (guide §2.6) instead
@@ -2514,31 +2440,18 @@ def topk_rescore(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        stats_fut = pool.submit(_query_terms, index, rescore_phrase)
+        entries_fut = pool.submit(_phrase_entries, index, {"q": rescore_phrase}, slop)
         base = topk_wand(index, query, window).collect()
-        stats = stats_fut.result()
+        entries = entries_fut.result()
     if not base:
         return spark.createDataFrame([], _HIT)
     ids = np.array([r["doc_id"] for r in base], dtype=np.int64)
-    toks = tokenize(rescore_phrase)
     ph: dict[int, float] = {}
-    if toks and all(t in stats for t in toks):
-        # phrase pass over only the window's candidate span: bucket-of and
-        # doc-range filters prune the scan before the fused matcher runs
-        lo, hi = int(ids.min()), int(ids.max())
-        slot_hashes = [stats[t][2] for t in toks]
-        sum_idf = float(sum(stats[t][1] for t in toks))
-        blocks = index.postings.filter(
-            F.col("term_hash").isin(sorted(set(slot_hashes)))
-            & (F.col("max_doc") >= lo)
-            & (F.col("min_doc") <= hi)
-        )
-        local = blocks.groupBy("bucket").applyInPandas(
-            _phrase_bucket_fn(
-                slot_hashes, sum_idf, index.conf, index.avgdl, None, slop=slop
-            ),
-            schema=_HIT,
-        )
+    if entries:
+        # phrase pass over only the window's candidate span: the doc-range
+        # predicate prunes the scan before the fused matcher runs
+        span = (F.col("max_doc") >= int(ids.min())) & (F.col("min_doc") <= int(ids.max()))
+        local = _phrase_plan(index, entries, None, extra=span)
         ph = {
             r["doc_id"]: r["score"]
             for r in local.filter(F.col("doc_id").isin(ids.tolist())).collect()
@@ -2845,92 +2758,12 @@ def span_near_docs(
     iterator consumes them, a documented divergence shared with
     topk_phrase's sloppy matcher).
 
-    Scale shape: IN(term_hash) pushdown to the positional block scan, one
-    applyInPandas pass per bucket (buckets partition doc space, so bucket
-    outputs concatenate with no merge), vectorized searchsorted chains —
-    no per-anchor Python loop, no shuffle beyond the bucket groupBy."""
-    spark = index.postings.sparkSession
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "span queries need a positional index — build with "
-            "build_index(..., positions=True)"
-        )
-    out_schema = "doc_id long, n_spans long"
-    stats = _query_terms(index, " ".join(terms))
-    if not terms or any(t not in stats for t in terms):
-        return spark.createDataFrame([], out_schema)
-    slot_hashes = [stats[t][2] for t in terms]
-    qn = index.conf.quantize_norms
-    n_slots = len(slot_hashes)
-    shift = np.int64(1) << np.int64(32)
-    mask = shift - 1
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "n_spans": []}).astype(
-            {"doc_id": np.int64, "n_spans": np.int64}
-        )
-        pdf = pdf.sort_values(["term_hash", "block_id"]).reset_index(drop=True)
-        per_term: dict[int, tuple] = {}
-        for th in set(slot_hashes):
-            rows = pdf.index[pdf["term_hash"] == th]
-            if len(rows) == 0:
-                return empty
-            pd_list, pp_list = [], []
-            for ri in rows:
-                ids, tfs, _ = codec.decode_block(
-                    bytes(pdf["doc_ids"].iloc[ri]), bytes(pdf["tfs"].iloc[ri]),
-                    bytes(pdf["doc_lens"].iloc[ri]), qn,
-                )
-                pos, _ = codec.decode_positions(bytes(pdf["positions"].iloc[ri]), tfs)
-                pd_list.append(np.repeat(ids, tfs))
-                pp_list.append(pos.astype(np.int64))
-            per_term[th] = (np.concatenate(pd_list), np.concatenate(pp_list))
-        all_docs = np.unique(np.concatenate([per_term[t][0] for t in set(slot_hashes)]))
-        keys_of = {}
-        for th in set(slot_hashes):
-            pdocs, ppos = per_term[th]
-            keys_of[th] = np.searchsorted(all_docs, pdocs).astype(np.int64) * shift + ppos
-
-        a_docs, a_pos = per_term[slot_hashes[0]]
-        aranks = np.searchsorted(all_docs, a_docs).astype(np.int64)
-        if in_order:
-            cur = keys_of[slot_hashes[0]].copy()
-            alive = np.ones(len(cur), dtype=bool)
-            for th in slot_hashes[1:]:
-                skeys = keys_of[th]
-                idx = np.searchsorted(skeys, cur, side="right")
-                ok = idx < len(skeys)
-                idx_c = np.minimum(idx, len(skeys) - 1)
-                cand = skeys[idx_c]
-                alive &= ok & ((cand >> np.int64(32)) == aranks)
-                cur = cand
-            width = (cur & mask) - a_pos - (n_slots - 1)
-            matched = alive & (width <= slop)
-        else:
-            akeys = keys_of[slot_hashes[0]]
-            amin, amax = a_pos.astype(np.int64).copy(), a_pos.astype(np.int64).copy()
-            alive = np.ones(len(akeys), dtype=bool)
-            for th in slot_hashes[1:]:
-                chosen, valid = _closest_slot_assign(akeys, keys_of[th])
-                ai = chosen & mask
-                alive &= valid
-                np.minimum(amin, ai, out=amin)
-                np.maximum(amax, ai, out=amax)
-            matched = alive & ((amax - amin) <= slop + n_slots - 1)
-        if not matched.any():
-            return empty
-        counts = np.bincount(aranks[matched], minlength=len(all_docs))
-        hit = np.nonzero(counts > 0)[0]
-        return pd.DataFrame(
-            {"doc_id": all_docs[hit], "n_spans": counts[hit].astype(np.int64)}
-        )
-
-    blocks = index.postings.filter(F.col("term_hash").isin(sorted(set(slot_hashes))))
-    return (
-        blocks.groupBy("bucket")
-        .applyInPandas(fn, schema=out_schema)
-        .orderBy("doc_id")
-    )
+    Both contracts are the intervals `match` rule with max_gaps = slop:
+    the ordered width p_{n-1} - p_0 - (n-1) is the rule's total gap, and
+    max - min <= slop + n - 1 is its unordered max - min + 1 - n <= max_gaps
+    — so this is intervals_docs over that one rule."""
+    spec = {"match": {"terms": list(terms), "max_gaps": slop, "ordered": in_order}}
+    return intervals_docs(index, spec).withColumnRenamed("n_intervals", "n_spans")
 
 
 def intervals_docs(index: Index, spec: dict) -> DataFrame:
@@ -2983,16 +2816,15 @@ def intervals_docs(index: Index, spec: dict) -> DataFrame:
     n_intervals counts the root rule's matches per doc. Every combinator
     output is (start, end)-sorted so rules nest arbitrarily.
 
-    Scale shape: identical to span_near_docs — IN(term_hash) pushdown over
-    the UNION of all leaf terms, each term decoded once per bucket no
-    matter how many rules reference it, every combinator a vectorized
-    searchsorted pass over packed (doc_rank<<32 | position) keys."""
+    Scale shape: IN(term_hash) pushdown to the positional block scan over
+    the UNION of all leaf terms, one applyInPandas pass per bucket
+    (buckets partition doc space, so bucket outputs concatenate with no
+    merge), each bucket's blocks decoded once (_decode_positional, dead
+    docs dropped) no matter how many rules reference a term, every
+    combinator a vectorized searchsorted pass over packed
+    (doc_rank<<32 | position) keys."""
     spark = index.postings.sparkSession
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "intervals queries need a positional index — build with "
-            "build_index(..., positions=True)"
-        )
+    _require_positions(index, "intervals queries")
 
     def leaf_terms(node: dict) -> list[str]:
         kind, body = next(iter(node.items()))
@@ -3033,7 +2865,7 @@ def intervals_docs(index: Index, spec: dict) -> DataFrame:
     if not all_terms or all(t not in stats for t in all_terms):
         return spark.createDataFrame([], out_schema)
     hash_of = {t: stats[t][2] for t in set(all_terms) if t in stats}
-    qn = index.conf.quantize_norms
+    conf, dead = index.conf, index.dead_ids
     shift = np.int64(1) << np.int64(32)
     mask = shift - 1
 
@@ -3042,29 +2874,21 @@ def intervals_docs(index: Index, spec: dict) -> DataFrame:
             {"doc_id": np.int64, "n_intervals": np.int64}
         )
         pdf = pdf.sort_values(["term_hash", "block_id"]).reset_index(drop=True)
-        per_term: dict[int, tuple] = {}
-        for th in set(hash_of.values()):
-            rows = pdf.index[pdf["term_hash"] == th]
-            if len(rows) == 0:
-                # absent from THIS bucket (buckets partition doc space) —
-                # the leaf yields no spans here, but other any_of branches
-                # may still match, so never bail out of the whole bucket
-                continue
-            pd_list, pp_list = [], []
-            for ri in rows:
-                ids, tfs, _ = codec.decode_block(
-                    bytes(pdf["doc_ids"].iloc[ri]), bytes(pdf["tfs"].iloc[ri]),
-                    bytes(pdf["doc_lens"].iloc[ri]), qn,
-                )
-                pos, _ = codec.decode_positions(bytes(pdf["positions"].iloc[ri]), tfs)
-                pd_list.append(np.repeat(ids, tfs))
-                pp_list.append(pos.astype(np.int64))
-            per_term[th] = (np.concatenate(pd_list), np.concatenate(pp_list))
-        if not per_term:
+        blk, _, tfs, _, pdocs, ppos = _decode_positional(pdf, conf, dead)
+        if not len(pdocs):
             return empty
-        all_docs = np.unique(
-            np.concatenate([per_term[t][0] for t in per_term])
-        )
+        # blocks are term_hash-sorted, so each term's positions are one
+        # slice, doc-ascending (block_id order) and ascending within a doc.
+        # A term absent from THIS bucket (buckets partition doc space)
+        # yields no spans here, but other any_of branches may still match
+        pth = pdf["term_hash"].to_numpy(dtype=np.int64)[np.repeat(blk, tfs)]
+        ths, cut = np.unique(pth, return_index=True)
+        cut = np.append(cut, len(pth))
+        per_term = {
+            int(t): (pdocs[cut[i]:cut[i + 1]], ppos[cut[i]:cut[i + 1]])
+            for i, t in enumerate(ths)
+        }
+        all_docs = np.unique(pdocs)
 
         def term_spans(t: str) -> tuple[np.ndarray, np.ndarray]:
             """(skeys, ekeys): packed start/end keys, start == end."""
@@ -3338,7 +3162,6 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
             [], "doc_id long, term string, tf long, positions array<int>"
         )
     has_pos = "positions" in index.postings.columns
-    qn = index.conf.quantize_norms
     id_arr = np.array(ids, dtype=np.int64)
 
     buckets = sorted(
@@ -3353,43 +3176,33 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
     if buckets is not None:
         blocks = blocks.filter(F.col("bucket").isin(buckets))
 
-    def fn(batches):
-        import pandas as pd
+    conf, avgdl = index.conf, index.avgdl
 
+    def fn(batches):
         for pdf in batches:
-            out_d, out_h, out_tf, out_pos = [], [], [], []
-            for ri in range(len(pdf)):
-                if not (
-                    (id_arr >= pdf["min_doc"].iloc[ri])
-                    & (id_arr <= pdf["max_doc"].iloc[ri])
-                ).any():
-                    continue
-                bids, tfs, _ = codec.decode_block(
-                    bytes(pdf["doc_ids"].iloc[ri]), bytes(pdf["tfs"].iloc[ri]),
-                    bytes(pdf["doc_lens"].iloc[ri]), qn,
-                )
-                sel = np.isin(bids, id_arr)
-                if not sel.any():
-                    continue
-                if has_pos:
-                    pos, starts = codec.decode_positions(
-                        bytes(pdf["positions"].iloc[ri]), tfs
-                    )
-                    bounds = np.concatenate((starts, [len(pos)]))
-                th = int(pdf["term_hash"].iloc[ri])
-                for i in np.nonzero(sel)[0]:
-                    out_d.append(int(bids[i]))
-                    out_h.append(th)
-                    out_tf.append(int(tfs[i]))
-                    out_pos.append(
-                        pos[bounds[i]: bounds[i + 1]].tolist() if has_pos else None
-                    )
+            # only blocks whose [min_doc, max_doc] holds a requested id
+            lo = np.searchsorted(id_arr, pdf["min_doc"].to_numpy(dtype=np.int64))
+            hi = np.searchsorted(
+                id_arr, pdf["max_doc"].to_numpy(dtype=np.int64), side="right"
+            )
+            pdf = pdf[hi > lo]
+            # a lookup, like lookup_doc: pending deletes are not applied
+            if has_pos:
+                blk, bids, tfs, _, _, pos = _decode_positional(pdf, conf, None)
+            else:
+                blk, bids, tfs, _, _ = _decode_rows(pdf, conf, avgdl, None)
+            sel = np.nonzero(np.isin(bids, id_arr))[0]
+            starts = (np.cumsum(tfs) - tfs)[sel]
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.Series(out_d, dtype="int64"),
-                    "term_hash": pd.Series(out_h, dtype="int64"),
-                    "tf": pd.Series(out_tf, dtype="int64"),
-                    "positions": pd.Series(out_pos, dtype="object"),
+                    "doc_id": bids[sel],
+                    "term_hash": pdf["term_hash"].to_numpy(dtype=np.int64)[blk[sel]],
+                    "tf": tfs[sel],
+                    "positions": pd.Series(
+                        [pos[s : s + t].tolist() for s, t in zip(starts, tfs[sel])]
+                        if has_pos else [None] * len(sel),
+                        dtype="object",
+                    ),
                 }
             )
 

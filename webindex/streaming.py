@@ -681,17 +681,18 @@ class IncrementalIndexer:
         Index.dead_ids, the analogue of Lucene's in-heap deleted-docs
         bitmap: the shared per-bucket BM25 kernel (every top-k scorer —
         match family, bool, search_after, batch, synonyms, fuzzy,
-        function_score, match_scores and what builds on it) and the
+        function_score, match_scores and what builds on it), the
         filter-context kernels (matching_doc_ids / count, prefix,
-        wildcard, regexp) drop dead docs right after decode, before any
-        local top-k cut,
-        and θ seeding ignores them, while n_docs/avgdl/df stay as-built —
-        exactly Lucene's behavior until the merge reclaims the docs. The
-        set is driver-scale by construction (deletes since the last
-        compact only). Pending CRAWL batches stay invisible until
-        compact(), the engine's refresh point for additions; the
-        positional families (phrase, span, intervals) and highlight still
-        see deletes only at compact().
+        wildcard, regexp) and the shared positional decode (phrase and
+        its batch / prefix / scores / rescore forms, span_near, intervals,
+        highlight) drop dead docs right after decode, before any local
+        top-k cut, and θ seeding ignores them, while n_docs/avgdl/df stay
+        as-built — exactly Lucene's behavior until the merge reclaims the
+        docs. The set is driver-scale by construction (deletes since the
+        last compact only). Pending CRAWL batches stay invisible until
+        compact(), the engine's refresh point for additions. Only the
+        lookups — term_vectors and the lookup_* calls — still return a
+        pending-deleted doc until compact().
 
         Requires a committed index (compact() at least once); raises
         otherwise."""
