@@ -2,9 +2,15 @@
 block max_impact correctness (SURVEY.md §5.2)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
-from webindex import codec
+from webindex import codec, schema
+
+
+def _rows(cols: dict) -> list[dict]:
+    """encode_blocks' columnar output as one dict per block."""
+    return [{k: v[i] for k, v in cols.items()} for i in range(len(cols["n_docs"]))]
 
 
 def test_varint_known_values():
@@ -43,7 +49,9 @@ def test_encode_blocks_layout_and_metadata():
     ids = np.arange(0, 2 * n, 2, dtype=np.int64)  # 300 docs, even ids
     tfs = (ids % 7 + 1).astype(np.int64)
     dls = np.full(n, 100, dtype=np.int64)
-    blocks = codec.encode_blocks(ids, tfs, dls, avgdl=100.0, k1=1.2, b=0.75, block_size=128)
+    blocks = _rows(
+        codec.encode_blocks(ids, tfs, dls, avgdl=100.0, k1=1.2, b=0.75, block_size=128)
+    )
     assert [b["n_docs"] for b in blocks] == [128, 128, 44]
     assert blocks[0]["min_doc"] == 0 and blocks[0]["max_doc"] == 254
     assert blocks[2]["block_id"] == 2
@@ -97,10 +105,10 @@ def test_encode_blocks_quantized_layout_and_soundness():
     ids = np.arange(0, 2 * n, 2, dtype=np.int64)
     tfs = (ids % 7 + 1).astype(np.int64)
     dls = (137 + 13 * (ids % 50)).astype(np.int64)  # spread above 128
-    exact = codec.encode_blocks(ids, tfs, dls, avgdl=300.0, k1=1.2, b=0.75,
-                                block_size=128)
-    quant = codec.encode_blocks(ids, tfs, dls, avgdl=300.0, k1=1.2, b=0.75,
-                                block_size=128, quantize_norms=True)
+    exact = _rows(codec.encode_blocks(ids, tfs, dls, avgdl=300.0, k1=1.2, b=0.75,
+                                      block_size=128))
+    quant = _rows(codec.encode_blocks(ids, tfs, dls, avgdl=300.0, k1=1.2, b=0.75,
+                                      block_size=128, quantize_norms=True))
     off = 0
     for eb, qb in zip(exact, quant):
         # doc_lens stream is exactly 1 byte per posting, never larger than varint
@@ -140,9 +148,9 @@ def test_batched_decode_equals_per_block(raw_ids, qn, block_size):
     rng = np.random.default_rng(0)
     tfs = rng.integers(1, 40, size=ids.size)
     dls = rng.integers(1, 4000, size=ids.size)
-    blocks = codec.encode_blocks(
+    blocks = _rows(codec.encode_blocks(
         ids, tfs, dls, 120.0, 1.2, 0.75, block_size=block_size, quantize_norms=qn
-    )
+    ))
     per_i, per_t, per_d = [], [], []
     for b in blocks:
         i, t, d = codec.decode_block(b["doc_ids"], b["tfs"], b["doc_lens"], qn)
@@ -191,3 +199,105 @@ def test_batched_decode_equals_per_block(raw_ids, qn, block_size):
     assert np.array_equal(bp, np.concatenate(per_p) if per_p else bp)
     assert np.array_equal(bp, pos)
     assert np.array_equal(bs, np.concatenate(per_s) if per_s else bs)
+
+
+@given(st.data(), st.booleans(), st.integers(min_value=1, max_value=20))
+@settings(max_examples=100, deadline=None)
+def test_batched_encode_equals_per_group(data, qn, block_size):
+    """ONE multi-group encode_blocks call equals the single-group calls
+    concatenated, on every byte stream and every metadata field. Group sizes
+    run 1..3×block_size, ids span the full signed int64 range, and rows past
+    the last group end (the build's carried trailing group) carry a higher
+    impact than any real posting, so a last block that reduces over them
+    gets a wrong max_impact."""
+    groups = data.draw(
+        st.lists(
+            st.lists(
+                st.integers(min_value=-(2**63), max_value=2**63 - 1),
+                min_size=1,
+                max_size=3 * block_size,
+                unique=True,
+            ),
+            min_size=1,
+            max_size=8,
+        )
+    )
+    extra = data.draw(st.integers(min_value=0, max_value=5))
+    ids = np.concatenate([np.sort(np.array(g, dtype=np.int64)) for g in groups])
+    ends = np.cumsum([len(g) for g in groups])
+    rng = np.random.default_rng(len(ids))
+    tfs = rng.integers(1, 40, size=ids.size)
+    dls = rng.integers(1, 4000, size=ids.size)
+    # trailing rows: tf 10^4 at doc length 1 out-scores every real posting
+    tail_ids = rng.integers(-(2**63), 2**63 - 1, size=extra, dtype=np.int64)
+    batched = _rows(codec.encode_blocks(
+        np.concatenate((ids, tail_ids)),
+        np.concatenate((tfs, np.full(extra, 10_000))),
+        np.concatenate((dls, np.ones(extra, dtype=np.int64))),
+        120.0, 1.2, 0.75, block_size, quantize_norms=qn, group_ends=ends,
+    ))
+    expected, lo = [], 0
+    for g, hi in enumerate(ends):
+        for blk in _rows(codec.encode_blocks(
+            ids[lo:hi], tfs[lo:hi], dls[lo:hi], 120.0, 1.2, 0.75, block_size,
+            quantize_norms=qn,
+        )):
+            expected.append({**blk, "group": g})
+        lo = hi
+    assert len(batched) == len(expected)
+    for got, exp in zip(batched, expected):
+        assert got.keys() == exp.keys()
+        for key in exp:
+            assert got[key] == exp[key], key
+
+
+@pytest.mark.parametrize("positional", [False, True])
+@pytest.mark.parametrize("qn", [False, True])
+def test_decode_postings_to_runs_equals_per_block(spark, positional, qn):
+    """decode_postings_to_runs (one batched decode per Arrow batch) returns
+    exactly the rows of a per-block codec.decode_block +
+    positions_byte_slices reference, and round-trips the runs the blocks
+    were built from."""
+    from webindex.bm25 import BM25Config
+    from webindex.build import build_postings, decode_postings_to_runs
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for term in range(-3, 3):
+        n = int(rng.integers(1, 40))
+        for d in np.unique(rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64)):
+            tf = int(rng.integers(1, 6))
+            row = (term * 1_000_003, int(d), tf, int(rng.integers(tf, 300)))
+            if positional:
+                pos = np.sort(rng.choice(300, size=tf, replace=False))
+                row += (codec.positions_encode_grouped(pos, np.array([0]))[0],)
+            rows.append(row)
+    runs_schema = (
+        schema.with_positions(schema.RUNS_HASHED) if positional else schema.RUNS_HASHED
+    )
+    runs = spark.createDataFrame(rows, runs_schema)
+    conf = BM25Config(block_size=7, quantize_norms=qn)
+    postings = build_postings(
+        runs, 120.0, conf, 1, n_docs=len(rows), id_space="hash", bucket_bits=2
+    ).persist()
+    blocks = postings.collect()
+    assert len(blocks) > 8  # several blocks per term and per batch
+
+    expected = []
+    for r in blocks:
+        d, t, l = codec.decode_block(
+            bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["doc_lens"]), qn
+        )
+        decoded = [
+            (r["term_hash"], int(d[i]), int(t[i]), int(l[i])) for i in range(len(d))
+        ]
+        if positional:
+            pbuf = bytes(r["positions"])
+            cut = codec.positions_byte_slices(pbuf, t)
+            decoded = [x + (pbuf[cut[i] : cut[i + 1]],) for i, x in enumerate(decoded)]
+        expected.extend(decoded)
+    got = [tuple(r) for r in decode_postings_to_runs(postings, qn).collect()]
+    postings.unpersist()
+    assert sorted(got) == sorted(expected)
+    if not qn:  # exact norms: the blocks round-trip the runs they came from
+        assert sorted(got) == sorted(rows)

@@ -523,3 +523,37 @@ def test_batch_theta_seed_skips_dead_docs(spark, tmp_path):
     assert pruned == exhaustive
     assert [d for d, _ in pruned] == [d for d, _ in want]
     assert all(abs(s - w) <= 1e-9 for (_, s), (_, w) in zip(pruned, want))
+
+
+@pytest.mark.parametrize("positional", [False, True])
+@pytest.mark.parametrize(
+    "lookup", ["lookup_doc", "lookup_docs", "lookup_url", "term_vectors"]
+)
+def test_live_index_lookups_hide_dead(request, positional, lookup):
+    """ES realtime GET / mget and _termvectors report a pending delete as
+    not found at once: on live_index() every lookup answers as the
+    pre-delete index minus the dead doc's rows, and a live doc's answer is
+    unchanged."""
+    from webindex import query as Q
+
+    idx0, live, dead = request.getfixturevalue(
+        "positional_pending_delete" if positional else "pending_delete"
+    )[:3]
+    urls = {
+        int(r["doc_id"]): r["url"]
+        for r in idx0.doc_stats.select("doc_id", "url").collect()
+    }
+    other = min(d for d in urls if d != dead)
+    run = {
+        "lookup_doc": lambda i: [
+            r for d in (dead, other) for r in Q.lookup_doc(i, d).collect()
+        ],
+        "lookup_docs": lambda i: Q.lookup_docs(i, [dead, other]).collect(),
+        "lookup_url": lambda i: [
+            r for d in (dead, other) for r in Q.lookup_url(i, urls[d]).collect()
+        ],
+        "term_vectors": lambda i: Q.term_vectors(i, [dead, other]).collect(),
+    }[lookup]
+    before = run(idx0)
+    assert {dead, other} <= {r["doc_id"] for r in before}
+    assert run(live) == [r for r in before if r["doc_id"] != dead]

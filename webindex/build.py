@@ -142,8 +142,9 @@ class Index:
     # filter-context kernels and the positional decode) BEFORE any local
     # top-k cut — the ES refresh-interval delete semantics (results exclude
     # dead docs; n_docs/avgdl/df stay as-built until the merge, exactly
-    # Lucene's live-docs bitmap). Only the lookups (term_vectors, lookup_*)
-    # still return a dead doc. Sorted int64 numpy array, driver-scale by
+    # Lucene's live-docs bitmap); the lookups (lookup_doc / lookup_docs /
+    # lookup_url, term_vectors) report a dead doc as not found, like ES
+    # realtime GET. Sorted int64 numpy array, driver-scale by
     # construction: it holds only the deletes SINCE the last compact
     # (streaming.live_index), the analogue of Lucene's per-segment
     # deleted-docs bitmap in heap.
@@ -565,7 +566,8 @@ def assert_no_docid_collisions(doc_stats: DataFrame) -> DataFrame:
     aggregation, a few bytes per task through the shuffle. The per-id
     groupBy that names the offending id runs only on the failure path
     (it cost a full extra doc_stats shuffle on EVERY build — measured as
-    part of the 1.34x build regression, BENCH/ab_r3r4.jsonl)."""
+    part of the 1.34x build regression, the round-3/4 A/B in
+    BENCH/BASELINE.md)."""
     tot = doc_stats.agg(
         F.count(F.lit(1)).alias("n"), F.countDistinct("doc_id").alias("d")
     ).collect()[0]
@@ -689,71 +691,59 @@ def build_postings(
         schema.with_positions(schema.POSTINGS) if positional else schema.POSTINGS
     )
 
-    def _encode_spans(th, bk, ids, tfs, dls, pos, gstarts, gends) -> pd.DataFrame:
-        """Encode a run of COMPLETE (term_hash, bucket) groups given as
-        slices of already (key, doc_id)-sorted arrays. Block bytes are a
-        pure function of each group's sorted postings (codec.encode_blocks
-        is called with the exact same inputs as the old per-group path), so
-        the emitted blocks are byte-identical at any parallelism."""
-        th_o, bk_o, bid_o = [], [], []
-        ids_o, tfs_o, dls_o, nd_o, mn_o, mx_o, mi_o, pos_o = (
-            [], [], [], [], [], [], [], []
+    def _encode_spans(th, bk, ids, tfs, dls, pos, gends) -> pd.DataFrame:
+        """Encode the COMPLETE (term_hash, bucket) groups of already
+        (key, doc_id)-sorted arrays in ONE codec.encode_blocks call: group g
+        ends at row gends[g] (group 0 starts at row 0); rows past gends[-1]
+        — the carried trailing group — are left for the next call. Block
+        bytes and metadata are a pure function of each group's sorted
+        postings, so the emitted blocks are byte-identical at any
+        parallelism and any batch split."""
+        enc = codec.encode_blocks(
+            ids, tfs, dls, avgdl, k1, b, block_size,
+            quantize_norms=qnorms, group_ends=gends,
         )
-        for g in range(len(gstarts)):
-            s, e = gstarts[g], gends[g]
-            blocks = codec.encode_blocks(
-                ids[s:e], tfs[s:e], dls[s:e], avgdl, k1, b, block_size,
-                quantize_norms=qnorms,
-            )
-            bucket = int(bk[s])
-            base = bucket << _BLOCK_SHIFT
-            th_o.extend([int(th[s])] * len(blocks))
-            bk_o.extend([bucket] * len(blocks))
-            for blk in blocks:
-                bid_o.append(base | blk["block_id"])
-                ids_o.append(blk["doc_ids"])
-                tfs_o.append(blk["tfs"])
-                dls_o.append(blk["doc_lens"])
-                nd_o.append(blk["n_docs"])
-                mn_o.append(blk["min_doc"])
-                mx_o.append(blk["max_doc"])
-                mi_o.append(blk["max_impact"])
-            if positional:
-                pos_g = pos[s:e]
-                pos_o.extend(
-                    b"".join(
-                        bytes(x)
-                        for x in pos_g[i * block_size : (i + 1) * block_size]
-                    )
-                    for i in range(len(blocks))
-                )
+        first = np.concatenate(([0], gends[:-1]))[enc["group"]]  # group's 1st row
+        bucket = bk[first]
         out = {
-            "term_hash": np.asarray(th_o, dtype=np.int64),
-            "bucket": np.asarray(bk_o, dtype=np.int64),
-            "block_id": np.asarray(bid_o, dtype=np.int64),
-            "doc_ids": ids_o,
-            "tfs": tfs_o,
-            "doc_lens": dls_o,
-            "n_docs": np.asarray(nd_o, dtype=np.int32),
-            "min_doc": np.asarray(mn_o, dtype=np.int64),
-            "max_doc": np.asarray(mx_o, dtype=np.int64),
-            "max_impact": np.asarray(mi_o, dtype=np.float64),
-            "avgdl0": np.full(len(bid_o), float(avgdl), dtype=np.float64),
+            "term_hash": th[first],
+            "bucket": bucket,
+            "block_id": (bucket << _BLOCK_SHIFT) | enc["block_id"],
+            "doc_ids": enc["doc_ids"],
+            "tfs": enc["tfs"],
+            "doc_lens": enc["doc_lens"],
+            "n_docs": enc["n_docs"].astype(np.int32),
+            "min_doc": enc["min_doc"],
+            "max_doc": enc["max_doc"],
+            "max_impact": enc["max_impact"],
+            "avgdl0": np.full(len(bucket), float(avgdl), dtype=np.float64),
         }
         if positional:
-            out["positions"] = pos_o
+            # a block's positions stream is its docs' encoded spans joined
+            # in doc_id order: one join over the batch, then byte offsets
+            n = int(gends[-1])
+            joined = b"".join(pos[:n])
+            cut = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(np.fromiter(map(len, pos[:n]), np.int64, n), out=cut[1:])
+            row0 = first + enc["block_id"] * block_size  # block's first row
+            out["positions"] = [
+                joined[lo:hi]
+                for lo, hi in zip(
+                    cut[row0].tolist(), cut[row0 + enc["n_docs"]].tolist()
+                )
+            ]
         return pd.DataFrame(out)
 
     def _stream_encode(batches):
         """mapInPandas fn over a partition whose rows arrive sorted by
-        (term_hash, bucket, doc_id): encode every complete group, carrying
-        the trailing (possibly batch-spanning) group into the next batch.
-        Replaces groupBy().applyInPandas(encode_group), which materialized
-        one Arrow batch + one pandas frame PER (term, bucket) GROUP —
-        ~0.2 ms of fixed overhead times |vocab|-scale group counts dominated
-        the encode stage (guide §4: batch the Python boundary). The sort
-        also makes each group's rows arrive doc_id-ascending, so the old
-        per-group argsort is gone."""
+        (term_hash, bucket, doc_id): one _encode_spans call (so one codec
+        call) per Arrow batch for every complete group in it, carrying the
+        trailing (possibly batch-spanning) group into the next batch. The
+        Python boundary is paid per batch, never per group or block: the
+        index is mostly tiny groups (block fill ~0.04), and a codec call
+        per group cost ~0.36 ms each — 7.9 s for 22k groups against 0.09 s
+        batched. The sort also hands each group its rows doc_id-ascending,
+        so no per-group argsort is needed."""
         carry: list | None = None
         for pdf in batches:
             if not len(pdf):
@@ -777,12 +767,10 @@ def build_postings(
                 carry = arrs  # whole batch continues one group
                 continue
             cut = int(change[-1])  # trailing group may span into next batch
-            gstarts = np.concatenate(([0], change[:-1]))
-            gends = change
-            yield _encode_spans(*arrs[:6], gstarts, gends)
+            yield _encode_spans(*arrs, change)
             carry = [None if a is None else a[cut:] for a in arrs]
         if carry is not None and len(carry[0]):
-            yield _encode_spans(*carry[:6], np.asarray([0]), np.asarray([len(carry[0])]))
+            yield _encode_spans(*carry, np.asarray([len(carry[0])]))
 
     if "term_hash" not in runs.columns:
         keep = ["doc_id", "tf", "doc_len"] + (["positions"] if positional else [])
@@ -817,9 +805,16 @@ def decode_postings_to_runs(
     track doc stats separately. Blocks store no term strings; join term_stats
     on term_hash when a human-readable view is needed. quantize_norms: the
     flag the blocks were encoded with (quantized values round-trip exactly,
-    so a decode -> re-encode compaction cycle is lossless). Positional blocks
-    round-trip their per-doc position byte spans UNPARSED (byte-boundary
-    split only), so compaction never re-encodes positions either."""
+    so a decode -> re-encode compaction cycle is lossless).
+
+    One codec.decode_blocks_concat call per Arrow batch, its counts from
+    the blocks' n_docs column — a decode_block call per block cost ~0.19 ms
+    of numpy setup each (5.0 s for 22.5k blocks against 0.06 s batched).
+    Positional blocks round-trip their per-doc position byte spans UNPARSED:
+    one codec.positions_byte_slices over the batch's joined streams and the
+    concatenated tfs splits them at doc boundaries (each doc's first gap is
+    absolute, so a span needs no block context), so compaction never
+    re-encodes positions either."""
     positional = "positions" in postings.columns
     out_schema = (
         schema.with_positions(schema.RUNS_HASHED) if positional else schema.RUNS_HASHED
@@ -827,40 +822,29 @@ def decode_postings_to_runs(
 
     def fn(batches):
         for pdf in batches:
-            hashes, ids, tfs, dls, pos = [], [], [], [], []
-            rows = zip(
-                pdf["term_hash"],
-                pdf["doc_ids"],
-                pdf["tfs"],
-                pdf["doc_lens"],
-                pdf["positions"] if positional else pdf["term_hash"],
+            if not len(pdf):
+                continue
+            counts = pdf["n_docs"].to_numpy(dtype=np.int64)
+            ids, tfs, dls, _ = codec.decode_blocks_concat(
+                pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, quantize_norms
             )
-            for th, dbuf, tbuf, lbuf, pbuf in rows:
-                d, t, l = codec.decode_block(
-                    bytes(dbuf), bytes(tbuf), bytes(lbuf), quantize_norms
-                )
-                hashes.append(np.full(len(d), th, dtype=np.int64))
-                ids.append(d)
-                tfs.append(t)
-                dls.append(l)
-                if positional:
-                    pbuf = bytes(pbuf)
-                    cuts = codec.positions_byte_slices(pbuf, t)
-                    pos.extend(
-                        pbuf[cuts[i] : cuts[i + 1]] for i in range(len(d))
-                    )
-            if ids:
-                out = {
-                    "term_hash": np.concatenate(hashes),
-                    "doc_id": np.concatenate(ids),
-                    "tf": np.concatenate(tfs).astype(np.int32),
-                    "doc_len": np.concatenate(dls).astype(np.int32),
-                }
-                if positional:
-                    out["positions"] = pos
-                yield pd.DataFrame(out)
+            out = {
+                "term_hash": np.repeat(
+                    pdf["term_hash"].to_numpy(dtype=np.int64), counts
+                ),
+                "doc_id": ids,
+                "tf": tfs.astype(np.int32),
+                "doc_len": dls.astype(np.int32),
+            }
+            if positional:
+                joined = b"".join(pdf["positions"])
+                cut = codec.positions_byte_slices(joined, tfs).tolist()
+                out["positions"] = [
+                    joined[lo:hi] for lo, hi in zip(cut[:-1], cut[1:])
+                ]
+            yield pd.DataFrame(out)
 
-    cols = ["term_hash", "doc_ids", "tfs", "doc_lens"] + (
+    cols = ["term_hash", "n_docs", "doc_ids", "tfs", "doc_lens"] + (
         ["positions"] if positional else []
     )
     return postings.select(*cols).mapInPandas(fn, schema=out_schema)
@@ -1019,9 +1003,9 @@ def commit_index_tables(
             # on the pmod contract.
             # repartition on the dir key first: without it every upstream
             # task fans out into every url_bucket dir (tasks x buckets tiny
-            # files — measured as part of the 1.34x build regression,
-            # BENCH/ab_r3r4.jsonl); with it each bucket dir gets exactly one
-            # url_hash-sorted file
+            # files — measured as part of the 1.34x build regression, the
+            # round-3/4 A/B in BENCH/BASELINE.md); with it each bucket dir
+            # gets exactly one url_hash-sorted file
             write_table(
                 url_index_projection(committed).repartition(
                     N_URL_BUCKETS, F.col("url_bucket")

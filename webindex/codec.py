@@ -161,30 +161,62 @@ def encode_blocks(
     b: float,
     block_size: int = BLOCK_SIZE,
     quantize_norms: bool = False,
-) -> list[dict]:
-    """Split one term's postings (sorted by doc_id asc) into encoded blocks.
+    group_ends: np.ndarray | None = None,
+) -> dict:
+    """Split MANY posting lists into encoded blocks in one vectorized call.
+
+    The arrays hold consecutive groups — one group is one posting list (in
+    the build, one (term_hash, bucket) pair), each sorted by doc_id asc.
+    group_ends[g] is group g's exclusive end row; group 0 starts at row 0,
+    group g at group_ends[g-1]. Rows past group_ends[-1] are ignored (the
+    build's streaming encoder passes arrays that still hold its carried,
+    incomplete trailing group). group_ends=None encodes all rows as one
+    group.
 
     quantize_norms=True stores doc_lens as 1-byte Lucene-style norm codes
     (see dl_quantize) instead of varints; max_impact is then computed from
     the QUANTIZED lengths so block bounds stay sound for the scores the
     query path will actually compute.
 
-    Fully vectorized over the WHOLE posting list: delta gaps (reset to the
-    absolute id at each block start), one varint pass, then per-block byte
-    slices from the cumulative sizes. ~10x faster than per-block encoding
-    (numpy setup cost amortizes over the list, not over 128-element chunks).
+    One pass per stream over ALL groups: delta gaps (reset to the absolute
+    id at every block start, so at every group start too), one varint pass,
+    then per-block byte slices from the cumulative sizes. Every value is
+    elementwise in its own group, so each group's blocks are byte- and
+    metadata-identical to encoding that group alone — the per-call numpy
+    setup (~0.36 ms) is paid once per batch instead of once per group.
 
-    Returns a list of dicts matching schema.POSTINGS fields.
-    """
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    doc_lens = np.asarray(doc_lens, dtype=np.int64)
-    n = doc_ids.size
+    Returns columns, one entry per block in (group, block) order: group
+    (index into group_ends), block_id (index within the group), n_docs,
+    min_doc, max_doc, max_impact (numpy arrays) and doc_ids, tfs, doc_lens
+    (lists of bytes, the schema.POSTINGS streams)."""
+    ends_g = np.asarray(
+        [len(doc_ids)] if group_ends is None else group_ends, dtype=np.int64
+    )
+    n = int(ends_g[-1]) if ends_g.size else 0
+    # slice BEFORE the max reduce: reduceat's last segment runs to the end
+    # of the array, so trailing rows past the last group would leak into
+    # the last block's max_impact (an unsound WAND bound)
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)[:n]
+    tfs = np.asarray(tfs, dtype=np.int64)[:n]
+    doc_lens = np.asarray(doc_lens, dtype=np.int64)[:n]
     if n == 0:
-        return []
-    n_blocks = -(-n // block_size)
-    starts = np.arange(n_blocks, dtype=np.int64) * block_size
-    ends = np.minimum(starts + block_size, n)
+        empty = np.empty(0, dtype=np.int64)
+        return {
+            "group": empty, "block_id": empty, "n_docs": empty,
+            "min_doc": empty, "max_doc": empty,
+            "max_impact": np.empty(0, dtype=np.float64),
+            "doc_ids": [], "tfs": [], "doc_lens": [],
+        }
+
+    starts_g = np.zeros(ends_g.size, dtype=np.int64)
+    starts_g[1:] = ends_g[:-1]
+    per_group = -(-(ends_g - starts_g) // block_size)  # blocks per group
+    group = np.repeat(np.arange(ends_g.size, dtype=np.int64), per_group)
+    local = np.arange(group.size, dtype=np.int64) - np.repeat(
+        np.cumsum(per_group) - per_group, per_group
+    )
+    starts = starts_g[group] + local * block_size
+    ends = np.minimum(starts + block_size, ends_g[group])
 
     # delta gaps with an absolute value at every block start
     gaps = np.empty(n, dtype=np.int64)
@@ -198,32 +230,30 @@ def encode_blocks(
         codes = dl_quantize(doc_lens)
         doc_lens = DL_DECODE_LUT[codes]  # scoring sees the quantized value
         dls_buf = codes
-        dls_cut = np.arange(n + 1, dtype=np.int64)  # fixed 1 byte/posting
+        dls_nb = np.ones(n, dtype=np.int64)  # fixed 1 byte/posting
     else:
         dls_buf, dls_nb = varint_encode_with_sizes(doc_lens)
-        dls_cut = np.zeros(n + 1, dtype=np.int64); np.cumsum(dls_nb, out=dls_cut[1:])
-    ids_cut = np.zeros(n + 1, dtype=np.int64); np.cumsum(ids_nb, out=ids_cut[1:])
-    tfs_cut = np.zeros(n + 1, dtype=np.int64); np.cumsum(tfs_nb, out=tfs_cut[1:])
+
+    def _slices(buf: np.ndarray, nbytes: np.ndarray) -> list[bytes]:
+        cut = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(nbytes, out=cut[1:])
+        raw = buf.tobytes()
+        return [
+            raw[lo:hi] for lo, hi in zip(cut[starts].tolist(), cut[ends].tolist())
+        ]
 
     impact = bm25_impact(tfs, doc_lens, avgdl, k1, b)
-    max_imp = np.maximum.reduceat(impact, starts)
-
-    ids_bytes = ids_buf.tobytes()
-    tfs_bytes = tfs_buf.tobytes()
-    dls_bytes = dls_buf.tobytes()
-    return [
-        {
-            "block_id": int(i),
-            "doc_ids": ids_bytes[ids_cut[starts[i]] : ids_cut[ends[i]]],
-            "tfs": tfs_bytes[tfs_cut[starts[i]] : tfs_cut[ends[i]]],
-            "doc_lens": dls_bytes[dls_cut[starts[i]] : dls_cut[ends[i]]],
-            "n_docs": int(ends[i] - starts[i]),
-            "min_doc": int(doc_ids[starts[i]]),
-            "max_doc": int(doc_ids[ends[i] - 1]),
-            "max_impact": float(max_imp[i]),
-        }
-        for i in range(n_blocks)
-    ]
+    return {
+        "group": group,
+        "block_id": local,
+        "n_docs": ends - starts,
+        "min_doc": doc_ids[starts],
+        "max_doc": doc_ids[ends - 1],
+        "max_impact": np.maximum.reduceat(impact, starts),
+        "doc_ids": _slices(ids_buf, ids_nb),
+        "tfs": _slices(tfs_buf, tfs_nb),
+        "doc_lens": _slices(dls_buf, dls_nb),
+    }
 
 
 # --------------------------------------------------------------------------

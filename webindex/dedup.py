@@ -142,9 +142,9 @@ def lsh_candidate_pairs(
     are equivalent — but a pre-projection `sig[0].isNotNull()` filter gets
     pushed through the signature projection by Catalyst, re-deriving
     tokenize+shingle+one full md5-min pass PER ROW just for the predicate
-    (measured 1.66x on the whole LSH job, BENCH/ab_r3r4.jsonl), while a
-    generator-output predicate cannot be pushed below the explode and
-    costs one string compare."""
+    (measured 1.66x on the whole LSH job, the round-3/4 A/B in
+    BENCH/BASELINE.md), while a generator-output predicate cannot be pushed
+    below the explode and costs one string compare."""
     rows_per_band = F.floor(F.size("sig") / n_bands).cast("int")
     bands = sigs.select(
         "doc_id",

@@ -663,15 +663,9 @@ def topk_bool(
         from webindex.aggs import matching_doc_ids
 
         excluded = matching_doc_ids(index, must_not)
-        base = index.doc_stats.select("doc_id")
-        if index.dead_ids is not None and len(index.dead_ids):
-            # doc_stats keeps tombstoned rows until compaction; drop them so
-            # the match_all side honors live_index()'s delete visibility
-            base = base.filter(
-                ~F.col("doc_id").isin([int(d) for d in index.dead_ids])
-            )
+        live = _drop_dead(index, index.doc_stats.select("doc_id"))
         return (
-            base.join(excluded, "doc_id", "left_anti")
+            live.join(excluded, "doc_id", "left_anti")
             .withColumn("score", F.lit(0.0))
             .orderBy(F.asc("doc_id"))
             .limit(k)
@@ -1707,20 +1701,32 @@ def highlight_topk(index: Index, query: str, k: int = 10) -> DataFrame:
     return spark.createDataFrame(out, _HL)
 
 
+def _drop_dead(index: Index, frame: DataFrame) -> DataFrame:
+    """`frame` without live_index()'s pending deletes (Index.dead_ids):
+    doc_stats keeps a tombstoned doc's row until compaction, so the
+    doc_stats-backed answers (the lookups, bool's match_all side) filter it
+    here — ES realtime GET reports a deleted doc as not found at once."""
+    if index.dead_ids is None or not len(index.dead_ids):
+        return frame
+    return frame.filter(~F.col("doc_id").isin([int(d) for d in index.dead_ids]))
+
+
 def lookup_doc(index: Index, doc_id: int) -> DataFrame:
     """Point lookup (reference: tpm_connector.py:166-196 getPIDRecord).
-    doc_stats is doc_id-sorted parquet -> min/max pruning hits one file."""
-    return index.doc_stats.filter(F.col("doc_id") == doc_id)
+    doc_stats is doc_id-sorted parquet -> min/max pruning hits one file.
+    A pending delete (live_index()) is not found."""
+    return _drop_dead(index, index.doc_stats.filter(F.col("doc_id") == doc_id))
 
 
 def lookup_docs(index: Index, doc_ids: list[int]) -> DataFrame:
     """ES `ids` query / mget: the multi-id point lookup. One IN filter on
     the doc_id-sorted doc_stats table — min/max row-group pruning reads
     only the files covering the requested ids; absent ids simply yield no
-    row (ES mget marks them found:false). Results doc_id asc."""
-    return index.doc_stats.filter(F.col("doc_id").isin(list(doc_ids))).orderBy(
-        "doc_id"
-    )
+    row (ES mget marks them found:false), and so do pending deletes
+    (live_index()). Results doc_id asc."""
+    return _drop_dead(
+        index, index.doc_stats.filter(F.col("doc_id").isin(list(doc_ids)))
+    ).orderBy("doc_id")
 
 
 def lookup_url(index: Index, url: str) -> DataFrame:
@@ -1735,19 +1741,20 @@ def lookup_url(index: Index, url: str) -> DataFrame:
     two-level pruning lookup_doc gets from the doc_id-sorted layout.
     Collisions are disambiguated by the final url equality. In-memory /
     pre-round-4 indexes fall back to the doc_stats scan (same 3-column
-    output either way — the API shape is vintage-invariant)."""
+    output either way — the API shape is vintage-invariant). A pending
+    delete (live_index()) is not found."""
     if index.url_stats is None:
-        return index.doc_stats.filter(F.col("url") == url).select(
-            "doc_id", "url", "doc_len"
-        )
-    from webindex.build import N_URL_BUCKETS
+        hits = index.doc_stats.filter(F.col("url") == url)
+    else:
+        from webindex.build import N_URL_BUCKETS
 
-    lit = F.lit(url)
-    return index.url_stats.filter(
-        (F.col("url_bucket") == F.pmod(F.xxhash64(lit), F.lit(N_URL_BUCKETS)))
-        & (F.col("url_hash") == F.xxhash64(lit))
-        & (F.col("url") == lit)
-    ).select("doc_id", "url", "doc_len")
+        lit = F.lit(url)
+        hits = index.url_stats.filter(
+            (F.col("url_bucket") == F.pmod(F.xxhash64(lit), F.lit(N_URL_BUCKETS)))
+            & (F.col("url_hash") == F.xxhash64(lit))
+            & (F.col("url") == lit)
+        )
+    return _drop_dead(index, hits.select("doc_id", "url", "doc_len"))
 
 
 def topk_with_urls(index: Index, query: str, k: int = 10, exact: bool = False) -> DataFrame:
@@ -3147,7 +3154,8 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
     """ES _termvectors: per-doc term statistics read back FROM THE INDEX —
     (doc_id, term, tf, positions array<int>) for the requested doc ids,
     ordered (doc_id, term). Positions come back only from a positional
-    index (NULL column otherwise).
+    index (NULL column otherwise). A pending delete (live_index()) has no
+    term vectors, as ES _termvectors reports it not found.
 
     Scale shape: doc ids are request-scale, so the postings scan prunes by
     the ids' bucket partitions AND each block's [min_doc, max_doc] span
@@ -3176,7 +3184,7 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
     if buckets is not None:
         blocks = blocks.filter(F.col("bucket").isin(buckets))
 
-    conf, avgdl = index.conf, index.avgdl
+    conf, avgdl, dead = index.conf, index.avgdl, index.dead_ids
 
     def fn(batches):
         for pdf in batches:
@@ -3186,11 +3194,11 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
                 id_arr, pdf["max_doc"].to_numpy(dtype=np.int64), side="right"
             )
             pdf = pdf[hi > lo]
-            # a lookup, like lookup_doc: pending deletes are not applied
+            # a pending delete (live_index()) has no term vector
             if has_pos:
-                blk, bids, tfs, _, _, pos = _decode_positional(pdf, conf, None)
+                blk, bids, tfs, _, _, pos = _decode_positional(pdf, conf, dead)
             else:
-                blk, bids, tfs, _, _ = _decode_rows(pdf, conf, avgdl, None)
+                blk, bids, tfs, _, _ = _decode_rows(pdf, conf, avgdl, dead)
             sel = np.nonzero(np.isin(bids, id_arr))[0]
             starts = (np.cumsum(tfs) - tfs)[sel]
             yield pd.DataFrame(

@@ -690,9 +690,10 @@ class IncrementalIndexer:
         as-built — exactly Lucene's behavior until the merge reclaims the
         docs. The set is driver-scale by construction (deletes since the
         last compact only). Pending CRAWL batches stay invisible until
-        compact(), the engine's refresh point for additions. Only the
-        lookups — term_vectors and the lookup_* calls — still return a
-        pending-deleted doc until compact().
+        compact(), the engine's refresh point for additions. The lookups
+        (lookup_doc, lookup_docs, lookup_url, term_vectors) report a
+        pending-deleted doc as not found at once, like ES realtime GET and
+        _termvectors.
 
         Requires a committed index (compact() at least once); raises
         otherwise."""
@@ -881,11 +882,12 @@ class IncrementalIndexer:
         # outranked by a same-delta recrawl is void (latest event wins); a
         # delete of a never-seen doc is a no-op that still advances state
         old_doc_stats = spark.read.parquet(f"{out}/doc_stats")
-        dead_ids = None
+        dead_ids, n_dead = None, 0
         tombs = self._new_tombstones(min_batch=int(state["max_batch"]))
         if tombs is not None:
             dead_ids = self._dead_docs(tombs, doc_urls).persist()
-            if dead_ids.count() == 0:
+            n_dead = dead_ids.count()
+            if n_dead == 0:
                 dead_ids.unpersist()
                 dead_ids = None
 
@@ -918,10 +920,9 @@ class IncrementalIndexer:
         # ---- old state for the removed docs: re-crawled (superseded) and
         # tombstoned committed docs leave the corpus counts together
         removal = delta_docs.select("doc_id")
-        n_removal = n_delta
+        n_removal = n_delta + n_dead
         if dead_ids is not None:
             removal = removal.unionByName(dead_ids)
-            n_removal += dead_ids.count()
         removed = old_doc_stats.join(removal, "doc_id", "semi")
         r = removed.agg(
             F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("doc_len"), F.lit(0)).alias("s")
