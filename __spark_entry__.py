@@ -1846,6 +1846,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         live-docs: df/avgdl shrink only at the merge), which the oracle
         mirrors by scoring over the full corpus and excluding the victim.
         No top-k boundary -> no cross-engine tie-break sensitivity."""
+        import atexit
+        import shutil
         import tempfile
 
         from webindex.query import topk_wand
@@ -1862,6 +1864,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.array_contains(tokens_col("text"), "merge")
         ).agg(F.min("orig_id")).collect()[0][0]
         wd = tempfile.mkdtemp(prefix="webindex_delvis_")
+        # the returned DataFrame still reads wd: remove it at interpreter exit
+        atexit.register(shutil.rmtree, wd, ignore_errors=True)
         ing = IncrementalIndexer(spark, wd, text_col="text")
         ing.upsert(docs.select("url", "text", "warc_ts", "html"))
         ing.delete([str(victim)], compact_now=False)

@@ -360,7 +360,7 @@ def _batch(prune):
 
 def _scorers(stored):
     from webindex import query as Q
-    from webindex.aggs import match_scores
+    from webindex.aggs import match_scores, matching_doc_ids
 
     return {
         "wand": lambda i, k: Q.topk_wand(i, "the data", k).collect(),
@@ -383,6 +383,12 @@ def _scorers(stored):
         "match_scores": lambda i, k: sorted(
             match_scores(i, "the data").collect(),
             key=lambda r: (-r["score"], r["doc_id"]))[:k],
+        "count": lambda i, k: sorted(
+            matching_doc_ids(i, "the data", 2).collect())[:k],
+        "terms_set": lambda i, k: Q.topk_terms_set(
+            i, ["the", "data"],
+            stored.select("doc_id", (F.abs(F.col("doc_id")) % 2 + 1).alias("need")),
+            "need", k).collect(),
     }
 
 
@@ -399,14 +405,55 @@ def test_live_index_every_scorer_hides_dead(pending_delete, scorer):
     idx0, live, dead, stored = pending_delete
     run = _scorers(stored)[scorer]
 
-    def hits(index, k):
-        return [(int(r["doc_id"]), round(float(r["score"]), 9)) for r in run(index, k)]
+    def hits(index, k):  # filter-context kernels (count) have no score
+        return [(int(r["doc_id"]), round(float(r.asDict().get("score", 0.0)), 9))
+                for r in run(index, k)]
 
     before = hits(idx0, 1000)
     assert dead in [d for d, _ in before], "fixture: the dead doc must match"
     want = [h for h in before if h[0] != dead]
     assert hits(live, 1000) == want
     assert hits(live, 3) == want[:3]
+
+
+def test_live_index_suggest_phrase_collate_hides_dead(spark, tmp_path):
+    """suggest_phrase's collate flag (matched = some doc holds every term
+    of the phrase) reads live docs only: when the one doc holding all of a
+    phrase's terms is pending-deleted, the phrase is still suggested with
+    its pre-delete score but is no longer matched on live_index(), while a
+    phrase a live doc still holds stays matched."""
+    from webindex.query import suggest_phrase
+
+    pdf = make_pages_pdf(0, 8)
+    pdf["text"] = [
+        "alpha beta gamma delta",  # the only doc with alpha + beta + gamma
+        "alpha beta delta",
+        "beta gamma delta",
+        "alpha gamma delta",
+        "alpha beta gammb delta",
+        "delta epsilon",
+        "delta epsilon zeta",
+        "epsilon zeta",
+    ]
+    ing = IncrementalIndexer(spark, str(tmp_path / "wd"), text_col="text")
+    idx0 = ing.upsert(spark.createDataFrame(pdf))
+    ing.delete([pdf["url"].iloc[0]], compact_now=False)
+    live = ing.live_index()
+    assert live.dead_ids is not None and len(live.dead_ids) == 1
+
+    def flags(index, text):
+        return {(r["suggestion"], r["score"]): r["matched"]
+                for r in suggest_phrase(index, text).collect()}
+
+    assert list(flags(idx0, "alpha beta gamma").values()) == [True]
+    assert list(flags(live, "alpha beta gamma").values()) == [False]
+    # one call, two candidate phrases ("gamme" -> gamma | gammb): only the
+    # phrase whose sole holder is dead flips
+    before = flags(idx0, "alpha beta gamme")
+    after = flags(live, "alpha beta gamme")
+    assert {s for s, _ in before} == {"alpha beta gamma", "alpha beta gammb"}
+    assert all(before.values())
+    assert after == {key: key[0] != "alpha beta gamma" for key in before}
 
 
 @pytest.fixture(scope="module")

@@ -1,11 +1,13 @@
 """Oracle guard for the shared per-bucket kernels: every registry entry
 whose query runs through the BM25 kernel (match family, bool, search_after,
-function_score, dis_max, synonyms, fuzzy, batch, multi-field, prefix) or
-reads positions through the shared positional decode (phrase, sloppy
-phrase, phrase batch / prefix, rescore, simple_query_string, highlight,
-span_near, intervals, term vectors) must agree with its DuckDB oracle SQL,
-compared the way scripts/check_entry.py compares them (row count, column
-names, order-insensitive value hash)."""
+function_score, dis_max, synonyms, fuzzy, batch, multi-field, prefix,
+suggest_phrase's collate), through the filter-context count kernel
+(aggs.ids_with_counts and ids_for_hashes over it: wildcard, regexp,
+terms_set, count, match_bool_prefix) or reads positions through the shared
+positional decode (phrase, sloppy phrase, phrase batch / prefix, rescore,
+simple_query_string, highlight, span_near, intervals, term vectors) must
+agree with its DuckDB oracle SQL, compared the way scripts/check_entry.py
+compares them (row count, column names, order-insensitive value hash)."""
 
 import importlib.util
 from pathlib import Path
@@ -49,6 +51,12 @@ ENTRIES = [
     "intervals_filtered",
     "intervals_any_of",
     "term_vectors_read",
+    "suggest_phrase",
+    "wildcard_match",
+    "regexp_match",
+    "terms_set_match",
+    "count_matches",
+    "bm25_match_bool_prefix",
 ]
 
 

@@ -25,9 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from webindex import codec
 from webindex.build import Index
-from webindex.query import _live, _query_terms
-
-_IDS = "doc_id long"
+from webindex.query import _candidate_plan, _live, _query_terms
 
 
 def matching_doc_ids(index: Index, query: str, msm: int = 1) -> DataFrame:
@@ -41,62 +39,38 @@ def matching_doc_ids(index: Index, query: str, msm: int = 1) -> DataFrame:
     return ids_for_hashes(index, [h for (_, _, h) in stats.values()], msm)
 
 
-def _live_ids(pdf: pd.DataFrame, dead: np.ndarray | None) -> np.ndarray:
-    """One bucket's decoded doc_ids, one per (term, doc) posting, minus
-    live_index()'s pending deletes (query._live)."""
-    ids, _ = codec.decode_ids_concat(
-        pdf["doc_ids"], pdf["n_docs"].to_numpy(dtype=np.int64)
-    )
-    alive = _live(ids, dead)
-    return ids if alive is None else ids[alive]
-
-
 def ids_for_hashes(index: Index, hashes: list[int], msm: int = 1) -> DataFrame:
     """(doc_id) for docs containing >= msm distinct terms from a term-hash
-    set (the shared kernel for match filters and dictionary-expanded
-    queries like prefix)."""
-    spark = index.postings.sparkSession
-    if not hashes or msm > len(hashes):
-        return spark.createDataFrame([], _IDS)
-    dead = index.dead_ids
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # batched ids-only decode (codec.decode_ids_concat): one vectorized
-        # pass over the bucket's concatenated doc_id streams, and the unused
-        # tfs/doc_lens streams are never decoded at all
-        ids = _live_ids(pdf, dead)
-        if msm > 1:
-            # one row per (term, doc): multiplicity == distinct matching terms
-            u, c = np.unique(ids, return_counts=True)
-            u = u[c >= msm]
-        else:
-            u = np.unique(ids)
-        return pd.DataFrame({"doc_id": u})
-
-    blocks = index.postings.filter(F.col("term_hash").isin(hashes))
-    return blocks.groupBy("bucket").applyInPandas(fn, schema=_IDS)
+    set (the filter-context kernel of match filters and dictionary-expanded
+    queries like prefix): ids_with_counts thresholded. msm above the hash
+    count can match nothing: the empty frame, no job."""
+    return (
+        ids_with_counts(index, hashes if msm <= len(hashes) else [])
+        .filter(F.col("n_matched") >= msm)
+        .select("doc_id")
+    )
 
 
 def ids_with_counts(index: Index, hashes: list[int]) -> DataFrame:
     """(doc_id, n_matched) — how many DISTINCT terms of a term-hash set
     each matching doc contains (>= 1 by construction). The count kernel
-    for per-doc minimum_should_match (ES terms_set): same pruned IN scan
-    and bucket-local decode as ids_for_hashes — a doc's postings for every
-    query term share its doc-range bucket, so the bucket-local unique
-    count is the exact global count — with the multiplicity kept instead
-    of thresholded. Integer-only work; no scoring floats."""
-    spark = index.postings.sparkSession
-    schema = "doc_id long, n_matched int"
-    if not hashes:
-        return spark.createDataFrame([], schema)
-    dead = index.dead_ids
+    for per-doc minimum_should_match (ES terms_set) and, thresholded, for
+    every match filter (ids_for_hashes): query._candidate_plan's pruned IN
+    scan, then a bucket-local ids-only decode (codec.decode_ids_concat —
+    the tfs/doc_lens streams are never decoded) minus the pending deletes.
+    A doc's postings for every query term share its doc-range bucket and
+    there is one row per (term, doc), so the bucket-local multiplicity is
+    the exact global count. Integer-only work; no scoring floats."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        u, c = np.unique(_live_ids(pdf, dead), return_counts=True)
+    def fn(pdf: pd.DataFrame, dead: np.ndarray | None) -> pd.DataFrame:
+        ids, _ = codec.decode_ids_concat(
+            pdf["doc_ids"], pdf["n_docs"].to_numpy(dtype=np.int64)
+        )
+        alive = _live(ids, dead)
+        u, c = np.unique(ids if alive is None else ids[alive], return_counts=True)
         return pd.DataFrame({"doc_id": u, "n_matched": c.astype(np.int32)})
 
-    blocks = index.postings.filter(F.col("term_hash").isin(hashes))
-    return blocks.groupBy("bucket").applyInPandas(fn, schema=schema)
+    return _candidate_plan(index, hashes, fn, "doc_id long, n_matched int")
 
 
 def significant_terms(

@@ -138,8 +138,9 @@ class Index:
     id_space: str | None = None
     bucket_bits: int | None = None
     # live-docs filter (round 5): doc_ids tombstoned since the last compact,
-    # dropped at decode by every query kernel (the BM25 scorer, the
-    # filter-context kernels and the positional decode) BEFORE any local
+    # dropped at decode by every query kernel (query._candidate_plan hands
+    # them to the BM25 scorer, the filter-context count kernel and the
+    # positional kernels; the θ seeds and highlight) BEFORE any local
     # top-k cut — the ES refresh-interval delete semantics (results exclude
     # dead docs; n_docs/avgdl/df stay as-built until the merge, exactly
     # Lucene's live-docs bitmap); the lookups (lookup_doc / lookup_docs /

@@ -64,23 +64,6 @@ def normalize_url(col: Column | str) -> Column:
     return c
 
 
-# F6 — prefix stripping (reference: chemotion.py:318 strips
-# 'https://doi.org/'; nmrxiv.py:134-142 strips 'NMRXIV:' + first-letter
-# type dispatch)
-
-
-def strip_prefix(col: Column | str, prefix: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, "^" + prefix, "")
-
-
-def type_discriminator(col: Column | str) -> Column:
-    """First-character dispatch (nmrxiv.py:134-153: D/S/P -> dataset/sample/
-    project)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.upper(F.substring(c, 1, 1))
-
-
 # F8 — JSON parse/serialize (reference: pid_record_entry.py:69-78 attempts
 # json.loads on string values; :115 serializes dict values on export)
 
@@ -102,9 +85,3 @@ def flatten_map_keys(col: Column | str, parent: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform_keys(c, lambda k, _: F.concat(F.lit(parent + "."), k))
 
-
-# F11 — numeric cast with fallback (reference: chemotion.py:527 float(...))
-
-
-def to_double_or_null(col: Column | str) -> Column:
-    return (F.col(col) if isinstance(col, str) else col).try_cast("double")

@@ -20,7 +20,11 @@ BM25-ranked hits, top-1 read) to arbitrary k over our native index:
 
 Every BM25 top-k family runs that one kernel (_bucket_fn, planned by
 _scored); a family only builds its _Spec — slot weights, combine, θ,
-per-doc count bounds, cursor.
+per-doc count bounds, cursor. The candidate-block scan and bucket grouping
+are themselves ONE plan, _candidate_plan, shared by every per-bucket
+kernel: the BM25 kernel (and suggest_phrase's collate through it), the
+phrase matcher, intervals and aggs.ids_with_counts; it alone hands each
+kernel live_index()'s pending deletes.
 
 Buckets partition doc space (build.bucket_expr), so each doc's postings for
 ALL query terms land in the same bucket group — the per-bucket sum is the
@@ -107,6 +111,53 @@ def _local_topk(doc_ids: np.ndarray, scores: np.ndarray, k: int | None):
     (k=None keeps all, in that order)."""
     sel = np.lexsort((doc_ids, -scores))[:k]
     return doc_ids[sel], scores[sel]
+
+
+def _hits_frame(hits: list[tuple], batch: bool) -> pd.DataFrame:
+    """One bucket's hits [(query_id, doc_ids, scores), ...] as a kernel's
+    output rows: (doc_id, score), or (query_id, doc_id, score) when
+    `batch` — the empty frame of those columns when there are none."""
+    frame = {
+        "doc_id": np.concatenate([d for _, d, _ in hits] or [np.empty(0, np.int64)]),
+        "score": np.concatenate([s for _, _, s in hits] or [np.empty(0)]),
+    }
+    if batch:
+        frame = {"query_id": [q for q, d, _ in hits for _ in d], **frame}
+    return pd.DataFrame(frame)
+
+
+def _candidate_plan(
+    index: Index,
+    hashes,
+    kernel,
+    schema,
+    extra: F.Column | None = None,
+    theta_df: DataFrame | None = None,
+) -> DataFrame:
+    """THE candidate-block plan of every per-bucket kernel: the posting
+    blocks of `hashes` (filter term_hash IN (...) [& extra] — row-group
+    pruning on the hash-clustered postings) [-> broadcast left join of a
+    bucket-count-sized (bucket, _theta_b) frame] ->
+    groupBy(bucket).applyInPandas, calling kernel(blocks, dead) once per
+    bucket with live_index()'s pending deletes (Index.dead_ids) — the only
+    way a kernel learns them. Buckets partition doc space, so a group holds
+    every candidate block of its docs. No hash: the empty `schema` frame,
+    no job."""
+    hashes = sorted(set(hashes))
+    if not hashes:
+        return index.postings.sparkSession.createDataFrame([], schema)
+    cond = F.col("term_hash").isin(hashes)
+    if extra is not None:
+        cond = cond & extra
+    blocks = index.postings.filter(cond)
+    if theta_df is not None:
+        blocks = blocks.join(F.broadcast(theta_df), "bucket", "left")
+    dead = index.dead_ids
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return kernel(pdf, dead)
+
+    return blocks.groupBy("bucket").applyInPandas(fn, schema=schema)
 
 
 def _decode_rows(blocks: pd.DataFrame, conf, avgdl: float, dead: np.ndarray | None):
@@ -285,13 +336,12 @@ def _bucket_fn(
     conf,
     avgdl: float,
     k: int | None,
-    dead: np.ndarray | None = None,
     _probe: dict | None = None,
 ):
-    """applyInPandas fn — THE per-bucket BM25 kernel: one bucket's posting
-    blocks -> local top-k. `specs` is one _Spec (output doc_id, score) or
-    {query_id: _Spec} (topk_batch: output query_id, doc_id, score; a block
-    decodes once however many queries need it). Buckets partition doc
+    """THE per-bucket BM25 kernel fn(blocks, dead) of _candidate_plan: one
+    bucket's posting blocks -> local top-k. `specs` is one _Spec (output
+    doc_id, score) or {query_id: _Spec} (topk_batch: output query_id,
+    doc_id, score; a block decodes once however many queries need it). Buckets partition doc
     space, so a doc's postings for every query term land in this group:
     the per-doc combine is its full score and the local cut is safe.
 
@@ -302,7 +352,8 @@ def _bucket_fn(
       2. One metadata pass per spec (_interval_prune) when θ > 0 or a count
          bound has lo > 0: interval UBs and slot coverage pick the blocks
          to decode and the intervals whose docs survive.
-      3. One decode of every kept block (_decode_rows, dead docs dropped);
+      3. One decode of every kept block (_decode_rows, the `dead` docs
+         dropped);
          contribution = slot weight × impact.
       4. Rows in pruned intervals drop (partial scores, provably below θ).
       5. Per-doc combine in (doc_id, slot) order — np.add.reduceat then
@@ -318,12 +369,9 @@ def _bucket_fn(
     items = list(specs.items()) if batch else [(None, specs)]
     weights = [np.asarray([w for w, _ in s.slots], dtype=np.float64) for _, s in items]
     k1, b = conf.k1, conf.b
-    cols = ["query_id", "doc_id", "score"] if batch else ["doc_id", "score"]
-    empty = pd.DataFrame({c: [] for c in cols}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
+    empty = _hits_frame([], batch)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame, dead: np.ndarray | None = None) -> pd.DataFrame:
         if _probe is not None:
             _probe["blocks_total"] = _probe.get("blocks_total", 0) + len(pdf)
         theta_b = 0.0
@@ -419,15 +467,7 @@ def _bucket_fn(
                 ok &= (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
             # -- 7. local top-k
             out.append((qid, *_local_topk(doc_ids[ok], scores[ok], k)))
-        if not out:
-            return empty
-        frame = {
-            "doc_id": np.concatenate([o[1] for o in out]),
-            "score": np.concatenate([o[2] for o in out]),
-        }
-        if batch:
-            frame = {"query_id": [q for q, ds, _ in out for _d in ds], **frame}
-        return pd.DataFrame(frame)
+        return _hits_frame(out, batch)
 
     return fn
 
@@ -435,26 +475,18 @@ def _bucket_fn(
 def _scored(
     index: Index, specs, k: int | None, theta_df: DataFrame | None = None
 ) -> DataFrame:
-    """The scoring plan of every BM25 top-k family: candidate blocks
-    (filter term_hash IN (...) — row-group pruning on the hash-clustered
-    postings) -> groupBy(bucket).applyInPandas(_bucket_fn) -> global
-    orderBy(score desc, doc_id asc).limit(k). k=None skips both cuts;
-    a {query_id: spec} batch returns the per-bucket locals for topk_batch's
-    per-query window. theta_df (bucket, _theta_b) is function_score's
-    per-bucket θ frame — bucket-count-sized, so broadcast, no shuffle of
-    the blocks. No term present: the empty result, no job."""
+    """The scoring plan of every BM25 top-k family: _candidate_plan with
+    the _bucket_fn kernel -> global orderBy(score desc, doc_id asc).limit(k).
+    k=None skips both cuts; a {query_id: spec} batch returns the per-bucket
+    locals for topk_batch's per-query window. theta_df (bucket, _theta_b)
+    is function_score's per-bucket θ frame. No term present: the empty
+    result, no job."""
     batch = isinstance(specs, dict)
-    hashes = sorted(
-        {h for s in (specs.values() if batch else [specs]) for _, hs in s.slots for h in hs}
-    )
-    if not hashes:
-        return index.postings.sparkSession.createDataFrame([], _QHIT if batch else _HIT)
-    blocks = index.postings.filter(F.col("term_hash").isin(hashes))
-    if theta_df is not None:
-        blocks = blocks.join(F.broadcast(theta_df), "bucket", "left")
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _bucket_fn(specs, index.conf, index.avgdl, k, index.dead_ids),
-        schema=_QHIT if batch else _HIT,
+    slots = [sl for s in (specs.values() if batch else [specs]) for sl in s.slots]
+    hits = _candidate_plan(
+        index, (h for _, hs in slots for h in hs),
+        _bucket_fn(specs, index.conf, index.avgdl, k), _QHIT if batch else _HIT,
+        theta_df=theta_df,
     )
     if batch or k is None:
         return hits
@@ -1209,38 +1241,24 @@ def _phrase_plan(
     batch: bool = False,
     extra: F.Column | None = None,
 ) -> DataFrame:
-    """The plan of every phrase family: candidate positional blocks
-    (filter term_hash IN (...) [& extra predicate]) ->
-    groupBy(bucket).applyInPandas(_phrase_match_bucket) -> each bucket's
-    local top-k (k=None: every match). Rows (doc_id, score), or
-    (query_id, doc_id, score) when `batch`; the caller makes the global
-    cut (TakeOrdered, a per-query window, or none)."""
-    conf, avgdl, dead = index.conf, index.avgdl, index.dead_ids
-    cols = ["query_id", "doc_id", "score"] if batch else ["doc_id", "score"]
-    empty = pd.DataFrame({c: [] for c in cols}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
+    """The plan of every phrase family: _candidate_plan over the phrases'
+    positional blocks [& an extra predicate] with the
+    _phrase_match_bucket kernel -> each bucket's local top-k (k=None:
+    every match). Rows (doc_id, score), or (query_id, doc_id, score) when
+    `batch`; the caller makes the global cut (TakeOrdered, a per-query
+    window, or none). No entry: the empty frame, no job."""
+    conf, avgdl = index.conf, index.avgdl
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame, dead: np.ndarray | None) -> pd.DataFrame:
         res = _phrase_match_bucket(pdf, entries, conf, avgdl, k, dead)
-        hit = [(qid, res[qid]) for qid, *_ in entries if res.get(qid) is not None]
-        if not hit:
-            return empty
-        frame = {
-            "doc_id": np.concatenate([r[0] for _, r in hit]),
-            "score": np.concatenate([r[1] for _, r in hit]),
-        }
-        if batch:
-            frame = {"query_id": [q for q, r in hit for _d in r[0]], **frame}
-        return pd.DataFrame(frame)
+        return _hits_frame(
+            [(qid, *res[qid]) for qid, *_ in entries if res.get(qid) is not None],
+            batch,
+        )
 
-    cond = F.col("term_hash").isin(sorted({h for _, hs, _, _ in entries for h in hs}))
-    if extra is not None:
-        cond = cond & extra
-    return (
-        index.postings.filter(cond)
-        .groupBy("bucket")
-        .applyInPandas(fn, schema=_QHIT if batch else _HIT)
+    return _candidate_plan(
+        index, (h for _, hs, _, _ in entries for h in hs), fn,
+        _QHIT if batch else _HIT, extra=extra,
     )
 
 
@@ -1267,8 +1285,6 @@ def topk_phrase(index: Index, phrase: str, k: int = 10, slop: int = 0) -> DataFr
     descending-chunk prune (_phrase_match_bucket) run before any block is
     decoded."""
     entries = _phrase_entries(index, {"q": phrase}, slop)
-    if not entries:
-        return index.postings.sparkSession.createDataFrame([], _HIT)
     hits = _phrase_plan(index, entries, k)
     return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1287,11 +1303,6 @@ def topk_phrase_batch(
     phrase; this pays it once. Results are byte-identical to per-query
     topk_phrase (same bucket partitioning, same per-chunk determinism)."""
     entries = _phrase_entries(index, queries, slop)
-    if not entries:
-        rank = T.StructField("rank", T.IntegerType(), False)
-        return index.postings.sparkSession.createDataFrame(
-            [], T.StructType(_QHIT.fields + [rank])
-        )
     local = _phrase_plan(index, entries, k, batch=True)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -2402,8 +2413,6 @@ def phrase_scores(index: Index, phrase: str, slop: int = 0) -> DataFrame:
     globally exhaustive. Shared kernel for compositions that sum or re-rank
     phrase relevance (simple_query_string, topk_rescore)."""
     entries = _phrase_entries(index, {"q": phrase}, slop)
-    if not entries:
-        return index.postings.sparkSession.createDataFrame([], _HIT)
     return _phrase_plan(index, entries, None)
 
 
@@ -2829,8 +2838,7 @@ def intervals_docs(index: Index, spec: dict) -> DataFrame:
     merge), each bucket's blocks decoded once (_decode_positional, dead
     docs dropped) no matter how many rules reference a term, every
     combinator a vectorized searchsorted pass over packed
-    (doc_rank<<32 | position) keys."""
-    spark = index.postings.sparkSession
+    (doc_rank<<32 | position) keys (_candidate_plan)."""
     _require_positions(index, "intervals queries")
 
     def leaf_terms(node: dict) -> list[str]:
@@ -2868,15 +2876,13 @@ def intervals_docs(index: Index, spec: dict) -> DataFrame:
     # ES semantics for an out-of-vocabulary leaf: it yields no intervals —
     # an any_of sibling can still match and a not_* filter with no spans
     # keeps everything. Only when NO leaf exists in the corpus can no rule
-    # produce a span, so only then is the whole query empty.
-    if not all_terms or all(t not in stats for t in all_terms):
-        return spark.createDataFrame([], out_schema)
+    # produce a span: then hash_of is empty and the plan is empty, no job.
     hash_of = {t: stats[t][2] for t in set(all_terms) if t in stats}
-    conf, dead = index.conf, index.dead_ids
+    conf = index.conf
     shift = np.int64(1) << np.int64(32)
     mask = shift - 1
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame, dead: np.ndarray | None) -> pd.DataFrame:
         empty = pd.DataFrame({"doc_id": [], "n_intervals": []}).astype(
             {"doc_id": np.int64, "n_intervals": np.int64}
         )
@@ -3098,14 +3104,7 @@ def intervals_docs(index: Index, spec: dict) -> DataFrame:
             {"doc_id": all_docs[hit], "n_intervals": counts[hit].astype(np.int64)}
         )
 
-    blocks = index.postings.filter(
-        F.col("term_hash").isin(sorted(set(hash_of.values())))
-    )
-    return (
-        blocks.groupBy("bucket")
-        .applyInPandas(fn, schema=out_schema)
-        .orderBy("doc_id")
-    )
+    return _candidate_plan(index, hash_of.values(), fn, out_schema).orderBy("doc_id")
 
 
 def percolate(
@@ -3172,17 +3171,16 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
     has_pos = "positions" in index.postings.columns
     id_arr = np.array(ids, dtype=np.int64)
 
-    buckets = sorted(
-        {int(r["bucket"]) for r in index.doc_stats.filter(
-            F.col("doc_id").isin(ids)
-        ).select(index.bucket_of(F.col("doc_id")).alias("bucket")).collect()}
-    ) if index.id_space is not None else None
-
     blocks = index.postings.filter(
         (F.col("min_doc") <= int(id_arr.max())) & (F.col("max_doc") >= int(id_arr.min()))
     )
-    if buckets is not None:
-        blocks = blocks.filter(F.col("bucket").isin(buckets))
+    if index.id_space is not None:
+        # the bucket is a pure function of doc_id: Catalyst folds each
+        # bucket_of(literal) to a literal (as lookup_url's url_bucket), so
+        # the ids' buckets prune the scan with no job to look them up
+        blocks = blocks.filter(
+            F.col("bucket").isin([index.bucket_of(F.lit(i)) for i in ids])
+        )
 
     conf, avgdl, dead = index.conf, index.avgdl, index.dead_ids
 
@@ -3260,8 +3258,8 @@ def suggest_phrase(
     suggest_terms' pruned dictionary pass (length band / q-gram sidecar);
     everything after is request-scale coordinator arithmetic over ≤
     per_term^n_tokens rows — the same split ES has (shard-level candidate
-    generation, coordinator rescoring); collate adds ≤ `size`
-    intersection probes through the pruned match path."""
+    generation, coordinator rescoring); collate adds ONE scoring job
+    that runs the ≤ `size` intersection probes as one _scored batch."""
     import itertools
     import math
 
@@ -3306,72 +3304,32 @@ def suggest_phrase(
         return spark.createDataFrame(
             [(p, s, False) for p, s in ranked], out_schema
         )
-    # Batched collate (round 6, VERDICT r5 #3): ONE shared probe job for
-    # all surviving phrases instead of <= size sequential topk_match
-    # kernels (each a dictionary collect + scoring job). Every candidate
-    # token is a dictionary term by construction (known tokens and
-    # suggest_terms corrections both come from term_stats), so matched
-    # reduces to: does ANY doc contain ALL of the phrase's distinct
-    # terms — decided bucket-locally (a doc's postings for every term
-    # share its doc-range bucket) over one IN(union-of-hashes) pruned
-    # scan, then OR-merged across buckets. Identical to the old
-    # per-phrase operator=and probe.
+    # Collate is the operator=and probe, batched: every candidate token is
+    # a dictionary term by construction (known tokens and suggest_terms
+    # corrections both come from term_stats), so matched reduces to "does
+    # ANY live doc hold ALL of the phrase's distinct terms". One _scored
+    # batch call answers it for every phrase: a zero-weight slot per term,
+    # a count bound of all slots, k=1 per bucket.
     phrase_terms = [sorted(set(tokenize(p))) for p, _ in ranked]
-    all_terms = sorted({t for ts in phrase_terms for t in ts})
     hash_of = {
         r["term"]: int(r["term_hash"])
-        for r in index.term_stats.filter(F.col("term").isin(all_terms)).collect()
+        for r in index.term_stats.filter(
+            F.col("term").isin(sorted({t for ts in phrase_terms for t in ts}))
+        ).collect()
     }
-    matched = [False] * len(ranked)
-    probe_sets: dict[int, frozenset[int]] = {}
-    for i, ts in enumerate(phrase_terms):
-        if all(t in hash_of for t in ts):
-            probe_sets[i] = frozenset(hash_of[t] for t in ts)
-    if probe_sets:
-        sets = {i: np.asarray(sorted(hs), dtype=np.int64) for i, hs in probe_sets.items()}
-        all_hashes = sorted({h for hs in probe_sets.values() for h in hs})
-        dead = index.dead_ids
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids, _ = codec.decode_ids_concat(
-                pdf["doc_ids"], pdf["n_docs"].to_numpy(dtype=np.int64)
-            )
-            ths = np.repeat(
-                pdf["term_hash"].to_numpy(dtype=np.int64),
-                pdf["n_docs"].to_numpy(dtype=np.int64),
-            )
-            alive = _live(ids, dead)
-            if alive is not None:
-                # live-docs contract of the old per-phrase operator=and
-                # probe: a tombstoned doc must not satisfy collate
-                ids, ths = ids[alive], ths[alive]
-                if not len(ids):
-                    return pd.DataFrame({"pidx": pd.Series([], dtype="int32")})
-            order = np.argsort(ids, kind="stable")
-            ids_s, ths_s = ids[order], ths[order]
-            starts = np.concatenate(
-                ([0], np.nonzero(ids_s[1:] != ids_s[:-1])[0] + 1)
-            )
-            pidx_out = []
-            for i, hs in sets.items():
-                # rows are one per (term, doc): per-doc count of hashes in
-                # hs == len(hs) means the doc holds every phrase term
-                inset = np.isin(ths_s, hs).astype(np.int64)
-                if np.add.reduceat(inset, starts).max(initial=0) >= len(hs):
-                    pidx_out.append(i)
-            return pd.DataFrame({"pidx": pd.Series(pidx_out, dtype="int32")})
-
-        blocks = index.postings.filter(F.col("term_hash").isin(all_hashes))
-        got = (
-            blocks.groupBy("bucket")
-            .applyInPandas(fn, schema="pidx int")
-            .select("pidx")
-            .distinct()
-            .collect()
+    specs = {
+        str(i): _Spec(
+            tuple((0.0, (hash_of[t],)) for t in ts),
+            counts=((tuple(range(len(ts))), len(ts), None),),
         )
-        for r in got:
-            matched[int(r["pidx"])] = True
-    rows = [(p, s, matched[i]) for i, (p, s) in enumerate(ranked)]
+        for i, ts in enumerate(phrase_terms)
+        if all(t in hash_of for t in ts)
+    }
+    matched = {
+        r["query_id"]
+        for r in _scored(index, specs, 1).select("query_id").distinct().collect()
+    }
+    rows = [(p, s, str(i) in matched) for i, (p, s) in enumerate(ranked)]
     return spark.createDataFrame(rows, out_schema)
 
 

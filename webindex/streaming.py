@@ -679,16 +679,19 @@ class IncrementalIndexer:
 
         Tombstone events newer than the compaction frontier become
         Index.dead_ids, the analogue of Lucene's in-heap deleted-docs
-        bitmap: the shared per-bucket BM25 kernel (every top-k scorer —
-        match family, bool, search_after, batch, synonyms, fuzzy,
-        function_score, match_scores and what builds on it), the
-        filter-context kernels (matching_doc_ids / count, prefix,
-        wildcard, regexp) and the shared positional decode (phrase and
-        its batch / prefix / scores / rescore forms, span_near, intervals,
-        highlight) drop dead docs right after decode, before any local
-        top-k cut, and θ seeding ignores them, while n_docs/avgdl/df stay
-        as-built — exactly Lucene's behavior until the merge reclaims the
-        docs. The set is driver-scale by construction (deletes since the
+        bitmap. The one candidate-block plan (query._candidate_plan) hands
+        them to every per-bucket kernel: the shared BM25 kernel (every
+        top-k scorer — match family, bool, search_after, batch, synonyms,
+        fuzzy, function_score, match_scores and what builds on it, and
+        suggest_phrase's collate, which is a _scored call, not a kernel of
+        its own), the filter-context count kernel (aggs.ids_with_counts:
+        matching_doc_ids / count, terms_set, prefix, wildcard, regexp) and
+        the phrase and intervals kernels over the shared positional decode
+        (phrase and its batch / prefix / scores / rescore forms,
+        span_near, intervals). They, highlight and the θ seeds drop dead
+        docs right after decode, before any local top-k cut, while
+        n_docs/avgdl/df stay as-built — exactly Lucene's behavior until
+        the merge reclaims the docs. The set is driver-scale by construction (deletes since the
         last compact only). Pending CRAWL batches stay invisible until
         compact(), the engine's refresh point for additions. The lookups
         (lookup_doc, lookup_docs, lookup_url, term_vectors) report a
