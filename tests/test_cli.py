@@ -106,3 +106,22 @@ def test_cli_span_and_intervals(tmp_path):
         if merges + phr:
             want_counts.append(merges + phr)
     assert want_counts and sorted(iv_rows.values()) == sorted(want_counts)
+
+
+def test_cli_delete_on_never_ingested_workdir(tmp_path):
+    """delete / delete-by-query on a workdir nothing was ever ingested into
+    are recorded no-ops: the CLI says so and exits 0."""
+    wd = str(tmp_path / "fresh")
+    out = subprocess.run(
+        [sys.executable, "-m", "webindex.cli", "delete", wd,
+         "https://site1.example/page/1"],
+        timeout=300, capture_output=True, text=True, cwd=REPO,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "no index committed yet" in out.stdout
+    out = subprocess.run(
+        [sys.executable, "-m", "webindex.cli", "delete-by-query", wd, "data"],
+        timeout=300, capture_output=True, text=True, cwd=REPO,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "no index committed yet" in out.stdout

@@ -416,6 +416,23 @@ def test_live_index_every_scorer_hides_dead(pending_delete, scorer):
     assert hits(live, 3) == want[:3]
 
 
+def test_explain_doc_hides_pending_delete(pending_delete):
+    """explain_doc answers a pending delete like lookup_doc does — not
+    found: the dead doc's explanation is empty on live_index() (non-empty
+    before the delete), and a live doc's explanation is unchanged."""
+    from webindex.query import explain_doc
+
+    idx0, live, dead, _ = pending_delete
+
+    def rows(index, doc_id):
+        return [tuple(r) for r in explain_doc(index, "the data", doc_id).collect()]
+
+    assert rows(idx0, dead)
+    assert rows(live, dead) == []
+    other = next(d for d, _ in _topk_list(idx0, "the data", 2) if d != dead)
+    assert rows(live, other) == rows(idx0, other) != []
+
+
 def test_live_index_suggest_phrase_collate_hides_dead(spark, tmp_path):
     """suggest_phrase's collate flag (matched = some doc holds every term
     of the phrase) reads live docs only: when the one doc holding all of a

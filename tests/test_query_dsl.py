@@ -134,6 +134,32 @@ def test_terms_set_threshold_bites(idx, oracle, stored, spark):
     assert _rows(topk_terms_set(idx, ["data", "merge"], st, "req", 10)) == []
 
 
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs run by fn(), counted with the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_terms_set_probes_dictionary_once(idx, stored, spark):
+    """topk_terms_set scores from its own one dictionary probe: 6 Spark jobs
+    per collect on this index (a second probe inside the scorer made it 7)."""
+    st = stored.select("doc_id", (1 + F.pmod(F.col("doc_id"), F.lit(2))).alias("req"))
+
+    def run():
+        return topk_terms_set(idx, ["data", "merge", "w150"], st, "req", 10).collect()
+
+    run()  # warm: caches and broadcasts settle before counting
+    assert _spark_jobs(spark, run) == 6
+
+
 def test_pinned_order_and_exclusion(idx, oracle):
     """Pins come first in the GIVEN order with distinct descending scores;
     organic follows, pinned excluded, total k."""

@@ -59,18 +59,23 @@ def test_resume_matches_clean_run(spark, tmp_path):
     assert total_docs == 150
 
     # bytes metric is REAL: per-bucket lineage bytes == the on-disk size of
-    # that bucket's committed run files (north rule: lineage carries metrics,
-    # not estimates)
+    # that bucket's committed run files plus its doc_urls files (north rule:
+    # lineage carries metrics, not estimates; the same contract as the
+    # streaming ingest's lineage)
     import os
 
-    for r in lin:
-        bdir = f"{workdir}/runs/build_bucket={r['partition_id']}"
-        disk = sum(
+    def disk_bytes(bdir):
+        return sum(
             os.path.getsize(os.path.join(bdir, f))
             for f in os.listdir(bdir)
             if not f.startswith(("_", "."))
         )
-        assert r["bytes"] == disk and disk > 0
+
+    for r in lin:
+        part = f"build_bucket={r['partition_id']}"
+        runs_disk = disk_bytes(f"{workdir}/runs/{part}")
+        urls_disk = disk_bytes(f"{workdir}/doc_urls/{part}")
+        assert r["bytes"] == runs_disk + urls_disk and runs_disk > 0 < urls_disk
 
 
 def test_second_resume_is_noop_fast(spark, tmp_path):
@@ -83,6 +88,32 @@ def test_second_resume_is_noop_fast(spark, tmp_path):
     lin2 = read_lineage(spark, workdir).count()
     assert lin1 == lin2  # no new lineage rows — everything skipped
     assert runs.count() > 0
+
+
+def test_corrupt_lineage_raises_instead_of_retokenizing(spark, tmp_path):
+    """Only a MISSING lineage table means nothing is done. A corrupt one must
+    fail the resume loudly: read as empty, it would re-tokenize every
+    committed chunk and append their lineage rows a second time."""
+    import os
+
+    pages = spark.createDataFrame(make_pages_pdf(0, 40))
+    workdir = str(tmp_path / "w")
+    build_runs_checkpointed(
+        spark, pages, workdir, n_buckets=2, chunk_buckets=1, max_chunks=1
+    )
+    lineage = f"{workdir}/lineage"
+    parts = sorted(f for f in os.listdir(lineage) if f.startswith("part-"))
+    assert parts
+    for part in parts:
+        with open(os.path.join(lineage, part), "wb") as fh:
+            fh.write(b"not a parquet file")
+    runs_before = sorted(os.listdir(f"{workdir}/runs"))
+
+    with pytest.raises(Exception):
+        build_runs_checkpointed(spark, pages, workdir, n_buckets=2, chunk_buckets=1)
+    # nothing re-tokenized, no lineage row appended
+    assert sorted(os.listdir(f"{workdir}/runs")) == runs_before
+    assert sorted(f for f in os.listdir(lineage) if f.startswith("part-")) == parts
 
 
 def test_resumable_build_under_pathological_hash(spark, tmp_path):

@@ -81,7 +81,7 @@ def test_batch_seed_refinement_on_pathological_bounds(spark):
     stay byte-identical either way (θ is a sound lower bound)."""
     import pandas as pd
 
-    from webindex.query import _batch_theta_seeds, _query_terms
+    from webindex.query import _batch_seed_round, _batch_theta_seeds, _query_terms
 
     n = 1280  # 10 full blocks of 128 docs in one bucket (dense ids)
     rows = []
@@ -101,8 +101,10 @@ def test_batch_seed_refinement_on_pathological_bounds(spark):
     assert df_ == n
 
     k = 10
-    seed1 = _batch_theta_seeds(idx, {h: idf}, k, refine=False)
-    seed2 = _batch_theta_seeds(idx, {h: idf}, k, refine=True)
+    # the first round alone (the prefix _batch_theta_seeds starts from)
+    m = max(4, 2 * -(-k // idx.conf.block_size))
+    seed1 = {h: _batch_seed_round(idx, {h: idf}, k, m)[h][0]}
+    seed2 = _batch_theta_seeds(idx, {h: idf}, k)
     assert seed2[h] > seed1[h] * 2  # refinement strictly (and materially) tightens
     # the refined seed is EXACT here (all 10 blocks fit the 8x prefix):
     # k-th best single-term contribution == k-th score of the 1-term query

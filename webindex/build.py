@@ -5,10 +5,14 @@ Replaces the reference's "bulk-index into Elasticsearch" stage
 action per record, Lucene does tf/df/postings) with a native pipeline:
 
     pages (Iceberg/Parquet scan, Catalyst pushdown on warc_ts/lang)
+      -> optional latest crawl per url (latest_crawl — the rule streaming
+         ingest applies to every batch)
       -> assign deterministic doc_ids                      [§ doc ids]
       -> mapInPandas extract+tokenize+local tf aggregation [SPIMI map side]
          (Arrow-batched; per-row work is ONE regex pass; html dropped here
-          so the shuffle never carries raw bytes)
+          so the shuffle never carries raw bytes). _runs_iter is the one
+          SPIMI map of the batch, resumable and streaming builds; positions
+          are its one branch (Counter vs factorize + position encode)
       -> runs(term, doc_id, tf, doc_len)   [persisted = checkpoint]
       -> groupBy(term, bucket) applyInPandas -> compressed posting blocks
       -> doc_stats / term_stats / corpus_stats
@@ -197,108 +201,69 @@ def assign_doc_ids(pages: DataFrame, method: str = "hash") -> DataFrame:
 DOC_MARKER = "\x00"
 
 
-def _runs_iter(batches, text_col: str):
+def _runs_iter(batches, text_col: str, with_positions: bool):
     """mapInPandas fn: per-batch local tf aggregation (the SPIMI 'map').
 
     One output row per (doc, distinct term) plus one DOC_MARKER row per doc
     (including empty docs: dl=0); doc_len carried on every row so the posting
-    encoder never joins doc_stats."""
-    from collections import Counter
-
-    for pdf in batches:
-        terms_out: list[str] = []
-        docs_out: list[int] = []
-        tfs_out: list[int] = []
-        dls_out: list[int] = []
-        doc_ids = pdf["doc_id"].to_numpy()
-        if text_col == "html":
-            texts = pdf["html"].tolist()
-            tokfn = extract_and_tokenize
-        else:
-            texts = pdf[text_col].tolist()
-            tokfn = tokenize
-        for doc_id, raw in zip(doc_ids, texts):
-            toks = tokfn(raw)
-            dl = len(toks)
-            terms_out.append(DOC_MARKER)
-            docs_out.append(doc_id)
-            tfs_out.append(0)
-            dls_out.append(dl)
-            if dl == 0:
-                continue
-            cnt = Counter(toks)
-            terms_out.extend(cnt.keys())
-            docs_out.extend([doc_id] * len(cnt))
-            tfs_out.extend(cnt.values())
-            dls_out.extend([dl] * len(cnt))
-        yield pd.DataFrame(
-            {
-                "term": pd.array(terms_out, dtype="string"),
-                "doc_id": np.asarray(docs_out, dtype=np.int64),
-                "tf": np.asarray(tfs_out, dtype=np.int32),
-                "doc_len": np.asarray(dls_out, dtype=np.int32),
-            }
-        )
-
-
-def _runs_pos_iter(batches, text_col: str):
-    """Positional SPIMI map: like _runs_iter, plus one encoded token-position
-    stream per (doc, term) — grouped via pandas factorize + one stable
-    argsort per doc (no per-token Python loop), one varint pass per doc.
+    encoder never joins doc_stats. The per-doc term grouping is the one
+    branch: a Counter without positions; with them, pandas factorize + one
+    stable argsort per doc (no per-token Python loop) and one varint pass
+    per doc for the encoded token-position stream of each (doc, term).
     Positions are 0-based token indexes (the analyzer's token positions,
     matching Lucene's position increments for a standard-analyzer stream)."""
-    from webindex import codec
+    from collections import Counter
 
+    tokfn = extract_and_tokenize if text_col == "html" else tokenize
     for pdf in batches:
         terms_out: list[str] = []
         docs_out: list[int] = []
         tfs_out: list[int] = []
         dls_out: list[int] = []
         pos_out: list[bytes] = []
-        doc_ids = pdf["doc_id"].to_numpy()
-        if text_col == "html":
-            texts = pdf["html"].tolist()
-            tokfn = extract_and_tokenize
-        else:
-            texts = pdf[text_col].tolist()
-            tokfn = tokenize
-        for doc_id, raw in zip(doc_ids, texts):
+        for doc_id, raw in zip(pdf["doc_id"].to_numpy(), pdf[text_col].tolist()):
             toks = tokfn(raw)
             dl = len(toks)
             terms_out.append(DOC_MARKER)
             docs_out.append(doc_id)
             tfs_out.append(0)
             dls_out.append(dl)
-            pos_out.append(b"")
+            if with_positions:
+                pos_out.append(b"")
             if dl == 0:
                 continue
-            codes, uniq = pd.factorize(np.asarray(toks, dtype=object))
-            order = np.argsort(codes, kind="stable")  # groups by term,
-            positions = order.astype(np.int64)  # ascending positions in-group
-            sc = codes[order]
-            gstarts = np.concatenate(
-                ([0], np.nonzero(sc[1:] != sc[:-1])[0] + 1)
-            )
-            gends = np.concatenate((gstarts[1:], [dl]))
-            buf, nbytes = codec.positions_encode_grouped(positions, gstarts)
-            cuts = np.zeros(dl + 1, dtype=np.int64)
-            np.cumsum(nbytes, out=cuts[1:])
-            terms_out.extend(uniq[sc[gstarts]])
-            docs_out.extend([doc_id] * len(gstarts))
-            tfs_out.extend((gends - gstarts).tolist())
-            dls_out.extend([dl] * len(gstarts))
-            pos_out.extend(
-                buf[cuts[s] : cuts[e]] for s, e in zip(gstarts, gends)
-            )
-        yield pd.DataFrame(
-            {
-                "term": pd.array(terms_out, dtype="string"),
-                "doc_id": np.asarray(docs_out, dtype=np.int64),
-                "tf": np.asarray(tfs_out, dtype=np.int32),
-                "doc_len": np.asarray(dls_out, dtype=np.int32),
-                "positions": pos_out,
-            }
-        )
+            if with_positions:
+                codes, uniq = pd.factorize(np.asarray(toks, dtype=object))
+                order = np.argsort(codes, kind="stable")  # groups by term,
+                positions = order.astype(np.int64)  # ascending in-group
+                sc = codes[order]
+                gstarts = np.concatenate(
+                    ([0], np.nonzero(sc[1:] != sc[:-1])[0] + 1)
+                )
+                gends = np.concatenate((gstarts[1:], [dl]))
+                buf, nbytes = codec.positions_encode_grouped(positions, gstarts)
+                cuts = np.zeros(dl + 1, dtype=np.int64)
+                np.cumsum(nbytes, out=cuts[1:])
+                pos_out.extend(
+                    buf[cuts[s] : cuts[e]] for s, e in zip(gstarts, gends)
+                )
+                terms, tfs = uniq[sc[gstarts]], (gends - gstarts).tolist()
+            else:
+                cnt = Counter(toks)
+                terms, tfs = cnt.keys(), cnt.values()
+            terms_out.extend(terms)
+            docs_out.extend([doc_id] * len(tfs))
+            tfs_out.extend(tfs)
+            dls_out.extend([dl] * len(tfs))
+        out = {
+            "term": pd.array(terms_out, dtype="string"),
+            "doc_id": np.asarray(docs_out, dtype=np.int64),
+            "tf": np.asarray(tfs_out, dtype=np.int32),
+            "doc_len": np.asarray(dls_out, dtype=np.int32),
+        }
+        if with_positions:
+            out["positions"] = pos_out
+        yield pd.DataFrame(out)
 
 
 def build_runs(
@@ -311,13 +276,12 @@ def build_runs(
 
     Only (doc_id, text_col) are read => Catalyst prunes every other column
     out of the parquet scan."""
-    pruned = pages.select("doc_id", text_col)
-    if with_positions:
-        return pruned.mapInPandas(
-            lambda it: _runs_pos_iter(it, text_col),
-            schema=schema.with_positions(schema.RUNS),
-        )
-    return pruned.mapInPandas(lambda it: _runs_iter(it, text_col), schema=schema.RUNS)
+    return pages.select("doc_id", text_col).mapInPandas(
+        lambda it: _runs_iter(it, text_col, with_positions),
+        schema=(
+            schema.with_positions(schema.RUNS) if with_positions else schema.RUNS
+        ),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1067,6 +1031,30 @@ def commit_index_tables(
     )
 
 
+def latest_crawl(pages: DataFrame, text_col: str) -> DataFrame:
+    """One row per url, latest crawl wins: newest warc_ts first (when the
+    column exists), then a content-hash tiebreak on `html` if present, else
+    on `text_col`. Without the tiebreak the winner among equal-warc_ts
+    re-crawls is partition-layout-dependent, breaking the byte-identical-
+    at-any-parallelism invariant. The one rule of build_index(dedup_urls=
+    True) and of every streaming ingest batch."""
+    from pyspark.sql import Window
+
+    order = []
+    if "warc_ts" in pages.columns:
+        order.append(F.desc_nulls_last("warc_ts"))
+    for content in ("html", text_col):
+        if content in pages.columns:
+            order.append(F.asc(F.xxhash64(content)))
+            break
+    w = Window.partitionBy("url").orderBy(*order)
+    return (
+        pages.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -1077,7 +1065,6 @@ def build_index(
     range_width: int | None = None,
     id_space: str | None = None,
     out_dir: str | None = None,
-    runs_persist: bool = True,
     dedup_urls: bool = False,
     hash_primary_fn=None,
     positions: bool = False,
@@ -1102,25 +1089,7 @@ def build_index(
     if id_space is None:
         id_space = "hash" if doc_id_method == "hash" else "dense"
     if dedup_urls:
-        from pyspark.sql import Window
-
-        # tiebreak on the CONTENT column actually present (not just html):
-        # without it the winner among equal-warc_ts re-crawls is partition-
-        # layout-dependent, breaking the byte-identical-at-any-parallelism
-        # invariant for (url, text)-shaped inputs
-        order = [F.asc("url")]
-        if "warc_ts" in pages.columns:
-            order.insert(0, F.desc_nulls_last("warc_ts"))
-        for content in ("html", text_col):
-            if content in pages.columns:
-                order.append(F.asc(F.xxhash64(content)))
-                break
-        w = Window.partitionBy("url").orderBy(*order)
-        pages = (
-            pages.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        pages = latest_crawl(pages, text_col)
     pages = assign_doc_ids(pages, doc_id_method)
     runs = build_runs(pages, text_col=text_col, with_positions=positions)
     if out_dir:
@@ -1131,7 +1100,7 @@ def build_index(
         # natural checkpoint artifact (same layout checkpoint.py uses).
         runs.write.mode("overwrite").parquet(f"{out_dir}/runs")
         runs = spark.read.parquet(f"{out_dir}/runs")
-    elif runs_persist:
+    else:
         runs = runs.persist()
 
     idx = commit_index_tables(
@@ -1139,7 +1108,7 @@ def build_index(
         range_width=range_width, id_space=id_space, out_dir=out_dir,
         hash_primary_fn=hash_primary_fn,
     )
-    if runs_persist and not out_dir:
+    if not out_dir:
         runs.unpersist()
     return idx
 
@@ -1172,10 +1141,9 @@ def _sidecar_or_none(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def load_index(
-    spark: SparkSession, out_dir: str, conf: BM25Config = DEFAULT, cache: bool = False
+    spark: SparkSession, out_dir: str, conf: BM25Config = DEFAULT
 ) -> Index:
-    """cache=True pins postings/term_stats in executor memory (serving mode:
-    repeated queries skip the parquet read — term_stats is the hot lookup).
+    """Re-open a committed index (tables read lazily).
 
     If the index has a conf sidecar (written by build_index since round 2),
     it OVERRIDES the conf argument: k1/b/block_size/quantize_norms are baked
@@ -1213,10 +1181,6 @@ def load_index(
             "rebuild it — querying it with this version would silently "
             "return no hits"
         )
-    if cache:
-        postings = postings.persist()
-        term_stats = term_stats.persist()
-        term_stats.count()
     return Index(
         postings=postings,
         term_stats=term_stats,

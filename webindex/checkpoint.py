@@ -10,15 +10,22 @@ sized for a 100 TB scan, is build_runs_checkpointed:
     pmod(xxhash64(doc_id), B)  — doc_id is data-derived (url hash), so the
     bucketing is valid across cluster sizes and input repartitionings; B is
     pinned in <workdir>/_build_meta on the first run;
-  * buckets are processed in CHUNKS; each chunk is one Spark job that
-    (1) dynamic-partition-overwrites its buckets under <workdir>/runs/ and
-        <workdir>/doc_urls/ (a re-run of a half-written chunk self-cleans),
-        then
-    (2) appends one lineage row per bucket with metrics
-        (docs, postings=run rows, bytes, elapsed_s, status='done');
+  * buckets are processed in CHUNKS; each chunk is tokenized and handed
+    to commit_runs_partitions — the one runs commit, shared with every
+    streaming ingest batch (streaming.py, partitioned by batch_id there):
+    (1) dynamic-partition-overwrite of its buckets under <workdir>/runs/
+        and <workdir>/doc_urls/ (a re-run of a half-written chunk
+        self-cleans), then
+    (2) one lineage row per bucket appended from the driver (no Spark
+        write), with metrics (docs, postings=run rows, bytes=committed runs
+        + doc_urls size, elapsed_s, status='done');
   * resume = skip buckets whose lineage says done. The lineage append
     happens only AFTER the runs write commits, so lineage can understate but
-    never overstate progress — the safe direction.
+    never overstate progress — the safe direction;
+  * lineage policy (read_lineage, the one reader of the resumable build and
+    of IncrementalIndexer): only a MISSING lineage table means nothing is
+    done. Any other read failure raises — a corrupt lineage taken as empty
+    would re-tokenize every chunk and append its rows a second time.
 
 The expensive stage at 100 TB is the tokenize scan of raw html; the
 (term,bucket) shuffle into posting blocks reads the checkpointed runs, never
@@ -37,11 +44,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from webindex import schema
 from webindex.bm25 import BM25Config, DEFAULT
 from webindex.build import (
+    DOC_MARKER,
     Index,
     assign_doc_ids,
     build_runs,
     commit_index_tables,
 )
+from webindex.fsutil import dir_bytes, path_exists
+from webindex.io import append_driver_rows, write_driver_table
 
 
 def bucket_col(doc_id_col, n_buckets: int) -> F.Column:
@@ -49,10 +59,88 @@ def bucket_col(doc_id_col, n_buckets: int) -> F.Column:
 
 
 def read_lineage(spark: SparkSession, workdir: str) -> DataFrame:
-    try:
-        return spark.read.parquet(f"{workdir}/lineage")
-    except Exception:
+    """The lineage table. Only a MISSING table reads as empty; any other
+    read failure propagates — an unreadable lineage taken as empty would
+    re-tokenize committed chunks and append their rows a second time (the
+    resumable build), or hand out a committed batch id again and overwrite
+    its runs partition (streaming)."""
+    if not path_exists(spark, f"{workdir}/lineage"):
         return spark.createDataFrame([], schema=schema.LINEAGE)
+    return spark.read.parquet(f"{workdir}/lineage")
+
+
+def done_partitions(spark: SparkSession, workdir: str) -> list[int]:
+    """Partition ids (build buckets / batch ids) whose lineage says done,
+    ascending (read_lineage's policy; a fresh workdir costs no Spark job)."""
+    if not path_exists(spark, f"{workdir}/lineage"):
+        return []
+    rows = (
+        read_lineage(spark, workdir)
+        .filter(F.col("status") == "done")
+        .select("partition_id")
+        .distinct()
+        .collect()
+    )
+    return sorted(int(r["partition_id"]) for r in rows)
+
+
+def commit_runs_partitions(
+    spark: SparkSession,
+    runs: DataFrame,
+    doc_urls: DataFrame,
+    workdir: str,
+    part_col: str,
+    parts: list[int],
+) -> None:
+    """Commit runs + doc_urls partitions, then their lineage rows — the one
+    runs commit of the resumable build (part_col build_bucket) and of every
+    streaming ingest (part_col batch_id). Both frames already carry
+    part_col; `parts` are the partition values they hold.
+
+    Both writes are dynamic partition overwrites, so a re-run of a half-
+    written commit self-cleans. Lineage rows are appended only after both
+    have committed (lineage may understate progress, never overstate it),
+    one per partition: docs = DOC_MARKER rows and postings = the other run
+    rows of the COMMITTED runs (one partition-pruned job), bytes = the
+    committed size of the partition's runs dir plus its doc_urls dir (FS
+    listing, no data read)."""
+
+    t0 = time.monotonic()
+    runs.write.mode("overwrite").partitionBy(part_col).parquet(f"{workdir}/runs")
+    doc_urls.write.mode("overwrite").partitionBy(part_col).parquet(
+        f"{workdir}/doc_urls"
+    )
+    elapsed = time.monotonic() - t0
+    stats = (
+        spark.read.parquet(f"{workdir}/runs")
+        .filter(F.col(part_col).isin(parts))
+        .groupBy(part_col)
+        .agg(
+            F.count(F.when(F.col("term") == DOC_MARKER, 1)).alias("docs"),
+            F.count(F.when(F.col("term") != DOC_MARKER, 1)).alias("postings"),
+        )
+        .collect()
+    )
+    by_part = {int(r[part_col]): r for r in stats}
+    rows = []
+    for p in parts:
+        r = by_part.get(p)
+        nbytes = dir_bytes(spark, f"{workdir}/runs/{part_col}={p}") + dir_bytes(
+            spark, f"{workdir}/doc_urls/{part_col}={p}"
+        )
+        rows.append(
+            (
+                int(p),
+                int(r["docs"]) if r else 0,
+                int(r["postings"]) if r else 0,
+                int(nbytes),
+                float(elapsed / len(parts)),
+                "done",
+            )
+        )
+    append_driver_rows(
+        spark, rows, schema.LINEAGE, f"{workdir}/lineage", fmt="parquet"
+    )
 
 
 def build_runs_checkpointed(
@@ -79,8 +167,6 @@ def build_runs_checkpointed(
     # would silently skip never-tokenized docs (they hash into 'done'
     # buckets) and duplicate already-done ones. The first run records it;
     # every resume must match.
-    from webindex.fsutil import path_exists
-
     meta_path = f"{workdir}/_build_meta"
     if path_exists(spark, meta_path):
         committed = int(
@@ -95,8 +181,6 @@ def build_runs_checkpointed(
     else:
         from pyspark.sql import types as T
 
-        from webindex.io import write_driver_table
-
         write_driver_table(
             spark,
             [(int(n_buckets),)],
@@ -107,14 +191,7 @@ def build_runs_checkpointed(
         "build_bucket", bucket_col(F.col("doc_id"), n_buckets)
     )
 
-    done = {
-        int(r["partition_id"])
-        for r in read_lineage(spark, workdir)
-        .filter(F.col("status") == "done")
-        .select("partition_id")
-        .collect()
-    }
-
+    done = set(done_partitions(spark, workdir))
     chunks_run = 0
     for lo in range(0, n_buckets, chunk_buckets):
         chunk = [b for b in range(lo, min(lo + chunk_buckets, n_buckets)) if b not in done]
@@ -123,54 +200,17 @@ def build_runs_checkpointed(
         if max_chunks is not None and chunks_run >= max_chunks:
             break
         chunks_run += 1
-        t0 = time.monotonic()
         chunk_pages = pages.filter(F.col("build_bucket").isin(chunk))
         runs = build_runs(chunk_pages, text_col=text_col).withColumn(
             "build_bucket", bucket_col(F.col("doc_id"), n_buckets)
         )
-        runs.write.mode("overwrite").partitionBy("build_bucket").parquet(
-            f"{workdir}/runs"
-        )
-        chunk_pages.select("doc_id", "url", "build_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("build_bucket").parquet(f"{workdir}/doc_urls")
-        elapsed = time.monotonic() - t0
-        # metrics per bucket from the committed files (docs, postings, bytes)
-        from webindex.build import DOC_MARKER
-
-        written = spark.read.parquet(f"{workdir}/runs").filter(
-            F.col("build_bucket").isin(chunk)
-        )
-        stats = (
-            written.groupBy("build_bucket")
-            .agg(
-                F.count(F.when(F.col("term") == DOC_MARKER, 1)).alias("docs"),
-                F.count(F.when(F.col("term") != DOC_MARKER, 1)).alias("postings"),
-            )
-            .collect()
-        )
-        by_bucket = {int(r["build_bucket"]): r for r in stats}
-        from webindex.fsutil import dir_bytes
-
-        rows = []
-        for b in chunk:
-            r = by_bucket.get(b)
-            # bytes = REAL committed size of this bucket's run files (FS
-            # listing of the partition dir — the metric the lineage table
-            # promises, not an estimate)
-            nbytes = dir_bytes(spark, f"{workdir}/runs/build_bucket={b}")
-            rows.append(
-                (
-                    b,
-                    int(r["docs"]) if r else 0,
-                    int(r["postings"]) if r else 0,
-                    nbytes,
-                    float(elapsed / len(chunk)),
-                    "done",
-                )
-            )
-        spark.createDataFrame(rows, schema=schema.LINEAGE).write.mode("append").parquet(
-            f"{workdir}/lineage"
+        commit_runs_partitions(
+            spark,
+            runs,
+            chunk_pages.select("doc_id", "url", "build_bucket"),
+            workdir,
+            "build_bucket",
+            chunk,
         )
 
     return spark.read.parquet(f"{workdir}/runs").drop("build_bucket")

@@ -383,7 +383,10 @@ def main(argv: list[str]) -> int:
         # deletes work on indexes ingested with --positions too
         indexer = IncrementalIndexer.open(spark, argv[2], text_col="html")
         idx = indexer.delete(argv[3:])
-        print(f"deleted {len(argv) - 3} url(s): {idx.n_docs} docs remain")
+        if idx is None:
+            print(f"no index committed yet at {argv[2]}: nothing to delete")
+        else:
+            print(f"deleted {len(argv) - 3} url(s): {idx.n_docs} docs remain")
     elif cmd == "delete-by-query":
         from webindex.streaming import IncrementalIndexer
 
@@ -394,7 +397,10 @@ def main(argv: list[str]) -> int:
             argv = argv[:i] + argv[i + 2 :]
         indexer = IncrementalIndexer.open(spark, argv[2], text_col="html")
         idx = indexer.delete_by_query(argv[3], msm=msm)
-        print(f"delete-by-query {argv[3]!r}: {idx.n_docs} docs remain")
+        if idx is None:
+            print(f"no index committed yet at {argv[2]}: nothing to delete")
+        else:
+            print(f"delete-by-query {argv[3]!r}: {idx.n_docs} docs remain")
     else:
         print(__doc__)
         return 2

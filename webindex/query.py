@@ -819,7 +819,6 @@ def _batch_theta_seeds(
     index: Index,
     seed_terms: dict[int, float],  # term_hash -> idf
     k: int,
-    refine: bool = True,
 ) -> dict[int, float]:
     """Per-term k-th best single-term contribution for MANY terms in a few
     shared jobs (metadata TakeOrdered-per-term + bounded decode) — the batch
@@ -827,8 +826,8 @@ def _batch_theta_seeds(
     true k-th best contribution (k-th largest of a bound-descending block
     prefix ≤ k-th largest overall), so per-query pruning stays exact.
 
-    refine=True adds ONE extra shared round for the terms whose first-round
-    seed is provably non-exact (more blocks exist AND kth < the prefix's
+    A second shared round re-seeds the terms whose first-round seed is
+    provably non-exact (more blocks exist AND kth < the prefix's
     weakest idf-scaled bound — pathological bound distributions, e.g. every
     block bounded by one outlier doc): those terms re-seed from an 8x prefix
     together, in the same two shared jobs. One bounded round — not a
@@ -839,8 +838,6 @@ def _batch_theta_seeds(
     m = max(4, 2 * -(-k // index.conf.block_size))
     round1 = _batch_seed_round(index, seed_terms, k, m)
     seeds = {th: v[0] for th, v in round1.items() if v[0] > float("-inf")}
-    if not refine:
-        return seeds
     weak = {
         th: seed_terms[th]
         for th, (kth_c, minb, exhausted) in round1.items()
@@ -1783,8 +1780,8 @@ def field_extrema(index: Index, stored: DataFrame, field: str) -> DataFrame:
     scan of `stored` (map-side-combined min/max, two doubles of agg state
     per bucket). At deployment scale compute it once per boost field and
     persist it beside doc_stats (it only changes when the field does);
-    topk_function_score accepts it via `extrema=` and otherwise computes it
-    per call — the same single scan the global-extremum bound already paid.
+    topk_function_score computes it per call — the same single scan the
+    global-extremum bound already paid.
 
     Requires the index's doc->bucket map (id_space + bucket_bits from the
     conf sidecar); raises on pre-round-5 indexes — callers fall back to the
@@ -1808,7 +1805,6 @@ def topk_function_score(
     factor: float = 1.0,
     k: int = 10,
     pruned: bool = True,
-    extrema: DataFrame | None = None,
 ) -> DataFrame:
     """ES `function_score` with `field_value_factor`: final score =
     BM25(query, doc) * modifier(factor * doc[field]). Supported modifiers:
@@ -1884,18 +1880,11 @@ def topk_function_score(
         # M_b = modifier(factor·extremum_b), so θ_b = θ_fs / M_b prunes
         # cold buckets hard. Needs the doc->bucket map, i.e. a known
         # id_space; pre-round-5 disk indexes fall back to the global bound.
-        ext = extrema
-        own_ext = ext is None
         per_bucket = index.id_space is not None
-        if per_bucket and own_ext:
-            ext = field_extrema(index, stored, field)
         if per_bucket:
             # global ends derived from the bucket frame: same one scan of
-            # `stored`, plus one agg over a bucket-count-sized frame. Only
-            # a frame we computed ourselves is persisted here — a caller-
-            # supplied sidecar manages its own caching.
-            if own_ext:
-                ext = ext.persist()
+            # `stored`, plus one agg over a bucket-count-sized frame
+            ext = field_extrema(index, stored, field).persist()
             row = ext.agg(F.max("mx").alias("mx"), F.min("mn").alias("mn")).collect()
         else:
             fcol = F.col(field).cast("double")
@@ -1940,14 +1929,14 @@ def topk_function_score(
                             .otherwise(F.lit(float("inf")))
                             .alias("_theta_b"),
                         )
-        if per_bucket and own_ext and theta_df is None:
+        if per_bucket and theta_df is None:
             ext.unpersist()
 
     base = _scored(index, _match_spec(stats, theta_bm25), None, theta_df)
     out = _ranked(base).select(
         "doc_id", F.round("score", 4).alias("score")
     )
-    if theta_df is not None and own_ext:
+    if theta_df is not None:
         # the k-row result is what every caller materializes; collecting it
         # here releases the extrema cache deterministically
         rows = out.collect()
@@ -2043,14 +2032,14 @@ def topk_terms_set(
     threshold field joins doc_id-keyed, then TakeOrderedAndProject. Docs
     whose threshold exceeds the given term count can never qualify —
     mirrored by construction since n_matched <= len(terms)."""
-    from webindex.aggs import ids_with_counts, match_scores
+    from webindex.aggs import ids_with_counts
 
     spark = index.postings.sparkSession
     toks = sorted(set(t for term in terms for t in tokenize(term)))
     if not toks:
         return spark.createDataFrame([], _HIT)
     stats = _query_terms(index, " ".join(toks))
-    scores = match_scores(index, " ".join(toks), msm=1)
+    scores = _scored(index, _match_spec(stats), None)
     counts = ids_with_counts(index, [h for (_, _, h) in stats.values()])
     req = stored.select(
         "doc_id", F.col(msm_field).cast("int").alias("_required")
@@ -2242,14 +2231,15 @@ def explain_doc(index: Index, query: str, doc_id: int) -> DataFrame:
         return spark.createDataFrame([], out_schema)
     idf_map = {h: idf for (_, idf, h) in stats.values()}
     term_of = {h: t for t, (_, _, h) in stats.items()}
-    conf, avgdl = index.conf, index.avgdl
+    conf, avgdl, dead = index.conf, index.avgdl, index.dead_ids
     did = int(doc_id)
 
     def fn(batches):
         for pdf in batches:
             # the scorers' decode: contrib is the same idf × impact product
-            # they sum, so sum(contrib) is bitwise the topk score
-            blk, ids, tfs, dls, impact = _decode_rows(pdf, conf, avgdl, None)
+            # they sum, so sum(contrib) is bitwise the topk score; a pending-
+            # deleted doc decodes to no rows, like lookup_doc's not-found
+            blk, ids, tfs, dls, impact = _decode_rows(pdf, conf, avgdl, dead)
             hit = ids == did
             th = pdf["term_hash"].to_numpy(dtype=np.int64)[blk[hit]]
             idf = np.asarray([idf_map[int(h)] for h in th], dtype=np.float64)

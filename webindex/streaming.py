@@ -7,7 +7,10 @@ and retried (lib.py:249-261, :343-371). The Spark-native generalization:
 
   pages stream (file source / Kafka at prod scale)
     -> withWatermark('warc_ts', delay)         late-data bound
-    -> foreachBatch: SPIMI map (build_runs) -> runs partitioned by batch_id
+    -> foreachBatch: latest crawl per url (build.latest_crawl) -> SPIMI map
+       (build_runs) -> runs + doc_urls partitioned by batch_id, committed
+       with their lineage row by checkpoint.commit_runs_partitions — the
+       resumable build's runs commit (upsert's synthetic batches too)
     -> periodic COMPACTION into compressed posting blocks.
 
 Compaction is TIERED (Lucene-style segment merge, reference:
@@ -61,13 +64,27 @@ from webindex.build import (
     decode_postings_to_runs,
     dict_file_target,
     hash_bucket_bits,
+    latest_crawl,
     overlap,
     term_dictionary,
     term_stats_from_postings,
 )
+from webindex.checkpoint import commit_runs_partitions, done_partitions
 
 
 from webindex.fsutil import hadoop_fs as _hadoop_fs, hadoop_delete as _hadoop_delete
+
+
+def _committed_positions(spark: SparkSession, workdir: str) -> bool | None:
+    """Whether the committed runs are positional — a schema-only probe of
+    <workdir>/runs, no data read. None when no runs are committed yet."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        cols = spark.read.parquet(f"{workdir}/runs").columns
+    except AnalysisException:
+        return None
+    return "positions" in cols
 
 
 def _swap_partition_dirs(
@@ -165,26 +182,20 @@ class IncrementalIndexer:
         to know how it was built. Falls back to the constructor default
         when no runs are committed yet (fresh workdir)."""
         if "positions" not in kw:
-            try:
-                cols = spark.read.parquet(f"{workdir}/runs").columns
-                kw["positions"] = "positions" in cols
-            except Exception:
-                pass  # fresh workdir: constructor default stands
+            committed = _committed_positions(spark, workdir)
+            if committed is not None:  # fresh workdir: constructor default
+                kw["positions"] = committed
         return cls(spark, workdir, **kw)
 
     def _check_positions_layout(self) -> None:
         """Fail loudly if the constructor's positions flag disagrees with the
-        committed runs layout. The committed runs schema is the ground truth
-        (a schema-only probe — no data read): writing mixed-schema runs
-        partitions would make a later full compact either crash on null
-        position buffers or build blocks whose positional-ness depends on
-        which part-file Spark samples the schema from."""
-        try:
-            cols = self.spark.read.parquet(f"{self.workdir}/runs").columns
-        except Exception:
-            return  # no committed runs yet: the constructor's flag stands
-        committed = "positions" in cols
-        if committed != self.positions:
+        committed runs layout. The committed runs schema is the ground truth:
+        writing mixed-schema runs partitions would make a later full compact
+        either crash on null position buffers or build blocks whose
+        positional-ness depends on which part-file Spark samples the schema
+        from."""
+        committed = _committed_positions(self.spark, self.workdir)
+        if committed is not None and committed != self.positions:
             raise ValueError(
                 f"positions={self.positions} but the committed runs at "
                 f"{self.workdir}/runs are "
@@ -234,7 +245,7 @@ class IncrementalIndexer:
         return {int(r["epoch"]) for r in df.select("epoch").collect()}
 
     def _next_batch_id(self) -> int:
-        done = self._done_batches()
+        done = done_partitions(self.spark, self.workdir)
         return (max(done) + 1) if done else 0
 
     def _require_no_active_stream(self, action: str) -> None:
@@ -283,21 +294,12 @@ class IncrementalIndexer:
 
     def _ingest_pages(self, batch_df: DataFrame, batch_id: int) -> None:
         """Tokenize one batch of pages and commit runs + urls + lineage
-        under the given internal batch id."""
-        spark = batch_df.sparkSession
+        under the given internal batch id, through the resumable build's
+        runs commit (checkpoint.commit_runs_partitions)."""
         self._check_positions_layout()
-        t0 = time.monotonic()
-        # latest-wins WITHIN the micro-batch: one source batch can contain
-        # the same url several times (several crawl files per trigger);
-        # keep the newest warc_ts (content-hash tiebreak for determinism)
-        w = Window.partitionBy("url").orderBy(
-            F.desc_nulls_last("warc_ts"), F.asc(F.xxhash64("html"))
-        )
-        deduped = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        # latest-wins WITHIN the batch: one source batch can contain the
+        # same url several times (several crawl files per trigger)
+        deduped = latest_crawl(batch_df, self.text_col)
         if "doc_id" in deduped.columns:
             # identity in the incremental path is xxhash64(url) — a caller-
             # supplied doc_id would make tombstones miss and latest-wins
@@ -305,52 +307,16 @@ class IncrementalIndexer:
             # pre-existing column through)
             deduped = deduped.drop("doc_id")
         pages = assign_doc_ids(deduped, "hash")
-        runs = build_runs(
-            pages, text_col=self.text_col, with_positions=self.positions
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        runs.write.mode("overwrite").partitionBy("batch_id").parquet(
-            f"{self.workdir}/runs"
-        )
-        pages.select("doc_id", "url").withColumn(
-            "batch_id", F.lit(int(batch_id))
-        ).write.mode("overwrite").partitionBy("batch_id").parquet(
-            f"{self.workdir}/doc_urls"
-        )
-        # metrics from the COMMITTED runs partition (one pruned columnar job:
-        # docs = DOC_MARKER rows, postings = the rest) + real committed bytes
-        # of both partition dirs (FS listing, no data read) — same contract as
-        # the batch path's lineage (checkpoint.py).
-        from webindex.fsutil import dir_bytes
-
-        m = (
-            spark.read.parquet(f"{self.workdir}/runs")
-            .filter(F.col("batch_id") == batch_id)
-            .agg(
-                F.count(F.when(F.col("term") == DOC_MARKER, 1)).alias("docs"),
-                F.count(F.when(F.col("term") != DOC_MARKER, 1)).alias("postings"),
-            )
-            .collect()[0]
-        )
-        nbytes = dir_bytes(
-            spark, f"{self.workdir}/runs/batch_id={batch_id}"
-        ) + dir_bytes(spark, f"{self.workdir}/doc_urls/batch_id={batch_id}")
-        from webindex.io import append_driver_rows
-
-        append_driver_rows(
-            spark,
-            [
-                (
-                    int(batch_id),
-                    int(m["docs"]),
-                    int(m["postings"]),
-                    int(nbytes),
-                    float(time.monotonic() - t0),
-                    "done",
-                )
-            ],
-            schema.LINEAGE,
-            f"{self.workdir}/lineage",
-            fmt="parquet",
+        bid = F.lit(int(batch_id)).alias("batch_id")
+        commit_runs_partitions(
+            batch_df.sparkSession,
+            build_runs(
+                pages, text_col=self.text_col, with_positions=self.positions
+            ).select("*", bid),
+            pages.select("doc_id", "url", bid),
+            self.workdir,
+            "batch_id",
+            [int(batch_id)],
         )
 
     def start(self, source_dir: str, trigger_available_now: bool = True):
@@ -480,24 +446,6 @@ class IncrementalIndexer:
         return d.select("doc_id", "batch_id")
 
     # -- compaction / query-side --------------------------------------------
-
-    def _done_batches(self) -> list[int]:
-        """Committed batch ids, in order. Only a MISSING lineage table means
-        none — any other read failure propagates: treating a transiently
-        unreadable lineage as empty would hand out batch id 0 again and
-        dynamically OVERWRITE the committed batch-0 runs partition."""
-        from webindex.fsutil import path_exists
-
-        if not path_exists(self.spark, f"{self.workdir}/lineage"):
-            return []
-        rows = (
-            self.spark.read.parquet(f"{self.workdir}/lineage")
-            .filter(F.col("status") == "done")
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["partition_id"]) for r in rows)
 
     def _read_state(self):
         """Read compaction state; if it persists a BM25Config (round-3+
@@ -760,7 +708,7 @@ class IncrementalIndexer:
                 f"({pending} exists): run compact(full=True) to rebuild "
                 "tables and stats from the runs history"
             )
-        done = self._done_batches()
+        done = done_partitions(self.spark, self.workdir)
         if state is not None and int(state["max_batch"]) >= (max(done) if done else -1):
             return self._load_index(
                 int(state["n_docs"]),
