@@ -621,3 +621,34 @@ def test_live_index_lookups_hide_dead(request, positional, lookup):
     before = run(idx0)
     assert {dead, other} <= {r["doc_id"] for r in before}
     assert run(live) == [r for r in before if r["doc_id"] != dead]
+
+
+def test_live_index_dedupes_tombstones_on_driver(spark, tmp_path):
+    """live_index() reads overlapping pending deletes (one url tombstoned by
+    two delete batches) into the same sorted, unique dead_ids with one
+    Spark job fewer: 7 jobs on this workdir; a distinct() shuffle made it 8."""
+    import uuid
+
+    import numpy as np
+
+    pdf = make_pages_pdf(0, 200)
+    ing = IncrementalIndexer(spark, str(tmp_path / "wd"), text_col="text")
+    ing.upsert(spark.createDataFrame(pdf))
+    urls = list(pdf["url"].iloc[:3])
+    ing.delete(urls[:2], compact_now=False)
+    ing.delete(urls[1:], compact_now=False)
+    want = sorted(
+        int(r["h"]) for r in spark.createDataFrame([(u,) for u in urls], "url string")
+        .select(F.xxhash64("url").alias("h")).collect()
+    )
+
+    sc = spark.sparkContext
+    ing.live_index()  # warm: caches and broadcasts settle before counting
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        live = ing.live_index()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert live.dead_ids.dtype == np.int64 and list(live.dead_ids) == want
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7

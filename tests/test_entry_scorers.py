@@ -7,7 +7,11 @@ terms_set, count, match_bool_prefix) or reads positions through the shared
 positional decode (phrase, sloppy phrase, phrase batch / prefix, rescore,
 simple_query_string, highlight, span_near, intervals, term vectors) must
 agree with its DuckDB oracle SQL, compared the way scripts/check_entry.py
-compares them (row count, column names, order-insensitive value hash)."""
+compares them (row count, column names, order-insensitive value hash).
+The three entries that never had a driver CORRECTNESS row are checked here
+too: bm25_fuzzy_gram, agg_significant_text (JLH significance re-analyzed
+from the top-100-by-BM25 sample) and suggest_spell_gram (the term
+suggester through the q-gram dictionary sidecar)."""
 
 import importlib.util
 from pathlib import Path
@@ -57,6 +61,8 @@ ENTRIES = [
     "terms_set_match",
     "count_matches",
     "bm25_match_bool_prefix",
+    "agg_significant_text",
+    "suggest_spell_gram",
 ]
 
 

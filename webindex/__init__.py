@@ -44,3 +44,49 @@ Layout (SURVEY.md §7):
 """
 
 __version__ = "0.1.0"
+
+
+def _guard_zip_invalidation() -> None:
+    """Make zipimporter.invalidate_caches re-read an archive only when it
+    changed. PySpark's worker calls importlib.invalidate_caches() at the
+    start of every task (worker_util.setup_spark_files); on CPython
+    3.10-3.12 that makes every zipimporter on the path re-read its whole
+    archive directory — once per package importer of Spark's pyspark.zip,
+    ~0.15 s per task. The replacement re-reads unless the archive's
+    (st_mtime_ns, st_size, st_ino) equals the stat taken just before its
+    last read through here, and then takes that read's directory instead;
+    a failed stat, a failed or empty read, or no read yet re-reads, so
+    imports see exactly what they saw before. CPython 3.13 made the call
+    lazy, so there (and before 3.10) this does nothing. Idempotent; every
+    engine UDF imports a webindex module when unpickled, so every Python
+    worker that runs one installs it."""
+    import os
+    import sys
+    import zipimport
+
+    if not (3, 10) <= sys.version_info[:2] <= (3, 12):
+        return
+    cls = zipimport.zipimporter
+    if cls.invalidate_caches.__module__ == __name__:
+        return
+    reread = cls.invalidate_caches
+    last_read = {}  # archive -> (its stat before the read, the directory read)
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        last_key, files = last_read.get(self.archive, (None, None))
+        if key is not None and key == last_key:
+            self._files = zipimport._zip_directory_cache[self.archive] = files
+            return
+        reread(self)
+        # an empty directory may be a failed read: never reuse it
+        last_read[self.archive] = (key if self._files else None, self._files)
+
+    cls.invalidate_caches = invalidate_caches
+
+
+_guard_zip_invalidation()

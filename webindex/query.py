@@ -556,7 +556,10 @@ def _theta_seed(
 # jobs cost more than the decode they can possibly save (measured at 100k
 # docs: +1s/query for zero pruning benefit); far above it — the 10^12-doc
 # regime, ~8e9 blocks for a hot term — pruning IS the query path. Tests pass
-# 0 to force the pruning path on tiny fixtures.
+# 0 to force the pruning path on tiny fixtures. The +1s figure predates
+# _guard_zip_invalidation (webindex/__init__.py): every seed task then paid
+# ~0.15 s of zip re-reads in Python worker set-up, so the break-even may be
+# lower now; it has not been re-measured.
 THETA_SEED_MIN_BLOCKS = 4096
 
 

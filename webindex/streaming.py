@@ -664,13 +664,10 @@ class IncrementalIndexer:
             return idx
         import numpy as np
 
-        dead = np.array(
-            sorted(
-                int(r["doc_id"])
-                for r in tombs.select("doc_id").distinct().collect()
-            ),
-            dtype=np.int64,
-        )
+        # dedupe on the driver: a distinct() here is a shuffle, i.e. two
+        # more Spark jobs under AQE, for a set that is driver-scale
+        ids = [r["doc_id"] for r in tombs.select("doc_id").collect()]
+        dead = np.unique(np.asarray(ids, dtype=np.int64))
         if len(dead):
             idx.dead_ids = dead
         return idx
