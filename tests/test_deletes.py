@@ -548,16 +548,17 @@ def test_live_index_positional_families_hide_dead(positional_pending_delete, sco
 
 
 def test_batch_theta_seed_skips_dead_docs(spark, tmp_path):
-    """topk_batch's shared θ seed must not take the k-th best contribution
-    from a dead doc: here the deleted doc holds the best contribution of a
-    term with df > k, so a seed counting it would be the (k-1)-th best LIVE
-    contribution and, with one-posting blocks (interval bound == the exact
-    contribution), would prune the k-th best live doc. The pruned result
-    must equal prune=False and the oracle over the live docs (pre-delete
-    stats, dead doc dropped before the cut)."""
+    """The θ seed must not take the k-th best contribution from a dead doc:
+    here the deleted doc holds the best contribution of a term with df > k,
+    so a seed counting it would be the (k-1)-th best LIVE contribution and,
+    with one-posting blocks (interval bound == the exact contribution),
+    would prune the k-th best live doc. topk_batch and topk_wand share the
+    one seed and its dead-doc drop: both forced-seed results must equal
+    prune=False and the oracle over the live docs (pre-delete stats, dead
+    doc dropped before the cut)."""
     from webindex.bm25 import BM25Config
     from webindex.oracle import OracleIndex
-    from webindex.query import topk_batch
+    from webindex.query import topk_batch, topk_wand
 
     n, dl, k = 24, 30, 5
     pdf = make_pages_pdf(0, n)
@@ -583,10 +584,13 @@ def test_batch_theta_seed_skips_dead_docs(spark, tmp_path):
         return [(int(r["doc_id"]), float(r["score"]))
                 for r in sorted(rows, key=lambda r: r["rank"])]
 
-    pruned, exhaustive = run(True), run(False)
-    assert pruned == exhaustive
-    assert [d for d, _ in pruned] == [d for d, _ in want]
-    assert all(abs(s - w) <= 1e-9 for (_, s), (_, w) in zip(pruned, want))
+    exhaustive = run(False)
+    wand = [(int(r["doc_id"]), float(r["score"]))
+            for r in topk_wand(live, "aa", k, seed_min_blocks=0).collect()]
+    for pruned in (run(True), wand):
+        assert pruned == exhaustive
+        assert [d for d, _ in pruned] == [d for d, _ in want]
+        assert all(abs(s - w) <= 1e-9 for (_, s), (_, w) in zip(pruned, want))
 
 
 @pytest.mark.parametrize("positional", [False, True])

@@ -1,9 +1,9 @@
 """Crash/ordering hardening of the index commit paths (round-4 review on):
 engine-epoch vs synthetic-batch decoupling, ghost doc_stats rows in emptied
 buckets, the interrupted-compact fence, n_buckets pinning on the resumable
-build, caller-supplied doc_id rejection, conf restore on full compacts,
-corpus_stats written after the tables it describes, and stale staging dirs
-left by a crashed incremental compact."""
+build, caller-supplied doc_id rejection, conf restore on full compacts, an
+unreadable compaction state, corpus_stats written after the tables it
+describes, and stale staging dirs left by a crashed incremental compact."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,6 +125,39 @@ def test_full_compact_restores_persisted_conf(spark, tmp_path):
     assert opened.conf.k1 == 0.5 and opened.conf.b == 0.3
     after = [(r["doc_id"], round(r["score"], 9)) for r in topk(idx1, "data", 5).collect()]
     assert after == before
+
+
+def test_unreadable_state_raises_until_full_rebuild(spark, tmp_path):
+    """Fault injection: a corrupt compaction state is not "no state". It
+    holds the only copy of the workdir's conf, so compact() and
+    live_index() must raise (a silent full rebuild would re-encode with the
+    constructor's default k1), naming compact(full=True) with the workdir's
+    conf — which rebuilds tables and state from the runs history."""
+    import glob
+
+    wd = str(tmp_path / "wd")
+    conf = BM25Config(k1=0.9)
+    idx0 = IncrementalIndexer(spark, wd, text_col="text", conf=conf).upsert(
+        _pages(spark, 0, 12)
+    )
+    before = [(r["doc_id"], r["score"]) for r in topk(idx0, "data", 5).collect()]
+    files = glob.glob(f"{wd}/index/_state/*.parquet")
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    opened = IncrementalIndexer(spark, wd, text_col="text")  # default conf
+    with pytest.raises(RuntimeError, match=r"compact\(full=True\)"):
+        opened.compact()
+    with pytest.raises(RuntimeError, match="unreadable compaction state"):
+        opened.live_index()
+    assert opened.conf.k1 == 1.2  # nothing was rebuilt with it
+
+    idx1 = IncrementalIndexer(spark, wd, text_col="text", conf=conf).compact(full=True)
+    assert [(r["doc_id"], r["score"]) for r in topk(idx1, "data", 5).collect()] == before
+    reopened = IncrementalIndexer(spark, wd, text_col="text")
+    reopened.live_index()
+    assert reopened.conf.k1 == 0.9  # the rewritten state carries the conf
 
 
 def test_finish_tables_crash_window_recovers(spark, tmp_path):

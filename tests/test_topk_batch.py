@@ -56,32 +56,62 @@ def test_batch_pruned_identical_to_exhaustive(idx):
 
 
 def test_batch_theta_seeds_are_sound_lower_bounds(idx):
-    """Each batch seed must be positive for hot terms and never exceed the
-    exact k-th best single-term contribution (soundness = exactness of the
-    per-query pruning)."""
-    from pyspark.sql import functions as F
-
-    from webindex.query import _batch_theta_seeds, _query_terms, _theta_seed
+    """Seeding many terms in one call gives each the same EXACT value as
+    seeding it alone: positive for hot terms, bit-identical to the
+    single-term seed (whose k-th value the single-query path uses), so the
+    per-query pruning is sound."""
+    from webindex.query import _query_terms, _theta_seeds
 
     k = 10
     stats = _query_terms(idx, "the data spark")
     seed_terms = {h: i for (df, i, h) in stats.values() if df > k}
-    assert seed_terms, "fixture must contain hot terms"
-    batch_thetas = _batch_theta_seeds(idx, seed_terms, k)
+    assert len(seed_terms) >= 2, "fixture must contain hot terms"
+    batch_thetas = _theta_seeds(idx, seed_terms, k)
     for h, idf in seed_terms.items():
-        exact_kth = _theta_seed(idx, h, idf, k)  # exact by its stop condition
-        assert 0.0 < batch_thetas[h] <= exact_kth + 1e-15, h
+        assert batch_thetas[h] > 0.0
+        assert batch_thetas[h] == _theta_seeds(idx, {h: idf}, k)[h], h
+
+
+def test_seed_round_is_two_jobs_for_any_term_count(idx, spark):
+    """One seed round is two Spark jobs — the metadata TakeOrdered and the
+    bounded decode — for one term and for several alike (the batch shape
+    once cost 6 per round: windowed ranking, prefix facts, decode+rank)."""
+    import uuid
+
+    from webindex.query import _query_terms, _theta_seeds
+
+    k = 1
+    stats = _query_terms(idx, "the data spark index query")
+    terms = {h: i for (df, i, h) in stats.values() if df > k}
+    assert len(terms) >= 3, "fixture must contain several hot terms"
+    sc = spark.sparkContext
+
+    def jobs_and_rounds(idfs):
+        _theta_seeds(idx, idfs, k)  # warm: caches and broadcasts settle
+        probe, group = {}, f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            _theta_seeds(idx, idfs, k, _probe=probe)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), probe["rounds"]
+
+    one = dict([next(iter(terms.items()))])
+    for idfs in (one, terms):
+        jobs, rounds = jobs_and_rounds(idfs)
+        assert rounds == 1, len(idfs)
+        assert jobs == 2, len(idfs)
 
 
 def test_batch_seed_refinement_on_pathological_bounds(spark):
-    """VERDICT r2 #6: a SECOND shared seed round must strictly tighten θ on
-    a pathological bound distribution — every block's max_impact set by one
-    outlier doc, so the first m-block prefix holds only m strong
-    contributions and its k-th value is far below the block bounds. Results
-    stay byte-identical either way (θ is a sound lower bound)."""
+    """VERDICT r2 #6: a pathological bound distribution — every block's
+    max_impact set by one outlier doc, so the first m-block prefix holds
+    only m strong contributions and its k-th value is far below the block
+    bounds. The seed re-rounds over a wider prefix until it is EXACT, and
+    the pruned result stays byte-identical to the exhaustive one."""
     import pandas as pd
 
-    from webindex.query import _batch_seed_round, _batch_theta_seeds, _query_terms
+    from webindex.query import _query_terms, _theta_seeds
 
     n = 1280  # 10 full blocks of 128 docs in one bucket (dense ids)
     rows = []
@@ -101,15 +131,13 @@ def test_batch_seed_refinement_on_pathological_bounds(spark):
     assert df_ == n
 
     k = 10
-    # the first round alone (the prefix _batch_theta_seeds starts from)
-    m = max(4, 2 * -(-k // idx.conf.block_size))
-    seed1 = {h: _batch_seed_round(idx, {h: idf}, k, m)[h][0]}
-    seed2 = _batch_theta_seeds(idx, {h: idf}, k)
-    assert seed2[h] > seed1[h] * 2  # refinement strictly (and materially) tightens
-    # the refined seed is EXACT here (all 10 blocks fit the 8x prefix):
-    # k-th best single-term contribution == k-th score of the 1-term query
+    probe = {}
+    seed = _theta_seeds(idx, {h: idf}, k, _probe=probe)[h]
+    assert probe["rounds"] > 1  # the first prefix could not prove its k-th
+    # EXACT: k-th best single-term contribution == k-th score of the 1-term
+    # query
     kth_score = [r["score"] for r in topk_exact(idx, "zzz", k).collect()][-1]
-    assert abs(seed2[h] - kth_score) < 1e-12
+    assert seed == kth_score
 
     # pruned results remain byte-identical to exhaustive
     got = topk_batch(idx, {"q": "zzz"}, k, prune=True, seed_min_blocks=0).collect()

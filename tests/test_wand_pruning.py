@@ -70,11 +70,11 @@ def test_partial_prune_keeps_survivors_exact(idx):
 
 def test_theta_seed_is_exact_and_bounded(spark):
     """The metadata-first θ-seed must (a) return the exact k-th best
-    single-term contribution (same value the old exhaustive seed computed)
-    and (b) decode a strict subset of a hot term's blocks. Fine bucketing
-    (range_width=8 -> ~32 blocks for a df~N term) so the doubling loop has
-    room to stop early."""
-    from webindex.query import _decode_contribs_iter, _theta_seed
+    single-term contribution — the k-th score of the one-term query, which
+    scores each doc by that contribution alone — and (b) decode a strict
+    subset of a hot term's blocks. Fine bucketing (range_width=8 -> ~32
+    blocks for a df~N term) so the growing prefix has room to stop early."""
+    from webindex.query import _theta_seeds
 
     pdf = make_pages_pdf(0, 256)
     pdf.insert(0, "doc_id", np.arange(256, dtype=np.int64))
@@ -86,24 +86,14 @@ def test_theta_seed_is_exact_and_bounded(spark):
     stats = _query_terms(idx, "the")
     df, idf, h = stats["the"]
     assert df > k
-    # exhaustive ground truth: decode EVERY block of the term
-    all_contribs = (
-        idx.postings.filter(F.col("term_hash") == h)
-        .mapInPandas(
-            _decode_contribs_iter({h: idf}, idx.conf, idx.avgdl),
-            schema="term_hash long, doc_id long, contrib double",
-        )
-        .toPandas()["contrib"]
-        .sort_values(ascending=False)
-    )
-    exact_kth = float(all_contribs.iloc[k - 1])
+    exact_kth = [r["score"] for r in topk_exact(idx, "the", k).collect()][-1]
     probe = {}
-    got = _theta_seed(idx, h, idf, k, _probe=probe)
-    assert got == exact_kth
+    got = _theta_seeds(idx, {h: idf}, k, _probe=probe)
+    assert got == {h: exact_kth}
     n_blocks = idx.postings.filter(F.col("term_hash") == h).count()
     assert n_blocks >= 16
     assert probe["blocks_decoded"] < n_blocks, (
-        f"seed decoded all {n_blocks} blocks — not bounded"
+        f"seed decoded {probe['blocks_decoded']} of {n_blocks} blocks — not bounded"
     )
 
 
@@ -121,35 +111,26 @@ def test_wand_exact_agree_under_heavy_theta_conditions(idx):
 
 def test_seed_gate_disarms_below_min_blocks(idx, monkeypatch):
     """Cost gate (VERDICT r2 next-round #2): below THETA_SEED_MIN_BLOCKS
-    estimated candidate blocks, topk_wand must issue ZERO seed jobs — the
-    2-3 driver-synchronous jobs cost more than the decode they could save.
-    At the default gate, an sf0.1/100k-doc index (hot term df ~1e5 -> ~800
-    blocks) never seeds; the 10^12-doc regime (~1e9+ blocks) always does."""
+    estimated candidate blocks, topk_wand and topk_batch must seed NO term
+    (so run no seed job) — the seed jobs cost more than the decode they
+    could save. At the default gate, an sf0.1/100k-doc index (hot term df
+    ~1e5 -> ~800 blocks) never seeds; the 10^12-doc regime (~1e9+ blocks)
+    always does. Both reach the one seed, _theta_seeds."""
     import webindex.query as Q
 
     calls = []
 
-    def spy(index, term_hash, idf, k, _probe=None):
-        calls.append(term_hash)
-        return 0.0
+    def spy(index, idfs, k, _probe=None):
+        calls.append(dict(idfs))
+        return {h: 0.0 for h in idfs}
 
-    monkeypatch.setattr(Q, "_theta_seed", spy)
+    monkeypatch.setattr(Q, "_theta_seeds", spy)
     # default gate: this 256-doc fixture is far below 4096 candidate blocks
     Q.topk_wand(idx, "the data", 5).collect()
-    assert calls == []
-    # forced gate (tests/tiny fixtures): the seed engages
-    Q.topk_wand(idx, "the data", 5, seed_min_blocks=0).collect()
-    assert len(calls) == 1
-
-    # batch path: same gate, zero seed jobs below it
-    batch_calls = []
-
-    def batch_spy(index, seed_terms, k):
-        batch_calls.append(dict(seed_terms))
-        return {}
-
-    monkeypatch.setattr(Q, "_batch_theta_seeds", batch_spy)
     Q.topk_batch(idx, {"q0": "the data", "q1": "w42 merge"}, 5).collect()
-    assert batch_calls == [{}]  # called with an EMPTY seed set -> no jobs
+    assert calls == [{}, {}]  # an EMPTY term set -> no jobs
+    # forced gate (tests/tiny fixtures): the seed engages, the rarest term
+    rarest = min(_query_terms(idx, "the data").values())
+    Q.topk_wand(idx, "the data", 5, seed_min_blocks=0).collect()
     Q.topk_batch(idx, {"q0": "the data"}, 5, seed_min_blocks=0).collect()
-    assert len(batch_calls) == 2 and len(batch_calls[1]) == 1
+    assert calls[2:] == [{rarest[2]: rarest[1]}] * 2

@@ -31,9 +31,13 @@ ALL query terms land in the same bucket group — the per-bucket sum is the
 full score, local top-k is safe, and pruning a bucket can never corrupt a
 surviving doc's score. θ is seeded from the rarest query term: its k-th
 largest single-term contribution lower-bounds the final k-th best score
-(every doc containing it scores at least that). The seed is skipped when
-df(rarest) <= k (θ would be 0) or when the query's candidate volume is too
-small for pruning to repay the seed jobs (THETA_SEED_MIN_BLOCKS cost gate).
+(every doc containing it scores at least that). One seed path serves
+topk_wand (one query) and topk_batch (every query of the batch):
+_query_thetas picks the rarest terms, _theta_seeds computes their exact
+k-th values in 2 Spark jobs per round, no shuffle, whatever the term count.
+The seed is skipped when df(rarest) <= k (θ would be 0) or when the query's
+candidate volume is too small for pruning to repay the seed jobs
+(THETA_SEED_MIN_BLOCKS cost gate).
 
 Everything driver-side is metadata-scale: per-term stats and k rows.
 Determinism: float64, fixed summation order, ties -> doc_id asc — results
@@ -66,15 +70,6 @@ _QHIT = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
-
-_DECODED = T.StructType(
-    [
-        T.StructField("term_hash", T.LongType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("contrib", T.DoubleType(), False),
-    ]
-)
-
 
 def _query_terms(index: Index, query: str) -> dict[str, tuple[int, float, int]]:
     """{term: (df, idf, term_hash)} for query terms present in the corpus
@@ -220,23 +215,6 @@ def _decode_positional(blocks: pd.DataFrame, conf, dead: np.ndarray | None):
         pos = pos[np.repeat(alive, tfs)]
         blk, ids, tfs, dls = blk[alive], ids[alive], tfs[alive], dls[alive]
     return blk, ids, tfs, dls, np.repeat(ids, tfs), pos
-
-
-def _decode_contribs_iter(
-    idf_map: dict[int, float], conf, avgdl: float, dead: np.ndarray | None = None
-):
-    """mapInPandas fn over posting-block rows -> (term_hash, doc_id,
-    contrib), live docs only. idf_map is keyed by term_hash. Used by the
-    θ-seed jobs."""
-
-    def fn(batches):
-        for pdf in batches:
-            blk, ids, _, _, impact = _decode_rows(pdf, conf, avgdl, dead)
-            th = pdf["term_hash"].to_numpy(dtype=np.int64)[blk]
-            w = pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64)[blk]
-            yield pd.DataFrame({"term_hash": th, "doc_id": ids, "contrib": w * impact})
-
-    return fn
 
 
 def _interval_prune(
@@ -498,69 +476,133 @@ def topk_exact(index: Index, query: str, k: int = 10) -> DataFrame:
     return _scored(index, _match_spec(_query_terms(index, query)), k)
 
 
-def _theta_seed(
-    index: Index, term_hash: int, idf: float, k: int, _probe: dict | None = None
-) -> float:
-    """k-th largest single-term BM25 contribution of `term` — a sound lower
-    bound for the final k-th best score of any query containing it (every doc
-    with the term scores at least its own contribution).
+def _seed_topk(pairs: set, idfs: dict[int, float], k: int, conf, avgdl, dead):
+    """mapInPandas fn of a _theta_seeds round: decode only the fetched
+    (term_hash, block_id) pairs (block ids repeat across terms), dead docs
+    dropped by _decode_rows, and emit this partition's per-term top-k
+    contributions (term_hash, contrib) for the driver to merge."""
 
-    Bounded decode (metadata-first): blocks are fetched in descending
-    idf·max_impact·drift order via a distributed TakeOrdered over METADATA
-    (no posting bytes move), and only a prefix is decoded. Stop when the
-    decoded k-th best >= the weakest fetched block's bound — every undecoded
-    block is provably below it, so the value is EXACT. For a hot term ("the",
-    df~N) this decodes O(k) postings instead of df; the old exhaustive seed
-    decoded millions at web scale (VERDICT r01 'What's wrong #6')."""
-    meta = index.postings.filter(F.col("term_hash") == term_hash).select(
-        "block_id",
-        "n_docs",
-        (
-            F.lit(idf)
-            * F.col("max_impact")
-            * F.greatest(F.lit(1.0), F.lit(index.avgdl) / F.col("avgdl0"))
-        ).alias("bound"),
-    )
+    def fn(batches):
+        hs, cs = [np.empty(0, np.int64)], [np.empty(0)]
+        for pdf in batches:
+            key = pd.MultiIndex.from_arrays([pdf["term_hash"], pdf["block_id"]])
+            pdf = pdf[key.isin(pairs)]
+            if not len(pdf):
+                continue
+            blk, _, _, _, impact = _decode_rows(pdf, conf, avgdl, dead)
+            hs.append(pdf["term_hash"].to_numpy(dtype=np.int64)[blk])
+            w = pdf["term_hash"].map(idfs).to_numpy(dtype=np.float64)[blk]
+            cs.append(w * impact)
+        th, contrib = np.concatenate(hs), np.concatenate(cs)
+        order = np.lexsort((-contrib, th))
+        th, contrib = th[order], contrib[order]
+        top = np.arange(len(th)) - np.searchsorted(th, th) < k
+        yield pd.DataFrame({"term_hash": th[top], "contrib": contrib[top]})
+
+    return fn
+
+
+def _theta_seeds(
+    index: Index, idfs: dict[int, float], k: int, _probe: dict | None = None
+) -> dict[int, float]:
+    """{term_hash: θ} for {term_hash: idf}: each term's EXACT k-th largest
+    live single-term BM25 contribution (0.0 below k live postings) — a
+    sound lower bound for the final k-th best score of any query containing
+    the term (every doc with the term scores at least its own contribution).
+
+    Bounded decode (metadata-first), 2 Spark jobs per round and no shuffle,
+    whatever the term count: a TakeOrdered over the idf-scaled block bounds
+    (idf·max_impact·drift; METADATA, no posting bytes move) of every
+    unresolved term, m·|terms| rows, then one decode of just the fetched
+    blocks (_seed_topk). Every unfetched block is bounded by the weakest
+    fetched one, so a term is done, and its value EXACT, once its k-th best
+    reaches that bound or the round fetched fewer rows than it asked for
+    (nothing is left); the rest re-round with m×4. For a hot term ("the",
+    df~N) this decodes O(k) postings instead of df (VERDICT r01 'What's
+    wrong #6'). No term: no job."""
+    drift = F.greatest(F.lit(1.0), F.lit(index.avgdl) / F.col("avgdl0"))
     # prefix size: enough full blocks to hold k postings, padded for partial
-    # blocks; doubles until the stop condition proves exactness
+    # blocks; grows until the stop condition proves every value exact
     m = max(4, 2 * -(-k // index.conf.block_size))
-    best: np.ndarray = np.array([], dtype=np.float64)
-    while True:
-        top = meta.orderBy(F.desc("bound"), F.asc("block_id")).limit(m).collect()
-        ids = [int(r["block_id"]) for r in top]
-        blocks = index.postings.filter(
-            (F.col("term_hash") == term_hash) & F.col("block_id").isin(ids)
+    todo, seeds = dict(idfs), {}
+    while todo:
+        hashes = sorted(todo)
+        idf = F.create_map(
+            *(c for h in hashes for c in (F.lit(h).cast("long"), F.lit(todo[h])))
         )
-        seed = blocks.mapInPandas(
-            _decode_contribs_iter(
-                {term_hash: idf}, index.conf, index.avgdl, index.dead_ids
-            ),
-            schema=_DECODED,
+        top = (
+            index.postings.filter(F.col("term_hash").isin(hashes))
+            .select(
+                "term_hash",
+                "block_id",
+                (idf[F.col("term_hash")] * F.col("max_impact") * drift).alias("bound"),
+            )
+            .orderBy(F.desc("bound"), F.asc("block_id"), F.asc("term_hash"))
+            .limit(m * len(hashes))
+            .collect()
         )
-        kth = seed.orderBy(F.desc("contrib")).limit(k).collect()
-        best = np.asarray([float(r["contrib"]) for r in kth])
-        exhausted = len(top) < m  # fetched every block the term has
-        min_bound = float(top[-1]["bound"]) if top else 0.0
-        if exhausted or (len(best) == k and best[-1] >= min_bound):
-            if _probe is not None:
-                _probe["blocks_decoded"] = len(top)
-                _probe["exhausted"] = exhausted
-            break
+        pairs = {(int(r["term_hash"]), int(r["block_id"])) for r in top}
+        rows = (
+            index.postings.filter(
+                F.col("term_hash").isin(hashes)
+                & F.col("block_id").isin(sorted({b for _, b in pairs}))
+            )
+            .mapInPandas(
+                _seed_topk(pairs, todo, k, index.conf, index.avgdl, index.dead_ids),
+                schema="term_hash long, contrib double",
+            )
+            .collect()
+        )
+        if _probe is not None:
+            _probe["rounds"] = _probe.get("rounds", 0) + 1
+            _probe["blocks_decoded"] = _probe.get("blocks_decoded", 0) + len(top)
+        best: dict[int, list[float]] = {}
+        for r in rows:
+            best.setdefault(int(r["term_hash"]), []).append(float(r["contrib"]))
+        exhausted = len(top) < m * len(hashes)  # every block of every term
+        weakest = float(top[-1]["bound"]) if top else 0.0
+        for h in hashes:
+            kth = sorted(best.get(h, ()), reverse=True)[k - 1 : k]
+            if exhausted or (kth and kth[0] >= weakest):
+                seeds[h] = kth[0] if kth else 0.0
+                del todo[h]
         m *= 4
-    return float(best[-1]) if len(best) == k else 0.0
+    return seeds
 
 
-# Cost-based θ-seed gate: seeding costs 2-3 driver-synchronous jobs (~fixed
-# job latency each); pruning saves decode work proportional to the query's
-# candidate block count. Below this many estimated candidate blocks the seed
-# jobs cost more than the decode they can possibly save (measured at 100k
-# docs: +1s/query for zero pruning benefit); far above it — the 10^12-doc
-# regime, ~8e9 blocks for a hot term — pruning IS the query path. Tests pass
-# 0 to force the pruning path on tiny fixtures. The +1s figure predates
-# _guard_zip_invalidation (webindex/__init__.py): every seed task then paid
-# ~0.15 s of zip re-reads in Python worker set-up, so the break-even may be
-# lower now; it has not been re-measured.
+# Cost-based θ-seed gate: seeding costs 2 driver-synchronous jobs per round,
+# any number of terms (~fixed job latency each); pruning saves decode work
+# proportional to the query's candidate block count. Below this many
+# estimated candidate blocks the seed jobs cost more than the decode they
+# can possibly save (measured at 100k docs: +1s/query for zero pruning
+# benefit); far above it — the 10^12-doc regime, ~8e9 blocks for a hot term
+# — pruning IS the query path. Tests pass 0 to force the pruning path on
+# tiny fixtures. The +1s figure predates _guard_zip_invalidation
+# (webindex/__init__.py): every seed task then paid ~0.15 s of zip re-reads
+# in Python worker set-up, so the break-even may be lower now; it has not
+# been re-measured.
 THETA_SEED_MIN_BLOCKS = 4096
+
+
+def _query_thetas(
+    index: Index, qstats: dict, k: int, seed_min_blocks: int | None
+) -> dict:
+    """{query_id: θ} for {query_id: its _query_terms stats}: the θ seed of
+    each query's rarest present term, all seeded in ONE _theta_seeds call —
+    only for queries where it is worthwhile: the rarest term has > k docs
+    AND the candidate volume is big enough for pruning to pay for the seed
+    jobs (cost-based gate above). Single-term queries seed too: θ = the
+    k-th best contribution IS the k-th best score."""
+    if seed_min_blocks is None:
+        seed_min_blocks = THETA_SEED_MIN_BLOCKS
+    rarest = {}
+    for qid, stats in qstats.items():
+        est_blocks = sum(df for (df, _, _) in stats.values()) / index.conf.block_size
+        rterm = min(stats, key=lambda t: (stats[t][0], t))
+        if stats[rterm][0] > k and est_blocks >= seed_min_blocks:
+            rarest[qid] = stats[rterm]
+    seeds = _theta_seeds(index, {h: idf for (_, idf, h) in rarest.values()}, k)
+    return {qid: seeds[h] for qid, (_, _, h) in rarest.items()}
 
 
 def topk_wand(
@@ -568,22 +610,10 @@ def topk_wand(
 ) -> DataFrame:
     """Block-max WAND top-k (bucket-level pruning fused into the scoring
     stage; see module docstring). Always identical to topk_exact."""
-    spark = index.postings.sparkSession
     stats = _query_terms(index, query)
     if not stats:
-        return spark.createDataFrame([], _HIT)
-    if seed_min_blocks is None:
-        seed_min_blocks = THETA_SEED_MIN_BLOCKS
-
-    # θ seed from the rarest term — worthwhile only if it has > k docs AND
-    # the candidate volume is big enough for pruning to pay for the seed
-    # jobs (cost-based gate above). Single-term queries seed too: θ = the
-    # k-th best contribution IS the k-th best score.
-    theta = 0.0
-    est_blocks = sum(df for (df, _, _) in stats.values()) / index.conf.block_size
-    rterm = min(stats, key=lambda t: (stats[t][0], t))
-    if stats[rterm][0] > k and est_blocks >= seed_min_blocks:
-        theta = _theta_seed(index, stats[rterm][2], stats[rterm][1], k)
+        return index.postings.sparkSession.createDataFrame([], _HIT)
+    theta = _query_thetas(index, {query: stats}, k, seed_min_blocks).get(query, 0.0)
     return _scored(index, _match_spec(stats, theta), k)
 
 
@@ -593,7 +623,6 @@ def topk_match(
     k: int = 10,
     operator: str = "or",
     minimum_should_match: int = 1,
-    seed_min_blocks: int | None = None,
 ) -> DataFrame:
     """ES `match`-query execution modes over the same index: operator="and"
     requires EVERY distinct query term in the doc; minimum_should_match=n
@@ -621,7 +650,7 @@ def topk_match(
         return spark.createDataFrame([], _HIT)
     msm = len(q_terms) if operator == "and" else int(minimum_should_match)
     if msm <= 1:
-        return topk_wand(index, query, k, seed_min_blocks)
+        return topk_wand(index, query, k)
     stats = _query_terms(index, query)
     if msm > len(stats):  # a required term is absent from the corpus
         return spark.createDataFrame([], _HIT)
@@ -750,110 +779,6 @@ def topk_bool(
     return _scored(index, _Spec(slots, counts=tuple(counts)), k)
 
 
-def _batch_seed_round(
-    index: Index, seed_terms: dict[int, float], k: int, m: int
-) -> dict[int, tuple[float, float, bool]]:
-    """One shared seed round for MANY terms: per-term bound-descending
-    metadata prefix of m blocks, one bounded decode, one per-term k-th
-    ranking. Returns {term_hash: (kth_contrib, prefix_min_bound,
-    exhausted)} — kth_contrib is EXACT when exhausted or kth >= the
-    prefix's weakest idf-scaled bound, else a sound lower bound."""
-    ranked = (
-        index.postings.filter(F.col("term_hash").isin(list(seed_terms)))
-        .select(
-            "term_hash",
-            "block_id",
-            (
-                F.col("max_impact")
-                * F.greatest(F.lit(1.0), F.lit(index.avgdl) / F.col("avgdl0"))
-            ).alias("raw_bound"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("term_hash").orderBy(
-                    F.desc("raw_bound"), F.asc("block_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= m + 1)  # +1 sentinel row detects non-exhaustion
-    )
-    # prefix facts in one metadata job: how many blocks exist (capped at
-    # m+1) and the weakest bound INSIDE the m-block prefix
-    facts = {
-        int(r["term_hash"]): (int(r["n"]), float(r["minb"]))
-        for r in ranked.groupBy("term_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.when(F.col("rn") <= m, F.col("raw_bound"))).alias("minb"),
-        )
-        .collect()
-    }
-    meta = ranked.filter(F.col("rn") <= m).select("term_hash", "block_id")
-    # (term_hash, block_id) pairwise filter — block_ids are globally unique
-    # per BUCKET, not per term, so a bare isin(block_ids) would decode
-    # unrelated terms' blocks; the broadcast semi-join keeps the pairing exact
-    blocks = index.postings.join(F.broadcast(meta), ["term_hash", "block_id"], "semi")
-    contribs = blocks.mapInPandas(
-        _decode_contribs_iter(seed_terms, index.conf, index.avgdl, index.dead_ids),
-        schema=_DECODED,
-    )
-    kth = (
-        contribs.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("term_hash").orderBy(F.desc("contrib"))
-            ),
-        )
-        .filter(F.col("rn") == k)
-        .select("term_hash", "contrib")
-        .collect()
-    )
-    got_kth = {int(r["term_hash"]): float(r["contrib"]) for r in kth}
-    out: dict[int, tuple[float, float, bool]] = {}
-    for th, (n_blocks, minb) in facts.items():
-        # a term whose prefix held < k postings (many partial blocks) gets
-        # kth = -inf: no usable seed this round, refinable if blocks remain
-        out[th] = (got_kth.get(th, float("-inf")), minb, n_blocks <= m)
-    return out
-
-
-def _batch_theta_seeds(
-    index: Index,
-    seed_terms: dict[int, float],  # term_hash -> idf
-    k: int,
-) -> dict[int, float]:
-    """Per-term k-th best single-term contribution for MANY terms in a few
-    shared jobs (metadata TakeOrdered-per-term + bounded decode) — the batch
-    analogue of _theta_seed. Values are SOUND lower bounds of each term's
-    true k-th best contribution (k-th largest of a bound-descending block
-    prefix ≤ k-th largest overall), so per-query pruning stays exact.
-
-    A second shared round re-seeds the terms whose first-round seed is
-    provably non-exact (more blocks exist AND kth < the prefix's
-    weakest idf-scaled bound — pathological bound distributions, e.g. every
-    block bounded by one outlier doc): those terms re-seed from an 8x prefix
-    together, in the same two shared jobs. One bounded round — not a
-    per-term loop — keeps the batch amortization (jobs stay O(1) in query
-    count); seeds strictly improve or stay equal, never loosen."""
-    if not seed_terms:
-        return {}
-    m = max(4, 2 * -(-k // index.conf.block_size))
-    round1 = _batch_seed_round(index, seed_terms, k, m)
-    seeds = {th: v[0] for th, v in round1.items() if v[0] > float("-inf")}
-    weak = {
-        th: seed_terms[th]
-        for th, (kth_c, minb, exhausted) in round1.items()
-        if not exhausted and kth_c < seed_terms[th] * minb
-    }
-    if weak:
-        round2 = _batch_seed_round(index, weak, k, m * 8)
-        for th, (kth_c, _, _) in round2.items():
-            if kth_c > seeds.get(th, float("-inf")):
-                seeds[th] = kth_c
-    return seeds
-
-
 def topk_batch(
     index: Index,
     queries: dict[str, str],
@@ -869,12 +794,13 @@ def topk_batch(
     (per-query jobs pay Spark's fixed job latency per query; this pays it
     once).
 
-    prune=True adds PER-QUERY block-max WAND over the shared scan: two small
-    seed jobs compute every query's rarest-term θ (see _batch_theta_seeds),
-    then inside the scoring stage each query prunes its own intervals; a
-    block is decoded iff at least one query still needs it. Results are
-    byte-identical to prune=False (θ is a sound lower bound per query).
-    Determinism identical to topk_exact per query."""
+    prune=True adds PER-QUERY block-max WAND over the shared scan: the one
+    seed path (_query_thetas) computes every query's exact rarest-term θ at
+    2 Spark jobs per seed round for the whole batch, then inside the scoring
+    stage each query prunes its own intervals; a block is decoded iff at
+    least one query still needs it. Results are byte-identical to
+    prune=False (θ is a sound lower bound per query). Determinism identical
+    to topk_exact per query."""
     spark = index.postings.sparkSession
     out_schema = T.StructType(
         [
@@ -884,59 +810,19 @@ def topk_batch(
             T.StructField("rank", T.IntegerType(), False),
         ]
     )
-    qterms = {qid: sorted(set(tokenize(q))) for qid, q in queries.items()}
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    if not all_terms:
-        return spark.createDataFrame([], out_schema)
-    rows = index.term_stats.filter(F.col("term").isin(all_terms)).collect()
-    hash_of = {r["term"]: int(r["term_hash"]) for r in rows}
-    idf_map = {hash_of[r["term"]]: float(r["idf"]) for r in rows}
-    df_map = {r["term"]: int(r["df"]) for r in rows}
-    # query -> its corpus-present term hashes (TERM-STRING-ascending order —
-    # the deterministic summation order)
-    qpresent = {
-        qid: [hash_of[t] for t in ts if t in hash_of] for qid, ts in qterms.items()
+    qterms = {qid: set(tokenize(q)) for qid, q in queries.items()}
+    stats = _query_terms(index, " ".join(sorted(set().union(*qterms.values()))))
+    # query -> its corpus-present terms' stats (no query: no job)
+    qstats = {
+        qid: {t: stats[t] for t in ts if t in stats} for qid, ts in qterms.items()
     }
-    if not any(qpresent.values()):
+    qstats = {qid: st for qid, st in qstats.items() if st}
+    if not qstats:
         return spark.createDataFrame([], out_schema)
-    # ---- per-query θ seeds (two shared jobs for the WHOLE batch; only for
-    # queries whose candidate volume clears the cost-based gate) ------------
-    if seed_min_blocks is None:
-        seed_min_blocks = THETA_SEED_MIN_BLOCKS
-    q_theta: dict[str, float] = {}
-    if prune:
-        def _qualifies(ts: list[str]) -> bool:
-            est = sum(df_map[t] for t in ts) / index.conf.block_size
-            return bool(ts) and est >= seed_min_blocks
-
-        rarest = {
-            qid: min(ts, key=lambda t: (df_map[t], t))
-            for qid, ts in (
-                (qid, [t for t in qterms[qid] if t in hash_of]) for qid in qterms
-            )
-            if _qualifies(ts)
-        }
-        seed_terms = {
-            hash_of[t]: idf_map[hash_of[t]]
-            for t in {rt for rt in rarest.values()}
-            if df_map[t] > k
-        }
-        kth = _batch_theta_seeds(index, seed_terms, k)
-        q_theta = {
-            qid: kth[hash_of[rt]]
-            for qid, rt in rarest.items()
-            if hash_of[rt] in kth
-        }
-
+    q_theta = _query_thetas(index, qstats, k, seed_min_blocks) if prune else {}
     # one match spec per query over the shared scan: each prunes its own
     # intervals with its own θ, and a block decodes once if any query keeps it
-    specs = {
-        qid: _Spec(
-            tuple((idf_map[h], (h,)) for h in hs), theta=q_theta.get(qid, 0.0)
-        )
-        for qid, hs in qpresent.items()
-        if hs
-    }
+    specs = {qid: _match_spec(st, q_theta.get(qid, 0.0)) for qid, st in qstats.items()}
     local = _scored(index, specs, k)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

@@ -447,16 +447,33 @@ class IncrementalIndexer:
 
     # -- compaction / query-side --------------------------------------------
 
-    def _read_state(self):
+    def _read_state(self, full: bool = False):
         """Read compaction state; if it persists a BM25Config (round-3+
         layout), RESTORE it over the constructor's conf — the committed
         blocks' byte format and max_impact bounds are functions of the conf
         they were encoded with, so resuming with anything else would silently
-        mis-score (the streaming analogue of build_index's conf sidecar)."""
-        try:
-            row = self.spark.read.parquet(f"{self.workdir}/index/_state").collect()[0]
-        except Exception:
+        mis-score (the streaming analogue of build_index's conf sidecar).
+
+        None only when the state is ABSENT (no data bytes: nothing compacted
+        yet). An unreadable state raises — treating it as absent would make
+        compact() silently rebuild with the constructor's conf — except for
+        a `full` compact, the named recovery: it rebuilds from the runs
+        history and needs no state, so it keeps the constructor's conf."""
+        from webindex.fsutil import dir_bytes
+
+        p = f"{self.workdir}/index/_state"
+        if not dir_bytes(self.spark, p):
             return None
+        try:
+            row = self.spark.read.parquet(p).collect()[0]
+        except Exception as e:
+            if full:
+                return None
+            raise RuntimeError(
+                f"unreadable compaction state at {p}: run compact(full=True) "
+                "on an IncrementalIndexer constructed with this workdir's "
+                "BM25Config to rebuild tables and state from the runs history"
+            ) from e
         d = row.asDict()
         # round-3+ layout persists the conf: restore it (pre-conf state rows
         # lack "k1" and fall through to the constructor's conf)
@@ -690,7 +707,7 @@ class IncrementalIndexer:
         # incremental branch — the persisted conf must still be restored so
         # a full re-shard never silently re-encodes with the constructor's
         # (default) k1/b/quantize_norms
-        state = self._read_state()
+        state = self._read_state(full)
         if full:
             state = None
         pending = f"{self.workdir}/_compact_pending"
