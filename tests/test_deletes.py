@@ -629,8 +629,10 @@ def test_live_index_lookups_hide_dead(request, positional, lookup):
 
 def test_live_index_dedupes_tombstones_on_driver(spark, tmp_path):
     """live_index() reads overlapping pending deletes (one url tombstoned by
-    two delete batches) into the same sorted, unique dead_ids with one
-    Spark job fewer: 7 jobs on this workdir; a distinct() shuffle made it 8."""
+    two delete batches) into the same sorted, unique dead_ids, deduped on
+    the driver, with no Spark job: the state, the tables' schemas and the
+    tombstones are read on the driver (7 jobs through Spark; a distinct()
+    shuffle made it 8)."""
     import uuid
 
     import numpy as np
@@ -655,4 +657,4 @@ def test_live_index_dedupes_tombstones_on_driver(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert live.dead_ids.dtype == np.int64 and list(live.dead_ids) == want
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0

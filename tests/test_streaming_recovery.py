@@ -160,6 +160,46 @@ def test_unreadable_state_raises_until_full_rebuild(spark, tmp_path):
     assert reopened.conf.k1 == 0.9  # the rewritten state carries the conf
 
 
+def test_failed_state_rewrite_keeps_state_and_fence(spark, tmp_path, monkeypatch):
+    """Fault injection: an incremental compact whose _state rewrite fails
+    must not lose the workdir's conf. The rewrite replaces the state file
+    in one rename, so the old state survives whole, and the next compact()
+    stops at the interrupted-compaction fence with the conf restored. With
+    no readable state at all the fence still holds: a silent full rebuild
+    would re-encode with the constructor's default k1."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    wd = str(tmp_path / "wd")
+    ing = IncrementalIndexer(spark, wd, text_col="text", conf=BM25Config(k1=0.9))
+    ing.upsert(_pages(spark, 0, 12))
+    ing.upsert(_pages(spark, 12, 16), compact_now=False)
+    real = pq.write_table
+
+    def failing(table, where, *args, **kwargs):
+        if "/_state/" in str(where):
+            raise OSError("injected state write failure")
+        return real(table, where, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    with pytest.raises(OSError, match="injected state write failure"):
+        ing.compact()
+    monkeypatch.undo()
+    opened = IncrementalIndexer(spark, wd, text_col="text")  # default conf
+    with pytest.raises(RuntimeError, match="interrupted"):
+        opened.compact()
+    assert opened.conf.k1 == 0.9  # read from the surviving state
+    shutil.rmtree(f"{wd}/index/_state")
+    fresh = IncrementalIndexer(spark, wd, text_col="text")
+    with pytest.raises(RuntimeError, match="interrupted"):
+        fresh.compact()
+    idx = IncrementalIndexer(
+        spark, wd, text_col="text", conf=BM25Config(k1=0.9)
+    ).compact(full=True)
+    assert idx.n_docs == 16
+
+
 def test_finish_tables_crash_window_recovers(spark, tmp_path):
     """Crash injection for the _finish_tables commit window (round-4 verdict
     item): a crash between rename(term_stats -> _term_stats_old) and

@@ -113,7 +113,10 @@ def test_batch_seed_refinement_on_pathological_bounds(spark):
 
     from webindex.query import _query_terms, _theta_seeds
 
-    n = 1280  # 10 full blocks of 128 docs in one bucket (dense ids)
+    # 32 full blocks of 128 docs in one bucket (dense ids): more blocks than
+    # the first prefix (16), and k above it, so that prefix cannot hold k
+    # strong contributions
+    n = 4096
     rows = []
     for i in range(n):
         if i % 128 == 0:  # one outlier per block: high tf, short doc
@@ -130,7 +133,7 @@ def test_batch_seed_refinement_on_pathological_bounds(spark):
     (df_, idf, h) = stats["zzz"]
     assert df_ == n
 
-    k = 10
+    k = 20
     probe = {}
     seed = _theta_seeds(idx, {h: idf}, k, _probe=probe)[h]
     assert probe["rounds"] > 1  # the first prefix could not prove its k-th

@@ -127,8 +127,12 @@ class Index:
     lineage: DataFrame | None = None
     # url-keyed reverse-lookup projection (url_bucket-partitioned,
     # url_hash-sorted); None on in-memory / pre-round-4 indexes — lookup_url
-    # then falls back to a doc_stats scan
+    # then falls back to a doc_stats scan. load_index leaves it unopened and
+    # records its path in url_index_path instead: its N_URL_BUCKETS
+    # partition dirs exceed Spark's parallel-discovery threshold, so opening
+    # it costs a listing job, paid by the first lookup_url (url_table()).
     url_stats: DataFrame | None = None
+    url_index_path: str | None = field(default=None, repr=False)
     # q-gram dictionary sidecar (build_term_grams); None on in-memory /
     # pre-round-5 indexes — fuzzy/suggest then fall back to the length-
     # banded linear vocabulary scan (query.ensure_term_grams builds and
@@ -154,6 +158,21 @@ class Index:
     # (streaming.live_index), the analogue of Lucene's per-segment
     # deleted-docs bitmap in heap.
     dead_ids: "np.ndarray | None" = None
+    # the driver-local data files of term_stats, as its DataFrame captured
+    # them at open (io.driver_files): the dictionary probe reads them with
+    # pyarrow. None (in-memory, iceberg or non-local tables): the probe is
+    # a Spark filter + collect.
+    term_files: tuple[str, ...] | None = None
+
+    def url_table(self) -> DataFrame | None:
+        """url_stats, opened on first use from url_index_path (None when
+        the index has no url_index sidecar)."""
+        if self.url_index_path is not None:
+            self.url_stats = _sidecar_or_none(
+                self.doc_stats.sparkSession, self.url_index_path
+            )
+            self.url_index_path = None
+        return self.url_stats
 
     def bucket_of(self, doc_id_col: F.Column) -> F.Column:
         """doc_id -> bucket column, usable only when id_space is known."""
@@ -919,7 +938,9 @@ def commit_index_tables(
         # chains added their full job latency to every build and the
         # cluster idled through each one's tail; overlap() runs them on a
         # 3-thread pool.
-        from webindex.io import read_table, write_driver_table, write_table
+        from webindex.io import (
+            driver_files, read_table, write_driver_table, write_table,
+        )
 
         dict_files = dict_file_target(n_docs)
 
@@ -1002,7 +1023,9 @@ def commit_index_tables(
         )
         postings = read_table(spark, f"{out_dir}/postings")
         term_stats = read_table(spark, f"{out_dir}/term_stats")
+        term_files = driver_files(term_stats)
     else:
+        term_files = None
         # materialize the index once — queries must never re-run the build
         postings = postings.persist()
         postings.count()
@@ -1028,6 +1051,7 @@ def commit_index_tables(
         bucket_bits=(
             hash_bucket_bits(n_docs, range_width) if id_space == "hash" else None
         ),
+        term_files=term_files,
     )
 
 
@@ -1098,8 +1122,10 @@ def build_index(
         # 33.6s vs 107s with .persist() (the deserialized cache itself was
         # the build bottleneck) vs 75.6s with 3x re-tokenize. Doubles as the
         # natural checkpoint artifact (same layout checkpoint.py uses).
+        from webindex.io import read_table
+
         runs.write.mode("overwrite").parquet(f"{out_dir}/runs")
-        runs = spark.read.parquet(f"{out_dir}/runs")
+        runs = read_table(spark, f"{out_dir}/runs", fmt="parquet")
     else:
         runs = runs.persist()
 
@@ -1113,26 +1139,28 @@ def build_index(
     return idx
 
 
-def _sidecar_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+def _sidecar_or_none(spark: SparkSession, path: str, read=None):
     """An OPTIONAL index sidecar table, None only when it is absent (conf:
     pre-round-2 indexes lack it, load_index falls back to the caller's
     conf; url_index: pre-round-4, lookup_url falls back to doc_stats;
     term_grams: pre-round-5, fuzzy/suggest fall back to the length-banded
-    vocab scan)."""
+    vocab scan). `read` is io.read_table (the default: a lazy DataFrame) or
+    io.read_rows (its rows)."""
     from webindex.io import read_table, table_format
     from webindex.fsutil import path_exists
 
+    read = read or read_table
     if table_format() == "parquet":
         if not path_exists(spark, path):
             return None
-        return read_table(spark, path)
+        return read(spark, path)
     # iceberg: the absence check IS the read — catch ONLY table-not-found
     # (a transient catalog/auth failure must propagate, not silently
     # degrade the consumer to its fallback scan)
     from pyspark.errors import AnalysisException
 
     try:
-        return read_table(spark, path)
+        return read(spark, path)
     except AnalysisException as e:
         klass = getattr(e, "getErrorClass", lambda: None)() or ""
         if "TABLE_OR_VIEW_NOT_FOUND" in klass or "cannot be found" in str(e):
@@ -1143,13 +1171,18 @@ def _sidecar_or_none(spark: SparkSession, path: str) -> DataFrame | None:
 def load_index(
     spark: SparkSession, out_dir: str, conf: BM25Config = DEFAULT
 ) -> Index:
-    """Re-open a committed index (tables read lazily).
+    """Re-open a committed index WITHOUT a Spark job on a driver-local
+    parquet index: the one-row sidecars are read on the driver
+    (io.read_rows), the tables open lazily with their schemas pinned from
+    their footers (io.read_table), and url_index opens on the first
+    lookup_url (Index.url_table). Other filesystems and iceberg take the
+    Spark reads.
 
     If the index has a conf sidecar (written by build_index since round 2),
     it OVERRIDES the conf argument: k1/b/block_size/quantize_norms are baked
     into the encoded blocks, so querying with anything else would silently
     mis-score. Pre-sidecar indexes fall back to the conf argument."""
-    from webindex.io import read_table
+    from webindex.io import driver_files, read_rows, read_table
 
     range_width = DEFAULT_RANGE_WIDTH
     id_space: str | None = None
@@ -1158,9 +1191,9 @@ def load_index(
     # permissions) must propagate — silently dropping the sidecar would
     # varint-decode quantized norm bytes as garbage and mis-score quietly,
     # defeating the sidecar's whole guarantee.
-    conf_table = _sidecar_or_none(spark, f"{out_dir}/conf")
-    if conf_table is not None:
-        c = conf_table.collect()[0]
+    conf_rows = _sidecar_or_none(spark, f"{out_dir}/conf", read_rows)
+    if conf_rows is not None:
+        c = conf_rows[0]
         conf = BM25Config(
             k1=float(c["k1"]),
             b=float(c["b"]),
@@ -1170,9 +1203,9 @@ def load_index(
         range_width = int(c["range_width"])
         # pre-round-5 sidecars lack id_space: record None (unknown), never
         # guess — a wrong bucket map would make per-bucket bounds unsound
-        id_space = c.asDict().get("id_space")
+        id_space = c.get("id_space")
 
-    stats = read_table(spark, f"{out_dir}/corpus_stats").collect()[0]
+    stats = read_rows(spark, f"{out_dir}/corpus_stats")[0]
     postings = read_table(spark, f"{out_dir}/postings")
     term_stats = read_table(spark, f"{out_dir}/term_stats")
     if "term_hash" not in postings.columns:
@@ -1189,7 +1222,7 @@ def load_index(
         avgdl=float(stats["avgdl"]),
         conf=conf,
         range_width=range_width,
-        url_stats=_sidecar_or_none(spark, f"{out_dir}/url_index"),
+        url_index_path=f"{out_dir}/url_index",
         term_grams=_sidecar_or_none(spark, f"{out_dir}/term_grams"),
         id_space=id_space,
         bucket_bits=(
@@ -1197,4 +1230,5 @@ def load_index(
             if id_space == "hash"
             else None
         ),
+        term_files=driver_files(term_stats),
     )

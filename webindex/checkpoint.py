@@ -51,7 +51,7 @@ from webindex.build import (
     commit_index_tables,
 )
 from webindex.fsutil import dir_bytes, path_exists
-from webindex.io import append_driver_rows, write_driver_table
+from webindex.io import append_driver_rows, read_rows, read_table, write_driver_table
 
 
 def bucket_col(doc_id_col, n_buckets: int) -> F.Column:
@@ -71,17 +71,17 @@ def read_lineage(spark: SparkSession, workdir: str) -> DataFrame:
 
 def done_partitions(spark: SparkSession, workdir: str) -> list[int]:
     """Partition ids (build buckets / batch ids) whose lineage says done,
-    ascending (read_lineage's policy; a fresh workdir costs no Spark job)."""
+    ascending, with read_lineage's policy. Read and deduped on the driver
+    (io.read_rows: no Spark job on a local workdir). Lineage mixes
+    Spark-written and driver-appended files, so every file is read as
+    schema.LINEAGE."""
     if not path_exists(spark, f"{workdir}/lineage"):
         return []
-    rows = (
-        read_lineage(spark, workdir)
-        .filter(F.col("status") == "done")
-        .select("partition_id")
-        .distinct()
-        .collect()
+    rows = read_rows(
+        spark, f"{workdir}/lineage", ["partition_id"], [("status", "==", "done")],
+        schema=schema.LINEAGE, fmt="parquet",
     )
-    return sorted(int(r["partition_id"]) for r in rows)
+    return sorted({int(r["partition_id"]) for r in rows})
 
 
 def commit_runs_partitions(
@@ -112,7 +112,7 @@ def commit_runs_partitions(
     )
     elapsed = time.monotonic() - t0
     stats = (
-        spark.read.parquet(f"{workdir}/runs")
+        read_table(spark, f"{workdir}/runs", fmt="parquet")
         .filter(F.col(part_col).isin(parts))
         .groupBy(part_col)
         .agg(
@@ -169,9 +169,7 @@ def build_runs_checkpointed(
     # every resume must match.
     meta_path = f"{workdir}/_build_meta"
     if path_exists(spark, meta_path):
-        committed = int(
-            spark.read.parquet(meta_path).collect()[0]["n_buckets"]
-        )
+        committed = int(read_rows(spark, meta_path, fmt="parquet")[0]["n_buckets"])
         if committed != n_buckets:
             raise ValueError(
                 f"n_buckets={n_buckets} but {workdir} was checkpointed with "
@@ -213,7 +211,7 @@ def build_runs_checkpointed(
             chunk,
         )
 
-    return spark.read.parquet(f"{workdir}/runs").drop("build_bucket")
+    return read_table(spark, f"{workdir}/runs", fmt="parquet").drop("build_bucket")
 
 
 def build_index_resumable(
@@ -243,7 +241,7 @@ def build_index_resumable(
     idx = commit_index_tables(
         spark,
         runs,
-        spark.read.parquet(f"{workdir}/doc_urls"),
+        read_table(spark, f"{workdir}/doc_urls", fmt="parquet"),
         conf,
         range_width=range_width,
         id_space="hash" if doc_id_method == "hash" else "dense",

@@ -5,9 +5,11 @@ src/nmr_FAIR_DOs/connectors/elasticsearch.py:250-306 — multi_match query,
 BM25-ranked hits, top-1 read) to arbitrary k over our native index:
 
     query string -> tokenize (same analyzer as build)
-      -> term_stats lookup (df+idf+term_hash per query term; one tiny job —
-         term_stats is also the term dictionary, so query strings are mapped
-         to the 8-byte hash keys the postings table is clustered by)
+      -> term_stats lookup (df+idf+term_hash per query term; no Spark job
+         on a driver-local index — a pyarrow read of the dictionary files
+         on the driver; term_stats is also the term dictionary, so query
+         strings are mapped to the 8-byte hash keys the postings table is
+         clustered by)
       -> candidate posting blocks (filter term_hash IN (...) — file/row-group
          pruning on the hash-clustered postings table)
       -> groupBy(bucket) applyInPandas  [ONE fused stage]:
@@ -74,13 +76,26 @@ _QHIT = T.StructType(
 def _query_terms(index: Index, query: str) -> dict[str, tuple[int, float, int]]:
     """{term: (df, idf, term_hash)} for query terms present in the corpus
     (duplicates dedup'd, matching Lucene's per-field term dedup in
-    multi_match). One Spark job against the term_stats dictionary; df rides
-    along so WAND's rarest-term choice is free, term_hash so the postings
-    filter never hashes query strings itself."""
-    terms = sorted(set(tokenize(query)))
+    multi_match); df rides along so WAND's rarest-term choice is free,
+    term_hash so the postings filter never hashes query strings itself."""
+    return _lookup_terms(index, sorted(set(tokenize(query))))
+
+
+def _lookup_terms(index: Index, terms: list[str]) -> dict[str, tuple[int, float, int]]:
+    """{term: (df, idf, term_hash)} for the `terms` in the dictionary — THE
+    dictionary probe. A disk-backed local index is probed on the driver: a
+    pyarrow read of four columns of the term_stats files the index opened
+    (Index.term_files), the term IN filter pushed into the scan, no Spark
+    job. Otherwise one Spark job (filter + collect)."""
     if not terms:
         return {}
-    rows = index.term_stats.filter(F.col("term").isin(terms)).collect()
+    cols = ["term", "df", "idf", "term_hash"]
+    if index.term_files is not None:
+        from webindex.io import local_rows
+
+        rows = local_rows(index.term_files, cols, [("term", "in", terms)])
+    else:
+        rows = index.term_stats.filter(F.col("term").isin(terms)).select(*cols).collect()
     return {
         r["term"]: (int(r["df"]), float(r["idf"]), int(r["term_hash"])) for r in rows
     }
@@ -522,8 +537,11 @@ def _theta_seeds(
     wrong #6'). No term: no job."""
     drift = F.greatest(F.lit(1.0), F.lit(index.avgdl) / F.col("avgdl0"))
     # prefix size: enough full blocks to hold k postings, padded for partial
-    # blocks; grows until the stop condition proves every value exact
-    m = max(4, 2 * -(-k // index.conf.block_size))
+    # blocks; grows until the stop condition proves every value exact. The
+    # floor of 16 blocks resolves a hot rarest term in one round (at 4, a
+    # third of a head-query log's rarest terms needed a second round, two
+    # more jobs with the first prefix decoded again)
+    m = max(16, 2 * -(-k // index.conf.block_size))
     todo, seeds = dict(idfs), {}
     while todo:
         hashes = sorted(todo)
@@ -1640,13 +1658,14 @@ def lookup_url(index: Index, url: str) -> DataFrame:
     pre-round-4 indexes fall back to the doc_stats scan (same 3-column
     output either way — the API shape is vintage-invariant). A pending
     delete (live_index()) is not found."""
-    if index.url_stats is None:
+    urls = index.url_table()
+    if urls is None:
         hits = index.doc_stats.filter(F.col("url") == url)
     else:
         from webindex.build import N_URL_BUCKETS
 
         lit = F.lit(url)
-        hits = index.url_stats.filter(
+        hits = urls.filter(
             (F.col("url_bucket") == F.pmod(F.xxhash64(lit), F.lit(N_URL_BUCKETS)))
             & (F.col("url_hash") == F.xxhash64(lit))
             & (F.col("url") == lit)
@@ -2021,10 +2040,7 @@ def suggest_terms(
     out_schema = "input string, suggestion string, distance int, df long"
     if not toks:
         return spark.createDataFrame([], out_schema)
-    known = {
-        r["term"]
-        for r in index.term_stats.filter(F.col("term").isin(toks)).collect()
-    }
+    known = _lookup_terms(index, toks)
     missing = [t for t in toks if t not in known]
     if not missing:
         return spark.createDataFrame([], out_schema)
@@ -3148,10 +3164,7 @@ def suggest_phrase(
     if not toks:
         return spark.createDataFrame([], out_schema)
     uniq = sorted(set(toks))
-    known = {
-        r["term"]: int(r["df"])
-        for r in index.term_stats.filter(F.col("term").isin(uniq)).collect()
-    }
+    known = {t: df for t, (df, _, _) in _lookup_terms(index, uniq).items()}
     missing = [t for t in uniq if t not in known]
     cand_of: dict[str, list[tuple[str, int, int]]] = {
         t: [(t, 0, known[t])] for t in known
@@ -3191,10 +3204,10 @@ def suggest_phrase(
     # a count bound of all slots, k=1 per bucket.
     phrase_terms = [sorted(set(tokenize(p))) for p, _ in ranked]
     hash_of = {
-        r["term"]: int(r["term_hash"])
-        for r in index.term_stats.filter(
-            F.col("term").isin(sorted({t for ts in phrase_terms for t in ts}))
-        ).collect()
+        t: h
+        for t, (_, _, h) in _lookup_terms(
+            index, sorted({t for ts in phrase_terms for t in ts})
+        ).items()
     }
     specs = {
         str(i): _Spec(

@@ -70,6 +70,7 @@ from webindex.build import (
     term_stats_from_postings,
 )
 from webindex.checkpoint import commit_runs_partitions, done_partitions
+from webindex.io import driver_files, footer_schema, read_rows, read_table
 
 
 from webindex.fsutil import hadoop_fs as _hadoop_fs, hadoop_delete as _hadoop_delete
@@ -77,14 +78,23 @@ from webindex.fsutil import hadoop_fs as _hadoop_fs, hadoop_delete as _hadoop_de
 
 def _committed_positions(spark: SparkSession, workdir: str) -> bool | None:
     """Whether the committed runs are positional — a schema-only probe of
-    <workdir>/runs, no data read. None when no runs are committed yet."""
+    <workdir>/runs, no data read: one footer on the driver (io.footer_schema),
+    Spark's schema inference elsewhere. None when no runs are committed
+    yet."""
     from pyspark.errors import AnalysisException
 
-    try:
-        cols = spark.read.parquet(f"{workdir}/runs").columns
-    except AnalysisException:
+    from webindex.fsutil import path_exists
+
+    runs = f"{workdir}/runs"
+    if not path_exists(spark, runs):
         return None
-    return "positions" in cols
+    pinned = footer_schema(spark, runs)
+    if pinned is None:
+        try:
+            pinned = spark.read.parquet(runs).schema
+        except AnalysisException:  # no data file committed yet
+            return None
+    return "positions" in pinned.fieldNames()
 
 
 def _swap_partition_dirs(
@@ -440,7 +450,7 @@ class IncrementalIndexer:
 
         if not path_exists(self.spark, f"{self.workdir}/deletes"):
             return None
-        d = self.spark.read.parquet(f"{self.workdir}/deletes")
+        d = read_table(self.spark, f"{self.workdir}/deletes", fmt="parquet")
         if min_batch is not None:
             d = d.filter(F.col("batch_id") > min_batch)
         return d.select("doc_id", "batch_id")
@@ -465,7 +475,7 @@ class IncrementalIndexer:
         if not dir_bytes(self.spark, p):
             return None
         try:
-            row = self.spark.read.parquet(p).collect()[0]
+            row = read_rows(self.spark, p, fmt="parquet")[0]
         except Exception as e:
             if full:
                 return None
@@ -474,17 +484,16 @@ class IncrementalIndexer:
                 "on an IncrementalIndexer constructed with this workdir's "
                 "BM25Config to rebuild tables and state from the runs history"
             ) from e
-        d = row.asDict()
         # round-3+ layout persists the conf: restore it (pre-conf state rows
         # lack "k1" and fall through to the constructor's conf)
-        if "k1" in d:
+        if "k1" in row:
             self.conf = BM25Config(
-                k1=float(d["k1"]),
-                b=float(d["b"]),
-                block_size=int(d["block_size"]),
-                quantize_norms=bool(d["quantize_norms"]),
+                k1=float(row["k1"]),
+                b=float(row["b"]),
+                block_size=int(row["block_size"]),
+                quantize_norms=bool(row["quantize_norms"]),
             )
-            self.positions = bool(d["positions"])
+            self.positions = bool(row["positions"])
         return row
 
     def _write_state(
@@ -563,10 +572,11 @@ class IncrementalIndexer:
         bucket_bits: int | None = None,
     ) -> Index:
         spark, out = self.spark, f"{self.workdir}/index"
+        term_stats = read_table(spark, f"{out}/term_stats", fmt="parquet")
         return Index(
-            postings=spark.read.parquet(f"{out}/postings"),
-            term_stats=spark.read.parquet(f"{out}/term_stats"),
-            doc_stats=spark.read.parquet(f"{out}/doc_stats"),
+            postings=read_table(spark, f"{out}/postings", fmt="parquet"),
+            term_stats=term_stats,
+            doc_stats=read_table(spark, f"{out}/doc_stats", fmt="parquet"),
             n_docs=n_docs,
             avgdl=avgdl,
             conf=self.conf,
@@ -576,6 +586,7 @@ class IncrementalIndexer:
             # buckets the committed blocks don't use)
             id_space="hash",
             bucket_bits=bucket_bits,
+            term_files=driver_files(term_stats, "parquet"),
         )
 
     def _finish_tables(self, n_docs: int, term_dict: DataFrame) -> None:
@@ -595,7 +606,7 @@ class IncrementalIndexer:
         # and live queries pay per-file open cost on every stats probe
         write_table(
             term_stats_from_postings(
-                spark.read.parquet(f"{out}/postings"), n_docs, term_dict
+                read_table(spark, f"{out}/postings", fmt="parquet"), n_docs, term_dict
             ),
             staging,
             sort_cols=["term"],
@@ -676,15 +687,20 @@ class IncrementalIndexer:
             int(state["range_width"]),
             int(state["bucket_bits"]),
         )
-        tombs = self._new_tombstones(min_batch=int(state["max_batch"]))
-        if tombs is None:
+        from webindex.fsutil import path_exists
+
+        # _new_tombstones' policy (absent: none; unreadable: raise), read
+        # and deduped on the driver: the set is driver-scale
+        p = f"{self.workdir}/deletes"
+        if not path_exists(self.spark, p):
             return idx
         import numpy as np
 
-        # dedupe on the driver: a distinct() here is a shuffle, i.e. two
-        # more Spark jobs under AQE, for a set that is driver-scale
-        ids = [r["doc_id"] for r in tombs.select("doc_id").collect()]
-        dead = np.unique(np.asarray(ids, dtype=np.int64))
+        rows = read_rows(
+            self.spark, p, ["doc_id"], [("batch_id", ">", int(state["max_batch"]))],
+            fmt="parquet",
+        )
+        dead = np.unique(np.asarray([r["doc_id"] for r in rows], dtype=np.int64))
         if len(dead):
             idx.dead_ids = dead
         return idx
@@ -711,12 +727,14 @@ class IncrementalIndexer:
         if full:
             state = None
         pending = f"{self.workdir}/_compact_pending"
-        if state is not None and path_exists(self.spark, pending):
+        if not full and path_exists(self.spark, pending):
             # a previous incremental compact crashed between its table swaps
             # and its state write: the committed tables and the state counts
             # disagree, and re-running the delta against the already-swapped
             # doc_stats would double-count removals. The runs history is the
-            # ground truth — rebuild from it.
+            # ground truth — rebuild from it. This holds with no readable
+            # state too: a full compact under the constructor's conf would
+            # silently drop the workdir's.
             raise RuntimeError(
                 "interrupted incremental compaction detected "
                 f"({pending} exists): run compact(full=True) to rebuild "
@@ -742,8 +760,8 @@ class IncrementalIndexer:
                 "least one batch first (tombstone-only workdirs have no "
                 "corpus to compact)"
             )
-        runs = spark.read.parquet(f"{self.workdir}/runs")
-        doc_urls = spark.read.parquet(f"{self.workdir}/doc_urls")
+        runs = read_table(spark, f"{self.workdir}/runs", fmt="parquet")
+        doc_urls = read_table(spark, f"{self.workdir}/doc_urls", fmt="parquet")
         runs_latest = self._latest_wins(runs, doc_urls)
         doc_urls_latest = self._latest_urls(doc_urls)
         # tombstones: per doc the LATEST event wins across the full history —
@@ -837,16 +855,16 @@ class IncrementalIndexer:
         old_n, old_sum = int(state["n_docs"]), float(state["sum_dl"])
         delta_batches = [b for b in done if b > int(state["max_batch"])]
 
-        runs = spark.read.parquet(f"{self.workdir}/runs").filter(
+        runs = read_table(spark, f"{self.workdir}/runs", fmt="parquet").filter(
             F.col("batch_id").isin(delta_batches)
         )
-        doc_urls = spark.read.parquet(f"{self.workdir}/doc_urls").filter(
+        doc_urls = read_table(spark, f"{self.workdir}/doc_urls", fmt="parquet").filter(
             F.col("batch_id").isin(delta_batches)
         )
         # tombstone events newer than the compaction frontier: a delete
         # outranked by a same-delta recrawl is void (latest event wins); a
         # delete of a never-seen doc is a no-op that still advances state
-        old_doc_stats = spark.read.parquet(f"{out}/doc_stats")
+        old_doc_stats = read_table(spark, f"{out}/doc_stats", fmt="parquet")
         dead_ids, n_dead = None, 0
         tombs = self._new_tombstones(min_batch=int(state["max_batch"]))
         if tombs is not None:
@@ -903,7 +921,7 @@ class IncrementalIndexer:
         # The new blocks are staged to a scratch dir then swapped in per
         # bucket (reading and overwriting the same parquet path in one job is
         # both disallowed and unsafe).
-        old_blocks = spark.read.parquet(f"{out}/postings").filter(
+        old_blocks = read_table(spark, f"{out}/postings", fmt="parquet").filter(
             F.col("bucket").isin(buckets)
         )
         old_rows = decode_postings_to_runs(
@@ -926,7 +944,7 @@ class IncrementalIndexer:
         # remapped — never silently merged into a stranger's postings.
         from webindex.build import resolve_term_hashes, term_hash_col, term_hash_expr
 
-        old_dict = spark.read.parquet(f"{out}/term_stats").select(
+        old_dict = read_table(spark, f"{out}/term_stats", fmt="parquet").select(
             "term", "term_hash"
         )
         term_dict, remap = resolve_term_hashes(
