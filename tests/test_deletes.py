@@ -627,6 +627,30 @@ def test_live_index_lookups_hide_dead(request, positional, lookup):
     assert run(live) == [r for r in before if r["doc_id"] != dead]
 
 
+def test_live_index_lookup_url_probes_doc_id(pending_delete):
+    """A streaming index's ids are always xxhash64(url): lookup_url on
+    live_index() pushes the url's id into the doc_stats scan, and the
+    pending delete stays not found while a live doc is found. (The dead
+    url's id predicate contradicts the dead-ids filter, so Catalyst plans
+    that lookup as an empty relation.)"""
+    import io
+    from contextlib import redirect_stdout
+
+    idx0, live, dead = pending_delete[:3]
+    assert live.url_hash_ids
+    urls = {
+        int(r["doc_id"]): r["url"]
+        for r in idx0.doc_stats.select("doc_id", "url").collect()
+    }
+    other = min(d for d in urls if d != dead)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        lookup_url(live, urls[other]).explain("formatted")
+    assert f"EqualTo(doc_id,{other})" in buf.getvalue()
+    assert lookup_url(live, urls[dead]).collect() == []
+    assert [r["doc_id"] for r in lookup_url(live, urls[other]).collect()] == [other]
+
+
 def test_live_index_dedupes_tombstones_on_driver(spark, tmp_path):
     """live_index() reads overlapping pending deletes (one url tombstoned by
     two delete batches) into the same sorted, unique dead_ids, deduped on

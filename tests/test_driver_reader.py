@@ -75,10 +75,12 @@ def test_pinned_schemas_match_spark_inference(spark, tmp_path):
     ]:
         out = str(tmp_path / name)
         build_index(spark, pages, text_col="html", out_dir=out, **kw)
-        _assert_pinned_schemas(spark, out, ["url_index"])
+        _assert_pinned_schemas(spark, out)
+        assert not os.path.exists(f"{out}/url_index")
     wd = str(tmp_path / "resumable")
     build_index_resumable(spark, pages, wd, n_buckets=4, chunk_buckets=2)
-    _assert_pinned_schemas(spark, wd, ["runs", "doc_urls", "index/url_index"])
+    _assert_pinned_schemas(spark, wd, ["runs", "doc_urls"])
+    assert not os.path.exists(f"{wd}/index/url_index")
 
     wd = str(tmp_path / "stream")
     ing = IncrementalIndexer(spark, wd, text_col="text", positions=True)
@@ -111,6 +113,7 @@ def test_load_index_and_probe_run_no_spark_job(spark, index_dir):
         c["k1"], c["b"], c["block_size"], c["range_width"]
     )
     assert idx.id_space == c["id_space"] and idx.term_files
+    assert idx.url_hash_ids is c["url_hash_ids"] is True
 
     queries = ["data merge w150", "w1 w2 w3 zzzz", "the of data data", "zzzz", ""]
     spark_probe = load_index(spark, index_dir)
@@ -141,21 +144,59 @@ def test_stale_index_probe_fails_on_replaced_dictionary(spark, tmp_path):
     )
 
 
-def test_lookup_url_opens_url_index_on_first_use(spark, index_dir):
-    """load_index leaves url_index unopened (its 64 partition dirs cost a
-    listing job); the first lookup_url opens it and keeps it on the Index,
-    and finds the url's doc_stats row."""
+def test_load_index_and_first_lookup_url_run_one_job(spark, index_dir):
+    """load_index and the first lookup_url after it run one Spark job
+    together: the lookup's doc_stats probe. The url's doc_stats row is
+    found, and an absent url yields none."""
     url = make_pages_pdf(0, 120)["url"].iloc[7]
-    idx = load_index(spark, index_dir)
-    assert idx.url_stats is None
-    got = lookup_url(idx, url).collect()
-    assert idx.url_stats is not None and idx.url_index_path is None
+
+    def first_lookup():
+        idx = load_index(spark, index_dir)
+        return idx, lookup_url(idx, url).collect()
+
+    (idx, got), jobs = _jobs(spark, first_lookup)
+    assert jobs == 1
     assert [(r["url"], r["doc_len"]) for r in got] == [
         (r["url"], r["doc_len"])
         for r in idx.doc_stats.filter(idx.doc_stats.url == url).collect()
     ]
     assert len(got) == 1
     assert lookup_url(idx, "https://absent.example/x").collect() == []
+
+
+def test_legacy_index_dir_loads_and_looks_up_urls(spark, index_dir, tmp_path):
+    """An index dir from an older build: its conf lacks url_hash_ids and it
+    holds a url_index/ table. With that table's files corrupted, the index
+    still loads (url_hash_ids false) and lookup_url answers as on the clean
+    index, through the url-only filter, so nothing opens the dir."""
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from webindex import schema
+
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(index_dir, legacy)
+    old_conf = T.StructType(
+        [f for f in schema.INDEX_CONF.fields if f.name != "url_hash_ids"]
+    )
+    row = io.read_rows(spark, f"{legacy}/conf")[0]
+    shutil.rmtree(f"{legacy}/conf")
+    io.write_driver_table(
+        spark, [tuple(row[f.name] for f in old_conf.fields)], old_conf,
+        f"{legacy}/conf",
+    )
+    for b in range(3):
+        os.makedirs(f"{legacy}/url_index/url_bucket={b}")
+        with open(f"{legacy}/url_index/url_bucket={b}/part-0.parquet", "wb") as fh:
+            fh.write(b"not a parquet file")
+    urls = list(make_pages_pdf(0, 120)["url"].iloc[[0, 7, 119]])
+    urls.append("https://absent.example/x")
+    clean, old = load_index(spark, index_dir), load_index(spark, legacy)
+    assert clean.url_hash_ids and not old.url_hash_ids
+    for u in urls:
+        assert lookup_url(old, u).collect() == lookup_url(clean, u).collect()
+    assert sum(len(lookup_url(old, u).collect()) for u in urls) == 3
 
 
 def test_live_index_and_ingest_read_bookkeeping_on_driver(spark, tmp_path):

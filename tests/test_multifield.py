@@ -57,60 +57,68 @@ def test_point_lookups(two_field):
     assert len(back) == 1 and back[0]["doc_id"] == 5
 
 
-def test_lookup_url_partition_pruned(spark, tmp_path):
-    """Disk-backed url lookup (round 4): the url_index projection is
-    partitioned by url_bucket, so the probe must (a) show a PartitionFilters
-    directory prune in the plan and (b) demonstrably never OPEN files of
-    other buckets — proven by corrupting every other bucket's parquet files
-    and watching the lookup still succeed where a full scan crashes."""
-    import glob
+def _pushed_filters(frame):
     import io
-
     from contextlib import redirect_stdout
 
-    from webindex.build import N_URL_BUCKETS, build_index
-    from webindex.pagesgen import make_pages_pdf
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        frame.explain("formatted")
+    return [ln for ln in buf.getvalue().splitlines() if "PushedFilters" in ln]
 
+
+def test_lookup_url_probes_doc_id(spark, tmp_path):
+    """Disk-backed url lookup on a hash index: every doc_id is
+    xxhash64(url), so the doc_stats scan carries the url's id as a pushed
+    long literal (xxhash64 of the literal constant-folds) — the same
+    doc_id-sorted row-group pruning lookup_doc gets — beside the url
+    equality."""
     out = str(tmp_path / "idx")
     pdf = make_pages_pdf(0, 200)
     idx = build_index(
         spark, spark.createDataFrame(pdf), text_col="html",
         doc_id_method="hash", out_dir=out,
     )
-    assert idx.url_stats is not None
+    assert idx.url_hash_ids
     row = idx.doc_stats.orderBy("doc_id").limit(1).collect()[0]
     url, doc_id = row["url"], row["doc_id"]
 
-    probe = lookup_url(idx, url)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "url_bucket" in plan, plan
-
-    # files-read < total, behaviorally: corrupt EVERY other bucket's files;
-    # the pruned lookup never opens them, an unpruned scan blows up
-    target_bucket = spark.sql(
-        f"SELECT pmod(xxhash64('{url}'), {N_URL_BUCKETS}) AS b"
-    ).collect()[0]["b"]
-    corrupted = 0
-    for d in glob.glob(f"{out}/url_index/url_bucket=*"):
-        if d.endswith(f"url_bucket={target_bucket}"):
-            continue
-        for f in glob.glob(f"{d}/*.parquet"):
-            with open(f, "wb") as fh:
-                fh.write(b"not a parquet file")
-            corrupted += 1
-    assert corrupted > 0  # 200 urls over 64 buckets: other buckets exist
+    pushed = _pushed_filters(lookup_url(idx, url))
+    assert len(pushed) == 1, pushed
+    assert f"EqualTo(doc_id,{doc_id})" in pushed[0], pushed
+    assert f"EqualTo(url,{url})" in pushed[0], pushed
 
     got = lookup_url(idx, url).collect()
     assert len(got) == 1 and got[0]["doc_id"] == doc_id
     assert got[0]["doc_len"] > 0
+    assert lookup_url(idx, "https://absent.example/x").collect() == []
 
-    import pytest as _pytest
 
-    with _pytest.raises(Exception):
-        spark.read.parquet(f"{out}/url_index").groupBy().count().collect()
+@pytest.mark.parametrize("on_disk", [False, True])
+def test_lookup_url_caller_ids_under_hash_method(spark, tmp_path, on_disk):
+    """Caller-supplied doc_ids under the default hash method (assign_doc_ids
+    keeps them): id_space is "hash" but no doc_id is xxhash64(url), so
+    lookup_url must not probe by id — it filters on the url alone and finds
+    every doc under its caller id, in memory and after load_index."""
+    from webindex.build import load_index
+
+    pdf = make_pages_pdf(0, 120)
+    pdf.insert(0, "doc_id", np.arange(120, dtype=np.int64))
+    out = str(tmp_path / "idx") if on_disk else None
+    idx = build_index(
+        spark, spark.createDataFrame(pdf), text_col="html", range_width=64,
+        out_dir=out,
+    )
+    if on_disk:
+        idx = load_index(spark, out)
+    assert idx.id_space == "hash" and not idx.url_hash_ids
+    for i in (0, 7, 119):
+        got = lookup_url(idx, pdf["url"][i]).collect()
+        assert [(r["doc_id"], r["url"]) for r in got] == [(i, pdf["url"][i])]
+    assert not any("EqualTo(doc_id" in p for p in _pushed_filters(
+        lookup_url(idx, pdf["url"][0])
+    ))
+    assert lookup_url(idx, "https://absent.example/x").collect() == []
 
 
 def test_most_fields_matches_oracle_sum(two_field):

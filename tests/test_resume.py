@@ -43,10 +43,11 @@ def test_resume_matches_clean_run(spark, tmp_path):
     assert resumed.n_docs == clean.n_docs
     assert abs(resumed.avgdl - clean.avgdl) < 1e-12
 
-    # resumable builds carry the url_index projection too (same contract as
-    # build_index): lookup_url resolves a known url to its doc_id
+    # resumable hash builds measure url_hash_ids as build_index does:
+    # lookup_url resolves a known url to its doc_id by the pruned id probe
     from webindex.query import lookup_url
 
+    assert resumed.url_hash_ids
     some = resumed.doc_stats.limit(1).collect()[0]
     got = lookup_url(resumed, some["url"]).collect()
     assert [r["doc_id"] for r in got] == [some["doc_id"]]
@@ -180,6 +181,6 @@ def test_resumable_and_batch_builds_write_identical_tables(spark, tmp_path):
     build_index(spark, pages, out_dir=batch)
     wd = str(tmp_path / "resumable")
     build_index_resumable(spark, pages, wd, n_buckets=4, chunk_buckets=2)
-    for table in ("postings", "term_stats", "doc_stats", "term_grams", "url_index"):
+    for table in ("postings", "term_stats", "doc_stats", "term_grams", "conf"):
         a = _table_rows(spark, f"{batch}/{table}")
         assert a and a == _table_rows(spark, f"{wd}/index/{table}"), table

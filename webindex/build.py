@@ -50,25 +50,6 @@ from webindex.textproc import extract_and_tokenize, tokenize
 # docs per range bucket; caps per-task postings for df=N terms. At 10^12 docs
 # the hottest term spreads over ~4M buckets/reducers.
 DEFAULT_RANGE_WIDTH = 1 << 18
-# url_index partition fan-out; see the url_index write in build_index
-N_URL_BUCKETS = 64
-
-
-def url_index_projection(doc_stats: DataFrame) -> DataFrame:
-    """The (doc_id, url, doc_len, url_hash, url_bucket) reverse-lookup
-    projection — the ONE definition of the pmod/xxhash bucket contract
-    `query.lookup_url` prunes against. commit_index_tables derives the
-    url_index table from this; write it url_hash-sorted within url_bucket
-    partitions."""
-    return doc_stats.select(
-        "doc_id",
-        "url",
-        "doc_len",
-        F.xxhash64("url").alias("url_hash"),
-        F.pmod(F.xxhash64("url"), F.lit(N_URL_BUCKETS)).alias("url_bucket"),
-    )
-
-
 # q-gram width of the fuzzy/suggest dictionary sidecar (term_grams).
 # 2, not 3: the candidate bound needs |distinct grams| - q*fuzziness >= 1,
 # and with q=3 a fuzziness-1 lookup is vacuous below 7 distinct grams —
@@ -125,14 +106,6 @@ class Index:
     conf: BM25Config = field(default_factory=lambda: DEFAULT)
     range_width: int = DEFAULT_RANGE_WIDTH
     lineage: DataFrame | None = None
-    # url-keyed reverse-lookup projection (url_bucket-partitioned,
-    # url_hash-sorted); None on in-memory / pre-round-4 indexes — lookup_url
-    # then falls back to a doc_stats scan. load_index leaves it unopened and
-    # records its path in url_index_path instead: its N_URL_BUCKETS
-    # partition dirs exceed Spark's parallel-discovery threshold, so opening
-    # it costs a listing job, paid by the first lookup_url (url_table()).
-    url_stats: DataFrame | None = None
-    url_index_path: str | None = field(default=None, repr=False)
     # q-gram dictionary sidecar (build_term_grams); None on in-memory /
     # pre-round-5 indexes — fuzzy/suggest then fall back to the length-
     # banded linear vocabulary scan (query.ensure_term_grams builds and
@@ -145,6 +118,13 @@ class Index:
     # back to bucket-agnostic behavior rather than guess
     id_space: str | None = None
     bucket_bits: int | None = None
+    # every doc_id is xxhash64(url), as measured over the committed
+    # doc_stats (assert_no_docid_collisions): id_space "hash" does not prove
+    # it, since assign_doc_ids keeps a caller's doc_id column. lookup_url
+    # then probes the doc_id-sorted doc_stats by id too. False = unknown
+    # (dense / provided / caller ids, indexes without the conf column):
+    # lookup_url filters on url alone.
+    url_hash_ids: bool = False
     # live-docs filter (round 5): doc_ids tombstoned since the last compact,
     # dropped at decode by every query kernel (query._candidate_plan hands
     # them to the BM25 scorer, the filter-context count kernel and the
@@ -163,16 +143,6 @@ class Index:
     # pyarrow. None (in-memory, iceberg or non-local tables): the probe is
     # a Spark filter + collect.
     term_files: tuple[str, ...] | None = None
-
-    def url_table(self) -> DataFrame | None:
-        """url_stats, opened on first use from url_index_path (None when
-        the index has no url_index sidecar)."""
-        if self.url_index_path is not None:
-            self.url_stats = _sidecar_or_none(
-                self.doc_stats.sparkSession, self.url_index_path
-            )
-            self.url_index_path = None
-        return self.url_stats
 
     def bucket_of(self, doc_id_col: F.Column) -> F.Column:
         """doc_id -> bucket column, usable only when id_space is known."""
@@ -537,13 +507,14 @@ def resolve_term_hashes(
     return term_dict, remap
 
 
-def assert_no_docid_collisions(doc_stats: DataFrame) -> DataFrame:
+def assert_no_docid_collisions(doc_stats: DataFrame) -> bool:
     """Raise if any doc_id holds more than one row (one thin agg over the
-    committed doc_stats). Two distinct urls on one id is an xxhash64(url)
-    collision — expected pair count n²/2⁶⁵ ≈ 3e4 at the 10^12-doc design
-    target, each silently merging two documents, so it gets the same
-    loud-failure standard as term hashes (remedy: widen the doc key or
-    assign dense ids). One url twice is a duplicate-input contract breach —
+    committed doc_stats); return whether every doc_id is xxhash64(url)
+    (Index.url_hash_ids), counted by the same agg. Two distinct urls on
+    one id is an xxhash64(url) collision — expected pair count n²/2⁶⁵ ≈
+    3e4 at the 10^12-doc design target, each silently merging two
+    documents, so it gets the same loud-failure standard as term hashes
+    (remedy: widen the doc key or assign dense ids). One url twice is a duplicate-input contract breach —
     pass dedup_urls=True (or dedup upstream).
 
     Fast path: one global (count, distinct-id) agg — map-side partial
@@ -553,10 +524,13 @@ def assert_no_docid_collisions(doc_stats: DataFrame) -> DataFrame:
     part of the 1.34x build regression, the round-3/4 A/B in
     BENCH/BASELINE.md)."""
     tot = doc_stats.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("doc_id").alias("d")
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("doc_id").alias("d"),
+        F.count(F.when(F.col("doc_id") != F.xxhash64("url"), 1)).alias("x"),
     ).collect()[0]
+    url_hash_ids = int(tot["x"]) == 0
     if int(tot["n"]) == int(tot["d"]):
-        return doc_stats
+        return url_hash_ids
     dup = (
         doc_stats.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("url").alias("u"))
@@ -575,7 +549,7 @@ def assert_no_docid_collisions(doc_stats: DataFrame) -> DataFrame:
             f"duplicate url in input (doc_id {dup[0]['doc_id']}): pass "
             "dedup_urls=True or deduplicate re-crawls upstream"
         )
-    return doc_stats
+    return url_hash_ids
 
 
 def term_stats_from_postings(
@@ -933,8 +907,8 @@ def commit_index_tables(
         #
         # Round-6 job overlap: once runs are on disk and the vocab aggregate
         # is resolved, the remaining writes are three independent chains —
-        # (postings), (term_stats -> term_grams), (doc_stats -> docid check
-        # -> url_index). They used to run serially, so the small metadata
+        # (postings), (term_stats -> term_grams), (doc_stats -> docid
+        # check). They used to run serially, so the small metadata
         # chains added their full job latency to every build and the
         # cluster idled through each one's tail; overlap() runs them on a
         # 3-thread pool.
@@ -966,48 +940,24 @@ def commit_index_tables(
                 coalesce=dict_files,
             )
 
-        def _write_docs() -> DataFrame:
+        def _write_docs() -> bool:
             write_table(
                 doc_stats, f"{out_dir}/doc_stats", sort_cols=["doc_id"],
                 coalesce=dict_files,
             )
-            # derive everything below from the COMMITTED table: re-using the
-            # in-memory plan would re-execute the whole pages+runs join per
-            # consumer; the read-back is a thin columnar scan
-            committed = assert_no_docid_collisions(
+            # the check reads the COMMITTED table: re-using the in-memory
+            # plan would re-execute the whole pages+runs join; the read-back
+            # is a thin columnar scan
+            return assert_no_docid_collisions(
                 read_table(spark, f"{out_dir}/doc_stats")
             )
-            # url-keyed reverse-lookup projection: doc_stats is doc_id-sorted
-            # (point lookups by id prune to one file), so a url probe would
-            # scan everything. This thin (url, doc_id) projection is
-            # partitioned by url_bucket = pmod(xxhash64(url), N_URL_BUCKETS)
-            # — a url lookup's bucket predicate constant-folds and Catalyst
-            # prunes to ONE directory — and url_hash-sorted within, so
-            # parquet row-group min/max stats prune inside the directory
-            # too. At 10^12 docs raise N_URL_BUCKETS (or use an Iceberg
-            # bucket(url) partition transform); the lookup code only relies
-            # on the pmod contract.
-            # repartition on the dir key first: without it every upstream
-            # task fans out into every url_bucket dir (tasks x buckets tiny
-            # files — measured as part of the 1.34x build regression, the
-            # round-3/4 A/B in BENCH/BASELINE.md); with it each bucket dir
-            # gets exactly one url_hash-sorted file
-            write_table(
-                url_index_projection(committed).repartition(
-                    N_URL_BUCKETS, F.col("url_bucket")
-                ),
-                f"{out_dir}/url_index",
-                sort_cols=["url_hash"],
-                partition_by="url_bucket",
-            )
-            return committed
 
-        _, _, doc_stats = overlap(_write_postings, _write_terms, _write_docs)
+        _, _, url_hash_ids = overlap(_write_postings, _write_terms, _write_docs)
         # one-row sidecars are driver-side writes (no Spark job; see
         # write_driver_table). conf: layout facts baked into the blocks
         # (k1/b feed max_impact; quantize_norms changes the doc_lens byte
-        # format) — load_index restores them so an index is always queried
-        # with the conf it was built with.
+        # format) and the measured url_hash_ids — load_index restores them
+        # so an index is always queried with the conf it was built with.
         write_driver_table(
             spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS,
             f"{out_dir}/corpus_stats",
@@ -1016,13 +966,14 @@ def commit_index_tables(
             spark,
             [(
                 conf.k1, conf.b, conf.block_size, conf.quantize_norms,
-                range_width, id_space,
+                range_width, id_space, url_hash_ids,
             )],
             schema.INDEX_CONF,
             f"{out_dir}/conf",
         )
         postings = read_table(spark, f"{out_dir}/postings")
         term_stats = read_table(spark, f"{out_dir}/term_stats")
+        doc_stats = read_table(spark, f"{out_dir}/doc_stats")
         term_files = driver_files(term_stats)
     else:
         term_files = None
@@ -1032,7 +983,7 @@ def commit_index_tables(
         term_stats = term_stats.persist()
         doc_stats = doc_stats.persist()
         term_stats.count()
-        assert_no_docid_collisions(doc_stats)
+        url_hash_ids = assert_no_docid_collisions(doc_stats)
     vocab_handle.unpersist()
 
     return Index(
@@ -1043,7 +994,6 @@ def commit_index_tables(
         avgdl=avgdl,
         conf=conf,
         range_width=range_width,
-        url_stats=(read_table(spark, f"{out_dir}/url_index") if out_dir else None),
         term_grams=(
             read_table(spark, f"{out_dir}/term_grams") if out_dir else None
         ),
@@ -1051,6 +1001,7 @@ def commit_index_tables(
         bucket_bits=(
             hash_bucket_bits(n_docs, range_width) if id_space == "hash" else None
         ),
+        url_hash_ids=url_hash_ids,
         term_files=term_files,
     )
 
@@ -1087,7 +1038,6 @@ def build_index(
     text_col: str = "html",
     doc_id_method: str = "hash",
     range_width: int | None = None,
-    id_space: str | None = None,
     out_dir: str | None = None,
     dedup_urls: bool = False,
     hash_primary_fn=None,
@@ -1110,8 +1060,6 @@ def build_index(
     pool (guide §2.6 — independent chains back-fill each other's tails);
     (2) is commit_index_tables.
     """
-    if id_space is None:
-        id_space = "hash" if doc_id_method == "hash" else "dense"
     if dedup_urls:
         pages = latest_crawl(pages, text_col)
     pages = assign_doc_ids(pages, doc_id_method)
@@ -1131,8 +1079,9 @@ def build_index(
 
     idx = commit_index_tables(
         spark, runs, pages.select("doc_id", "url"), conf,
-        range_width=range_width, id_space=id_space, out_dir=out_dir,
-        hash_primary_fn=hash_primary_fn,
+        range_width=range_width,
+        id_space="hash" if doc_id_method == "hash" else "dense",
+        out_dir=out_dir, hash_primary_fn=hash_primary_fn,
     )
     if not out_dir:
         runs.unpersist()
@@ -1142,9 +1091,8 @@ def build_index(
 def _sidecar_or_none(spark: SparkSession, path: str, read=None):
     """An OPTIONAL index sidecar table, None only when it is absent (conf:
     pre-round-2 indexes lack it, load_index falls back to the caller's
-    conf; url_index: pre-round-4, lookup_url falls back to doc_stats;
-    term_grams: pre-round-5, fuzzy/suggest fall back to the length-banded
-    vocab scan). `read` is io.read_table (the default: a lazy DataFrame) or
+    conf; term_grams: pre-round-5, fuzzy/suggest fall back to the
+    length-banded vocab scan). `read` is io.read_table (the default: a lazy DataFrame) or
     io.read_rows (its rows)."""
     from webindex.io import read_table, table_format
     from webindex.fsutil import path_exists
@@ -1173,10 +1121,10 @@ def load_index(
 ) -> Index:
     """Re-open a committed index WITHOUT a Spark job on a driver-local
     parquet index: the one-row sidecars are read on the driver
-    (io.read_rows), the tables open lazily with their schemas pinned from
-    their footers (io.read_table), and url_index opens on the first
-    lookup_url (Index.url_table). Other filesystems and iceberg take the
-    Spark reads.
+    (io.read_rows) and the tables open lazily with their schemas pinned
+    from their footers (io.read_table). Other filesystems and iceberg take
+    the Spark reads. A url_index/ dir left by an older build is never
+    opened: lookup_url reads doc_stats.
 
     If the index has a conf sidecar (written by build_index since round 2),
     it OVERRIDES the conf argument: k1/b/block_size/quantize_norms are baked
@@ -1186,6 +1134,7 @@ def load_index(
 
     range_width = DEFAULT_RANGE_WIDTH
     id_space: str | None = None
+    url_hash_ids = False
     # Fall back to the caller's conf ONLY when the sidecar is genuinely
     # absent (pre-sidecar index). A transient read failure (S3 flake,
     # permissions) must propagate — silently dropping the sidecar would
@@ -1204,6 +1153,8 @@ def load_index(
         # pre-round-5 sidecars lack id_space: record None (unknown), never
         # guess — a wrong bucket map would make per-bucket bounds unsound
         id_space = c.get("id_space")
+        # likewise url_hash_ids: absent = unknown, lookup_url's url scan
+        url_hash_ids = bool(c.get("url_hash_ids"))
 
     stats = read_rows(spark, f"{out_dir}/corpus_stats")[0]
     postings = read_table(spark, f"{out_dir}/postings")
@@ -1222,7 +1173,6 @@ def load_index(
         avgdl=float(stats["avgdl"]),
         conf=conf,
         range_width=range_width,
-        url_index_path=f"{out_dir}/url_index",
         term_grams=_sidecar_or_none(spark, f"{out_dir}/term_grams"),
         id_space=id_space,
         bucket_bits=(
@@ -1230,5 +1180,6 @@ def load_index(
             if id_space == "hash"
             else None
         ),
+        url_hash_ids=url_hash_ids,
         term_files=driver_files(term_stats),
     )

@@ -1648,28 +1648,16 @@ def lookup_url(index: Index, url: str) -> DataFrame:
     """Reverse lookup by url (the reference's digitalObjectLocation probe,
     lib.py:173-182).
 
-    Disk-backed indexes carry a url_index projection partitioned by
-    url_bucket = pmod(xxhash64(url), N) and url_hash-sorted within: the
-    bucket predicate below is a fold-able expression over a literal, so
-    Catalyst partition-prunes to ONE directory (PartitionFilters in the
-    plan) and the url_hash equality prunes row groups inside it — the same
-    two-level pruning lookup_doc gets from the doc_id-sorted layout.
-    Collisions are disambiguated by the final url equality. In-memory /
-    pre-round-4 indexes fall back to the doc_stats scan (same 3-column
-    output either way — the API shape is vintage-invariant). A pending
-    delete (live_index()) is not found."""
-    urls = index.url_table()
-    if urls is None:
-        hits = index.doc_stats.filter(F.col("url") == url)
-    else:
-        from webindex.build import N_URL_BUCKETS
-
-        lit = F.lit(url)
-        hits = urls.filter(
-            (F.col("url_bucket") == F.pmod(F.xxhash64(lit), F.lit(N_URL_BUCKETS)))
-            & (F.col("url_hash") == F.xxhash64(lit))
-            & (F.col("url") == lit)
-        )
+    One pruned probe of doc_stats, as lookup_doc: when every doc_id is
+    xxhash64(url) (Index.url_hash_ids) the id predicate constant-folds to a
+    long literal, so the doc_id-sorted layout prunes files and row groups,
+    and the url equality rejects an absent url whose hash is a present
+    doc's id. Otherwise (dense, provided or caller-supplied ids, older
+    indexes) the url equality alone scans doc_stats. A pending delete
+    (live_index()) is not found."""
+    hits = index.doc_stats.filter(F.col("url") == url)
+    if index.url_hash_ids:
+        hits = hits.filter(F.col("doc_id") == F.xxhash64(F.lit(url)))
     return _drop_dead(index, hits.select("doc_id", "url", "doc_len"))
 
 
@@ -3071,7 +3059,7 @@ def term_vectors(index: Index, doc_ids: list[int]) -> DataFrame:
     )
     if index.id_space is not None:
         # the bucket is a pure function of doc_id: Catalyst folds each
-        # bucket_of(literal) to a literal (as lookup_url's url_bucket), so
+        # bucket_of(literal) to a literal (as lookup_url's xxhash64), so
         # the ids' buckets prune the scan with no job to look them up
         blocks = blocks.filter(
             F.col("bucket").isin([index.bucket_of(F.lit(i)) for i in ids])

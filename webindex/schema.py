@@ -144,8 +144,9 @@ CORPUS_STATS = T.StructType(
 # One-row sidecar written next to the index tables: the BM25Config facts that
 # are baked into the encoded blocks (k1/b feed max_impact, quantize_norms
 # changes the doc_lens byte format, block_size fixes block boundaries) plus
-# the bucket range_width. load_index restores these so an index can never be
-# queried with a conf other than the one it was built with.
+# the bucket range_width, and two facts of the doc ids (id_space,
+# url_hash_ids). load_index restores these so an index can never be queried
+# with a conf other than the one it was built with.
 INDEX_CONF = T.StructType(
     [
         T.StructField("k1", T.DoubleType(), False),
@@ -159,5 +160,10 @@ INDEX_CONF = T.StructType(
         # load_index then records id_space=None (bucket-map consumers fall
         # back to bucket-agnostic bounds).
         T.StructField("id_space", T.StringType(), True),
+        # whether every doc_id is xxhash64(url), counted over the committed
+        # doc_stats (build.assert_no_docid_collisions); lookup_url then
+        # probes doc_stats by id. Nullable: older sidecars lack it and
+        # load_index reads that as false (lookup_url's url-only filter).
+        T.StructField("url_hash_ids", T.BooleanType(), True),
     ]
 )

@@ -586,6 +586,7 @@ class IncrementalIndexer:
             # buckets the committed blocks don't use)
             id_space="hash",
             bucket_bits=bucket_bits,
+            url_hash_ids=True,  # _ingest_pages drops any caller doc_id
             term_files=driver_files(term_stats, "parquet"),
         )
 
